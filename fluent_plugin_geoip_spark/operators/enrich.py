@@ -73,6 +73,10 @@ class GeoipEnricher:
                 if ph.geoip_key not in self._attrs_by_key[ph.record_key]:
                     self._attrs_by_key[ph.record_key].append(ph.geoip_key)
         self._udf_cache: dict[tuple[str, ...], object] = {}
+        # shape of each expanded range table the jvm_join kernel probes,
+        # ``{"v4"|"v6": {"rows": ..., "max_bucket_rows": ...}}``, filled
+        # from the NumPy layout when ``transform`` plans the join
+        self.table_stats: dict[str, dict[str, int]] = {}
 
     def _udf_for(self, attrs: list[str]):
         # v4-only DBs take the fast path: IPv4→uint32 parsed JVM-side, the
@@ -180,8 +184,11 @@ class GeoipEnricher:
         df = df.withColumns(out)
         return df.drop(*geo_cols.values(), *ip_cols)
 
-    # the /16 prefix split: 65 536 buckets caps the expansion overhead at
-    # +65 536 rows while keeping per-bucket piece counts tiny for real DBs
+    # coarse /16 prefix buckets: 65 536 of them cap the coarse expansion
+    # at +65 536 rows. Real databases still pack hundreds of ranges into
+    # one /16 (a dual-stack table's busiest v6 /32 held 3,686), so the
+    # table builders split every bucket of more than
+    # ``geolookup.BUCKET_CAP`` pieces deeper (``BucketLayout``)
     JVM_JOIN_SHIFT = 16
 
     def _db_plan_cache(self) -> dict:
@@ -216,7 +223,8 @@ class GeoipEnricher:
         cache = self._db_plan_cache()
         key = (id(self.spark), "jvm6", *attrs)
         if key not in cache:
-            cache[key] = expanded_bucket_table_v6(self.spark, self.db, attrs)
+            cache[key] = expanded_bucket_table_v6(
+                self.spark, self.db, attrs)[0]
         return cache[key]
 
     def _jvm_join_geo(self, df: DataFrame, i: int, ip_name: str,
@@ -237,7 +245,7 @@ class GeoipEnricher:
         construction (a row probes exactly one table), so the per-field
         merge is a plain when(v6hit, v6).otherwise(v4)."""
         from ..functions.ipv6 import ipv6_str_to_longs
-        from .geolookup import sanitize_attr
+        from .geolookup import v4_bucket_layout, v6_bucket_layout
         drop_cols: list[str] = []
         has6 = self.db.has_ipv6
 
@@ -266,16 +274,27 @@ class GeoipEnricher:
                 e4_name,
                 F.coalesce(ip4, F.when(
                     mapped, lo6.bitwiseAND(F.lit(0xFFFFFFFF)))))
-            probe4 = F.col(e4_name)
-            drop_cols += [p6_name, e4_name]
+            probe4_name = e4_name
+            # the native-v6 high half (null when mapped or unparsed) gets
+            # its own column: the bucket key reads it once per split
+            # level and twice more, and inline each read regenerates the
+            # mask — with two split levels that took the fused probe
+            # stage's largest method from 6.8 KB to 8.0 KB, at the JIT
+            # ceiling above; as a column it is 5.5 KB
+            h6_name = f"__ip6h_{i}"
+            df = df.withColumn(h6_name, F.when(~mapped, hi6))
+            drop_cols += [p6_name, e4_name, h6_name]
         else:
-            probe4 = ip4
+            probe4_name = ip_name
+        probe4 = F.col(probe4_name)
 
         rdf = self._range_df_for(attrs)
+        lay4 = v4_bucket_layout(self.db, self.JVM_JOIN_SHIFT)
+        self.table_stats["v4"] = lay4.stats()
         pref = f"__r{i}_"
         renamed = rdf.select(
             *[F.col(c).alias(pref + c) for c in rdf.columns])
-        cond = ((F.shiftright(probe4, self.JVM_JOIN_SHIFT)
+        cond = ((lay4.probe_key(probe4, f"`{probe4_name}`")
                  == F.col(pref + "__gb"))
                 & probe4.between(F.col(pref + "__gs"),
                                  F.col(pref + "__ge")))
@@ -292,20 +311,18 @@ class GeoipEnricher:
                     .drop(*drop_cols))
 
         # native-v6 probe: null for unparsed/mapped rows → no match
-        rdf6, bits6 = self._range_df_v6_for(attrs)
+        rdf6 = self._range_df_v6_for(attrs)
+        lay6 = v6_bucket_layout(self.db)
+        self.table_stats["v6"] = lay6.stats()
         pref6 = f"__r6{i}_"
         renamed6 = rdf6.select(
             *[F.col(c).alias(pref6 + c) for c in rdf6.columns])
-        p6 = F.col(f"__ip6_{i}")
-        hi6, lo6 = p6.getField("hi"), p6.getField("lo")
-        mapped = ((hi6 == 0)
-                  & F.shiftrightunsigned(lo6, 32).isin(0, 0xFFFF))
-        nat_hi = F.when(~mapped, hi6)      # null when mapped or unparsed
+        nat_hi = F.col(h6_name)
         min_long = F.lit(-0x8000000000000000)
         fhi, flo = nat_hi.bitwiseXOR(min_long), lo6.bitwiseXOR(min_long)
         sh, sl = F.col(pref6 + "__g6sh"), F.col(pref6 + "__g6sl")
         eh, el = F.col(pref6 + "__g6eh"), F.col(pref6 + "__g6el")
-        cond6 = ((F.shiftrightunsigned(nat_hi, 64 - bits6)
+        cond6 = ((lay6.probe_key(nat_hi, f"`{h6_name}`")
                   == F.col(pref6 + "__g6b"))
                  & ((fhi > sh) | ((fhi == sh) & (flo >= sl)))
                  & ((fhi < eh) | ((fhi == eh) & (flo <= el))))

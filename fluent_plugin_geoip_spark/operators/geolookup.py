@@ -23,7 +23,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import Column, functions as F, types as T
 
 from ..functions.ipv4 import ipv4_to_uint32
 
@@ -143,9 +143,12 @@ class GeoDatabase:
         # the enricher stashes session-local expanded-table DataFrames on
         # the instance (`_expanded_plan_cache`, round 9) — they are not
         # picklable and must never ride the Arrow kernel's broadcast of
-        # the database; everything else serializes as-is
+        # the database; neither must the memoized bucket layouts
+        # (`_bucket_layouts`), which only the driver needs; everything
+        # else serializes as-is
         state = dict(self.__dict__)
         state.pop("_expanded_plan_cache", None)
+        state.pop("_bucket_layouts", None)
         return state
 
     @classmethod
@@ -509,6 +512,178 @@ def _expanded_df(spark, schema: T.StructType, idx: np.ndarray,
         return spark.createDataFrame(rows, schema=schema)
 
 
+# Most range pieces one bucket of an expanded table may hold: the
+# jvm_join probe's join filter scans every piece of the probe's bucket,
+# so this caps the probe cost (CAMEL Hash Table, EDBT 2026: probe cost is
+# chain length × compare cost).
+BUCKET_CAP = 32
+# A dense bucket is split into 2^4 children per level; 16 children hold
+# at most 15 more pieces than their parent (a piece gains one child per
+# internal child boundary it covers, and disjoint pieces cover distinct
+# boundaries), which is what bounds the table's growth.
+_SPLIT_BITS = 4
+# finest v6 level: a refined key carries its level in the top 4 bits of
+# the long, which leaves room for a prefix of at most 60 bits
+_V6_FINEST_BITS = 60
+
+
+def _level_tag(level: int) -> int:
+    """OR-mask (as a signed long) tagging a refined bucket key with its
+    level: ``level / 4`` in the top 4 bits. Coarse keys are below 2^32
+    and refined prefixes below 2^60, so keys of different levels never
+    collide."""
+    tag = (level // _SPLIT_BITS) << 60
+    return tag - (1 << 64) if tag >= 1 << 63 else tag
+
+
+def _spread(idx: np.ndarray, first: np.ndarray, counts: np.ndarray):
+    """Emit element ``i`` ``counts[i]`` times, with consecutive prefixes
+    from ``first[i]``."""
+    offs = np.arange(int(counts.sum())) \
+        - np.repeat(np.cumsum(counts) - counts, counts)
+    return np.repeat(idx, counts), np.repeat(first, counts) + offs
+
+
+@dataclass(frozen=True)
+class BucketLayout:
+    """An expanded range table in NumPy, before it ships to Spark: row
+    ``r`` is a piece of range ``idx[r]`` under bucket key ``keys[r]``.
+
+    Prefixes are taken from a ``width``-bit word of the address (32: the
+    v4 address; 64: the high half of a v6 one). ``dense`` lists, per
+    split level, the level's prefix length and the sorted raw prefixes
+    split 4 bits deeper there; the probe key needs nothing else."""
+
+    width: int
+    coarse_bits: int
+    dense: tuple[tuple[int, np.ndarray], ...]
+    idx: np.ndarray
+    keys: np.ndarray
+    max_bucket_rows: int
+
+    @property
+    def rows(self) -> int:
+        return len(self.idx)
+
+    def stats(self) -> dict[str, int]:
+        return {"rows": self.rows, "max_bucket_rows": self.max_bucket_rows}
+
+    def probe_key(self, word: Column, word_sql: str) -> Column:
+        """The probe side's bucket key for ``word`` (``word_sql``: the same
+        value as SQL text): its coarse prefix, or, inside a split bucket,
+        the tagged prefix of the level the table resolved it to. Nested
+        ``CASE WHEN prefix IN (<dense set>)``, one codegen'd InSet per
+        split level, evaluated only along the probe's own path; a layout
+        with no dense bucket gets the plain coarse prefix."""
+        shr, shr_sql = ((F.shiftrightunsigned, "shiftrightunsigned")
+                        if self.width == 64 else (F.shiftright, "shiftright"))
+
+        def key(bits: int) -> Column:
+            raw = shr(word, self.width - bits)
+            return raw if bits == self.coarse_bits \
+                else raw.bitwiseOR(F.lit(_level_tag(bits)))
+
+        out = key(self.dense[-1][0] + _SPLIT_BITS if self.dense
+                  else self.coarse_bits)
+        for bits, prefixes in reversed(self.dense):
+            # SQL text: Column.isin makes one py4j call per value
+            values = ",".join(f"{p}L" for p in prefixes.tolist())
+            is_dense = F.expr(f"{shr_sql}({word_sql}, {self.width - bits}) "
+                              f"IN ({values})")
+            out = F.when(is_dense, out).otherwise(key(bits))
+        return out
+
+
+def _bucket_layout(lo: np.ndarray, hi: np.ndarray, width: int,
+                   coarse_bits: int, finest_bits: int) -> BucketLayout:
+    """Expand sorted, disjoint ranges (``lo``/``hi``: uint64 words of each
+    range's first/last address) into ``coarse_bits``-prefix buckets, then
+    split every bucket of more than ``BUCKET_CAP`` pieces ``_SPLIT_BITS``
+    deeper until none is left or ``finest_bits`` is reached. O(pieces)
+    NumPy per level: pieces stay sorted by prefix, so buckets are runs."""
+    def prefix(words: np.ndarray, bits: int) -> np.ndarray:
+        return (words >> np.uint64(width - bits)).astype(np.int64)
+
+    b0 = prefix(lo, coarse_bits)
+    idx, pre = _spread(np.arange(len(lo)), b0, prefix(hi, coarse_bits) - b0 + 1)
+    bits, dense, out_idx, out_keys, peak = coarse_bits, [], [], [], 0
+    while True:
+        first = np.flatnonzero(np.r_[True, pre[1:] != pre[:-1]])
+        run = np.diff(np.r_[first, len(pre)])
+        split = (run > BUCKET_CAP) & (bits < finest_bits)
+        keep = ~np.repeat(split, run)
+        out_idx.append(idx[keep])
+        out_keys.append(pre[keep] if bits == coarse_bits
+                        else pre[keep] | np.int64(_level_tag(bits)))
+        peak = max(peak, int(run[~split].max(initial=0)))
+        if not split.any():
+            break
+        dense.append((bits, pre[first[split]]))
+        parent, idx = pre[~keep] << _SPLIT_BITS, idx[~keep]
+        bits += _SPLIT_BITS
+        c0 = np.maximum(prefix(lo[idx], bits), parent)
+        c1 = np.minimum(prefix(hi[idx], bits), parent | ((1 << _SPLIT_BITS) - 1))
+        idx, pre = _spread(idx, c0, c1 - c0 + 1)
+    return BucketLayout(width, coarse_bits, tuple(dense),
+                        np.concatenate(out_idx), np.concatenate(out_keys), peak)
+
+
+def _memo_layout(db: GeoDatabase, key: tuple, build) -> BucketLayout:
+    # memoized on the (immutable, driver-cached) database: the table
+    # builders and the enricher's probe key share one layout
+    cache = db.__dict__.setdefault("_bucket_layouts", {})
+    if key not in cache:
+        cache[key] = build()
+    return cache[key]
+
+
+def v4_bucket_layout(db: GeoDatabase, shift: int = 16) -> BucketLayout:
+    """Bucket layout of the v4 table: coarse ``/(32 − shift)`` buckets,
+    dense ones split down to /32 at most."""
+    return _memo_layout(db, ("v4", shift), lambda: _bucket_layout(
+        db.starts.astype(np.uint64), db.ends.astype(np.uint64),
+        32, 32 - shift, 32))
+
+
+def _v6_words(db: GeoDatabase) -> tuple[np.ndarray, ...]:
+    """(start hi, start lo, end hi, end lo) uint64 halves of the v6 bounds.
+
+    'S16' tobytes() restores the NUL padding element access strips (see
+    _u128_to_biased_pair); big-endian u64 views give the halves fully
+    vectorized."""
+    def halves(a: np.ndarray):
+        raw = np.frombuffer(a.tobytes(), dtype=">u8").reshape(-1, 2) \
+            if len(a) else np.zeros((0, 2), dtype=">u8")
+        return raw[:, 0].astype(np.uint64), raw[:, 1].astype(np.uint64)
+    return (*halves(db.starts6), *halves(db.ends6))
+
+
+def v6_bucket_layout(db: GeoDatabase,
+                     prefix_bits: int | None = None) -> BucketLayout:
+    """Bucket layout of the v6 table over the high half of the address.
+
+    ``prefix_bits`` (the coarse level) defaults adaptively: start at /32
+    and coarsen by 4 bits while the expansion exceeds ``2·n + 65 536``
+    rows, so very wide ranges degrade to fewer, larger buckets instead
+    of an unbounded emit. Dense buckets are then split down to /60."""
+    def build() -> BucketLayout:
+        s_hi, _, e_hi, _ = _v6_words(db)
+        bits = prefix_bits
+        if bits is None:
+            # floor at 4: a JVM shift count is taken mod 64, so bits=0
+            # (shift 64) would make the probe's >>> a no-op and break
+            # the bucket equi-key
+            bits = 32
+            while bits > 4:
+                shift = np.uint64(64 - bits)
+                total = int(((e_hi >> shift) - (s_hi >> shift) + 1).sum())
+                if total <= 2 * len(s_hi) + 65536:
+                    break
+                bits -= 4
+        return _bucket_layout(s_hi, e_hi, 64, bits, _V6_FINEST_BITS)
+    return _memo_layout(db, ("v6", prefix_bits), build)
+
+
 def expanded_bucket_table(spark, db: GeoDatabase, attr_paths: list[str],
                           shift: int = 16):
     """The range table expanded into IP-prefix buckets for the all-JVM
@@ -516,40 +691,48 @@ def expanded_bucket_table(spark, db: GeoDatabase, attr_paths: list[str],
 
     A plain range join (``ip BETWEEN start AND end``) has no equi key, so
     Spark would plan BroadcastNestedLoopJoin — O(rows × ranges). Bucketing
-    by the high ``32-shift`` address bits manufactures one: every range is
-    emitted once per prefix bucket it intersects, and the probe joins on
-    ``bucket == ip >> shift`` (BroadcastHashJoin) with the BETWEEN as a
-    join filter. Within one bucket the pieces inherit the table's
-    non-overlap, so at most one range matches and a left join preserves
-    row count.
+    by address prefix manufactures one: every range is emitted once per
+    bucket it intersects, and the probe joins on the bucket key
+    (BroadcastHashJoin) with the BETWEEN as a join filter. Within one
+    bucket the pieces inherit the table's non-overlap, so at most one
+    range matches and a left join preserves row count.
 
-    The expansion is PROVABLY bounded: a range spanning k buckets emits k
-    rows, and since ranges are disjoint, Σ(k_i − 1) ≤ 2^(32−shift) — the
-    expanded table has at most ``len(ranges) + 2^(32−shift)`` rows
-    (+65 536 at the default /16 split), independent of how pathological
-    the range layout is. A real city DB (~3M ranges) expands by < 3%.
+    Buckets are cut to fit the key distribution rather than at one fixed
+    bit position: coarse ``/(32 − shift)`` buckets (/16 by default), and
+    every bucket holding more than ``BUCKET_CAP`` pieces split 4 bits
+    deeper, repeatedly, down to /32 (:func:`v4_bucket_layout`). Refined
+    keys carry a level tag; coarse keys are the plain prefix, so a table
+    with no dense bucket is exactly the fixed-/16 table. The probe key is
+    :meth:`BucketLayout.probe_key`.
 
-    Returns a DataFrame with ``__gb`` (bucket), ``__gs``/``__ge`` (range
-    bounds) and one correctly-typed column per sanitized attr path (null
-    column for paths the DB lacks). One-time driver cost is O(expanded
-    rows) — the same class as parsing the database file itself.
+    Both bounds hold on every layout of disjoint ranges, n of them:
+
+    - rows ≤ n + 2^(32−shift) + 15·levels·n/C, with C = ``BUCKET_CAP``
+      and levels the number of split levels (≤ 4): the coarse expansion
+      adds Σ(k_i − 1) ≤ 2^(32−shift) rows; a split adds at most 15 rows;
+      and one level has at most n/C split buckets. (A range has pieces
+      in at most two buckets it does not cover whole, those holding its
+      first and last address, and in two split ones only if it sticks
+      out of the first one's right edge, which one range per bucket can
+      do; D split buckets of ≥ C + 1 pieces each give (C + 1)·D ≤ n + D.)
+    - every bucket holds at most C pieces. (The one exception of the
+      general construction, more than C ranges sharing one finest
+      prefix, cannot occur at /32: one address is one range.)
+
+    Returns a DataFrame with ``__gb`` (bucket key), ``__gs``/``__ge``
+    (range bounds) and one correctly-typed column per sanitized attr
+    path (null column for paths the DB lacks). One-time driver cost is
+    O(expanded rows) — the same class as parsing the database file.
     """
-    n = len(db.starts)
-    b0 = (db.starts >> shift).astype(np.int64)
-    b1 = (db.ends >> shift).astype(np.int64)
-    counts = (b1 - b0 + 1) if n else np.zeros(0, dtype=np.int64)
-    idx = np.repeat(np.arange(n), counts)
-    # bucket value = b0[i] + offset within its repeat run
-    offs = np.arange(len(idx)) - np.repeat(np.cumsum(counts) - counts, counts)
-    buckets = b0[idx] + offs
-
+    lay = v4_bucket_layout(db, shift)
+    idx = lay.idx
     schema = T.StructType(
         [T.StructField("__gb", T.LongType(), False),
          T.StructField("__gs", T.LongType(), False),
          T.StructField("__ge", T.LongType(), False)]
         + [T.StructField(sanitize_attr(p), _SPARK_TYPES[db.attr_type(p)], True)
            for p in attr_paths])
-    fixed = [buckets, db.starts[idx], db.ends[idx]]
+    fixed = [lay.keys, db.starts[idx], db.ends[idx]]
     attr_specs = [(db.attrs.get(p), db.attr_type(p)) for p in attr_paths]
     return _expanded_df(spark, schema, idx, fixed, attr_specs)
 
@@ -577,59 +760,29 @@ def expanded_bucket_table_v6(spark, db: GeoDatabase, attr_paths: list[str],
     the v6 leg of the all-JVM enrich path (round-7 VERDICT item 2).
 
     Same construction as :func:`expanded_bucket_table`, lifted to 128
-    bits carried as two longs: every range is emitted once per
-    ``prefix_bits``-bit high-half bucket it intersects, the probe joins
-    on ``bucket == addr.hi >>> (64 − prefix_bits)`` (BroadcastHashJoin)
-    and the 128-bit BETWEEN rides as a join filter over bias-flipped
-    (hi, lo) tuple comparisons (signed order == unsigned order after the
-    flip; see :func:`_u128_to_biased_pair`). Ranges are disjoint, so at
-    most one piece matches and a left join preserves row count.
+    bits carried as two longs: buckets are prefixes of the high half
+    (:func:`v6_bucket_layout`: adaptive coarse level, dense buckets split
+    down to /60), and the 128-bit BETWEEN rides as a join filter over
+    bias-flipped (hi, lo) tuple comparisons (signed order == unsigned
+    order after the flip; see :func:`_u128_to_biased_pair`). Ranges are
+    disjoint, so at most one piece matches and a left join preserves
+    row count.
 
-    ``prefix_bits`` defaults adaptively: start at /32 (a real GeoLite2
-    v6 table is mostly /32–/48 allocations, each spanning exactly one
-    bucket) and coarsen by 4 bits while the expansion exceeds
-    ``2·ranges + 65 536`` rows — so a pathological layout of very wide
-    ranges degrades to fewer, larger buckets instead of an unbounded
-    emit. Returns ``__g6b`` (bucket), ``__g6sh/__g6sl/__g6eh/__g6el``
-    (bias-flipped bounds) + one typed column per sanitized attr path,
-    and the chosen ``prefix_bits``."""
-    n = len(db.starts6)
-    # 'S16' tobytes() restores the NUL padding element access strips (see
-    # _u128_to_biased_pair); big-endian u64 views give (hi, lo) unsigned
-    # halves fully vectorized (round 9, round-8 VERDICT item 2 — the
-    # per-range/per-bucket Python loops serialize a real GeoLite2's
-    # ~1.5M v6 ranges row by row)
-    raw = np.frombuffer(db.starts6.tobytes(), dtype=">u8").reshape(-1, 2) \
-        if n else np.zeros((0, 2), dtype=">u8")
-    raw_e = np.frombuffer(db.ends6.tobytes(), dtype=">u8").reshape(-1, 2) \
-        if n else np.zeros((0, 2), dtype=">u8")
-    s_hi_u, s_lo_u = raw[:, 0].astype(np.uint64), raw[:, 1].astype(np.uint64)
-    e_hi_u, e_lo_u = raw_e[:, 0].astype(np.uint64), raw_e[:, 1].astype(np.uint64)
+    Bounds, for n ranges and C = ``BUCKET_CAP``: rows ≤ R + 15·levels·
+    n/C, where R ≤ 2·n + 65 536 is the coarse expansion the
+    adaptive level admits (R ≤ n + 2^prefix_bits for an explicit level)
+    and levels ≤ (60 − prefix_bits)/4; every bucket holds at most C
+    pieces, except where more than C ranges share one /60. Returns
+    ``__g6b`` (bucket key), ``__g6sh/__g6sl/__g6eh/__g6el`` (bias-flipped
+    bounds) + one typed column per sanitized attr path, and the chosen
+    coarse ``prefix_bits``."""
+    lay = v6_bucket_layout(db, prefix_bits)
+    idx = lay.idx
     # bias flip (unsigned u ↦ u − 2^63): XOR of bit 63 reinterpreted
     # signed — identical map to _u128_to_biased_pair
     top = np.uint64(1 << 63)
-    s_hi_b, s_lo_b = (s_hi_u ^ top).view(np.int64), (s_lo_u ^ top).view(np.int64)
-    e_hi_b, e_lo_b = (e_hi_u ^ top).view(np.int64), (e_lo_u ^ top).view(np.int64)
-
-    if prefix_bits is None:
-        # floor at 4: a JVM shift count is taken mod 64, so prefix_bits=0
-        # (shift 64) would make the probe's >>> a no-op and break the
-        # bucket equi-key
-        prefix_bits = 32
-        while prefix_bits > 4:
-            shift = np.uint64(64 - prefix_bits)
-            total = int(((e_hi_u >> shift) - (s_hi_u >> shift) + 1).sum())
-            if total <= 2 * n + 65536:
-                break
-            prefix_bits -= 4
-    shift = np.uint64(64 - prefix_bits)
-
-    b0 = (s_hi_u >> shift).astype(np.int64)
-    b1 = (e_hi_u >> shift).astype(np.int64)
-    counts = (b1 - b0 + 1) if n else np.zeros(0, dtype=np.int64)
-    idx = np.repeat(np.arange(n), counts)
-    offs = np.arange(len(idx)) - np.repeat(np.cumsum(counts) - counts, counts)
-    buckets = b0[idx] + offs
+    s_hi_b, s_lo_b, e_hi_b, e_lo_b = (
+        (w ^ top).view(np.int64) for w in _v6_words(db))
 
     schema = T.StructType(
         [T.StructField("__g6b", T.LongType(), False),
@@ -639,9 +792,9 @@ def expanded_bucket_table_v6(spark, db: GeoDatabase, attr_paths: list[str],
          T.StructField("__g6el", T.LongType(), False)]
         + [T.StructField(sanitize_attr(p), _SPARK_TYPES[db.attr_type(p)],
                          True) for p in attr_paths])
-    fixed = [buckets, s_hi_b[idx], s_lo_b[idx], e_hi_b[idx], e_lo_b[idx]]
+    fixed = [lay.keys, s_hi_b[idx], s_lo_b[idx], e_hi_b[idx], e_lo_b[idx]]
     attr_specs = [(db.attrs6.get(p), db.attr_type(p)) for p in attr_paths]
-    return _expanded_df(spark, schema, idx, fixed, attr_specs), prefix_bits
+    return _expanded_df(spark, schema, idx, fixed, attr_specs), lay.coarse_bits
 
 
 def lookup_struct_type(db: GeoDatabase, attr_paths: list[str]) -> T.StructType:

@@ -2,12 +2,13 @@
 BASELINE.json:14) composed from the stage operators.
 
 The logical plan is fully declarative: parse is native regex projection,
-enrich is one ArrowEvalPython crossing (broadcast searchsorted kernel),
-route adds a salted repartition (the ONLY shuffle before the sink), aggregate
-is a Catalyst partial+final hash agg. At 1000 executors nothing here changes:
-the scan parallelizes by file split, the enrich stage is a narrow map, the
-broadcast DB replicates once per executor, and the fan-out shuffle is salted
-against country skew.
+enrich is broadcast hash joins against prefix-bucketed range tables (the
+default ``jvm_join`` kernel: no Python worker), route adds an AQE
+``REBALANCE`` on the country key (the ONLY shuffle before the sink),
+aggregate is a Catalyst partial+final hash agg. At 1000 executors nothing
+here changes: the scan parallelizes by file split, the enrich stage is a
+narrow map, the broadcast range tables replicate once per executor, and
+REBALANCE splits hot countries into size-targeted write partitions.
 """
 
 from __future__ import annotations
@@ -55,9 +56,11 @@ class GeoipPipeline:
     """parse → enrich → route → aggregate over a pages DataFrame.
 
     Two lookup stages (city DB + ASN DB, per the north_star's "city/ASN"
-    enrichment) run back-to-back; both UDFs depend only on the parsed ip
-    long, so Spark's ExtractPythonUDFs batches them into a single
-    ArrowEvalPython crossing.
+    enrichment) run back-to-back. With the default ``jvm_join`` kernel
+    each is a broadcast hash join per address family, all fused into the
+    scan's codegen stage; with ``enrich_strategy="arrow"`` both UDFs
+    depend only on the parsed ip long, so Spark's ExtractPythonUDFs
+    batches them into a single ArrowEvalPython crossing.
     """
 
     def __init__(self, spark: SparkSession, database: GeoDatabase | None = None,

@@ -230,3 +230,17 @@ def test_memoized_trees_not_reused_across_resolved_plans(spark):
     # unresolved form still resolves against both plans (memo hit path)
     for df in (df1, df2):
         df.select(ipv6_str_to_longs(F.col("ip"))).collect()
+
+
+def test_resolved_column_node_sentinel(spark):
+    """``is_plan_independent`` keys on Spark rendering a resolved leaf as
+    ``ExpressionColumnNode`` in the JVM ColumnNode string. Pin that
+    rendering for each shape a resolved column reaches the memos in, so a
+    Spark upgrade that renames the node fails here, by name, instead of
+    silently re-enabling the stale-exprId memo."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([("::1",)], "ip string")
+    for col in (df.ip, df["ip"], df.ip.cast("string"),
+                F.concat(F.lit("x"), df.ip)):
+        assert "ExpressionColumnNode" in col._jc.node().toString(), col
