@@ -28,19 +28,39 @@ def let_(value: Column, body) -> Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
+# ColumnNode classes of the plan-agnostic expression AST that PySpark
+# Columns are built from (the one Spark Connect shares): unresolved
+# attributes, literals, functions, casts, aliases, lambdas, SQL text. A
+# classic ``ExpressionColumnNode`` lives outside this package: it wraps
+# a Catalyst expression, which may hold a resolved attribute.
+_PLAN_AGNOSTIC_PACKAGE = "org.apache.spark.sql.internal."
+
+
 def is_plan_independent(col: Column) -> bool:
     """True iff ``col``'s tree contains no already-RESOLVED Catalyst
     expression — i.e. it is built purely from unresolved attributes,
     literals and functions, so the identical tree resolves correctly
     against ANY plan with the referenced column names.
 
-    Guard for expression-tree memoization (round 9): a Column taken from
-    a DataFrame (``df.ip``) embeds a resolved ``AttributeReference`` with
-    a plan-specific exprId, while ``Column.toString()`` — the natural
-    memo key — prints it WITHOUT the exprId. Caching such a tree keyed on
-    its string re-binds the stale exprId into later plans and fails
-    analysis with MISSING_ATTRIBUTES (or, worse, silently reads the
-    wrong column in a self-join). Resolved leaves surface in the
-    ColumnNode tree as ``ExpressionColumnNode(...)`` wrappers, which a
-    purely-unresolved tree never contains."""
-    return "ExpressionColumnNode" not in col._jc.node().toString()
+    Guard for expression-tree memoization (round 9) and for the enrich
+    plan ``GeoipEnricher`` compiles once and applies to every input: a
+    Column taken from a DataFrame (``df.ip``) embeds a resolved
+    ``AttributeReference`` with a plan-specific exprId, while
+    ``Column.toString()`` — the natural memo key — prints it WITHOUT the
+    exprId. Caching such a tree re-binds the stale exprId into later
+    plans and fails analysis with MISSING_ATTRIBUTES (or, worse, silently
+    reads the wrong column in a self-join).
+
+    The check walks the JVM ColumnNode tree and accepts only node classes
+    of the plan-agnostic AST. Resolved leaves, and Python UDF calls,
+    arrive as classic ``ExpressionColumnNode`` wrappers and fail it. The
+    walk costs a few py4j round trips per node, so callers run it when
+    they build a tree, not per query."""
+    stack = [col._jc.node()]
+    while stack:
+        node = stack.pop()
+        if not node.getClass().getName().startswith(_PLAN_AGNOSTIC_PACKAGE):
+            return False
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return True

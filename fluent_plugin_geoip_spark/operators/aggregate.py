@@ -12,33 +12,35 @@ task retries).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+
+def country_lang_columns(country_col: str = "country"
+                         ) -> tuple[list[Column], list[Column]]:
+    """Grouping keys and aggregate of :func:`country_lang_counts`."""
+    return ([F.coalesce(F.col(country_col), F.lit("__miss__")).alias("country"),
+             F.col("lang")],
+            [F.count("*").alias("n")])
 
 
 def country_lang_counts(df: DataFrame, country_col: str = "country") -> DataFrame:
-    return (df.groupBy(F.coalesce(F.col(country_col), F.lit("__miss__")).alias("country"),
-                       F.col("lang"))
-              .agg(F.count("*").alias("n")))
+    keys, aggs = country_lang_columns(country_col)
+    return df.groupBy(*keys).agg(*aggs)
 
 
 def sink_counts(df: DataFrame, route_col: str = "route_country") -> DataFrame:
     return df.groupBy(route_col).agg(F.count("*").alias("rows"))
 
 
-def observe_pipeline_metrics(df: DataFrame, country_col: str = "country",
-                             ip_col: str = "client_ip") -> tuple[DataFrame, Observation]:
-    """Attach rows_total / rows_parsed / rows_enriched / rows_missed counters.
-
-    Metrics materialize when the returned DataFrame is consumed by an action;
-    read them via ``observation.get``.
-    """
-    obs = Observation("geoip_pipeline")
-    observed = df.observe(
-        obs,
+def pipeline_metric_columns(country_col: str = "country",
+                            ip_col: str = "client_ip") -> list[Column]:
+    """rows_total / rows_parsed / rows_enriched / rows_missed counters, for
+    ``DataFrame.observe``: they materialize when the observed DataFrame is
+    consumed by an action; read them via ``Observation.get``."""
+    return [
         F.count(F.lit(1)).alias("rows_total"),
         F.count(F.when(F.col(ip_col).rlike(r"^\d+\.\d+\.\d+\.\d+$"), 1))
          .alias("rows_parsed"),
         F.count(F.col(country_col)).alias("rows_enriched"),
         F.count(F.when(F.col(country_col).isNull(), 1)).alias("rows_missed"),
-    )
-    return observed, obs
+    ]

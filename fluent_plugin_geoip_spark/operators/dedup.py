@@ -1434,8 +1434,9 @@ def apply_cluster_keep(df: DataFrame, clusters: DataFrame,
 # keeps tomorrow's run incremental too.
 
 
-# Measured on this box (scripts/bench_store_crossover.py, x-r7-1 in
-# BASELINE.md; table in docs/SCALE.md + docs/store_crossover_r7.jsonl):
+# Measured on a 4-vCPU VM (scripts/bench_store_crossover.py, now only in
+# git history, e.g. commit 8f13866; x-r7-1 in BASELINE.md; table in
+# docs/SCALE.md + docs/store_crossover_r7.jsonl):
 # the bucketed probe starts winning at a plain store of only ~8 MB
 # (20k docs × 32 bands) and is 2.3× faster at 496 MB, where the plain
 # path's whole-store shuffle dominates while the bucketed probe stays

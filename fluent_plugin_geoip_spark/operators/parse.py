@@ -14,6 +14,8 @@ filter with ``geoip_lookup_keys host``).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 # apache common/combined access-log prefix: ip - ident [ts] "METHOD path proto" status bytes
@@ -157,6 +159,22 @@ def access_log_fields(text: Column) -> Column:
     )
 
 
+@functools.lru_cache(maxsize=None)
+def parse_columns(validate_text: bool = False,
+                  include_access: bool = False) -> dict[str, Column]:
+    """The parse stage's Columns by output name: ``host``, ``client_ip``
+    and, when asked for, ``access`` / ``text_ok`` (see :func:`parse_pages`).
+    They read the input only by column name, so they are built once per
+    flag pair and serve every pages DataFrame; do not mutate the result."""
+    cols = {"host": url_host(F.col("url")),
+            "client_ip": F.regexp_extract(F.col("text"), r"^(\S+) ", 1)}
+    if include_access:
+        cols["access"] = access_log_fields(F.col("text"))
+    if validate_text:
+        cols["text_ok"] = extract_text(F.col("html")) == F.col("text")
+    return cols
+
+
 def parse_pages(df: DataFrame, validate_text: bool = False,
                 include_access: bool = False) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → + host, client_ip[, access].
@@ -170,13 +188,7 @@ def parse_pages(df: DataFrame, validate_text: bool = False,
     ``text_ok`` boolean for the byte-identical invariant (cheap enough to keep
     on in audits; off in the hot path since ``text`` is authoritative).
     """
-    out = df.withColumn("host", url_host(F.col("url"))) \
-            .withColumn("client_ip", F.regexp_extract(F.col("text"), r"^(\S+) ", 1))
-    if include_access:
-        out = out.withColumn("access", access_log_fields(F.col("text")))
-    if validate_text:
-        out = out.withColumn("text_ok", extract_text(F.col("html")) == F.col("text"))
-    return out
+    return df.withColumns(parse_columns(validate_text, include_access))
 
 
 def text_invariant_violations(df: DataFrame) -> DataFrame:

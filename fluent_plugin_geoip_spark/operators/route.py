@@ -48,7 +48,7 @@ import logging
 import os
 import time
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..confutil import dynamic_overwrite
 
@@ -226,11 +226,10 @@ def resolve_sink_format(spark, requested: str | None = None) -> str:
     return "iceberg" if iceberg_available(spark) else "parquet"
 
 
-def with_route_key(df: DataFrame, country_col: str = "country",
-                   route_col: str = "route_country") -> DataFrame:
+def route_key_column(country_col: str = "country") -> Column:
     """Null/miss countries route to the UNROUTED sink (deterministic total
     routing: every row lands in exactly one sink)."""
-    return df.withColumn(route_col, F.coalesce(F.col(country_col), F.lit(UNROUTED)))
+    return F.coalesce(F.col(country_col), F.lit(UNROUTED))
 
 
 def route_and_write(

@@ -1,6 +1,12 @@
 """The flagship parse → enrich → route → aggregate plan (north_rule,
 BASELINE.json:14) composed from the stage operators.
 
+Every Column of the plan — parse, enrich, route key, observed counters,
+aggregate — is built once (the parse Columns once per process, the rest
+when the pipeline is constructed or first sees an input schema); a run
+only applies them (the reference, too,
+compiles its config once at configure time, filter_geoip.rb:60, 86).
+
 The logical plan is fully declarative: parse is native regex projection,
 enrich is broadcast hash joins against prefix-bucketed range tables (the
 default ``jvm_join`` kernel: no Python worker), route adds an AQE
@@ -13,18 +19,20 @@ REBALANCE splits hot countries into size-targeted write partitions.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession, types as T
 
 from ..config import GeoipConfig
 from ..operators.aggregate import (
-    country_lang_counts, observe_pipeline_metrics, sink_counts,
+    country_lang_columns, pipeline_metric_columns, sink_counts,
 )
 from ..operators.enrich import GeoipEnricher
 from ..operators.geolookup import GeoDatabase
 from ..operators.parse import parse_pages
-from ..operators.route import route_and_write, with_route_key
+from ..operators.route import UNROUTED, route_and_write, route_key_column
 from ..sources.fixtures import world_db
 
 # The flagship <record> config — Spark restatement of the reference tutorial
@@ -38,8 +46,24 @@ FLAGSHIP_RECORDS = {
 }
 
 
+COUNTS_SCHEMA = T.StructType([
+    T.StructField("country", T.StringType()),
+    T.StructField("lang", T.StringType()),
+    T.StructField("n", T.LongType()),
+])
+
+
 @dataclass
 class PipelineResult:
+    """What :meth:`GeoipPipeline.run` returns.
+
+    ``counts``: (country, lang, n) rows, a local DataFrame
+    (``COUNTS_SCHEMA``). It holds the already-computed rollup, so reading
+    it runs no job and starts no Python worker; it is not cached and
+    needs no ``unpersist``. ``metrics``: the observed row counters (with
+    ``collect_metrics``) and ``plan_build_s``. ``manifest``: the routed
+    run's per-sink lineage.
+    """
     enriched: DataFrame
     counts: DataFrame
     metrics: dict = field(default_factory=dict)
@@ -119,40 +143,58 @@ class GeoipPipeline:
                                   records=dict(ASN_RECORDS))
             self.asn_enricher = GeoipEnricher(
                 spark, asn_cfg, adb, strategy=resolve(adb))
+        self._route_key = route_key_column()
+        self._metrics = pipeline_metric_columns()
+        self._count_keys, self._count_aggs = country_lang_columns()
 
     def enrich(self, pages: DataFrame) -> DataFrame:
-        parsed = parse_pages(pages)
-        out = self.enricher.transform(parsed)
+        out = self.enricher.transform(parse_pages(pages))
         if self.asn_enricher is not None:
             out = self.asn_enricher.transform(out)
-        return with_route_key(out)
+        return out.withColumn("route_country", self._route_key)
 
     def run(self, pages: DataFrame, out_dir: str | None = None,
             resume: bool = False, salt_buckets: int = 16,
             collect_metrics: bool = True, audit: str = "full",
             strategy: str = "rebalance") -> PipelineResult:
+        """Enrich ``pages``, then either route them to per-country sinks
+        under ``out_dir`` or, with no ``out_dir``, only aggregate them.
+
+        The aggregate-only run is one Spark action: the small country ×
+        lang rollup is collected once, as Arrow, and ``counts`` is built
+        from it locally. ``metrics["plan_build_s"]`` is the wall time
+        from entry to the call that runs the first action."""
+        t0 = time.perf_counter()
         enriched = self.enrich(pages)
         obs = None
         if collect_metrics:
-            enriched, obs = observe_pipeline_metrics(enriched)
+            obs = Observation("geoip_pipeline")
+            enriched = enriched.observe(obs, *self._metrics)
         manifest = {}
         if out_dir is not None:
-            keep = [c for c in enriched.columns if c != "access"]
+            frame = enriched.drop("access")
+            plan_build_s = time.perf_counter() - t0
             manifest, stats = route_and_write(
-                enriched.select(*keep), out_dir, salt_buckets=salt_buckets,
+                frame, out_dir, salt_buckets=salt_buckets,
                 resume=resume, stat_cols=("lang",), audit=audit,
                 strategy=strategy)
             # counts derive from the SAME lineage aggregate (no extra scan);
             # on resume the stats cover only partitions written this run
-            rows = [("__miss__" if r["route_country"] == "__unrouted__"
-                     else r["route_country"], r["lang"], r["rows"]) for r in stats]
-            counts = self.spark.createDataFrame(
-                rows, "country string, lang string, n long")
+            table = pa.table([
+                pa.array(["__miss__" if r["route_country"] == UNROUTED
+                          else r["route_country"] for r in stats], pa.string()),
+                pa.array([r["lang"] for r in stats], pa.string()),
+                pa.array([r["rows"] for r in stats], pa.int64()),
+            ], names=COUNTS_SCHEMA.names)
         else:
-            counts = country_lang_counts(enriched)
-            counts = counts.cache()
-            counts.count()  # force the aggregate (and metrics)
+            rollup = enriched.groupBy(*self._count_keys).agg(*self._count_aggs)
+            plan_build_s = time.perf_counter() - t0
+            table = rollup.toArrow()
+        # a small Arrow table becomes a local relation: reading counts
+        # starts no Python worker and no job, and nothing is cached
+        counts = self.spark.createDataFrame(table, schema=COUNTS_SCHEMA)
         metrics = dict(obs.get) if obs is not None else {}
+        metrics["plan_build_s"] = plan_build_s
         return PipelineResult(enriched=enriched, counts=counts,
                               metrics=metrics, manifest=manifest)
 

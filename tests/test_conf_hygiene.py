@@ -233,14 +233,78 @@ def test_memoized_trees_not_reused_across_resolved_plans(spark):
 
 
 def test_resolved_column_node_sentinel(spark):
-    """``is_plan_independent`` keys on Spark rendering a resolved leaf as
-    ``ExpressionColumnNode`` in the JVM ColumnNode string. Pin that
-    rendering for each shape a resolved column reaches the memos in, so a
-    Spark upgrade that renames the node fails here, by name, instead of
-    silently re-enabling the stale-exprId memo."""
+    """A resolved leaf reaches the JVM ColumnNode tree as an
+    ``ExpressionColumnNode``, the class ``is_plan_independent`` rejects.
+    Pin that rendering for each shape a resolved column reaches the memos
+    in, so a Spark upgrade that changes it fails here, by name, instead
+    of silently re-enabling the stale-exprId memo."""
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame([("::1",)], "ip string")
     for col in (df.ip, df["ip"], df.ip.cast("string"),
                 F.concat(F.lit("x"), df.ip)):
         assert "ExpressionColumnNode" in col._jc.node().toString(), col
+
+
+def test_plan_independent_walks_node_classes(spark):
+    """The structural guard: plan-agnostic nodes pass at any depth
+    (lambdas, SQL text, nested field access); a resolved leaf anywhere in
+    the tree, or a Python UDF call, fails it."""
+    import pandas as pd
+
+    from fluent_plugin_geoip_spark.functions.binding import (
+        is_plan_independent)
+
+    @F.pandas_udf("long")
+    def width(s: pd.Series) -> pd.Series:
+        return s.str.len()
+
+    df = spark.createDataFrame([("::1",)], "ip string")
+    for col in (F.col("ip"), F.lit(1), F.expr("ip IN ('a', 'b')"),
+                F.transform(F.array(F.col("ip")), lambda x: F.upper(x)),
+                F.struct(F.col("ip").alias("a")).getField("a"),
+                F.when(F.col("ip").isNull(), 1)
+                 .otherwise(F.col("ip").cast("int"))):
+        assert is_plan_independent(col), col
+    for col in (df.ip, F.concat(F.lit("x"), df.ip),
+                F.when(F.col("ip").isNull(),
+                       F.transform(F.array(df.ip), lambda x: x)),
+                width(F.col("ip"))):
+        assert not is_plan_independent(col), col
+
+
+@pytest.mark.parametrize("strategy", ["jvm_join", "arrow"])
+def test_compiled_enrich_columns_pass_guard(spark, strategy):
+    """Every Column an enrich plan caches passes ``is_plan_independent``.
+    Those that fail it (the arrow kernel's lookup UDF call, the Ruby
+    float-format UDF of an interpolated double) are kept as factories and
+    rebuilt on each use; applying the plan twice gives the same rows."""
+    import os
+
+    from fluent_plugin_geoip_spark.config import GeoipConfig
+    from fluent_plugin_geoip_spark.functions.binding import (
+        is_plan_independent)
+    from fluent_plugin_geoip_spark.operators.enrich import GeoipEnricher
+    from fluent_plugin_geoip_spark.operators.geolookup import GeoDatabase
+
+    db = GeoDatabase.from_mmdb(os.path.join(
+        os.path.dirname(__file__), "fixtures", "geolite2-city-v6-test.mmdb"))
+    cfg = GeoipConfig(lookup_keys=["ip"], skip_adding_null_record=True,
+                      records={"city": "${city.names.en['ip']}",
+                               "at": "${city.names.en['ip']} "
+                                     "${location.latitude['ip']}"})
+    df = spark.createDataFrame(
+        [(i, ip) for i, ip in enumerate(
+            ["66.102.1.1", "2001:db8::1", "::ffff:66.102.1.1", "x", None])],
+        "id int, ip string")
+    enr = GeoipEnricher(spark, cfg, db, strategy=strategy)
+    first = enr.transform(df).orderBy("id").collect()
+    plan, = enr._plans.values()
+    entries = plan.entries()
+    cached = [e for e in entries if not callable(e)]
+    factories = [e for e in entries if callable(e)]
+    assert cached and all(is_plan_independent(c) for c in cached)
+    assert len(factories) == (2 if strategy == "arrow" else 1)
+    assert not any(is_plan_independent(f()) for f in factories)
+    assert enr.transform(df).orderBy("id").collect() == first
+    assert first[0]["city"] is not None

@@ -526,3 +526,228 @@ def test_auto_strategy_respects_v6_fraction_hint(spark):
     # explicit strategies are never overridden by the hint
     assert GeoipPipeline(spark, database=v6db, enrich_strategy="jvm_join",
                          v6_text_fraction=0.9).enricher.strategy == "jvm_join"
+
+
+# ---------------------------------------------------------------------------
+# the compiled plan: built once, reused for every input with the same
+# column names, and the same rows as a freshly built pipeline
+
+def _net_doc(cc: str, i: int) -> dict:
+    return {"country": {"iso_code": cc}, "city": {"names": {"en": f"{cc}-{i}"}},
+            "location": {"latitude": float(i), "longitude": -float(i)},
+            "asn": 64500 + i, "as_org": f"AS{i} Net"}
+
+
+@pytest.fixture(scope="module")
+def dual_db(tmp_path_factory):
+    """A dual-stack city + ASN database; the 40 /48s in one /32 make the
+    v6 table split a dense bucket, so the probe key has split levels."""
+    from fluent_plugin_geoip_spark.operators.geolookup import GeoDatabase
+    from fluent_plugin_geoip_spark.sources.mmdb import build_mmdb
+    nets = [("1.2.0.0/16", _net_doc("US", 1)), ("8.8.8.0/24", _net_doc("JP", 2)),
+            ("2001:db8::/32", _net_doc("DE", 3))]
+    nets += [(f"2400:cb00:{k:x}::/48", _net_doc("FR", 10 + k))
+             for k in range(40)]
+    path = tmp_path_factory.mktemp("dual") / "dual.mmdb"
+    path.write_bytes(build_mmdb(nets))
+    return GeoDatabase.from_mmdb(str(path))
+
+
+DUAL_IPS = ["1.2.3.4", "8.8.8.8", "9.9.9.9", "2001:db8::1", "2400:cb00:5::7",
+            "2400:cb00:99::1", "::ffff:8.8.8.8", "::1.2.0.9", "garbage", ""]
+ENRICHED = ["url", "country", "city", "latitude", "longitude", "asn",
+            "as_org", "route_country"]
+
+
+def dual_pages(spark, ips=DUAL_IPS):
+    return spark.createDataFrame(
+        [(f"http://www.site{i}.com/p", f"{ip} - - [10/Oct/2000:13:55:36 "
+          f"-0700] \"GET / HTTP/1.0\" 200 1", "en" if i % 2 else "de")
+         for i, ip in enumerate(ips)], "url string, text string, lang string")
+
+
+def _dual_pipeline(spark, db, strategy="auto"):
+    return GeoipPipeline(spark, database=db, enable_asn=True, asn_database=db,
+                         enrich_strategy=strategy)
+
+
+def _enriched_rows(df):
+    return df.select(*ENRICHED).orderBy("url").collect()
+
+
+@pytest.mark.parametrize("strategy", ["jvm_join", "arrow"])
+def test_compiled_pipeline_reuse_matches_fresh(spark, dual_db, strategy):
+    """One pipeline over inputs whose columns are reordered or extended,
+    over a second plan with the same column names, and over an input
+    derived from another DataFrame through resolved column references
+    (the round-9 stale-exprId shape) gives the rows a freshly built
+    pipeline gives."""
+    pipe = _dual_pipeline(spark, dual_db, strategy)
+    base = dual_pages(spark)
+    other = dual_pages(spark, list(reversed(DUAL_IPS)) + ["1.2.255.255"])
+    inputs = [
+        base,
+        base.select("lang", "text", "url"),
+        base.withColumn("extra", F.lit(7)).select("extra", "text", "url",
+                                                  "lang"),
+        other,
+        base.where(base.lang == "en").select(base.url, base.text, base.lang),
+        base,
+    ]
+    for df in inputs:
+        got = pipe.enrich(df)
+        assert _enriched_rows(got) == \
+            _enriched_rows(_dual_pipeline(spark, dual_db, strategy).enrich(df))
+        assert got.columns == [*df.columns, "host", "client_ip",
+                               *ENRICHED[1:]]
+    assert len(pipe.enricher._plans) == 3  # one per distinct column list
+    hits = {r["url"]: r for r in _enriched_rows(pipe.enrich(base))}
+    assert hits["http://www.site3.com/p"]["city"] == "DE-3"
+    assert hits["http://www.site4.com/p"]["asn"] == 64515
+    assert hits["http://www.site6.com/p"]["country"] == "JP"  # ::ffff:8.8.8.8
+
+
+@pytest.mark.parametrize("strategy", ["jvm_join", "arrow"])
+def test_compiled_skip_null_record_reuse(spark, dual_db, strategy):
+    """skip_adding_null_record compiles per input schema: with no
+    pre-existing output field a skipped row gets null, with one it keeps
+    the old value. A reused enricher matches a fresh one on both."""
+    from fluent_plugin_geoip_spark.config import GeoipConfig
+    from fluent_plugin_geoip_spark.operators.enrich import (
+        SKIP_FLAG, GeoipEnricher,
+    )
+    cfg = GeoipConfig(lookup_keys=["ip"], skip_adding_null_record=True,
+                      records={"country": "${country.iso_code['ip']}",
+                               "city": "${city.names.en['ip']}"})
+    plain = spark.createDataFrame(list(enumerate(DUAL_IPS)), "id int, ip string")
+    with_field = spark.createDataFrame(
+        [(i, ip, "old") for i, ip in enumerate(DUAL_IPS)],
+        "id int, ip string, country string")
+    enr = GeoipEnricher(spark, cfg, dual_db, strategy=strategy)
+    for df in (plain, with_field, plain, with_field):
+        got = enr.transform(df)
+        assert got.orderBy("id").collect() == GeoipEnricher(
+            spark, cfg, dual_db, strategy=strategy
+        ).transform(df).orderBy("id").collect()
+    assert got.columns == ["id", "ip", "country", "city", SKIP_FLAG]
+    assert enr.transform(plain).columns == ["id", "ip", "country", "city",
+                                            SKIP_FLAG]
+    rows = {r["ip"]: r for r in got.collect()}
+    assert rows["9.9.9.9"][SKIP_FLAG] and rows["9.9.9.9"]["country"] == "old"
+    assert not rows["8.8.8.8"][SKIP_FLAG] and rows["8.8.8.8"]["country"] == "JP"
+    miss = {r["ip"]: r for r in enr.transform(plain).collect()}["9.9.9.9"]
+    assert miss[SKIP_FLAG] and miss["country"] is None
+
+
+@pytest.mark.parametrize("strategy", ["jvm_join", "arrow"])
+def test_compiled_plan_follows_case_sensitivity(spark, dual_db, strategy):
+    """Which input column a template field replaces follows
+    ``spark.sql.caseSensitive`` at each ``transform``: flipping it between
+    two calls on a ``Country`` input gives what a fresh enricher gives
+    under the new setting (``Country`` replaced by ``country``, or both
+    kept)."""
+    from fluent_plugin_geoip_spark.config import GeoipConfig
+    from fluent_plugin_geoip_spark.operators.enrich import GeoipEnricher
+    cfg = GeoipConfig(lookup_keys=["ip"],
+                      records={"country": "${country.iso_code['ip']}"})
+    df = spark.createDataFrame(
+        [(i, ip, "old") for i, ip in enumerate(DUAL_IPS)],
+        "id int, ip string, Country string")
+    enr = GeoipEnricher(spark, cfg, dual_db, strategy=strategy)
+    expected_columns = {"false": ["id", "ip", "country"],
+                        "true": ["id", "ip", "Country", "country"]}
+    try:
+        for setting in ("false", "true", "false"):
+            spark.conf.set("spark.sql.caseSensitive", setting)
+            got = enr.transform(df)
+            assert got.columns == expected_columns[setting]
+            assert got.orderBy("id").collect() == GeoipEnricher(
+                spark, cfg, dual_db, strategy=strategy
+            ).transform(df).orderBy("id").collect()
+    finally:
+        spark.conf.unset("spark.sql.caseSensitive")
+    rows = {r["ip"]: r for r in got.collect()}
+    assert rows["8.8.8.8"]["country"] == "JP"
+    assert len(enr._plans) == 2
+
+
+def test_warm_enrich_py4j_round_trips(spark, dual_db, monkeypatch):
+    """A warm enrich on a dual-stack city + ASN pipeline only applies the
+    compiled plan: fewer than 100 py4j round trips (rebuilding it made
+    thousands). Releasing a Java proxy is a round trip too; the cyclic
+    garbage of earlier work is collected before counting and the cyclic
+    collector is paused while counting, so only the enrich's own calls
+    and releases count."""
+    import gc
+
+    import py4j.clientserver as cs
+    pipe = _dual_pipeline(spark, dual_db)
+    pages = dual_pages(spark)
+    pipe.enrich(pages)
+    calls = []
+    send = cs.ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        calls.append(command)
+        return send(self, command, *args, **kwargs)
+    gc.collect()
+    gc.disable()
+    try:
+        monkeypatch.setattr(cs.ClientServerConnection, "send_command",
+                            counted)
+        pipe.enrich(pages)
+        monkeypatch.undo()
+    finally:
+        gc.enable()
+    assert 0 < len(calls) < 100, len(calls)
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+@pytest.mark.parametrize("routed", [False, True])
+def test_counts_local_relation_no_cache(spark, pages_dir, tmp_path, routed):
+    """``counts`` is a local relation on both paths: reading it
+    adds no persistent RDD (nothing is cached) and needs no Python
+    worker. ``plan_build_s`` is reported."""
+    pages = spark.read.parquet(pages_dir)
+    before = _persistent_rdds(spark)
+    res = GeoipPipeline(spark).run(
+        pages, out_dir=str(tmp_path / "routed") if routed else None)
+    assert "LocalRelation" in \
+        res.counts._jdf.queryExecution().analyzed().toString()
+    got = sorted(tuple(r) for r in res.counts.collect())
+    assert _persistent_rdds(spark) == before
+    assert got == sorted(tuple(r) for r in duckdb_expected_counts(pages_dir))
+    assert res.counts.schema.simpleString() == \
+        "struct<country:string,lang:string,n:bigint>"
+    assert 0 < res.metrics["plan_build_s"] < 60
+    assert res.metrics["rows_total"] == N
+
+
+def test_aggregate_only_run_is_one_action(spark, pages_dir):
+    """The aggregate-only run costs the Spark jobs of one action over its
+    plan (with AQE, a map-stage job per exchange plus the result job):
+    no cache build, no separate count, and reading ``counts`` afterwards
+    runs none."""
+    from fluent_plugin_geoip_spark.operators.aggregate import (
+        country_lang_counts)
+    sc = spark.sparkContext
+    pipe = GeoipPipeline(spark)
+    pages = spark.read.parquet(pages_dir)
+    pipe.run(pages)  # compile and warm
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one_action = jobs("one-action", lambda: country_lang_counts(
+        pipe.enrich(pages)).collect())
+    assert one_action >= 1
+    assert jobs("aggregate-only-run",
+                lambda: pipe.run(pages).counts.collect()) == one_action

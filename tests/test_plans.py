@@ -2,9 +2,11 @@
 
 - column pruning reaches the parquet scan (a rollup must not read html)
 - predicate pushdown reaches the scan (PushedFilters)
-- the enrich stage crosses into Python exactly ONCE per lookup key set
-  (ArrowEvalPython), with no shuffle (narrow map)
-- the routed fan-out introduces exactly one Exchange (the salted repartition)
+- the default ``jvm_join`` enrich stage is broadcast hash joins with no
+  Python worker; the ``arrow`` kernel crosses into Python exactly ONCE per
+  lookup key set (ArrowEvalPython); neither shuffles (narrow map)
+- the routed fan-out introduces exactly one Exchange (the REBALANCE on the
+  route key; the ``salt`` strategy's repartition, likewise one)
 - aggregates run as partial+final hash aggregation (map-side combine)
 
 These are the .explain() checks SURVEY.md §4.2 commits to; they pin the plan

@@ -9,7 +9,7 @@ example count low but record coverage high.
 """
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import types as T
 
 from fluent_plugin_geoip_spark.config import GeoipConfig, GeoipConfigError
@@ -79,6 +79,10 @@ records_cfg = st.dictionaries(
        skip=st.booleans(),
        hosts=st.lists(st.tuples(st.sampled_from(IPS), st.sampled_from(IPS)),
                       min_size=1, max_size=8, unique=True))
+# no placeholder at all: the reference's placeholder hash is empty, so
+# skip_adding_null_record skips every record
+@example(records={"out_a": ","}, skip=True,
+         hosts=[("66.102.3.80", "66.102.3.80")])
 def test_spark_matches_reference_interpreter(spark, records, skip, hosts):
     cfg = GeoipConfig(lookup_keys=["host", "host2"], records=records,
                       skip_adding_null_record=skip)

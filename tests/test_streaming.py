@@ -46,6 +46,28 @@ def test_stream_matches_batch(spark, staged_pages, tmp_path):
     assert stream_sink_counts(out) == stream_counts
 
 
+def test_stream_reuses_batch_compiled_pipeline(spark, staged_pages,
+                                               tmp_path):
+    """A pipeline whose plan a batch run compiled is applied unchanged to
+    the streaming source (same column names): its sinks match a freshly
+    built pipeline's stream, and no second plan is compiled."""
+    pipe = GeoipPipeline(spark)
+    pipe.run(spark.read.parquet(staged_pages))
+    compiled = set(pipe.enricher._plans)
+    counts = {}
+    for name, pipeline in (("reused", pipe), ("fresh", None)):
+        out = str(tmp_path / name)
+        q = start_pipeline_stream(spark, staged_pages, out,
+                                  str(tmp_path / f"{name}_ckpt"),
+                                  pipeline=pipeline)
+        q.processAllAvailable()
+        q.stop()
+        counts[name] = stream_sink_counts(out)
+    assert counts["reused"] == counts["fresh"]
+    assert sum(counts["reused"].values()) == N
+    assert set(pipe.enricher._plans) == compiled
+
+
 def test_stream_checkpoint_resume(spark, staged_pages, tmp_path):
     """Stop the query, add late files, restart with the same checkpoint —
     only the new files are processed, totals converge with no duplication."""
