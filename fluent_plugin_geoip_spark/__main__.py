@@ -80,7 +80,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--resume", action="store_true")
     p.add_argument("--streaming", action="store_true")
     p.add_argument("--checkpoint")
-    p.add_argument("--salt-buckets", type=int, default=16)
     args = p.parse_args(argv)
 
     from .session import build_session
@@ -97,15 +96,13 @@ def main(argv: list[str] | None = None) -> int:
             p.error("--streaming requires --input and --checkpoint")
         from .streaming.stream import start_pipeline_stream
         q = start_pipeline_stream(spark, args.input, args.output,
-                                  args.checkpoint, pipeline=pipe,
-                                  salt_buckets=args.salt_buckets)
+                                  args.checkpoint, pipeline=pipe)
         q.awaitTermination()
         return 0
 
     pages = (spark.read.parquet(args.input) if args.input
              else generate_pages(spark, args.rows))
-    result = pipe.run(pages, out_dir=args.output, resume=args.resume,
-                      salt_buckets=args.salt_buckets)
+    result = pipe.run(pages, out_dir=args.output, resume=args.resume)
     print(json.dumps({"metrics": result.metrics,
                       "sinks": {k: v["rows"] for k, v in result.manifest.items()}},
                      sort_keys=True))

@@ -1,4 +1,5 @@
-"""Vectorized IPv4 parsing (pandas/NumPy, Arrow-batch friendly).
+"""IPv4 parsing: native (JVM/codegen) for the enrich joins, vectorized
+pandas/NumPy for the driver-side ``GeoDatabase.lookup_batch``.
 
 Mirrors the address-handling semantics of the reference filter
 (/root/reference/lib/fluent/plugin/filter_geoip.rb:167-185):
@@ -27,9 +28,8 @@ _OCTET_RE = r"^(\d{1,3})\.(\d{1,3})\.(\d{1,3})\.(\d{1,3})$"
 def ipv4_str_to_long(col: Column) -> Column:
     """Native (JVM/codegen) IPv4-string → uint32-as-long; null when invalid.
 
-    Scale note: this keeps the hot parse on the JVM side so the Python stage
-    of the lookup kernel receives an 8-byte long per row instead of a string
-    — less Arrow traffic and no per-batch pandas regex. Semantics match
+    The enrich joins probe the v4 range table with this long (codegen, no
+    Python worker). Semantics match
     ``ipv4_to_uint32`` (strict grammar: octets ≤ 255, no surrounding
     whitespace — padded addresses are a miss, as when the reference hands
     the raw string to the backend, filter_geoip.rb:175-179).

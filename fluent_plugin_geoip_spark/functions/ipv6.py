@@ -4,13 +4,11 @@
 (the 128-bit address as two big-endian 64-bit halves; null when invalid)
 using only built-in SQL expressions — regex structure checks, ``split``,
 ``conv`` and an ``aggregate`` HOF — so a v6-capable GeoIP database no
-longer forces the enrich stage through a Python worker (round-7 VERDICT
-item 2: the jvm_join kernel was v4-only, and one dual-stack GeoLite2
-would have silently reinstated the Arrow scaling ceiling).
+longer forces the enrich stage through a Python worker.
 
-Semantics mirror the Arrow kernel's ``socket.inet_pton(AF_INET6, ...)``
-(glibc), pinned case-by-case in tests/test_ipv4_and_kernel.py and by the
-hypothesis differential:
+Semantics mirror ``socket.inet_pton(AF_INET6, ...)`` (glibc), which
+``GeoDatabase.lookup_batch`` uses on the driver; pinned case-by-case in
+tests/test_ipv4_and_kernel.py and by the hypothesis differential:
 
 - 8 colon-separated groups of 1-4 hex digits; one optional ``::`` run
   standing for ≥1 zero groups (so with ``::`` at most 7 explicit groups;

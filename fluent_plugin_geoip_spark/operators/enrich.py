@@ -4,10 +4,8 @@ Spark restatement of the reference's per-record dataflow
 (filter_geoip.rb:106-139):
 
     get_address (compiled accessors)          → accessor Columns       (rb:159-165)
-    geolocate   (DB probe per lookup field)   → broadcast range-table joins
-                                                (``jvm_join``) or one pandas
-                                                UDF struct per key (``arrow``)
-                                                                        (rb:167-185)
+    geolocate   (DB probe per lookup field)   → broadcast prefix-bucket
+                                                range-table joins  (rb:167-185)
     create_placeholder (attr dig + lat/lon default)
                                               → typed placeholder Columns (rb:187-202)
     add_geoip_field (template eval, 3 modes)  → one output projection in
@@ -21,10 +19,8 @@ whole stage once per input schema into an :class:`EnrichPlan` — the
 Columns, the renamed broadcast range tables and the join conditions —
 and ``transform`` applies it as a short fixed sequence: one projection
 per materialization layer, one join per range table, one output
-projection. The stage is narrow: the ``jvm_join`` kernel's broadcast
-hash joins fuse into the scan's codegen stage with no Python worker, and
-the ``arrow`` kernel's lookup UDFs share one ArrowEvalPython crossing.
-No shuffle is introduced.
+projection. The stage is narrow: the broadcast hash joins fuse into the
+scan's codegen stage with no Python worker, and no shuffle is introduced.
 """
 
 from __future__ import annotations
@@ -40,7 +36,7 @@ from ..config import (
 from ..functions.binding import is_plan_independent
 from ..functions.ipv4 import ipv4_str_to_long
 from ..functions.templates import compile_template, typed_null
-from .geolookup import GeoDatabase, make_lookup_udf, sanitize_attr
+from .geolookup import GeoDatabase, sanitize_attr
 
 SKIP_FLAG = "geoip_skipped"
 
@@ -49,10 +45,10 @@ def _compiled(entry):
     """A compile-time entry as the plan keeps it. A plain Column is one
     the enricher built from column names, literals and built-in functions
     only, and is kept as is. A factory builds a Column that may hold a
-    Python UDF call (the arrow kernel's geo struct, a template output):
-    it is run once and its Column kept if it resolves by name against any
-    plan (``is_plan_independent``); otherwise the factory is kept and the
-    Column rebuilt on each use."""
+    Python UDF call (a template output that formats a float the Ruby
+    way): it is run once and its Column kept if it resolves by name
+    against any plan (``is_plan_independent``); otherwise the factory is
+    kept and the Column rebuilt on each use."""
     if callable(entry):
         col = entry()
         return col if is_plan_independent(col) else entry
@@ -136,23 +132,15 @@ def _quoted(name: str) -> Column:
 class GeoipEnricher:
     """Compile once, apply to any DataFrame (batch or streaming).
 
-    ``strategy`` picks the geolocate kernel:
-
-    - ``"arrow"``: broadcast NumPy searchsorted inside an Arrow-batched
-      pandas UDF — one Python crossing per batch. This constructor's
-      default, for direct callers; ``GeoipPipeline`` picks ``"jvm_join"``.
-    - ``"jvm_join"``: broadcast-hash joins against prefix-bucket-expanded
-      range tables (:func:`..operators.geolookup.expanded_bucket_table`;
-      for v6-capable databases additionally
-      :func:`..operators.geolookup.expanded_bucket_table_v6` with the
-      address parsed JVM-side by :func:`..functions.ipv6.
-      ipv6_str_to_longs`) — the enrich stage stays entirely inside the
-      JVM with NO Python worker involvement, removing the Python-worker
-      bandwidth ceiling from the scale path (round-6 VERDICT item 1;
-      round-7 item 2 extended it to v6, which previously fell back to
-      the dual Arrow crossing).
-
-    Both produce identical results (property-pinned in tests).
+    Each lookup key is geolocated by broadcast-hash joins against
+    prefix-bucket-expanded range tables
+    (:func:`..operators.geolookup.expanded_bucket_table`; for v6-capable
+    databases additionally
+    :func:`..operators.geolookup.expanded_bucket_table_v6`, with the
+    address parsed JVM-side by :func:`..functions.ipv6.ipv6_str_to_longs`),
+    so the enrich stage stays inside the JVM with no Python worker.
+    ``GeoDatabase.lookup_batch`` is the driver-side reference the tests
+    hold it to.
 
     ``transform`` compiles an :class:`EnrichPlan` on first sight of an
     input schema (its column names, and the session's
@@ -161,14 +149,9 @@ class GeoipEnricher:
     """
 
     def __init__(self, spark: SparkSession, config: GeoipConfig,
-                 database: GeoDatabase | None = None,
-                 strategy: str = "arrow"):
-        if strategy not in ("arrow", "jvm_join"):
-            raise ValueError(
-                f"strategy must be 'arrow'|'jvm_join', got {strategy!r}")
+                 database: GeoDatabase | None = None):
         self.spark = spark
         self.config = config
-        self.strategy = strategy
         # no explicit database → load the configured .mmdb path, mirroring
         # the reference's load-at-configure (filter_geoip.rb:204-217)
         self.db = database if database is not None else config.load_database()
@@ -181,27 +164,12 @@ class GeoipEnricher:
                 self._attrs_by_key.setdefault(ph.record_key, [])
                 if ph.geoip_key not in self._attrs_by_key[ph.record_key]:
                     self._attrs_by_key[ph.record_key].append(ph.geoip_key)
-        self._udf_cache: dict[tuple[str, ...], object] = {}
-        # shape of each expanded range table the jvm_join kernel probes,
+        # shape of each expanded range table the enrich joins probe,
         # ``{"v4"|"v6": {"rows": ..., "max_bucket_rows": ...}}``, filled
         # from the NumPy layout when a plan is compiled
         self.table_stats: dict[str, dict[str, int]] = {}
         # (input column names, spark.sql.caseSensitive) → compiled plan
         self._plans: dict[tuple[tuple[str, ...], bool], EnrichPlan] = {}
-
-    def _udf_for(self, attrs: list[str]):
-        # v4-only DBs take the fast path: IPv4→uint32 parsed JVM-side, the
-        # Arrow crossing carries one long per row. A v6-capable DB takes the
-        # dual crossing: the same JVM-parsed long for the v4 majority PLUS
-        # the raw string, inspected only where the JVM v4 parse failed
-        # (possible v6 text) — so adding v6 ranges to a DB never demotes
-        # the v4 rows off the long fast path.
-        key = tuple(attrs)
-        if key not in self._udf_cache:
-            input_type = "dual" if self.db.has_ipv6 else "long"
-            self._udf_cache[key] = make_lookup_udf(self.spark, self.db, attrs,
-                                                   input_type=input_type)
-        return self._udf_cache[key]
 
     def transform(self, df: DataFrame) -> DataFrame:
         if not self.compiled.templates:
@@ -221,21 +189,18 @@ class GeoipEnricher:
         ``spark.sql.caseSensitive`` = ``case_sensitive``."""
         comp = self.compiled
         # materialization layers before the joins: 0 the v4 parse of each
-        # lookup key, 1 the v6 parse (jvm_join) or the v6 candidate string
-        # (arrow), 2 the probe words (jvm_join); after them, the geo struct
-        # of each key: merged join columns (jvm_join) or the lookup UDF
+        # lookup key, 1 the v6 parse, 2 the probe words; after them, the
+        # geo struct of each key, merged from its join columns
         layers: list[list] = [[], [], []]
         joins: list[tuple[DataFrame, Column]] = []
         geo_layer: list = []
         # lookup key → name of its geo struct column
         geo: dict[str, str] = {}
-        compile_geo = (self._compile_jvm_join if self.strategy == "jvm_join"
-                       else self._compile_arrow)
         for i, (key, attrs) in enumerate(self._attrs_by_key.items()):
             addr = accessor_column(comp.accessors[key]).cast("string")
             layers[0].append(ipv4_str_to_long(addr).alias(f"__ip_{i}"))
             geo[key] = f"__geo_{i}"
-            geo_layer.append(compile_geo(i, attrs, addr, layers, joins))
+            geo_layer.append(self._compile_geo(i, attrs, addr, layers, joins))
 
         ph_cols = {ph.text: self._placeholder_column(ph, geo)
                    for ph in comp.placeholders}
@@ -264,29 +229,6 @@ class GeoipEnricher:
             *[Join(table, _compiled(cond)) for table, cond in joins],
             *([projection([star, *geo_layer])] if geo_layer else []),
             projection(output)])
-
-    def _compile_arrow(self, i: int, attrs: list[str], addr: Column,
-                       layers: list[list], joins: list):
-        """Geolocate one lookup key with the broadcast-searchsorted pandas
-        UDF; returns a factory of its geo struct Column. IPv4→uint32 parse
-        runs JVM-side (codegen); the Arrow crossing carries one long per
-        row in and the needed attrs out."""
-        ip = F.col(f"__ip_{i}")
-        udf = self._udf_for(attrs)
-        if self.db.has_ipv6:
-            # dual crossing: JVM long for the v4 majority + raw string for
-            # the rows the v4 parser rejected (v6 candidates). The string
-            # is NULLED where the v4 parse succeeded, so the Arrow batch
-            # ships one null mask instead of every raw address for the
-            # (dominant) v4 rows — the crossing payload is proportional to
-            # the v6/garbage fraction, not the batch (round-6 VERDICT item
-            # 1). lookup_batch_dual ignores the string wherever the long
-            # is non-null, so this is semantics-preserving by construction.
-            layers[1].append(F.when(ip.isNull(), addr).alias(f"__ips_{i}"))
-            args = (ip, F.col(f"__ips_{i}"))
-        else:
-            args = (ip,)
-        return lambda: udf(*args).alias(f"__geo_{i}")
 
     def _skip_condition(self, geo, ph_cols) -> Column | None:
         """skip_adding_null_record (rb:122-123): the reference checks
@@ -356,7 +298,8 @@ class GeoipEnricher:
 
     def _range_df_for(self, attrs: list[str]):
         """Broadcast-ready expanded bucket table, cached per attr set
-        (common-subexpression reuse, mirroring the UDF cache)."""
+        (common-subexpression reuse of the reference's uniq placeholder
+        dedup, rb:86)."""
         from .geolookup import expanded_bucket_table
         cache = self._db_plan_cache()
         key = (id(self.spark), "jvm", self.JVM_JOIN_SHIFT, *attrs)
@@ -374,8 +317,8 @@ class GeoipEnricher:
                 self.spark, self.db, attrs)[0]
         return cache[key]
 
-    def _compile_jvm_join(self, i: int, attrs: list[str], addr: Column,
-                          layers: list[list], joins: list) -> Column:
+    def _compile_geo(self, i: int, attrs: list[str], addr: Column,
+                     layers: list[list], joins: list) -> Column:
         """Geolocate one lookup key with broadcast-hash prefix-bucket
         joins; returns its geo struct Column. No Python crossing; the
         BETWEEN rides as a join filter and at most one range matches
@@ -386,8 +329,8 @@ class GeoipEnricher:
         rejected it — codegen CASE WHEN keeps the v4 majority free),
         v4-mapped ``::ffff:a.b.c.d`` / v4-compat ``::a.b.c.d`` text is
         folded into the v4 probe (libmaxminddb tree-walk semantics,
-        matching lookup_batch_dual), and native v6 rows probe the
-        bias-flipped 128-bit range table. The two joins are disjoint by
+        matching ``GeoDatabase.lookup_batch``), and native v6 rows probe
+        the bias-flipped 128-bit range table. The two joins are disjoint by
         construction (a row probes exactly one table), so the per-field
         merge is a plain when(v6hit, v6).otherwise(v4)."""
         from ..functions.ipv6 import ipv6_str_to_longs

@@ -5,16 +5,19 @@ The reference (/root/reference/lib/fluent/plugin/filter_geoip.rb:167-185,
 204-217) loads an IP-range→attributes interval map fully into worker memory
 (``:memory`` flag, filter_geoip.rb:207) and probes it per record. The Spark
 restatement: the range table is sorted once on the driver into plain NumPy
-arrays, broadcast to every executor, and probed with ``np.searchsorted``
-(binary search) inside an Arrow-batched scalar pandas UDF — one JVM↔Python
-crossing per batch, zero per-row Python.
+arrays (:class:`GeoDatabase`), expanded into IP-prefix buckets
+(:func:`expanded_bucket_table`, :func:`expanded_bucket_table_v6`) and
+broadcast, and each address probes its bucket with a broadcast hash join
+whose BETWEEN rides as a join filter — inside the JVM, zero Python.
 
-Why not a join: an interval probe is a non-equi join; Spark would plan it as
-BroadcastNestedLoopJoin, O(rows × ranges). Binary search over a broadcast
-sorted array is O(rows × log ranges) and shuffle-free — it keeps the enrich
-stage a narrow map, which is what lets the pipeline scale linearly with
-executors (the reference's ``multi_workers_ready? → true`` contract,
-filter_geoip.rb:115-117).
+Why buckets: an interval probe is a non-equi join; Spark would plan it as
+BroadcastNestedLoopJoin, O(rows × ranges). The bucket key manufactures an
+equi key, and splitting dense buckets (:class:`BucketLayout`) bounds the
+pieces one probe scans. The enrich stage stays a narrow map, which is what
+lets the pipeline scale linearly with executors (the reference's
+``multi_workers_ready? → true`` contract, filter_geoip.rb:115-117).
+``GeoDatabase.lookup_batch`` is the driver-side NumPy ``searchsorted``
+probe of the same table: the dump CLI's lookup and the tests' reference.
 """
 
 from __future__ import annotations
@@ -138,18 +141,6 @@ class GeoDatabase:
     @property
     def has_ipv6(self) -> bool:
         return len(self.starts6) > 0
-
-    def __getstate__(self):
-        # the enricher stashes session-local expanded-table DataFrames on
-        # the instance (`_expanded_plan_cache`, round 9) — they are not
-        # picklable and must never ride the Arrow kernel's broadcast of
-        # the database; neither must the memoized bucket layouts
-        # (`_bucket_layouts`), which only the driver needs; everything
-        # else serializes as-is
-        state = dict(self.__dict__)
-        state.pop("_expanded_plan_cache", None)
-        state.pop("_bucket_layouts", None)
-        return state
 
     @classmethod
     def from_rows(cls, rows: list[dict], profile: str = "geoip2_c",
@@ -290,7 +281,6 @@ class GeoDatabase:
         counterpart of the reference's utils/dump.rb:18-27. Handles both
         IPv4 and (when the DB carries a v6 table) IPv6 addresses; returns
         None on a miss."""
-        import pandas as pd
         attrs, i = self.attrs, -1
         if ":" in ip and self.has_ipv6:
             idx, keys, v4map = self._parse_v6(pd.Series([ip]))
@@ -397,32 +387,6 @@ class GeoDatabase:
                 vals = [None if v is None else int(v) for v in vals]
             out.loc[rows, name] = pd.Series(vals, index=rows, dtype=out[name].dtype)
 
-    def lookup_batch_longs(self, ips: pd.Series, attr_paths: list[str]) -> pd.DataFrame:
-        """Probe a batch of pre-parsed uint32-as-long IPs (null → miss)."""
-        valid = ips.notna().to_numpy()
-        values = ips.fillna(0).to_numpy(dtype=np.int64)
-        return self.lookup_batch_ints(values, valid, attr_paths)
-
-    def lookup_batch_dual(self, longs: pd.Series, strs: pd.Series,
-                          attr_paths: list[str]) -> pd.DataFrame:
-        """Dual-input probe for v6-capable databases (round-4 VERDICT
-        finding 3): the v4 majority arrives pre-parsed as JVM longs (same
-        fast path as a v4-only DB); only rows the JVM v4 parser rejected —
-        i.e. possible v6 / v4-mapped text / garbage — are inspected as
-        strings, behind the vectorized ``':'`` pre-mask of
-        :meth:`_parse_v6`."""
-        valid = longs.notna().to_numpy()
-        values = longs.fillna(0).to_numpy(dtype=np.int64)
-        strs = strs.reset_index(drop=True)
-        cand = strs.where(pd.Series(~valid, index=strs.index), other=None)
-        idx6, keys6, v4map = self._parse_v6(cand)
-        for i, u32 in v4map:  # v4-mapped/compat text probes the v4 table
-            values[i] = u32
-            valid[i] = True
-        out = self.lookup_batch_ints(values, valid, attr_paths)
-        self._overlay_v6(out, idx6, keys6, attr_paths)
-        return out
-
     def lookup_batch_ints(self, values: np.ndarray, valid: np.ndarray,
                           attr_paths: list[str]) -> pd.DataFrame:
         n = len(values)
@@ -470,9 +434,9 @@ _PA_TYPES = {"string": "string", "double": "float64", "int": "int32",
 
 def _attr_pa_array(arr, dt: str, idx: np.ndarray):
     """Per-range attr array → expanded pyarrow array (NaN → null so the
-    join output carries SQL nulls for missing doubles exactly like the
-    Arrow lookup path — a NaN latitude would defeat the lat/lon
-    0.0-coalesce default, F7)."""
+    join output carries SQL nulls for missing doubles, as
+    ``GeoDatabase.lookup_batch`` does — a NaN latitude would defeat the
+    lat/lon 0.0-coalesce default, F7)."""
     import pyarrow as pa
     pa_type = pa.type_for_alias(_PA_TYPES[dt])
     n_rows = len(idx)
@@ -486,34 +450,24 @@ def _attr_pa_array(arr, dt: str, idx: np.ndarray):
 
 def _expanded_df(spark, schema: T.StructType, idx: np.ndarray,
                  fixed: list, attr_specs: list):
-    """Ship an expanded range table to Spark COLUMNAR (round 9, round-8
-    VERDICT item 2): the old path zipped Python row tuples through
-    ``createDataFrame``, which serializes driver-side one row at a time —
-    nothing at the test fixtures' size, but ~minutes of one-time startup
-    on a real GeoLite2-City (~3M v4 + ~1.5M v6 ranges). NumPy columns are
-    wrapped as a ``pyarrow.Table`` (zero-copy for the numeric columns)
-    and handed to Arrow-enabled ``createDataFrame``; the per-row tuple
-    path remains only as a fallback for sessions that reject the Arrow
-    form. ``fixed``: int64 arrays for the leading non-null long columns;
+    """Ship an expanded range table to Spark COLUMNAR: NumPy columns are
+    wrapped as a ``pyarrow.Table`` (zero-copy for the numeric columns) and
+    handed to ``createDataFrame``, which makes it a local relation whether
+    or not ``spark.sql.execution.arrow.pyspark.enabled`` is set. (Python
+    row tuples would serialize driver-side one row at a time: minutes of
+    one-time startup on a real GeoLite2-City, ~3M v4 + ~1.5M v6 ranges.)
+    ``fixed``: int64 arrays for the leading non-null long columns;
     ``attr_specs``: (per-range values array | None, dtype) per attr."""
     import pyarrow as pa
     arrays = [pa.array(np.asarray(a, dtype=np.int64), type=pa.int64())
               for a in fixed]
     arrays += [_attr_pa_array(arr, dt, idx) for arr, dt in attr_specs]
     tbl = pa.Table.from_arrays(arrays, names=[f.name for f in schema.fields])
-    try:
-        return spark.createDataFrame(tbl, schema=schema)
-    except Exception:  # pragma: no cover - non-Arrow-capable session
-        import logging
-        logging.getLogger(__name__).warning(
-            "expanded table: Arrow createDataFrame unavailable — falling "
-            "back to row-at-a-time construction (slow for large DBs)")
-        rows = list(zip(*[a.to_pylist() for a in arrays]))
-        return spark.createDataFrame(rows, schema=schema)
+    return spark.createDataFrame(tbl, schema=schema)
 
 
 # Most range pieces one bucket of an expanded table may hold: the
-# jvm_join probe's join filter scans every piece of the probe's bucket,
+# enrich probe's join filter scans every piece of the probe's bucket,
 # so this caps the probe cost (CAMEL Hash Table, EDBT 2026: probe cost is
 # chain length × compare cost).
 BUCKET_CAP = 32
@@ -686,8 +640,8 @@ def v6_bucket_layout(db: GeoDatabase,
 
 def expanded_bucket_table(spark, db: GeoDatabase, attr_paths: list[str],
                           shift: int = 16):
-    """The range table expanded into IP-prefix buckets for the all-JVM
-    enrich path (``GeoipEnricher(strategy="jvm_join")``).
+    """The range table expanded into IP-prefix buckets for the enrich
+    joins (:class:`..operators.enrich.GeoipEnricher`).
 
     A plain range join (``ip BETWEEN start AND end``) has no equi key, so
     Spark would plan BroadcastNestedLoopJoin — O(rows × ranges). Bucketing
@@ -795,47 +749,3 @@ def expanded_bucket_table_v6(spark, db: GeoDatabase, attr_paths: list[str],
     fixed = [lay.keys, s_hi_b[idx], s_lo_b[idx], e_hi_b[idx], e_lo_b[idx]]
     attr_specs = [(db.attrs6.get(p), db.attr_type(p)) for p in attr_paths]
     return _expanded_df(spark, schema, idx, fixed, attr_specs), lay.coarse_bits
-
-
-def lookup_struct_type(db: GeoDatabase, attr_paths: list[str]) -> T.StructType:
-    fields = [T.StructField("__hit__", T.BooleanType(), False)]
-    for p in attr_paths:
-        fields.append(T.StructField(sanitize_attr(p), _SPARK_TYPES[db.attr_type(p)], True))
-    return T.StructType(fields)
-
-
-def make_lookup_udf(spark, db: GeoDatabase, attr_paths: list[str],
-                    input_type: str = "string"):
-    """Create the broadcast-searchsorted pandas UDF for a set of attr paths.
-
-    One UDF instance is shared across all lookup columns needing the same
-    attrs (common-subexpression reuse of the reference's ``uniq`` placeholder
-    dedup, filter_geoip.rb:86). The database rides a Spark broadcast variable
-    — deserialized once per executor, shared by its Arrow workers.
-
-    ``input_type='long'`` expects IPs pre-parsed JVM-side by
-    ``functions.ipv4.ipv4_str_to_long`` (the fast path: 8 bytes/row across
-    Arrow and zero pandas string work inside the UDF).
-
-    ``input_type='dual'`` (v6-capable DBs) takes TWO columns — the JVM-parsed
-    long and the raw string — so the v4 majority still rides the long fast
-    path and only JVM-parse failures are inspected as strings.
-    """
-    attr_paths = list(attr_paths)
-    bc = spark.sparkContext.broadcast(db)
-    schema = lookup_struct_type(db, attr_paths)
-
-    if input_type == "long":
-        @F.pandas_udf(schema)
-        def geo_lookup(ips: pd.Series) -> pd.DataFrame:
-            return bc.value.lookup_batch_longs(ips, attr_paths)
-    elif input_type == "dual":
-        @F.pandas_udf(schema)
-        def geo_lookup(longs: pd.Series, strs: pd.Series) -> pd.DataFrame:
-            return bc.value.lookup_batch_dual(longs, strs, attr_paths)
-    else:
-        @F.pandas_udf(schema)
-        def geo_lookup(ips: pd.Series) -> pd.DataFrame:
-            return bc.value.lookup_batch(ips, attr_paths)
-
-    return geo_lookup

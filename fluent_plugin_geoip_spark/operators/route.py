@@ -1,5 +1,5 @@
 """Route stage (S4/S6 in SURVEY.md §2.1): deterministic multi-sink fan-out to
-per-country partitions, with salted repartitioning, per-partition lineage
+per-country partitions, with an AQE rebalance, per-partition lineage
 manifests and manifest-driven resume.
 
 Lineage of the capability: the reference family's ``GeoipOutput`` rewrote the
@@ -11,29 +11,18 @@ becomes a filter on the key.
 
 Scale design:
 - **skew**: country is Zipfian (US/CN hotspots). A plain
-  ``repartition(country)`` puts each hot country in ONE task. Two
-  strategies (``strategy=``):
-
-  - ``"rebalance"`` (default, round 6): ``hint("REBALANCE", country)`` —
-    AQE sizes the post-shuffle partitions to
-    ``advisoryPartitionSizeInBytes``, SPLITTING hot countries across tasks
-    (``optimizeSkewsInRebalancePartitions``) and MERGING small countries
-    into shared tasks. Files per sink ≈ ceil(sink bytes / advisory size):
-    a hot country gets as many right-sized files as its data needs, a tiny
-    country gets exactly ONE — static salting wrote up to ``salt_buckets``
-    near-empty files per small sink and fixed the hot-country split factor
-    at config time. Fewer files also shrink the serialized driver-side
-    commit protocol, the term that does NOT scale with executors (round-6
-    VERDICT item 2: the N→4N shortfall lives in the sink-write leg).
-  - ``"salt"``: ``repartition(num, country, salt)`` with
-    ``salt = pmod(hash(url), buckets)`` — deterministic fallback for
-    configs without AQE; a hot country spreads over ``buckets`` tasks
-    while each output partition directory still receives only its own
-    rows.
-
-  The manifest records ``files``/``bytes`` per sink either way, so the
-  write-leg shape (files per sink, bytes per row) is diagnosable from the
-  lineage alone.
+  ``repartition(country)`` puts each hot country in ONE task. The router
+  uses ``hint("REBALANCE", country)`` instead: AQE (which
+  ``session.build_session`` always enables) sizes the post-shuffle
+  partitions to ``advisoryPartitionSizeInBytes``, SPLITTING hot countries
+  across tasks (``optimizeSkewsInRebalancePartitions``) and MERGING small
+  countries into shared tasks. Files per sink ≈ ceil(sink bytes /
+  advisory size): a hot country gets as many right-sized files as its
+  data needs, a tiny country gets exactly ONE. Fewer files also shrink
+  the serialized driver-side commit protocol, the term that does NOT
+  scale with executors. The manifest records ``files``/``bytes`` per
+  sink, so the write-leg shape (files per sink, bytes per row) is
+  diagnosable from the lineage alone.
 - **idempotent retries / resume**: dynamic partition overwrite
   (``partitionOverwriteMode=dynamic``) makes re-writing a partition atomic at
   the partition level; the manifest records per-partition row counts +
@@ -236,14 +225,11 @@ def route_and_write(
     df: DataFrame,
     out_dir: str,
     route_col: str = "route_country",
-    salt_buckets: int = 16,
-    num_partitions: int | None = None,
     resume: bool = False,
     fmt: str | None = None,
     stat_cols: tuple[str, ...] = (),
     key_col: str = "url",
     audit: str = "full",
-    strategy: str = "rebalance",
 ) -> tuple[dict, list]:
     """Fan the DataFrame out to ``out_dir/<route_col>=<value>/`` sinks.
 
@@ -269,21 +255,16 @@ def route_and_write(
 
     Every manifest entry additionally records ``files``/``bytes`` for its
     sink (driver-side FS metadata, no data read) — the write-leg
-    diagnosability the scaling analysis needs. ``strategy`` picks the
-    fan-out shuffle: ``"rebalance"`` (AQE size-targeted, default) or
-    ``"salt"`` (static ``salt_buckets``-way salting; ``num_partitions``
-    applies only here). See the module docstring.
+    diagnosability the scaling analysis needs. The fan-out shuffle is an
+    AQE rebalance on ``route_col`` (see the module docstring).
     """
     if audit not in ("full", "counts", "off"):
         raise ValueError(f"audit must be 'full'|'counts'|'off', got {audit!r}")
-    if strategy not in ("rebalance", "salt"):
-        raise ValueError(
-            f"strategy must be 'rebalance'|'salt', got {strategy!r}")
     spark = df.sparkSession
     fmt = resolve_sink_format(spark, fmt)
     if key_col not in df.columns:
-        # salt/checksum key: any stable per-row column works; fall back to
-        # the route key itself (weaker salt) rather than failing
+        # checksum key: any stable per-row column works; fall back to
+        # the route key itself (weaker checksum) rather than failing
         key_col = route_col
     pre_existing = list_partition_values(spark, out_dir, route_col)
     done: dict[str, dict] = read_manifest(out_dir) if resume else {}
@@ -297,15 +278,9 @@ def route_and_write(
     if done:
         df = df.filter(~F.col(route_col).isin(list(done.keys())))
 
-    if strategy == "rebalance":
-        # AQE rebalance: size-targeted partitions keyed on the route
-        # column; hot countries split, small ones merged (see module doc)
-        routed = df.hint("rebalance", route_col)
-    else:
-        salt = F.pmod(F.xxhash64(F.col(key_col)), F.lit(salt_buckets))
-        n = num_partitions or spark.sparkContext.defaultParallelism
-        routed = df.repartition(n, F.col(route_col), salt)
-
+    # AQE rebalance: size-targeted partitions keyed on the route column;
+    # hot countries split, small ones merged (see module doc)
+    routed = df.hint("rebalance", route_col)
     with dynamic_overwrite(spark):
         (routed.write.mode("overwrite").partitionBy(route_col).format(fmt)
             .save(out_dir))

@@ -8,13 +8,13 @@ only applies them (the reference, too,
 compiles its config once at configure time, filter_geoip.rb:60, 86).
 
 The logical plan is fully declarative: parse is native regex projection,
-enrich is broadcast hash joins against prefix-bucketed range tables (the
-default ``jvm_join`` kernel: no Python worker), route adds an AQE
-``REBALANCE`` on the country key (the ONLY shuffle before the sink),
-aggregate is a Catalyst partial+final hash agg. At 1000 executors nothing
-here changes: the scan parallelizes by file split, the enrich stage is a
-narrow map, the broadcast range tables replicate once per executor, and
-REBALANCE splits hot countries into size-targeted write partitions.
+enrich is broadcast hash joins against prefix-bucketed range tables (no
+Python worker), route adds an AQE ``REBALANCE`` on the country key (the
+ONLY shuffle before the sink), aggregate is a Catalyst partial+final hash
+agg. At 1000 executors nothing here changes: the scan parallelizes by
+file split, the enrich stage is a narrow map, the broadcast range tables
+replicate once per executor, and REBALANCE splits hot countries into
+size-targeted write partitions.
 """
 
 from __future__ import annotations
@@ -61,8 +61,13 @@ class PipelineResult:
     (``COUNTS_SCHEMA``). It holds the already-computed rollup, so reading
     it runs no job and starts no Python worker; it is not cached and
     needs no ``unpersist``. ``metrics``: the observed row counters (with
-    ``collect_metrics``) and ``plan_build_s``. ``manifest``: the routed
-    run's per-sink lineage.
+    ``collect_metrics``), ``plan_build_s`` and ``table_stats``, the shape
+    of each expanded range table the enrich joins probe:
+    ``{"city": {"v4": {"rows", "max_bucket_rows"}, "v6": ...}}``, plus an
+    ``"asn"`` entry when ASN enrichment is on (``GeoipEnricher.
+    table_stats``, taken from the NumPy layout when the plan is compiled,
+    so reporting it runs no job). ``manifest``: the routed run's per-sink
+    lineage.
     """
     enriched: DataFrame
     counts: DataFrame
@@ -80,43 +85,15 @@ class GeoipPipeline:
     """parse → enrich → route → aggregate over a pages DataFrame.
 
     Two lookup stages (city DB + ASN DB, per the north_star's "city/ASN"
-    enrichment) run back-to-back. With the default ``jvm_join`` kernel
-    each is a broadcast hash join per address family, all fused into the
-    scan's codegen stage; with ``enrich_strategy="arrow"`` both UDFs
-    depend only on the parsed ip long, so Spark's ExtractPythonUDFs
-    batches them into a single ArrowEvalPython crossing.
+    enrichment) run back-to-back, each a broadcast hash join per address
+    family, all fused into the scan's codegen stage.
     """
 
     def __init__(self, spark: SparkSession, database: GeoDatabase | None = None,
                  records: dict[str, str] | None = None,
                  skip_adding_null_record: bool = False,
                  asn_database: GeoDatabase | None = None,
-                 enable_asn: bool = False,
-                 enrich_strategy: str = "auto",
-                 v6_text_fraction: float | None = None):
-        # enrich_strategy: "auto" (default) → "jvm_join" (broadcast
-        # prefix-bucket join; zero Python workers — measured 1.75× the
-        # Arrow kernel on the compute leg, round 7) for EVERY database:
-        # round 8 extended the kernel to v6 tables (JVM ipv6 parse +
-        # second bias-flipped broadcast join), so a dual-stack GeoLite2
-        # no longer demotes the stage to the Arrow crossing. "arrow"
-        # (pandas-UDF searchsorted) stays available explicitly. Both are
-        # pinned equal by the reference differential and a shared oracle
-        # query.
-        #
-        # v6_text_fraction (round 9, the round-8 VERDICT item-1 hint):
-        # the caller's estimate of how much of the address TEXT is
-        # v6-shaped. The jvm kernel's Catalyst ipv6 parse is interpreted
-        # (CodegenFallback — a pure-codegen parse blows the fused stage
-        # past the JVM's JIT method ceiling, docs/v6_parse_r9.jsonl), so
-        # its cost grows with the v6 fraction (interleaved A/B,
-        # docs/v6_auto_r9.jsonl: 0.64 s at 0/6 v6 → 1.06 s at 5/6 on the
-        # same rows, while the dual-Arrow kernel stays flat at ~0.13 s).
-        # On a v6-capable database, "auto" therefore picks the Arrow
-        # kernel when the hint says the text is v6-majority; with no
-        # hint it stays on the zero-Python jvm kernel (the v4-dominant
-        # flagship default, where jvm wins and the Python-worker memory
-        # ceiling is the scale risk).
+                 enable_asn: bool = False):
         self.spark = spark
         self.db = database or world_db()
         cfg = GeoipConfig(
@@ -124,25 +101,14 @@ class GeoipPipeline:
             records=dict(records or FLAGSHIP_RECORDS),
             skip_adding_null_record=skip_adding_null_record,
         )
-
-        def resolve(db: GeoDatabase) -> str:
-            if enrich_strategy == "auto":
-                if (db.has_ipv6 and v6_text_fraction is not None
-                        and float(v6_text_fraction) >= 0.5):
-                    return "arrow"
-                return "jvm_join"
-            return enrich_strategy
-
-        self.enricher = GeoipEnricher(spark, cfg, self.db,
-                                      strategy=resolve(self.db))
+        self.enricher = GeoipEnricher(spark, cfg, self.db)
         self.asn_enricher = None
         if enable_asn:
             from ..sources.fixtures import asn_db
             adb = asn_database or asn_db()
             asn_cfg = GeoipConfig(lookup_keys=["client_ip"],
                                   records=dict(ASN_RECORDS))
-            self.asn_enricher = GeoipEnricher(
-                spark, asn_cfg, adb, strategy=resolve(adb))
+            self.asn_enricher = GeoipEnricher(spark, asn_cfg, adb)
         self._route_key = route_key_column()
         self._metrics = pipeline_metric_columns()
         self._count_keys, self._count_aggs = country_lang_columns()
@@ -154,9 +120,8 @@ class GeoipPipeline:
         return out.withColumn("route_country", self._route_key)
 
     def run(self, pages: DataFrame, out_dir: str | None = None,
-            resume: bool = False, salt_buckets: int = 16,
-            collect_metrics: bool = True, audit: str = "full",
-            strategy: str = "rebalance") -> PipelineResult:
+            resume: bool = False, collect_metrics: bool = True,
+            audit: str = "full") -> PipelineResult:
         """Enrich ``pages``, then either route them to per-country sinks
         under ``out_dir`` or, with no ``out_dir``, only aggregate them.
 
@@ -175,9 +140,8 @@ class GeoipPipeline:
             frame = enriched.drop("access")
             plan_build_s = time.perf_counter() - t0
             manifest, stats = route_and_write(
-                frame, out_dir, salt_buckets=salt_buckets,
-                resume=resume, stat_cols=("lang",), audit=audit,
-                strategy=strategy)
+                frame, out_dir, resume=resume, stat_cols=("lang",),
+                audit=audit)
             # counts derive from the SAME lineage aggregate (no extra scan);
             # on resume the stats cover only partitions written this run
             table = pa.table([
@@ -195,6 +159,10 @@ class GeoipPipeline:
         counts = self.spark.createDataFrame(table, schema=COUNTS_SCHEMA)
         metrics = dict(obs.get) if obs is not None else {}
         metrics["plan_build_s"] = plan_build_s
+        tables = metrics["table_stats"] = {
+            "city": dict(self.enricher.table_stats)}
+        if self.asn_enricher is not None:
+            tables["asn"] = dict(self.asn_enricher.table_stats)
         return PipelineResult(enriched=enriched, counts=counts,
                               metrics=metrics, manifest=manifest)
 

@@ -5,9 +5,9 @@ TPC-H-ish testdata (events / documents / embeddings / lineitem) so the
 driver's DuckDB comparison can certify it end-to-end:
 
 - the geoip pipeline queries derive a deterministic synthetic IPv4 per event
-  (pure integer arithmetic both sides), push it through the REAL broadcast-
-  searchsorted kernel on the Spark side, and through an independent SQL range
-  join on the DuckDB side;
+  (pure integer arithmetic both sides), push it through the REAL enrich
+  (broadcast prefix-bucket joins) on the Spark side, and through an
+  independent SQL range join on the DuckDB side;
 - template / parse / aggregate / dedup / text-analysis queries pair a
   Spark-native plan with function-parity ANSI SQL.
 
@@ -114,10 +114,9 @@ def _with_ip(df: DataFrame) -> DataFrame:
 
 
 def _enricher(spark: SparkSession, records: dict[str, str],
-              lookup_keys: list[str] | None = None,
-              strategy: str = "arrow", **kw) -> GeoipEnricher:
+              lookup_keys: list[str] | None = None, **kw) -> GeoipEnricher:
     cfg = GeoipConfig(lookup_keys=lookup_keys or ["ip"], records=records, **kw)
-    return GeoipEnricher(spark, cfg, world_db(), strategy=strategy)
+    return GeoipEnricher(spark, cfg, world_db())
 
 
 # ---------------------------------------------------------------------------
@@ -160,20 +159,6 @@ FROM (SELECT event_id, {_ip_int_sql('event_id')} AS ip_int FROM events) e
 LEFT JOIN {world_ranges_values_sql()}
   ON e.ip_int BETWEEN r.range_start AND r.range_end
 """
-
-
-# J1 all-JVM variant (round 7): the SAME value-level enrichment through
-# strategy="jvm_join" — the broadcast-hash prefix-bucket join that keeps
-# the whole probe inside WholeStageCodegen (zero Python workers). Identical
-# oracle: the two strategies must be indistinguishable at value level.
-def q_geoip_jvm_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _with_ip(_events(spark, sf_dir))
-    enr = _enricher(spark, {
-        "city": "${city.names.en['ip']}",
-        "latitude": "${location.latitude['ip']}",
-        "latlon": "${location.latitude['ip']},${location.longitude['ip']}",
-    }, strategy="jvm_join")
-    return enr.transform(df).select("event_id", "city", "latitude", "latlon")
 
 
 # J2: multi-key lookup → origin/dest country matrix
@@ -443,11 +428,10 @@ def q_geoip_mmdb_enrich_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
         "country": "${country.iso_code['ip']}",
         "latitude": "${location.latitude['ip']}",
     })
-    # round 8: through the all-JVM kernel — this driver row now certifies
-    # the v6 jvm_join path (JVM ipv6 parse + bias-flipped second broadcast
-    # join); arrow/jvm parity is separately pinned in
+    # the v6 enrich path: JVM ipv6 parse + bias-flipped second broadcast
+    # join; parity with GeoDatabase.lookup_batch is separately pinned in
     # tests/test_plans.py::test_jvm_join_v6_matches_arrow_kernel
-    out = GeoipEnricher(spark, cfg, db, strategy="jvm_join").transform(df)
+    out = GeoipEnricher(spark, cfg, db).transform(df)
     return out.select("event_id", "city", "country", "latitude")
 
 
@@ -2130,7 +2114,9 @@ ORDER BY dg.doc_id
 QUERIES = {
     "geoip_enrich_country_counts": q_geoip_enrich_country_counts,
     "geoip_enrich_values": q_geoip_enrich_values,
-    "geoip_jvm_enrich": q_geoip_jvm_enrich,
+    # the same query as geoip_enrich_values (one enrich kernel), still
+    # registered so the entry contract's query list is unchanged
+    "geoip_jvm_enrich": q_geoip_enrich_values,
     "geoip_multi_key": q_geoip_multi_key,
     "geoip_route_counts": q_geoip_route_counts,
     "geoip_skip_null": q_geoip_skip_null,

@@ -3,12 +3,14 @@
 These are the knobs that measurably matter for the pipeline (derived from
 the benchmarks in BASELINE.md, not guessed):
 
-- AQE on (runtime re-plan; skew-join handling for the routing shuffle)
-- shuffle partitions ≈ total cores (the fan-out repartition is the only
+- AQE on (runtime re-plan; the router's REBALANCE relies on it to size,
+  split and merge the write partitions)
+- shuffle partitions ≈ total cores (the fan-out rebalance is the only
   pre-sink shuffle; 200 default over-parallelizes small runs and
   under-parallelizes big ones)
 - Arrow batch 64k (default 10k pays the JVM↔Python crossing 6× as often
-  for the searchsorted kernel at identical memory footprint)
+  for the pandas UDFs, ``ruby_double_str`` and ``lang_id_pandas``, at
+  identical memory footprint)
 - dynamic partition overwrite (idempotent per-partition routing writes)
 - parquet codec snappy (default). zstd writes 37% fewer sink bytes at
   wall-clock parity (measured A/B at 16 cores / 5M rows on tmpfs: snappy

@@ -13,7 +13,7 @@ per-partition overwrite in ``foreachBatch``.
   Kafka/Kinesis; swapping the source touches nothing downstream)
 - enrich: the batch ``GeoipEnricher`` applied to the streaming DataFrame —
   narrow, stateless, no watermark needed (rb has no event-time state)
-- sink: ``foreachBatch`` → salted ``partitionBy(country)`` parquet append
+- sink: ``foreachBatch`` → rebalanced ``partitionBy(country)`` parquet write
   per micro-batch, with per-batch lineage rows; ``checkpointLocation``
   makes restarts resume from the last committed micro-batch
 - windowed aggregates (optional): tumbling-window counts on ``warc_ts``
@@ -48,7 +48,6 @@ def start_pipeline_stream(
     out_dir: str,
     checkpoint_dir: str,
     pipeline: GeoipPipeline | None = None,
-    salt_buckets: int = 8,
 ):
     """readStream → parse/enrich (batch-identical plan) → foreachBatch route.
 
@@ -62,7 +61,7 @@ def start_pipeline_stream(
     stream = read_pages_stream(spark, source_dir)
     enriched = pipe.enrich(stream)
 
-    handle_batch = make_batch_handler(out_dir, salt_buckets)
+    handle_batch = make_batch_handler(out_dir)
     query = (enriched.writeStream
              .foreachBatch(handle_batch)
              .option("checkpointLocation", checkpoint_dir)
@@ -71,8 +70,7 @@ def start_pipeline_stream(
     return query
 
 
-def make_batch_handler(out_dir: str, salt_buckets: int = 8,
-                       strategy: str = "rebalance"):
+def make_batch_handler(out_dir: str):
     """foreachBatch handler with true replay idempotency: every micro-batch
     writes under ``batch_id=<n>/route_country=<c>/`` with DYNAMIC partition
     OVERWRITE, so a re-delivered batch (crash between the sink write and the
@@ -80,11 +78,10 @@ def make_batch_handler(out_dir: str, salt_buckets: int = 8,
     appending a duplicate copy. Exposed standalone so replay can be tested
     by invoking it twice with the same batch id.
 
-    ``strategy`` mirrors the batch router (round 6): ``"rebalance"``
-    (default) lets AQE size the per-batch write partitions — micro-batches
-    are small, so this typically lands ONE file per (batch, country)
-    instead of up to ``salt_buckets``; ``"salt"`` keeps the static salted
-    repartition. Long-running streams should still compact periodically —
+    Like the batch router, the write is an AQE rebalance on the route
+    key, so AQE sizes the per-batch write partitions — micro-batches are
+    small, so this typically lands ONE file per (batch, country). Long-
+    running streams should still compact periodically —
     with ``operators.route.compact_stream_sinks``, which understands this
     handler's ``batch_id=<n>/route_country=<c>`` nesting and preserves
     replay idempotency (``compact_sinks`` expects the flat batch layout
@@ -93,13 +90,8 @@ def make_batch_handler(out_dir: str, salt_buckets: int = 8,
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        routed = batch_df.withColumn("batch_id", F.lit(batch_id))
-        if strategy == "rebalance":
-            routed = routed.hint("rebalance", "route_country")
-        else:
-            salt = F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
-            n = spark.sparkContext.defaultParallelism
-            routed = routed.repartition(n, F.col("route_country"), salt)
+        routed = (batch_df.withColumn("batch_id", F.lit(batch_id))
+                  .hint("rebalance", "route_country"))
         with dynamic_overwrite(spark):
             (routed.write.mode("overwrite")
                 .partitionBy("batch_id", "route_country")

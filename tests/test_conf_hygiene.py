@@ -273,12 +273,11 @@ def test_plan_independent_walks_node_classes(spark):
         assert not is_plan_independent(col), col
 
 
-@pytest.mark.parametrize("strategy", ["jvm_join", "arrow"])
-def test_compiled_enrich_columns_pass_guard(spark, strategy):
+def test_compiled_enrich_columns_pass_guard(spark):
     """Every Column an enrich plan caches passes ``is_plan_independent``.
-    Those that fail it (the arrow kernel's lookup UDF call, the Ruby
-    float-format UDF of an interpolated double) are kept as factories and
-    rebuilt on each use; applying the plan twice gives the same rows."""
+    The one that fails it (the Ruby float-format UDF of an interpolated
+    double) is kept as a factory and rebuilt on each use; applying the
+    plan twice gives the same rows."""
     import os
 
     from fluent_plugin_geoip_spark.config import GeoipConfig
@@ -297,14 +296,14 @@ def test_compiled_enrich_columns_pass_guard(spark, strategy):
         [(i, ip) for i, ip in enumerate(
             ["66.102.1.1", "2001:db8::1", "::ffff:66.102.1.1", "x", None])],
         "id int, ip string")
-    enr = GeoipEnricher(spark, cfg, db, strategy=strategy)
+    enr = GeoipEnricher(spark, cfg, db)
     first = enr.transform(df).orderBy("id").collect()
     plan, = enr._plans.values()
     entries = plan.entries()
     cached = [e for e in entries if not callable(e)]
     factories = [e for e in entries if callable(e)]
     assert cached and all(is_plan_independent(c) for c in cached)
-    assert len(factories) == (2 if strategy == "arrow" else 1)
+    assert len(factories) == 1
     assert not any(is_plan_independent(f()) for f in factories)
     assert enr.transform(df).orderBy("id").collect() == first
     assert first[0]["city"] is not None

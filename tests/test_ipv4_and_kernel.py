@@ -1,5 +1,6 @@
-"""Unit tests for the vectorized IPv4 parser and the searchsorted kernel —
-no SparkSession needed (pure pandas/NumPy path of the Arrow UDF)."""
+"""Unit tests for the vectorized IPv4 parser and the searchsorted kernel
+``GeoDatabase.lookup_batch`` (the driver-side reference the enrich joins
+are held to) — no SparkSession needed (pure pandas/NumPy)."""
 
 import numpy as np
 import pandas as pd

@@ -430,42 +430,3 @@ def test_ipv6_enrich_end_to_end(spark, v6_mmdb_path):
     assert by_host["2001:db8::99"]["city"] == "V6 City"
     assert by_host["2001:db8::99"]["country"] == "V6"
     assert by_host["203.0.113.1"]["city"] is None
-
-
-def test_dual_input_keeps_v4_on_jvm_long_path(spark, v6_mmdb_path):
-    """Round-4 VERDICT finding 3: a v6-capable DB must NOT demote v4 rows
-    off the JVM-parsed-long fast path. The enrich plan must contain the
-    JVM-side shiftleft octet parse, the Arrow crossing takes the (long,
-    string) pair, and lookup_batch_dual only string-inspects rows the v4
-    parser rejected."""
-    from fluent_plugin_geoip_spark.operators.geolookup import GeoDatabase
-    db = GeoDatabase.from_mmdb(v6_mmdb_path)
-    # unit: dual probe with mixed v4 (pre-parsed long) / v6 / garbage
-    longs = pd.Series([(66 << 24) | (102 << 16) | (3 << 8) | 80, None, None,
-                       None], dtype="Int64")
-    strs = pd.Series(["66.102.3.80", "2001:db8::1", "::ffff:66.102.3.80",
-                      "nope"])
-    out = db.lookup_batch_dual(longs, strs,
-                               ["city.names.en", "country.iso_code"])
-    assert list(out["__hit__"]) == [True, True, True, False]
-    assert out["city_names_en"][0] == "Mountain View"
-    assert out["city_names_en"][1] == "V6 City"
-    assert out["city_names_en"][2] == "Mountain View"
-    # plan: the JVM long parse (shiftleft chain) is present even with a
-    # v6-capable DB, and the Python crossing receives two arguments
-    cfg = GeoipConfig(
-        lookup_keys=["host"], geoip2_database=v6_mmdb_path,
-        records={"city": "${city.names.en['host']}"})
-    df = spark.createDataFrame([("8.8.8.8",)], "host string")
-    plan = GeoipEnricher(spark, cfg).transform(df) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
-    # the single crossing's UDF takes (JVM shiftleft-parsed long, raw string)
-    import re
-    # round 7: the string argument is null-guarded — the Arrow batch ships
-    # the raw address ONLY where the JVM v4 parse failed, so the crossing
-    # payload tracks the v6/garbage fraction, not the batch size
-    assert re.search(
-        r"geo_lookup\(__ip_0#\d+L?, CASE WHEN isnull\(__ip_0#\d+L?\) "
-        r"THEN host#\d+ END\)#", plan), plan
-    assert "shiftleft" in plan  # the JVM octet parse feeds __ip_0

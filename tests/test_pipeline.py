@@ -423,25 +423,16 @@ def test_audit_modes(spark, pages_dir, tmp_path):
 
 
 def test_rebalance_strategy_one_file_per_small_sink(spark, tmp_path):
-    """Round-6 fan-out default: AQE REBALANCE sizes write partitions, so at
-    small scale every sink coalesces to exactly ONE file (static salting
-    wrote up to salt_buckets near-empty files per sink), and the manifest
+    """The fan-out is an AQE REBALANCE that sizes write partitions, so at
+    small scale every sink coalesces to exactly ONE file, and the manifest
     records files/bytes per sink for write-leg diagnosability."""
     pages = generate_pages(spark, 20_000, seed=11, partitions=8)
-    res = GeoipPipeline(spark).run(pages, out_dir=str(tmp_path / "rb"),
-                                   strategy="rebalance")
+    res = GeoipPipeline(spark).run(pages, out_dir=str(tmp_path / "rb"))
     assert res.manifest
     for v in res.manifest.values():
         assert v["files"] >= 1 and v["bytes"] > 0
     assert (sum(v["files"] for v in res.manifest.values())
             == len(res.manifest))
-    # salted fan-out on the same input writes strictly more files
-    res_salt = GeoipPipeline(spark).run(pages, out_dir=str(tmp_path / "sa"),
-                                        strategy="salt")
-    assert (sum(v["files"] for v in res_salt.manifest.values())
-            > len(res_salt.manifest))
-    assert ({k: v["rows"] for k, v in res_salt.manifest.items()}
-            == {k: v["rows"] for k, v in res.manifest.items()})
 
 
 def test_compact_sinks_merges_fragmented_partitions(spark, tmp_path):
@@ -457,7 +448,7 @@ def test_compact_sinks_merges_fragmented_partitions(spark, tmp_path):
     pipe = GeoipPipeline(spark)
     res = pipe.run(pages, out_dir=out)
     # fragment: three resumed incremental appends of new partitions would
-    # each add files; simulate by salting a second run into the same dirs
+    # each add files; simulate by appending a second run into the same dirs
     pages2 = generate_pages(spark, 10_000, seed=3, partitions=8)
     enriched = pipe.enrich(pages2)
     keep = [c for c in enriched.columns if c != "access"]
@@ -487,9 +478,19 @@ def test_compact_sinks_verifies_manifest_rows(spark, tmp_path):
     )
     out = str(tmp_path / "sink")
     pages = generate_pages(spark, 5_000, seed=5, partitions=4)
-    res = GeoipPipeline(spark).run(pages, out_dir=out, strategy="salt",
-                                   salt_buckets=4)
-    # salt wrote >1 file for at least the hot sinks; manifest rows accurate
+    pipe = GeoipPipeline(spark)
+    pipe.run(pages, out_dir=out)
+    # fragment: append a second copy of the enriched rows spread over 4
+    # files per sink, and record it in the manifest, so its rows stay
+    # accurate
+    enriched = pipe.enrich(pages)
+    (enriched.select(*[c for c in enriched.columns if c != "access"])
+     .repartition(4)
+     .write.mode("append").partitionBy("route_country").parquet(out))
+    m = read_manifest(out)
+    for v in m.values():
+        v["rows"] *= 2
+    write_manifest(out, m)
     done = compact_sinks(spark, out)   # verifies against manifest: passes
     assert done
     m = read_manifest(out)
@@ -503,29 +504,6 @@ def test_compact_sinks_verifies_manifest_rows(spark, tmp_path):
         .write.mode("append").partitionBy("route_country").parquet(out)
     with pytest.raises(IOError, match="disagrees with its lineage"):
         compact_sinks(spark, out)
-
-
-def test_auto_strategy_respects_v6_fraction_hint(spark):
-    """Round-9 adaptive auto (round-8 VERDICT item 1): on a v6-capable
-    database, a v6-majority text hint flips the enrich kernel to the
-    dual-Arrow path (where it wins — docs/v6_auto_r9.jsonl); no hint, a
-    sub-majority hint, or a v4-only database stay on the zero-Python
-    jvm kernel."""
-    from fluent_plugin_geoip_spark.operators.geolookup import GeoDatabase
-    v6db = GeoDatabase.from_mmdb(os.path.join(
-        os.path.dirname(__file__), "fixtures", "geolite2-city-v6-test.mmdb"))
-    assert v6db.has_ipv6
-    assert GeoipPipeline(spark, database=v6db,
-                         v6_text_fraction=0.9).enricher.strategy == "arrow"
-    assert GeoipPipeline(spark, database=v6db,
-                         v6_text_fraction=0.2).enricher.strategy == "jvm_join"
-    assert GeoipPipeline(spark, database=v6db).enricher.strategy == "jvm_join"
-    # v4-only database: the hint is irrelevant, jvm_join stands
-    assert GeoipPipeline(spark,
-                         v6_text_fraction=0.9).enricher.strategy == "jvm_join"
-    # explicit strategies are never overridden by the hint
-    assert GeoipPipeline(spark, database=v6db, enrich_strategy="jvm_join",
-                         v6_text_fraction=0.9).enricher.strategy == "jvm_join"
 
 
 # ---------------------------------------------------------------------------
@@ -566,23 +544,21 @@ def dual_pages(spark, ips=DUAL_IPS):
          for i, ip in enumerate(ips)], "url string, text string, lang string")
 
 
-def _dual_pipeline(spark, db, strategy="auto"):
-    return GeoipPipeline(spark, database=db, enable_asn=True, asn_database=db,
-                         enrich_strategy=strategy)
+def _dual_pipeline(spark, db):
+    return GeoipPipeline(spark, database=db, enable_asn=True, asn_database=db)
 
 
 def _enriched_rows(df):
     return df.select(*ENRICHED).orderBy("url").collect()
 
 
-@pytest.mark.parametrize("strategy", ["jvm_join", "arrow"])
-def test_compiled_pipeline_reuse_matches_fresh(spark, dual_db, strategy):
+def test_compiled_pipeline_reuse_matches_fresh(spark, dual_db):
     """One pipeline over inputs whose columns are reordered or extended,
     over a second plan with the same column names, and over an input
     derived from another DataFrame through resolved column references
     (the round-9 stale-exprId shape) gives the rows a freshly built
     pipeline gives."""
-    pipe = _dual_pipeline(spark, dual_db, strategy)
+    pipe = _dual_pipeline(spark, dual_db)
     base = dual_pages(spark)
     other = dual_pages(spark, list(reversed(DUAL_IPS)) + ["1.2.255.255"])
     inputs = [
@@ -597,7 +573,7 @@ def test_compiled_pipeline_reuse_matches_fresh(spark, dual_db, strategy):
     for df in inputs:
         got = pipe.enrich(df)
         assert _enriched_rows(got) == \
-            _enriched_rows(_dual_pipeline(spark, dual_db, strategy).enrich(df))
+            _enriched_rows(_dual_pipeline(spark, dual_db).enrich(df))
         assert got.columns == [*df.columns, "host", "client_ip",
                                *ENRICHED[1:]]
     assert len(pipe.enricher._plans) == 3  # one per distinct column list
@@ -607,8 +583,7 @@ def test_compiled_pipeline_reuse_matches_fresh(spark, dual_db, strategy):
     assert hits["http://www.site6.com/p"]["country"] == "JP"  # ::ffff:8.8.8.8
 
 
-@pytest.mark.parametrize("strategy", ["jvm_join", "arrow"])
-def test_compiled_skip_null_record_reuse(spark, dual_db, strategy):
+def test_compiled_skip_null_record_reuse(spark, dual_db):
     """skip_adding_null_record compiles per input schema: with no
     pre-existing output field a skipped row gets null, with one it keeps
     the old value. A reused enricher matches a fresh one on both."""
@@ -623,12 +598,11 @@ def test_compiled_skip_null_record_reuse(spark, dual_db, strategy):
     with_field = spark.createDataFrame(
         [(i, ip, "old") for i, ip in enumerate(DUAL_IPS)],
         "id int, ip string, country string")
-    enr = GeoipEnricher(spark, cfg, dual_db, strategy=strategy)
+    enr = GeoipEnricher(spark, cfg, dual_db)
     for df in (plain, with_field, plain, with_field):
         got = enr.transform(df)
         assert got.orderBy("id").collect() == GeoipEnricher(
-            spark, cfg, dual_db, strategy=strategy
-        ).transform(df).orderBy("id").collect()
+            spark, cfg, dual_db).transform(df).orderBy("id").collect()
     assert got.columns == ["id", "ip", "country", "city", SKIP_FLAG]
     assert enr.transform(plain).columns == ["id", "ip", "country", "city",
                                             SKIP_FLAG]
@@ -639,8 +613,7 @@ def test_compiled_skip_null_record_reuse(spark, dual_db, strategy):
     assert miss[SKIP_FLAG] and miss["country"] is None
 
 
-@pytest.mark.parametrize("strategy", ["jvm_join", "arrow"])
-def test_compiled_plan_follows_case_sensitivity(spark, dual_db, strategy):
+def test_compiled_plan_follows_case_sensitivity(spark, dual_db):
     """Which input column a template field replaces follows
     ``spark.sql.caseSensitive`` at each ``transform``: flipping it between
     two calls on a ``Country`` input gives what a fresh enricher gives
@@ -653,7 +626,7 @@ def test_compiled_plan_follows_case_sensitivity(spark, dual_db, strategy):
     df = spark.createDataFrame(
         [(i, ip, "old") for i, ip in enumerate(DUAL_IPS)],
         "id int, ip string, Country string")
-    enr = GeoipEnricher(spark, cfg, dual_db, strategy=strategy)
+    enr = GeoipEnricher(spark, cfg, dual_db)
     expected_columns = {"false": ["id", "ip", "country"],
                         "true": ["id", "ip", "Country", "country"]}
     try:
@@ -662,13 +635,35 @@ def test_compiled_plan_follows_case_sensitivity(spark, dual_db, strategy):
             got = enr.transform(df)
             assert got.columns == expected_columns[setting]
             assert got.orderBy("id").collect() == GeoipEnricher(
-                spark, cfg, dual_db, strategy=strategy
-            ).transform(df).orderBy("id").collect()
+                spark, cfg, dual_db).transform(df).orderBy("id").collect()
     finally:
         spark.conf.unset("spark.sql.caseSensitive")
     rows = {r["ip"]: r for r in got.collect()}
     assert rows["8.8.8.8"]["country"] == "JP"
     assert len(enr._plans) == 2
+
+
+def test_run_reports_table_stats(spark, dual_db):
+    """``run()`` reports the shape of every range table the enrich joins
+    probe, per lookup database, and it matches the tables Spark holds:
+    their rows and their largest bucket."""
+    from fluent_plugin_geoip_spark.operators.geolookup import (
+        expanded_bucket_table, expanded_bucket_table_v6,
+    )
+    res = _dual_pipeline(spark, dual_db).run(dual_pages(spark))
+    tables = {"v4": (expanded_bucket_table(spark, dual_db, ["asn"]), "__gb"),
+              "v6": (expanded_bucket_table_v6(spark, dual_db, ["asn"])[0],
+                     "__g6b")}
+    want = {}
+    for tag, (t, col) in tables.items():
+        peak = t.groupBy(col).count().agg(F.max("count")).first()[0]
+        want[tag] = {"rows": t.count(), "max_bucket_rows": peak}
+    # the /32 holding the 40 /48s is split deeper
+    assert want["v6"]["max_bucket_rows"] < 40
+    assert res.metrics["table_stats"] == {"city": want, "asn": want}
+    v4_only = GeoipPipeline(spark).run(dual_pages(spark))
+    assert set(v4_only.metrics["table_stats"]) == {"city"}
+    assert set(v4_only.metrics["table_stats"]["city"]) == {"v4"}
 
 
 def test_warm_enrich_py4j_round_trips(spark, dual_db, monkeypatch):

@@ -2,11 +2,10 @@
 
 - column pruning reaches the parquet scan (a rollup must not read html)
 - predicate pushdown reaches the scan (PushedFilters)
-- the default ``jvm_join`` enrich stage is broadcast hash joins with no
-  Python worker; the ``arrow`` kernel crosses into Python exactly ONCE per
-  lookup key set (ArrowEvalPython); neither shuffles (narrow map)
+- the enrich stage is broadcast hash joins with no Python worker and no
+  shuffle (narrow map)
 - the routed fan-out introduces exactly one Exchange (the REBALANCE on the
-  route key; the ``salt`` strategy's repartition, likewise one)
+  route key)
 - aggregates run as partial+final hash aggregation (map-side combine)
 
 These are the .explain() checks SURVEY.md §4.2 commits to; they pin the plan
@@ -54,20 +53,9 @@ def _shuffles(tree: str) -> int:
     return tree.count("Exchange") - tree.count("BroadcastExchange")
 
 
-def test_enrich_single_arrow_crossing_no_shuffle(spark, pages_parquet):
-    pages = spark.read.parquet(pages_parquet)
-    enriched = GeoipPipeline(spark, enrich_strategy="arrow").enrich(pages)
-    plan = explain(enriched)
-    tree = plan.split("\n\n")[0]  # formatted mode repeats nodes in details
-    assert tree.count("ArrowEvalPython") == 1, tree
-    assert "Exchange" not in plan, plan
-    assert "codegen id" in plan  # projections run inside WholeStageCodegen
-
-
 def test_default_enrich_is_jvm_join_no_python(spark, pages_parquet):
-    """The pipeline default (enrich_strategy='auto' → 'jvm_join' on every
-    DB since round 8) must run the whole enrich stage with NO Python
-    worker and NO shuffle — only a broadcast build per lookup DB."""
+    """The pipeline's enrich stage runs with NO Python worker and NO
+    shuffle — only a broadcast build per lookup DB."""
     pages = spark.read.parquet(pages_parquet)
     enriched = GeoipPipeline(spark).enrich(pages)
     plan = explain(enriched)
@@ -78,37 +66,10 @@ def test_default_enrich_is_jvm_join_no_python(spark, pages_parquet):
     assert _shuffles(tree) == 0, tree
 
 
-def test_multi_key_still_single_crossing(spark):
-    """Two lookup keys → two UDF invocations, but Spark batches adjacent
-    Python UDFs into a single ArrowEvalPython node (one crossing/batch)."""
-    from fluent_plugin_geoip_spark.config import GeoipConfig
-    from fluent_plugin_geoip_spark.operators.enrich import GeoipEnricher
-    from fluent_plugin_geoip_spark.sources.fixtures import geoip2_city_db
-    df = spark.createDataFrame([("8.8.8.8", "125.54.15.42")], "a string, b string")
-    cfg = GeoipConfig(lookup_keys=["a", "b"],
-                      records={"ca": "${country.iso_code['a']}",
-                               "cb": "${country.iso_code['b']}"})
-    out = GeoipEnricher(spark, cfg, geoip2_city_db()).transform(df)
-    plan = explain(out)
-    tree = plan.split("\n\n")[0]
-    assert tree.count("ArrowEvalPython") == 1, tree
-
-
-def test_route_plan_has_single_salted_exchange(spark, pages_parquet):
-    pages = spark.read.parquet(pages_parquet)
-    enriched = GeoipPipeline(spark).enrich(pages)
-    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(16))
-    routed = enriched.repartition(8, F.col("route_country"), salt)
-    plan = explain(routed)
-    tree = plan.split("\n\n")[0]
-    assert _shuffles(tree) == 1, tree
-    assert "hashpartitioning(route_country" in plan, plan
-
-
 def test_route_rebalance_plan_is_single_aqe_exchange(spark, pages_parquet):
-    """Round-6 default fan-out: ONE exchange, keyed on the route column,
-    flagged REBALANCE so AQE sizes/splits/merges the write partitions
-    (files per sink track data volume instead of salt_buckets)."""
+    """The fan-out: ONE exchange, keyed on the route column, flagged
+    REBALANCE so AQE sizes/splits/merges the write partitions (files per
+    sink track data volume)."""
     pages = spark.read.parquet(pages_parquet)
     enriched = GeoipPipeline(spark).enrich(pages)
     routed = enriched.hint("rebalance", "route_country")
@@ -128,31 +89,9 @@ def test_aggregate_partial_final(spark, pages_parquet):
     assert tree.count("HashAggregate") == 2, tree
 
 
-def test_lookup_udf_input_is_long(spark, pages_parquet):
-    """The Arrow crossing must carry the JVM-parsed long, not the ip string."""
-    pages = spark.read.parquet(pages_parquet)
-    enriched = GeoipPipeline(spark, enrich_strategy="arrow").enrich(pages)
-    plan = explain(enriched, "extended")
-    assert "geo_lookup" in plan
-    # the UDF argument expression contains the shiftleft of the octet parse
-    assert "shiftleft" in plan, plan
-
-
-def test_asn_enrich_fuses_into_one_crossing(spark, pages_parquet):
-    """city + ASN lookups both depend only on the parsed ip long →
-    ExtractPythonUDFs must batch them into one ArrowEvalPython."""
-    pages = spark.read.parquet(pages_parquet)
-    enriched = GeoipPipeline(spark, enable_asn=True,
-                             enrich_strategy="arrow").enrich(pages)
-    plan = explain(enriched)
-    tree = plan.split("\n\n")[0]
-    assert tree.count("ArrowEvalPython") == 1, tree
-    assert "Exchange" not in plan
-
-
 def test_asn_enrich_jvm_join_two_broadcasts_no_python(spark, pages_parquet):
-    """Default (auto → jvm_join) city + ASN: two broadcast joins, still
-    zero Python workers and zero shuffles."""
+    """City + ASN: two broadcast joins, still zero Python workers and
+    zero shuffles."""
     pages = spark.read.parquet(pages_parquet)
     enriched = GeoipPipeline(spark, enable_asn=True).enrich(pages)
     plan = explain(enriched)
@@ -305,11 +244,10 @@ def test_bucketed_store_probe_has_no_store_side_exchange(spark,
 
 
 def test_jvm_join_enrich_no_python_and_broadcast(spark):
-    """strategy='jvm_join' (round 7): the geolocate probe is a broadcast-
-    hash prefix-bucket join — the whole enrich stage must run with NO
-    Python worker (no ArrowEvalPython/BatchEvalPython), no shuffle
-    Exchange, and a BroadcastHashJoin per lookup key. This bounds what
-    the Arrow crossing costs at all (round-6 VERDICT item 1)."""
+    """The geolocate probe is a broadcast-hash prefix-bucket join — the
+    whole enrich stage must run with NO Python worker (no
+    ArrowEvalPython/BatchEvalPython), no shuffle Exchange, and a
+    BroadcastHashJoin per lookup key."""
     from fluent_plugin_geoip_spark.config import GeoipConfig
     from fluent_plugin_geoip_spark.operators.enrich import GeoipEnricher
     from fluent_plugin_geoip_spark.sources.fixtures import world_db
@@ -321,8 +259,7 @@ def test_jvm_join_enrich_no_python_and_broadcast(spark):
                  "latlon": "${location.latitude['ip']},"
                            "${location.longitude['ip']}"},
         fast_float_str=True)  # JVM float repr — keeps the plan Python-free
-    out = GeoipEnricher(spark, cfg, world_db(),
-                        strategy="jvm_join").transform(df)
+    out = GeoipEnricher(spark, cfg, world_db()).transform(df)
     plan = explain(out)
     tree = plan.split("\n\n")[0]
     assert "ArrowEvalPython" not in tree, tree
@@ -333,9 +270,8 @@ def test_jvm_join_enrich_no_python_and_broadcast(spark):
 
 
 def test_jvm_join_v6_db_no_python_two_broadcasts(spark):
-    """Round 8 (round-7 VERDICT item 2): a v6-capable database through
-    strategy='jvm_join' must STILL run with no Python worker — the
-    address parses JVM-side (functions.ipv6) and the native-v6 probe is
+    """A v6-capable database must STILL enrich with no Python worker —
+    the address parses JVM-side (functions.ipv6) and the native-v6 probe is
     a SECOND BroadcastHashJoin against the bias-flipped 128-bit range
     table. No shuffle Exchange; left joins preserve row count."""
     from fluent_plugin_geoip_spark.config import GeoipConfig
@@ -353,7 +289,7 @@ def test_jvm_join_v6_db_no_python_two_broadcasts(spark):
     df = spark.createDataFrame(
         [("2001:db8::1234",), ("::ffff:66.102.3.80",), ("66.102.3.80",),
          ("garbage",), ("",)], "ip string")
-    out = GeoipEnricher(spark, cfg, db, strategy="jvm_join").transform(df)
+    out = GeoipEnricher(spark, cfg, db).transform(df)
     plan = explain(out)
     tree = plan.split("\n\n")[0]
     assert "ArrowEvalPython" not in tree, tree
@@ -364,10 +300,12 @@ def test_jvm_join_v6_db_no_python_two_broadcasts(spark):
 
 
 def test_jvm_join_v6_matches_arrow_kernel(spark):
-    """Both kernels on the v6 fixture, every textual address class:
-    native v6 hit (incl. the exact /32 range end), v4-mapped, v4-compat,
-    country-only hit (lat nil → 0.0 default), v6 miss, v4 hit/miss,
-    empty, null, garbage."""
+    """The enrich joins on the v6 fixture against the NumPy searchsorted
+    probe the Arrow kernel ran, ``GeoDatabase.lookup_batch``, on every
+    textual address class: native v6 hit (incl. the exact /32 range end),
+    v4-mapped, v4-compat, country-only hit (lat nil → 0.0 default), v6
+    miss, v4 hit/miss, empty, null, garbage."""
+    import pandas as pd
     from fluent_plugin_geoip_spark.config import GeoipConfig
     from fluent_plugin_geoip_spark.operators.enrich import GeoipEnricher
     from fluent_plugin_geoip_spark.operators.geolookup import GeoDatabase
@@ -383,13 +321,17 @@ def test_jvm_join_v6_matches_arrow_kernel(spark):
         "city": "${city.names.en['ip']}",
         "country": "${country.iso_code['ip']}",
         "latitude": "${location.latitude['ip']}"})
-    cols = ["id", "city", "country", "latitude"]
-    a = (GeoipEnricher(spark, cfg, db, strategy="arrow")
-         .transform(df).select(cols).orderBy("id").collect())
-    j = (GeoipEnricher(spark, cfg, db, strategy="jvm_join")
-         .transform(df).select(cols).orderBy("id").collect())
-    assert a == j
-    assert j[0].city == "V6 City" and j[1].city == "Mountain View"
+    j = [(r.city, r.country, r.latitude) for r in GeoipEnricher(
+        spark, cfg, db).transform(df).orderBy("id").collect()]
+    ref = db.lookup_batch(pd.Series(ips, dtype=object), [
+        "city.names.en", "country.iso_code", "location.latitude"])
+    want = [(city, cc, 0.0 if pd.isna(lat) else float(lat)) if hit
+            else (None, None, None)
+            for hit, city, cc, lat in zip(
+                ref["__hit__"], ref["city_names_en"],
+                ref["country_iso_code"], ref["location_latitude"])]
+    assert j == want
+    assert j[0][0] == "V6 City" and j[1][0] == "Mountain View"
 
 
 def test_paragraph_dedup_partial_agg_no_window(spark, tmp_path_factory):
@@ -438,7 +380,7 @@ def test_jvm_join_v6_multi_key(spark):
          ("8.8.8.8", "2400:cb00::9"),
          ("garbage", "")],
         "src string, dst string")
-    out = GeoipEnricher(spark, cfg, db, strategy="jvm_join").transform(df)
+    out = GeoipEnricher(spark, cfg, db).transform(df)
     plan = explain(out)
     tree = plan.split("\n\n")[0]
     assert "ArrowEvalPython" not in tree, tree

@@ -73,7 +73,7 @@ records_cfg = st.dictionaries(
     template, min_size=1, max_size=4)
 
 
-@settings(max_examples=12, deadline=None,
+@settings(max_examples=20, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(records=records_cfg,
        skip=st.booleans(),
@@ -84,6 +84,9 @@ records_cfg = st.dictionaries(
 @example(records={"out_a": ","}, skip=True,
          hosts=[("66.102.3.80", "66.102.3.80")])
 def test_spark_matches_reference_interpreter(spark, records, skip, hosts):
+    """The enricher (broadcast prefix-bucket joins) against the reference
+    interpreter: template modes, quoting, skip semantics, miss/garbage
+    handling."""
     cfg = GeoipConfig(lookup_keys=["host", "host2"], records=records,
                       skip_adding_null_record=skip)
     try:
@@ -112,42 +115,6 @@ def test_spark_matches_reference_interpreter(spark, records, skip, hosts):
         assert got == expected, (records, skip, h1, h2, got, expected)
 
 
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(records=records_cfg,
-       skip=st.booleans(),
-       hosts=st.lists(st.tuples(st.sampled_from(IPS), st.sampled_from(IPS)),
-                      min_size=1, max_size=8, unique=True))
-def test_jvm_join_matches_reference_interpreter(spark, records, skip, hosts):
-    """The all-JVM broadcast-join strategy (round 7) must satisfy the SAME
-    reference differential as the Arrow kernel — template modes, quoting,
-    skip semantics, miss/garbage handling included — proving the two
-    strategies interchangeable on any v4 config."""
-    cfg = GeoipConfig(lookup_keys=["host", "host2"], records=records,
-                      skip_adding_null_record=skip)
-    try:
-        enr = GeoipEnricher(spark, cfg, geoip2_city_db(),
-                            strategy="jvm_join")
-    except GeoipConfigError:
-        return
-
-    ref = RefGeoipFilter(["host", "host2"], records, RANGES,
-                         skip_adding_null_record=skip)
-    schema = T.StructType([T.StructField("host", T.StringType()),
-                           T.StructField("host2", T.StringType())])
-    df = spark.createDataFrame(list(hosts), schema)
-    out_rows = [r.asDict(recursive=True) for r in enr.transform(df).collect()]
-    for (h1, h2), got in zip(hosts, out_rows):
-        expected = ref.filter({"host": h1, "host2": h2})
-        skipped = got.pop(SKIP_FLAG, False)
-        if skipped:
-            for k in records:
-                assert got.get(k) is None, (records, h1, h2, got)
-                got.pop(k, None)
-                expected.pop(k, None)
-        assert got == expected, (records, skip, h1, h2, got, expected)
-
-
 ipv4ish = st.one_of(
     st.from_regex(r"\d{1,4}\.\d{1,4}\.\d{1,4}\.\d{1,4}", fullmatch=True),
     st.text(alphabet="0123456789. abc", max_size=18),
@@ -160,8 +127,9 @@ ipv4ish = st.one_of(
           suppress_health_check=[HealthCheck.too_slow])
 @given(ips=st.lists(ipv4ish, min_size=1, max_size=60))
 def test_jvm_and_pandas_ipv4_parse_agree(spark, ips):
-    """The JVM codegen parse (hot path) and the pandas kernel parse (string
-    UDF path) must agree on every input."""
+    """The JVM codegen parse (the enrich hot path) and the pandas parse
+    (``GeoDatabase.lookup_batch``, the driver-side reference) must agree
+    on every input."""
     import pandas as pd
     from fluent_plugin_geoip_spark.functions.ipv4 import (
         ipv4_str_to_long, ipv4_to_uint32)
@@ -195,8 +163,9 @@ ipv6ish = st.one_of(
           suppress_health_check=[HealthCheck.too_slow])
 @given(ips=st.lists(ipv6ish, min_size=1, max_size=60))
 def test_jvm_ipv6_parse_matches_inet_pton(spark, ips):
-    """The Catalyst IPv6 parse (round 8 — the v6 leg of jvm_join) must
-    agree exactly with the Arrow kernel's authority, glibc inet_pton:
+    """The Catalyst IPv6 parse (the v6 leg of the enrich joins) must
+    agree exactly with the driver-side reference's authority
+    (``GeoDatabase.lookup_batch``), glibc inet_pton:
     same accept/reject set, same 128-bit value as two signed longs."""
     import socket
     from fluent_plugin_geoip_spark.functions.ipv6 import ipv6_str_to_longs

@@ -250,7 +250,7 @@ def test_foreach_batch_replay_is_idempotent(spark, tmp_path):
     out = str(tmp_path / "sink")
     pages = generate_pages(spark, 500)
     enriched = GeoipPipeline(spark).enrich(pages)
-    handler = make_batch_handler(out, salt_buckets=4)
+    handler = make_batch_handler(out)
     handler(enriched, 0)
     first = spark.read.parquet(f"{out}/data").count()
     handler(enriched, 0)  # replay of the same batch
@@ -400,7 +400,7 @@ def test_compact_stream_sinks_folds_finalized_batches(spark, tmp_path):
     from fluent_plugin_geoip_spark.streaming.stream import make_batch_handler
     out = str(tmp_path / "sink")
     enriched = GeoipPipeline(spark).enrich(generate_pages(spark, 400))
-    handler = make_batch_handler(out, salt_buckets=4)
+    handler = make_batch_handler(out)
     for b in range(4):
         handler(enriched.filter(F.crc32(F.col("url")) % 4 == b), b)
     total0, per0, batches0 = _stream_state(spark, out)
@@ -434,7 +434,7 @@ def test_compact_stream_sinks_crash_replay(spark, tmp_path, crash):
     from fluent_plugin_geoip_spark.streaming.stream import make_batch_handler
     out = str(tmp_path / "sink")
     enriched = GeoipPipeline(spark).enrich(generate_pages(spark, 300))
-    handler = make_batch_handler(out, salt_buckets=4)
+    handler = make_batch_handler(out)
     for b in range(3):
         handler(enriched.filter(F.crc32(F.col("url")) % 3 == b), b)
     total0, per0, _ = _stream_state(spark, out)
