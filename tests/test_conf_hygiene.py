@@ -273,11 +273,15 @@ def test_plan_independent_walks_node_classes(spark):
         assert not is_plan_independent(col), col
 
 
-def test_compiled_enrich_columns_pass_guard(spark):
+@pytest.mark.parametrize("crossing", ["jvm_join", "arrow"])
+def test_compiled_enrich_columns_pass_guard(spark, crossing):
     """Every Column an enrich plan caches passes ``is_plan_independent``.
-    The one that fails it (the Ruby float-format UDF of an interpolated
-    double) is kept as a factory and rebuilt on each use; applying the
-    plan twice gives the same rows."""
+    With ``jvm_join`` every output is a JVM expression over the range-table
+    joins, so every entry is cached and the plan runs no Python. With
+    ``arrow`` one output interpolates a double into a string: it goes
+    through the Ruby float-format pandas UDF (an Arrow crossing), fails the
+    guard and is kept as a factory, rebuilt on each use. Applying the plan
+    twice gives the same rows."""
     import os
 
     from fluent_plugin_geoip_spark.config import GeoipConfig
@@ -288,22 +292,27 @@ def test_compiled_enrich_columns_pass_guard(spark):
 
     db = GeoDatabase.from_mmdb(os.path.join(
         os.path.dirname(__file__), "fixtures", "geolite2-city-v6-test.mmdb"))
+    records = {"city": "${city.names.en['ip']}"}
+    if crossing == "arrow":
+        records["at"] = ("${city.names.en['ip']} "
+                         "${location.latitude['ip']}")
     cfg = GeoipConfig(lookup_keys=["ip"], skip_adding_null_record=True,
-                      records={"city": "${city.names.en['ip']}",
-                               "at": "${city.names.en['ip']} "
-                                     "${location.latitude['ip']}"})
+                      records=records)
     df = spark.createDataFrame(
         [(i, ip) for i, ip in enumerate(
             ["66.102.1.1", "2001:db8::1", "::ffff:66.102.1.1", "x", None])],
         "id int, ip string")
     enr = GeoipEnricher(spark, cfg, db)
-    first = enr.transform(df).orderBy("id").collect()
+    out = enr.transform(df)
+    first = out.orderBy("id").collect()
     plan, = enr._plans.values()
     entries = plan.entries()
     cached = [e for e in entries if not callable(e)]
     factories = [e for e in entries if callable(e)]
     assert cached and all(is_plan_independent(c) for c in cached)
-    assert len(factories) == 1
+    assert len(factories) == (1 if crossing == "arrow" else 0)
     assert not any(is_plan_independent(f()) for f in factories)
+    physical = out._jdf.queryExecution().executedPlan().toString()
+    assert ("ArrowEvalPython" in physical) == (crossing == "arrow")
     assert enr.transform(df).orderBy("id").collect() == first
     assert first[0]["city"] is not None

@@ -544,21 +544,47 @@ def dual_pages(spark, ips=DUAL_IPS):
          for i, ip in enumerate(ips)], "url string, text string, lang string")
 
 
-def _dual_pipeline(spark, db):
-    return GeoipPipeline(spark, database=db, enable_asn=True, asn_database=db)
+def _dual_pipeline(spark, db, records=None):
+    return GeoipPipeline(spark, database=db, records=records,
+                         enable_asn=True, asn_database=db)
 
 
-def _enriched_rows(df):
-    return df.select(*ENRICHED).orderBy("url").collect()
+def _enriched_rows(df, extra=()):
+    return df.select(*ENRICHED, *extra).orderBy("url").collect()
 
 
-def test_compiled_pipeline_reuse_matches_fresh(spark, dual_db):
+# The compiled-plan tests run twice: "jvm_join", where every template output
+# is a JVM expression over the range-table joins and the plan runs no
+# Python, and "arrow", with one more output that interpolates a double into
+# a string. That output goes through the Ruby float-format pandas UDF (an
+# Arrow crossing), which the compiled plan keeps as a factory and rebuilds
+# on each use.
+CROSSINGS = ["jvm_join", "arrow"]
+
+
+def _with_crossing(records, crossing, key):
+    if crossing == "arrow":
+        return {**records, "at": f"${{city.names.en['{key}']}} "
+                                 f"${{location.latitude['{key}']}}"}
+    return dict(records)
+
+
+def _has_arrow_crossing(df) -> bool:
+    return "ArrowEvalPython" in \
+        df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("crossing", CROSSINGS)
+def test_compiled_pipeline_reuse_matches_fresh(spark, dual_db, crossing):
     """One pipeline over inputs whose columns are reordered or extended,
     over a second plan with the same column names, and over an input
     derived from another DataFrame through resolved column references
     (the round-9 stale-exprId shape) gives the rows a freshly built
     pipeline gives."""
-    pipe = _dual_pipeline(spark, dual_db)
+    from fluent_plugin_geoip_spark.plans.pipeline import FLAGSHIP_RECORDS
+    records = _with_crossing(FLAGSHIP_RECORDS, crossing, "client_ip")
+    extra = [k for k in records if k not in FLAGSHIP_RECORDS]
+    pipe = _dual_pipeline(spark, dual_db, records)
     base = dual_pages(spark)
     other = dual_pages(spark, list(reversed(DUAL_IPS)) + ["1.2.255.255"])
     inputs = [
@@ -572,18 +598,22 @@ def test_compiled_pipeline_reuse_matches_fresh(spark, dual_db):
     ]
     for df in inputs:
         got = pipe.enrich(df)
-        assert _enriched_rows(got) == \
-            _enriched_rows(_dual_pipeline(spark, dual_db).enrich(df))
+        assert _enriched_rows(got, extra) == _enriched_rows(
+            _dual_pipeline(spark, dual_db, records).enrich(df), extra)
         assert got.columns == [*df.columns, "host", "client_ip",
-                               *ENRICHED[1:]]
+                               *ENRICHED[1:5], *extra, *ENRICHED[5:]]
+        assert _has_arrow_crossing(got) == (crossing == "arrow")
     assert len(pipe.enricher._plans) == 3  # one per distinct column list
-    hits = {r["url"]: r for r in _enriched_rows(pipe.enrich(base))}
+    hits = {r["url"]: r for r in _enriched_rows(pipe.enrich(base), extra)}
     assert hits["http://www.site3.com/p"]["city"] == "DE-3"
     assert hits["http://www.site4.com/p"]["asn"] == 64515
     assert hits["http://www.site6.com/p"]["country"] == "JP"  # ::ffff:8.8.8.8
+    if extra:  # Ruby's Float#to_s of 8.8.8.8's latitude
+        assert hits["http://www.site1.com/p"]["at"] == "JP-2 2.0"
 
 
-def test_compiled_skip_null_record_reuse(spark, dual_db):
+@pytest.mark.parametrize("crossing", CROSSINGS)
+def test_compiled_skip_null_record_reuse(spark, dual_db, crossing):
     """skip_adding_null_record compiles per input schema: with no
     pre-existing output field a skipped row gets null, with one it keeps
     the old value. A reused enricher matches a fresh one on both."""
@@ -591,9 +621,12 @@ def test_compiled_skip_null_record_reuse(spark, dual_db):
     from fluent_plugin_geoip_spark.operators.enrich import (
         SKIP_FLAG, GeoipEnricher,
     )
+    records = _with_crossing({"country": "${country.iso_code['ip']}",
+                              "city": "${city.names.en['ip']}"},
+                             crossing, "ip")
+    extra = list(records)[2:]
     cfg = GeoipConfig(lookup_keys=["ip"], skip_adding_null_record=True,
-                      records={"country": "${country.iso_code['ip']}",
-                               "city": "${city.names.en['ip']}"})
+                      records=records)
     plain = spark.createDataFrame(list(enumerate(DUAL_IPS)), "id int, ip string")
     with_field = spark.createDataFrame(
         [(i, ip, "old") for i, ip in enumerate(DUAL_IPS)],
@@ -603,9 +636,10 @@ def test_compiled_skip_null_record_reuse(spark, dual_db):
         got = enr.transform(df)
         assert got.orderBy("id").collect() == GeoipEnricher(
             spark, cfg, dual_db).transform(df).orderBy("id").collect()
-    assert got.columns == ["id", "ip", "country", "city", SKIP_FLAG]
+        assert _has_arrow_crossing(got) == (crossing == "arrow")
+    assert got.columns == ["id", "ip", "country", "city", *extra, SKIP_FLAG]
     assert enr.transform(plain).columns == ["id", "ip", "country", "city",
-                                            SKIP_FLAG]
+                                            *extra, SKIP_FLAG]
     rows = {r["ip"]: r for r in got.collect()}
     assert rows["9.9.9.9"][SKIP_FLAG] and rows["9.9.9.9"]["country"] == "old"
     assert not rows["8.8.8.8"][SKIP_FLAG] and rows["8.8.8.8"]["country"] == "JP"
@@ -613,7 +647,8 @@ def test_compiled_skip_null_record_reuse(spark, dual_db):
     assert miss[SKIP_FLAG] and miss["country"] is None
 
 
-def test_compiled_plan_follows_case_sensitivity(spark, dual_db):
+@pytest.mark.parametrize("crossing", CROSSINGS)
+def test_compiled_plan_follows_case_sensitivity(spark, dual_db, crossing):
     """Which input column a template field replaces follows
     ``spark.sql.caseSensitive`` at each ``transform``: flipping it between
     two calls on a ``Country`` input gives what a fresh enricher gives
@@ -621,14 +656,16 @@ def test_compiled_plan_follows_case_sensitivity(spark, dual_db):
     kept)."""
     from fluent_plugin_geoip_spark.config import GeoipConfig
     from fluent_plugin_geoip_spark.operators.enrich import GeoipEnricher
-    cfg = GeoipConfig(lookup_keys=["ip"],
-                      records={"country": "${country.iso_code['ip']}"})
+    records = _with_crossing({"country": "${country.iso_code['ip']}"},
+                             crossing, "ip")
+    extra = list(records)[1:]
+    cfg = GeoipConfig(lookup_keys=["ip"], records=records)
     df = spark.createDataFrame(
         [(i, ip, "old") for i, ip in enumerate(DUAL_IPS)],
         "id int, ip string, Country string")
     enr = GeoipEnricher(spark, cfg, dual_db)
-    expected_columns = {"false": ["id", "ip", "country"],
-                        "true": ["id", "ip", "Country", "country"]}
+    expected_columns = {"false": ["id", "ip", "country", *extra],
+                        "true": ["id", "ip", "Country", "country", *extra]}
     try:
         for setting in ("false", "true", "false"):
             spark.conf.set("spark.sql.caseSensitive", setting)
@@ -636,6 +673,7 @@ def test_compiled_plan_follows_case_sensitivity(spark, dual_db):
             assert got.columns == expected_columns[setting]
             assert got.orderBy("id").collect() == GeoipEnricher(
                 spark, cfg, dual_db).transform(df).orderBy("id").collect()
+            assert _has_arrow_crossing(got) == (crossing == "arrow")
     finally:
         spark.conf.unset("spark.sql.caseSensitive")
     rows = {r["ip"]: r for r in got.collect()}

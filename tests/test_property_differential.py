@@ -73,35 +73,24 @@ records_cfg = st.dictionaries(
     template, min_size=1, max_size=4)
 
 
-@settings(max_examples=20, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(records=records_cfg,
-       skip=st.booleans(),
-       hosts=st.lists(st.tuples(st.sampled_from(IPS), st.sampled_from(IPS)),
-                      min_size=1, max_size=8, unique=True))
-# no placeholder at all: the reference's placeholder hash is empty, so
-# skip_adding_null_record skips every record
-@example(records={"out_a": ","}, skip=True,
-         hosts=[("66.102.3.80", "66.102.3.80")])
-def test_spark_matches_reference_interpreter(spark, records, skip, hosts):
-    """The enricher (broadcast prefix-bucket joins) against the reference
-    interpreter: template modes, quoting, skip semantics, miss/garbage
-    handling."""
+HOST_SCHEMA = T.StructType([T.StructField("host", T.StringType()),
+                            T.StructField("host2", T.StringType())])
+host_pairs = st.lists(st.tuples(st.sampled_from(IPS), st.sampled_from(IPS)),
+                      min_size=1, max_size=8, unique=True)
+
+
+def _enricher_or_none(spark, records, skip):
     cfg = GeoipConfig(lookup_keys=["host", "host2"], records=records,
                       skip_adding_null_record=skip)
     try:
-        enr = GeoipEnricher(spark, cfg, geoip2_city_db())
+        return GeoipEnricher(spark, cfg, geoip2_city_db())
     except GeoipConfigError:
-        return  # generator produced a config the compiler rejects — fine
+        return None  # generator produced a config the compiler rejects — fine
 
+
+def _assert_matches_reference(out_rows, records, skip, hosts):
     ref = RefGeoipFilter(["host", "host2"], records, RANGES,
                          skip_adding_null_record=skip)
-
-    schema = T.StructType([T.StructField("host", T.StringType()),
-                           T.StructField("host2", T.StringType())])
-    df = spark.createDataFrame(list(hosts), schema)
-    out_rows = [r.asDict(recursive=True) for r in enr.transform(df).collect()]
-
     for (h1, h2), got in zip(hosts, out_rows):
         expected = ref.filter({"host": h1, "host2": h2})
         skipped = got.pop(SKIP_FLAG, False)
@@ -113,6 +102,43 @@ def test_spark_matches_reference_interpreter(spark, records, skip, hosts):
                 expected.pop(k, None)
         # input columns: interpreter keeps python Nones identically
         assert got == expected, (records, skip, h1, h2, got, expected)
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(records=records_cfg, skip=st.booleans(), hosts=host_pairs)
+# no placeholder at all: the reference's placeholder hash is empty, so
+# skip_adding_null_record skips every record
+@example(records={"out_a": ","}, skip=True,
+         hosts=[("66.102.3.80", "66.102.3.80")])
+def test_spark_matches_reference_interpreter(spark, records, skip, hosts):
+    """The enricher (broadcast prefix-bucket joins) against the reference
+    interpreter: template modes, quoting, skip semantics, miss/garbage
+    handling."""
+    enr = _enricher_or_none(spark, records, skip)
+    if enr is None:
+        return
+    df = spark.createDataFrame(list(hosts), HOST_SCHEMA)
+    out_rows = [r.asDict(recursive=True) for r in enr.transform(df).collect()]
+    _assert_matches_reference(out_rows, records, skip, hosts)
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(records=records_cfg, skip=st.booleans(), hosts=host_pairs)
+def test_jvm_join_matches_reference_interpreter(spark, records, skip, hosts):
+    """The same differential through a reused compiled plan: the enricher
+    first transforms one input, then a second, separately created
+    DataFrame with the same columns, whose range-table join output must
+    equal the reference interpreter's."""
+    enr = _enricher_or_none(spark, records, skip)
+    if enr is None:
+        return
+    enr.transform(spark.createDataFrame([("8.8.8.8", None)], HOST_SCHEMA))
+    df = spark.createDataFrame(list(hosts), HOST_SCHEMA)
+    out_rows = [r.asDict(recursive=True) for r in enr.transform(df).collect()]
+    assert len(enr._plans) == 1
+    _assert_matches_reference(out_rows, records, skip, hosts)
 
 
 ipv4ish = st.one_of(
