@@ -14,13 +14,16 @@ Spark restatement of the reference's per-record dataflow
                                                 ``geoip_skipped`` flag (rb:122-123)
 
 Like the reference, which compiles its config once at configure time and
-then only applies it per record (rb:60, 86), the enricher compiles the
-whole stage once per input schema into an :class:`EnrichPlan` — the
-Columns, the renamed broadcast range tables and the join conditions —
-and ``transform`` applies it as a short fixed sequence: one projection
-per materialization layer, one join per range table, one output
-projection. The stage is narrow: the broadcast hash joins fuse into the
-scan's codegen stage with no Python worker, and no shuffle is introduced.
+then only applies it per record (rb:60, 86), the enrich stage is compiled
+once per input schema into an :class:`EnrichPlan` — the Columns, the
+prefixed broadcast range tables and the join conditions — and applied as
+a short fixed sequence: one projection per parse layer, one join per
+lookup key and database, one output projection per enricher. Several
+enrichers compile into one plan (:func:`compile_plan`; the pipeline's
+city + ASN) that parses each lookup key once for all of them, as the
+reference geolocates each key once per record (rb:86, 167-185). The stage
+is narrow: the broadcast hash joins fuse into the scan's codegen stage
+with no Python worker, and no shuffle is introduced.
 """
 
 from __future__ import annotations
@@ -100,15 +103,18 @@ class EnrichPlan:
     """The enrich stage compiled for one input schema: its steps, applied
     in order.
 
-    - projections of ``*`` plus named Columns that read only the input
-      and earlier steps, so a value read more than once downstream (the
-      parsed address, the v6 high half, the geo struct) is materialized
-      once instead of being inlined at every read;
-    - a :class:`Join` per range table, between the probe-word projections
-      and the geo structs;
-    - last, the output projection: the input columns, each template field
-      (replacing a same-named input column in place, like ``withColumns``)
-      and the skip flag; the internal columns go.
+    - projections of ``*`` plus the parse of each lookup key, named after
+      the plan's j-th distinct key and materialized once however many
+      databases probe it: ``__ip_<j>`` (the v4 parse) and, where a
+      v6-capable database probes the key, ``__ip6_<j>`` (the v6 parse),
+      ``__ip4e_<j>`` (the v4 word, mapped and compat text folded) and
+      ``__ip6h_<j>`` (the native-v6 high half);
+    - per enricher, a :class:`Join` per lookup key against its database's
+      range table, then its output projection: the input columns, each
+      template field (replacing a same-named input column in place, like
+      ``withColumns``) and the skip flag. The parse columns stay until
+      the last enricher's output projection; the join columns go with
+      their enricher's.
 
     Column entries are Columns, or factories for the UDF-bearing Columns
     that fail ``is_plan_independent``."""
@@ -129,13 +135,127 @@ def _quoted(name: str) -> Column:
     return F.col("`" + name.replace("`", "``") + "`")
 
 
+def apply_plan(enrichers: list[GeoipEnricher], plans: dict,
+               df: DataFrame) -> DataFrame:
+    """``df`` through ``enrichers``, one after another, by the plan
+    compiled for its schema: its column names and the session's
+    ``spark.sql.caseSensitive`` (the analyzer's name rule decides which
+    input column a same-named field replaces). ``plans`` keeps each plan
+    under that key, so a later input with the same columns, batch or
+    streaming, only applies it."""
+    key = (tuple(df.columns),
+           enrichers[0].spark.conf.get("spark.sql.caseSensitive") == "true")
+    plan = plans.get(key)
+    if plan is None:
+        plan = plans[key] = compile_plan(enrichers, *key)
+    return plan.apply(df)
+
+
+def compile_plan(enrichers: list[GeoipEnricher], columns: tuple[str, ...],
+                 case_sensitive: bool = False) -> EnrichPlan:
+    """The stage that applies ``enrichers`` one after another to inputs
+    with these column names, under ``spark.sql.caseSensitive`` =
+    ``case_sensitive``, parsing each lookup key once for all of them.
+
+    An enricher whose lookup key reads a field an earlier one writes must
+    see the new value, so the plan parses again after that field is
+    written."""
+    def norm(name: str) -> str:
+        return name if case_sensitive else name.lower()
+
+    groups: list[list[GeoipEnricher]] = []
+    written: set[str] = set()
+    for e in enrichers:
+        if not e.compiled.templates:
+            continue
+        if not groups or written & {norm(c) for c in e._key_columns()}:
+            groups.append([])
+            written = set()
+        groups[-1].append(e)
+        written |= {norm(f) for f in e._field_names()}
+    steps: list = []
+    names = list(columns)
+    for group in groups:
+        names = _compile_group(group, names, norm, steps)
+    return EnrichPlan(steps)
+
+
+def _compile_group(group: list[GeoipEnricher], columns: list[str], norm,
+                   steps: list) -> list[str]:
+    """Append to ``steps`` the enrichers of ``group`` over one shared
+    parse of their lookup keys; return the output column names."""
+    from ..functions.ipv6 import ipv6_str_to_longs
+    spark = group[0].spark
+
+    def projection(cols: list) -> Projection:
+        return Projection(spark, [_compiled(c) for c in cols])
+
+    accessors = {k: e.compiled.accessors[k]
+                 for e in group for k in e._attrs_by_key}
+    v6_keys = {k for e in group if e.db.has_ipv6 for k in e._attrs_by_key}
+    # parse layers: 0 the v4 parse of each lookup key, 1 the v6 parse,
+    # 2 the probe words
+    layers: list[list] = [[], [], []]
+    parsed: list[Column] = []
+
+    def parse(layer: int, name: str, col: Column) -> Column:
+        layers[layer].append(col.alias(name))
+        parsed.append(F.col(name))
+        return F.col(name)
+
+    key_index = {key: j for j, key in enumerate(accessors)}
+    for key, j in key_index.items():
+        addr = accessor_column(accessors[key]).cast("string")
+        ip4 = parse(0, f"__ip_{j}", ipv4_str_to_long(addr))
+        if key not in v6_keys:
+            continue
+        # the v6 parse runs only where the v4 parser rejected the text
+        # (codegen CASE WHEN keeps the v4 majority free).
+        # Round 9 note: a staged multi-projection (pure-codegen) parse
+        # was built, measured and REVERTED — it is 1.7x faster in
+        # isolation, but fused into this stage (v4 parse + broadcast
+        # joins + outputs) it pushed the whole-stage method to ~11.4 KB of
+        # bytecode, past HotSpot's 8 KB JIT ceiling, and the
+        # un-JIT-compiled stage ran ~3x slower end to end. The _let
+        # expression form keeps the fused method small precisely because
+        # HOF lambdas evaluate as CodegenFallback outside it (A/B +
+        # method sizes in docs/v6_parse_r9.jsonl).
+        p6 = parse(1, f"__ip6_{j}", F.when(ip4.isNull() & addr.contains(":"),
+                                           ipv6_str_to_longs(addr)))
+        hi6, lo6 = p6.getField("hi"), p6.getField("lo")
+        mapped = (hi6 == 0) & F.shiftrightunsigned(lo6, 32).isin(0, 0xFFFF)
+        parse(2, f"__ip4e_{j}", F.coalesce(ip4, F.when(
+            mapped, lo6.bitwiseAND(F.lit(0xFFFFFFFF)))))
+        # the native-v6 high half (null when mapped or unparsed) gets its
+        # own column: the bucket key reads it once per split level and
+        # twice more, and inline each read regenerates the mask — with
+        # two split levels that took the fused probe stage's largest
+        # method from 6.8 KB to 8.0 KB, at HotSpot's 8,000-byte JIT limit
+        parse(2, f"__ip6h_{j}", F.when(~mapped, hi6))
+    steps += [projection([F.col("*"), *layer]) for layer in layers if layer]
+
+    n_joins = sum(isinstance(s, Join) for s in steps)
+    for n, e in enumerate(group):
+        prefixes = {}
+        for key, attrs in e._attrs_by_key.items():
+            prefixes[key] = prefix = f"__r{n_joins}_"
+            n_joins += 1
+            steps.append(e._join(key_index[key], attrs, prefix))
+        output, columns = e._output(columns, prefixes, norm)
+        # the parse columns stay for the group's later enrichers
+        steps.append(projection(
+            output + (parsed if n < len(group) - 1 else [])))
+    return columns
+
+
 class GeoipEnricher:
     """Compile once, apply to any DataFrame (batch or streaming).
 
-    Each lookup key is geolocated by broadcast-hash joins against
-    prefix-bucket-expanded range tables
-    (:func:`..operators.geolookup.expanded_bucket_table`; for v6-capable
-    databases additionally
+    Each lookup key is geolocated by a broadcast-hash join against its
+    database's prefix-bucket range table
+    (:func:`..operators.geolookup.range_table`: the v4 pieces of
+    :func:`..operators.geolookup.expanded_bucket_table` and, for a
+    v6-capable database, the v6 pieces of
     :func:`..operators.geolookup.expanded_bucket_table_v6`, with the
     address parsed JVM-side by :func:`..functions.ipv6.ipv6_str_to_longs`),
     so the enrich stage stays inside the JVM with no Python worker.
@@ -145,7 +265,9 @@ class GeoipEnricher:
     ``transform`` compiles an :class:`EnrichPlan` on first sight of an
     input schema (its column names, and the session's
     ``spark.sql.caseSensitive``) and reuses it for every later input with
-    the same columns, batch or streaming.
+    the same columns, batch or streaming. It is the one-enricher case of
+    :func:`compile_plan`, which also fuses several enrichers into one
+    plan (``GeoipPipeline``'s city + ASN).
     """
 
     def __init__(self, spark: SparkSession, config: GeoipConfig,
@@ -172,65 +294,46 @@ class GeoipEnricher:
         self._plans: dict[tuple[tuple[str, ...], bool], EnrichPlan] = {}
 
     def transform(self, df: DataFrame) -> DataFrame:
-        if not self.compiled.templates:
-            return df
-        # the analyzer's name rule decides which input column a same-named
-        # field replaces, so it is part of the plan's key
-        key = (tuple(df.columns),
-               self.spark.conf.get("spark.sql.caseSensitive") == "true")
-        plan = self._plans.get(key)
-        if plan is None:
-            plan = self._plans[key] = self.compile(*key)
-        return plan.apply(df)
+        return apply_plan([self], self._plans, df)
 
     def compile(self, columns: tuple[str, ...],
                 case_sensitive: bool = False) -> EnrichPlan:
         """The enrich stage for inputs with these column names, under
         ``spark.sql.caseSensitive`` = ``case_sensitive``."""
-        comp = self.compiled
-        # materialization layers before the joins: 0 the v4 parse of each
-        # lookup key, 1 the v6 parse, 2 the probe words; after them, the
-        # geo struct of each key, merged from its join columns
-        layers: list[list] = [[], [], []]
-        joins: list[tuple[DataFrame, Column]] = []
-        geo_layer: list = []
-        # lookup key → name of its geo struct column
-        geo: dict[str, str] = {}
-        for i, (key, attrs) in enumerate(self._attrs_by_key.items()):
-            addr = accessor_column(comp.accessors[key]).cast("string")
-            layers[0].append(ipv4_str_to_long(addr).alias(f"__ip_{i}"))
-            geo[key] = f"__geo_{i}"
-            geo_layer.append(self._compile_geo(i, attrs, addr, layers, joins))
+        return compile_plan([self], columns, case_sensitive)
 
-        ph_cols = {ph.text: self._placeholder_column(ph, geo)
+    def _key_columns(self) -> set[str]:
+        """The top-level input columns the lookup keys read."""
+        paths = (self.compiled.accessors[k] for k in self._attrs_by_key)
+        return {p if isinstance(p, str) else p[0] for p in paths}
+
+    def _field_names(self) -> list[str]:
+        """The columns the output projection writes."""
+        return [*self.compiled.templates,
+                *([SKIP_FLAG] if self.config.skip_adding_null_record else [])]
+
+    def _output(self, columns: list[str], prefixes: dict[str, str],
+                norm) -> tuple[list, list[str]]:
+        """The output projection over inputs named ``columns``, with each
+        lookup key's join columns under ``prefixes[key]``: its entries and
+        its column names."""
+        comp = self.compiled
+        ph_cols = {ph.text: self._placeholder_column(ph, prefixes)
                    for ph in comp.placeholders}
-        skip_cond = self._skip_condition(geo, ph_cols)
+        skip_cond = self._skip_condition(prefixes, ph_cols)
         fields = {f: self._output_column(f, t, ph_cols, skip_cond, f in columns)
                   for f, t in comp.templates.items()}
         if skip_cond is not None:
             fields[SKIP_FLAG] = skip_cond.alias(SKIP_FLAG)
-
         # withColumns semantics: a field replaces a same-named input column
         # in place, under the analyzer's name matching; the rest append
-        def norm(name: str) -> str:
-            return name if case_sensitive else name.lower()
         by_norm = {norm(f): f for f in fields}
-        output = [fields[by_norm[norm(c)]] if norm(c) in by_norm else _quoted(c)
-                  for c in columns]
-        replaced = {by_norm[norm(c)] for c in columns if norm(c) in by_norm}
-        output += [col for f, col in fields.items() if f not in replaced]
+        names = [by_norm.get(norm(c), c) for c in columns]
+        replaced = set(names) & set(fields)
+        names += [f for f in fields if f not in replaced]
+        return [fields[c] if c in fields else _quoted(c) for c in names], names
 
-        def projection(cols: list) -> Projection:
-            return Projection(self.spark, [_compiled(c) for c in cols])
-
-        star = F.col("*")
-        return EnrichPlan(steps=[
-            *[projection([star, *layer]) for layer in layers if layer],
-            *[Join(table, _compiled(cond)) for table, cond in joins],
-            *([projection([star, *geo_layer])] if geo_layer else []),
-            projection(output)])
-
-    def _skip_condition(self, geo, ph_cols) -> Column | None:
+    def _skip_condition(self, prefixes, ph_cols) -> Column | None:
         """skip_adding_null_record (rb:122-123): the reference checks
         `placeholder.values.first.nil?` where create_placeholder only
         INSERTS entries whose lookup key geodata hit (rb:191) — i.e. the
@@ -245,9 +348,9 @@ class GeoipEnricher:
         prev_no_hit = F.lit(True)   # no surviving placeholder seen yet
         terms = []                  # "i is the first survivor and nil"
         for ph in comp.placeholders:
-            if ph.record_key not in geo:
+            if ph.record_key not in prefixes:
                 continue  # never inserted (geodata lacks the key, rb:191)
-            hit = F.col(geo[ph.record_key]).getField("__hit__")
+            hit = _hit(prefixes[ph.record_key])
             val, _ = ph_cols[ph.text]
             terms.append(prev_no_hit & hit & val.isNull())
             prev_no_hit = prev_no_hit & ~hit
@@ -281,148 +384,91 @@ class GeoipEnricher:
     JVM_JOIN_SHIFT = 16
 
     def _db_plan_cache(self) -> dict:
-        """Expanded-table cache stored ON the GeoDatabase instance (round
-        9): databases are driver-cached per file (`geolookup._DB_CACHE`),
-        but enrichers are rebuilt per query invocation — keying the
-        deterministic expanded tables on the (immutable) db rather than
-        the enricher reuses the one-time construction across invocations
-        in the same session. Keyed on the session too, so a new
-        SparkSession (tests) never sees another session's DataFrames.
-        This caches a logical LOCAL RELATION (the range table), never a
-        query result — every probe still computes from its inputs."""
+        """Range-table cache stored ON the GeoDatabase instance:
+        databases are driver-cached per file (`geolookup._DB_CACHE`), but
+        enrichers are rebuilt per query invocation — keying the
+        deterministic tables on the (immutable) db rather than the
+        enricher reuses the one-time construction across invocations in
+        the same session. Keyed on the session too, so a new SparkSession
+        (tests) never sees another session's DataFrames. This caches a
+        logical LOCAL RELATION (the range table), never a query result —
+        every probe still computes from its inputs."""
         cache = getattr(self.db, "_expanded_plan_cache", None)
         if cache is None:
             cache = {}
             object.__setattr__(self.db, "_expanded_plan_cache", cache)
         return cache
 
-    def _range_df_for(self, attrs: list[str]):
-        """Broadcast-ready expanded bucket table, cached per attr set
+    def _range_table(self, attrs: list[str], prefix: str) -> DataFrame:
+        """The broadcast-hinted range table of ``attrs``, its columns
+        named ``prefix`` + name, built once per prefix and attr set
         (common-subexpression reuse of the reference's uniq placeholder
         dedup, rb:86)."""
-        from .geolookup import expanded_bucket_table
+        from .geolookup import range_table
         cache = self._db_plan_cache()
-        key = (id(self.spark), "jvm", self.JVM_JOIN_SHIFT, *attrs)
+        key = (id(self.spark), prefix, self.JVM_JOIN_SHIFT, *attrs)
         if key not in cache:
-            cache[key] = expanded_bucket_table(
-                self.spark, self.db, attrs, shift=self.JVM_JOIN_SHIFT)
+            cache[key] = F.broadcast(range_table(
+                self.spark, self.db, attrs, prefix,
+                shift=self.JVM_JOIN_SHIFT))
         return cache[key]
 
-    def _range_df_v6_for(self, attrs: list[str]):
-        from .geolookup import expanded_bucket_table_v6
-        cache = self._db_plan_cache()
-        key = (id(self.spark), "jvm6", *attrs)
-        if key not in cache:
-            cache[key] = expanded_bucket_table_v6(
-                self.spark, self.db, attrs)[0]
-        return cache[key]
+    def _join(self, j: int, attrs: list[str], prefix: str) -> Join:
+        """Geolocate the plan's j-th lookup key: one broadcast-hash join
+        against this database's range table, on the bucket key, with the
+        v4 BETWEEN OR the 128-bit range test as its join filter. No
+        Python crossing; ranges are disjoint, so at most one piece
+        matches and the left join preserves row count.
 
-    def _compile_geo(self, i: int, attrs: list[str], addr: Column,
-                     layers: list[list], joins: list) -> Column:
-        """Geolocate one lookup key with broadcast-hash prefix-bucket
-        joins; returns its geo struct Column. No Python crossing; the
-        BETWEEN rides as a join filter and at most one range matches
-        (disjoint ranges), so each left join preserves row count.
+        A v4-only database probes the plain v4 parse. A v6-capable one
+        probes the v4 word with v4-mapped ``::ffff:a.b.c.d`` and
+        v4-compat ``::a.b.c.d`` text folded in (libmaxminddb tree-walk
+        semantics, matching ``GeoDatabase.lookup_batch``) and, where there
+        is none, the native-v6 high half against the bias-flipped 128-bit
+        bounds. A row probes one family at most, and ``V4_KEY_BIT`` keeps
+        the two families' bucket keys apart."""
+        from .geolookup import V4_KEY_BIT, v4_bucket_layout, v6_bucket_layout
 
-        v6-capable databases take a second broadcast join: the address
-        is parsed JVM-side into two longs (only where the v4 parser
-        rejected it — codegen CASE WHEN keeps the v4 majority free),
-        v4-mapped ``::ffff:a.b.c.d`` / v4-compat ``::a.b.c.d`` text is
-        folded into the v4 probe (libmaxminddb tree-walk semantics,
-        matching ``GeoDatabase.lookup_batch``), and native v6 rows probe
-        the bias-flipped 128-bit range table. The two joins are disjoint by
-        construction (a row probes exactly one table), so the per-field
-        merge is a plain when(v6hit, v6).otherwise(v4)."""
-        from ..functions.ipv6 import ipv6_str_to_longs
-        from .geolookup import v4_bucket_layout, v6_bucket_layout
+        def col(name: str) -> Column:
+            return F.col(prefix + name)
+
         has6 = self.db.has_ipv6
-
-        ip4 = F.col(f"__ip_{i}")
-        if has6:
-            # parse once, reuse for the mapped-fold and the v6 probe.
-            # Round 9 note: a staged multi-projection (pure-codegen) parse
-            # was built, measured and REVERTED — it is 1.7x faster in
-            # isolation, but fused into this stage (v4 parse + two
-            # broadcast joins + merge) it pushed the whole-stage method
-            # to ~11.4 KB of bytecode, past HotSpot's 8 KB JIT ceiling,
-            # and the un-JIT-compiled stage ran ~3x slower end to end.
-            # The _let expression form keeps the fused method at ~2 KB
-            # precisely because HOF lambdas evaluate as CodegenFallback
-            # outside it (A/B + method sizes in docs/v6_parse_r9.jsonl).
-            p6_name, e4_name = f"__ip6_{i}", f"__ip4e_{i}"
-            layers[1].append(F.when(ip4.isNull() & addr.contains(":"),
-                                    ipv6_str_to_longs(addr)).alias(p6_name))
-            p6 = F.col(p6_name)
-            hi6, lo6 = p6.getField("hi"), p6.getField("lo")
-            mapped = ((hi6 == 0)
-                      & F.shiftrightunsigned(lo6, 32).isin(0, 0xFFFF))
-            layers[2].append(F.coalesce(ip4, F.when(
-                mapped, lo6.bitwiseAND(F.lit(0xFFFFFFFF)))).alias(e4_name))
-            # the native-v6 high half (null when mapped or unparsed) gets
-            # its own column: the bucket key reads it once per split
-            # level and twice more, and inline each read regenerates the
-            # mask — with two split levels that took the fused probe
-            # stage's largest method from 6.8 KB to 8.0 KB, at the JIT
-            # ceiling above; as a column it is 5.5 KB
-            h6_name = f"__ip6h_{i}"
-            layers[2].append(F.when(~mapped, hi6).alias(h6_name))
-            probe4_name = e4_name
-        else:
-            probe4_name = f"__ip_{i}"
-        probe4 = F.col(probe4_name)
-
+        word4 = f"__ip4e_{j}" if has6 else f"__ip_{j}"
+        ip4 = F.col(word4)
         lay4 = v4_bucket_layout(self.db, self.JVM_JOIN_SHIFT)
         self.table_stats["v4"] = lay4.stats()
-        pref = f"__r{i}_"
-        cond = ((lay4.probe_key(probe4, f"`{probe4_name}`")
-                 == F.col(pref + "__gb"))
-                & probe4.between(F.col(pref + "__gs"),
-                                 F.col(pref + "__ge")))
-        joins.append((_renamed(self._range_df_for(attrs), pref), cond))
-        v4hit = F.col(pref + "__gs").isNotNull()
-        names = [sanitize_attr(a) for a in attrs]
-        if not has6:
-            return F.struct(v4hit.alias("__hit__"), *[
-                F.col(pref + name).alias(name) for name in names
-            ]).alias(f"__geo_{i}")
+        key = lay4.probe_key(ip4, f"`{word4}`").bitwiseOR(F.lit(V4_KEY_BIT))
+        match = ip4.between(col("__gs"), col("__ge"))
+        if has6:
+            lay6 = v6_bucket_layout(self.db)
+            self.table_stats["v6"] = lay6.stats()
+            word6 = f"__ip6h_{j}"
+            min_long = F.lit(-0x8000000000000000)
+            fhi = F.col(word6).bitwiseXOR(min_long)
+            flo = F.col(f"__ip6_{j}").getField("lo").bitwiseXOR(min_long)
+            sh, sl, eh, el = (col(b) for b in ("__g6sh", "__g6sl",
+                                               "__g6eh", "__g6el"))
+            key = F.coalesce(key, lay6.probe_key(F.col(word6), f"`{word6}`"))
+            match = match | (((fhi > sh) | ((fhi == sh) & (flo >= sl)))
+                             & ((fhi < eh) | ((fhi == eh) & (flo <= el))))
+        return Join(self._range_table(attrs, prefix),
+                    _compiled((key == col("__gb")) & match))
 
-        # native-v6 probe: null for unparsed/mapped rows → no match
-        lay6 = v6_bucket_layout(self.db)
-        self.table_stats["v6"] = lay6.stats()
-        pref6 = f"__r6{i}_"
-        nat_hi = F.col(h6_name)
-        min_long = F.lit(-0x8000000000000000)
-        fhi, flo = nat_hi.bitwiseXOR(min_long), lo6.bitwiseXOR(min_long)
-        sh, sl = F.col(pref6 + "__g6sh"), F.col(pref6 + "__g6sl")
-        eh, el = F.col(pref6 + "__g6eh"), F.col(pref6 + "__g6el")
-        cond6 = ((lay6.probe_key(nat_hi, f"`{h6_name}`")
-                  == F.col(pref6 + "__g6b"))
-                 & ((fhi > sh) | ((fhi == sh) & (flo >= sl)))
-                 & ((fhi < eh) | ((fhi == eh) & (flo <= el))))
-        joins.append((_renamed(self._range_df_v6_for(attrs), pref6), cond6))
-        v6hit = sh.isNotNull()
-        return F.struct((v4hit | v6hit).alias("__hit__"), *[
-            F.when(v6hit, F.col(pref6 + name))
-             .otherwise(F.col(pref + name)).alias(name) for name in names
-        ]).alias(f"__geo_{i}")
-
-    def _placeholder_column(self, ph, geo) -> tuple[Column, str]:
+    def _placeholder_column(self, ph, prefixes) -> tuple[Column, str]:
         dtype = self.db.attr_type(ph.geoip_key)
-        if ph.record_key not in geo:
+        if ph.record_key not in prefixes:
             # unknown record key → placeholder never set → nil (rb:191)
             return typed_null(dtype), dtype
-        col = F.col(geo[ph.record_key])
-        hit = col.getField("__hit__")
-        raw = col.getField(sanitize_attr(ph.geoip_key))
+        prefix = prefixes[ph.record_key]
+        raw = F.col(prefix + sanitize_attr(ph.geoip_key))
         leaf = ph.geoip_key.rsplit(".", 1)[-1]
         if leaf in ("latitude", "longitude"):
             # hit with nil lat/lon → 0.0 default (rb:192-198, test:456-480)
             raw = F.coalesce(raw, F.lit(0.0))
-        col = F.when(hit, raw).otherwise(typed_null(dtype))
+        col = F.when(_hit(prefix), raw).otherwise(typed_null(dtype))
         return col, dtype
 
 
-def _renamed(table: DataFrame, prefix: str) -> DataFrame:
-    """A range table with every column prefixed, hinted for broadcast."""
-    return F.broadcast(table.select(
-        *[F.col(c).alias(prefix + c) for c in table.columns]))
+def _hit(prefix: str) -> Column:
+    """The lookup hit: the key's join matched a range piece."""
+    return F.col(prefix + "__gb").isNotNull()

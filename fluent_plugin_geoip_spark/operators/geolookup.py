@@ -6,9 +6,11 @@ The reference (/root/reference/lib/fluent/plugin/filter_geoip.rb:167-185,
 (``:memory`` flag, filter_geoip.rb:207) and probes it per record. The Spark
 restatement: the range table is sorted once on the driver into plain NumPy
 arrays (:class:`GeoDatabase`), expanded into IP-prefix buckets
-(:func:`expanded_bucket_table`, :func:`expanded_bucket_table_v6`) and
-broadcast, and each address probes its bucket with a broadcast hash join
-whose BETWEEN rides as a join filter — inside the JVM, zero Python.
+(:func:`expanded_bucket_table`, :func:`expanded_bucket_table_v6`), the
+two address families assembled into one table per database
+(:func:`range_table`) and broadcast, and each address probes its bucket
+with a broadcast hash join whose range check rides as a join filter —
+inside the JVM, zero Python.
 
 Why buckets: an interval probe is a non-equi join; Spark would plan it as
 BroadcastNestedLoopJoin, O(rows × ranges). The bucket key manufactures an
@@ -26,7 +28,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..functions.ipv4 import ipv4_to_uint32
 
@@ -749,3 +751,51 @@ def expanded_bucket_table_v6(spark, db: GeoDatabase, attr_paths: list[str],
     fixed = [lay.keys, s_hi_b[idx], s_lo_b[idx], e_hi_b[idx], e_lo_b[idx]]
     attr_specs = [(db.attrs6.get(p), db.attr_type(p)) for p in attr_paths]
     return _expanded_df(spark, schema, idx, fixed, attr_specs), lay.coarse_bits
+
+
+# Set on every v4 bucket key of a range table, so the two families'
+# keys never meet: a v4 key is a prefix below 2^32 under level tag 0 or
+# 5-8 (bits 60-63), and a v6 key with tag t is a prefix below 2^(4t), so
+# its bit 59 can be set only at t = 15, a tag no v4 key has.
+V4_KEY_BIT = 1 << 59
+
+_BOUNDS = ("__gs", "__ge", "__g6sh", "__g6sl", "__g6eh", "__g6el")
+
+
+def range_table(spark, db: GeoDatabase, attr_paths: list[str], prefix: str,
+                shift: int = 16) -> DataFrame:
+    """The one range table the enrich join broadcasts and probes for ``db``:
+    the pieces of :func:`expanded_bucket_table` (key tagged with
+    ``V4_KEY_BIT``) and, for a v6-capable database, those of
+    :func:`expanded_bucket_table_v6`, under one long bucket key ``__gb``.
+    A v4 piece has null v6 bounds, a v6 piece null v4 bounds. Every
+    column is named ``prefix`` + its name.
+
+    The rows are copied JVM-side into one local relation (no Spark job,
+    no Python rows), so a query plans one scan with no projection to
+    fold, whatever the table's size."""
+    names = [sanitize_attr(p) for p in attr_paths]
+
+    def family(df, key: str, bounds: tuple[str, ...]) -> DataFrame:
+        # SQL text: one py4j call for the whole projection
+        return df.selectExpr(f"{key} AS `{prefix}__gb`", *[
+            f"{b if b in bounds else 'CAST(NULL AS BIGINT)'} AS `{prefix}{b}`"
+            for b in _BOUNDS], *[f"`{n}` AS `{prefix}{n}`" for n in names])
+
+    v4 = expanded_bucket_table(spark, db, attr_paths, shift=shift)
+    parts = [family(v4, f"__gb | {V4_KEY_BIT}", _BOUNDS[:2])]
+    if db.has_ipv6:
+        v6 = expanded_bucket_table_v6(spark, db, attr_paths)[0]
+        parts.append(family(v6, "__g6b", _BOUNDS[2:]))
+    schema = T.StructType(
+        [T.StructField(prefix + "__gb", T.LongType(), False)]
+        + [T.StructField(prefix + b, T.LongType(), True) for b in _BOUNDS]
+        + [T.StructField(prefix + n, _SPARK_TYPES[db.attr_type(p)], True)
+           for n, p in zip(names, attr_paths)])
+    rows = spark._jvm.java.util.ArrayList()
+    for part in parts:
+        # a projection of a local relation collects with no job
+        rows.addAll(part._jdf.collectAsList())
+    jss = spark._jsparkSession
+    return DataFrame(jss.createDataFrame(rows, jss.parseDataType(schema.json())),
+                     spark)

@@ -29,7 +29,7 @@ from ..config import GeoipConfig
 from ..operators.aggregate import (
     country_lang_columns, pipeline_metric_columns, sink_counts,
 )
-from ..operators.enrich import GeoipEnricher
+from ..operators.enrich import GeoipEnricher, apply_plan
 from ..operators.geolookup import GeoDatabase
 from ..operators.parse import parse_pages
 from ..operators.route import UNROUTED, route_and_write, route_key_column
@@ -85,8 +85,11 @@ class GeoipPipeline:
     """parse → enrich → route → aggregate over a pages DataFrame.
 
     Two lookup stages (city DB + ASN DB, per the north_star's "city/ASN"
-    enrichment) run back-to-back, each a broadcast hash join per address
-    family, all fused into the scan's codegen stage.
+    enrichment) compile into one enrich plan: ``client_ip`` is parsed
+    once, then each database is probed by one broadcast hash join against
+    its range table, all fused into the scan's codegen stage. The plan is
+    compiled per input column list and ``spark.sql.caseSensitive``
+    (``_plans``) and reused for every later input, batch or streaming.
     """
 
     def __init__(self, spark: SparkSession, database: GeoDatabase | None = None,
@@ -109,14 +112,15 @@ class GeoipPipeline:
             asn_cfg = GeoipConfig(lookup_keys=["client_ip"],
                                   records=dict(ASN_RECORDS))
             self.asn_enricher = GeoipEnricher(spark, asn_cfg, adb)
+        self._enrichers = [e for e in (self.enricher, self.asn_enricher)
+                           if e is not None]
+        self._plans: dict = {}
         self._route_key = route_key_column()
         self._metrics = pipeline_metric_columns()
         self._count_keys, self._count_aggs = country_lang_columns()
 
     def enrich(self, pages: DataFrame) -> DataFrame:
-        out = self.enricher.transform(parse_pages(pages))
-        if self.asn_enricher is not None:
-            out = self.asn_enricher.transform(out)
+        out = apply_plan(self._enrichers, self._plans, parse_pages(pages))
         return out.withColumn("route_country", self._route_key)
 
     def run(self, pages: DataFrame, out_dir: str | None = None,
@@ -139,9 +143,11 @@ class GeoipPipeline:
         if out_dir is not None:
             frame = enriched.drop("access")
             plan_build_s = time.perf_counter() - t0
+            # the scan's file list: the enriched frame's is the same, but
+            # asking it runs the optimizer over the whole enrich plan
             manifest, stats = route_and_write(
                 frame, out_dir, resume=resume, stat_cols=("lang",),
-                audit=audit)
+                audit=audit, input_files=pages.inputFiles())
             # counts derive from the SAME lineage aggregate (no extra scan);
             # on resume the stats cover only partitions written this run
             table = pa.table([

@@ -428,8 +428,9 @@ def q_geoip_mmdb_enrich_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
         "country": "${country.iso_code['ip']}",
         "latitude": "${location.latitude['ip']}",
     })
-    # the v6 enrich path: JVM ipv6 parse + bias-flipped second broadcast
-    # join; parity with GeoDatabase.lookup_batch is separately pinned in
+    # the v6 enrich path: JVM ipv6 parse + the bias-flipped v6 pieces of
+    # the database's one broadcast range table; parity with
+    # GeoDatabase.lookup_batch is separately pinned in
     # tests/test_plans.py::test_jvm_join_v6_matches_arrow_kernel
     out = GeoipEnricher(spark, cfg, db).transform(df)
     return out.select("event_id", "city", "country", "latitude")

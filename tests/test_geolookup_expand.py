@@ -14,7 +14,10 @@
   for double attrs (F7);
 - the bounded-probe layouts (dense buckets split deeper): bucket cap,
   row bound and range-level value parity on adversarial databases
-  (section below).
+  (section below);
+- the one range table per database (``range_table``): v4 and v6 pieces
+  under one bucket key never share a key, even where the two families'
+  raw keys coincide (last section).
 """
 
 import ipaddress
@@ -26,8 +29,8 @@ from pyspark.sql import functions as F
 from fluent_plugin_geoip_spark.config import GeoipConfig
 from fluent_plugin_geoip_spark.operators.enrich import GeoipEnricher
 from fluent_plugin_geoip_spark.operators.geolookup import (
-    BUCKET_CAP, GeoDatabase, expanded_bucket_table, expanded_bucket_table_v6,
-    v4_bucket_layout, v6_bucket_layout,
+    BUCKET_CAP, V4_KEY_BIT, GeoDatabase, expanded_bucket_table,
+    expanded_bucket_table_v6, range_table, v4_bucket_layout, v6_bucket_layout,
 )
 from fluent_plugin_geoip_spark.sources.mmdb import build_mmdb
 
@@ -362,3 +365,92 @@ def test_adversarial_layout_values(spark, name, tmp_path):
         peak = t.groupBy(col).count().agg(F.max("count")).first()[0]
         assert enr.table_stats[tag] == {"rows": t.count(),
                                         "max_bucket_rows": peak}
+
+
+# ---------------------------------------------------------------------------
+# one range table per database: the v4 pieces (keys tagged V4_KEY_BIT)
+# and the v6 pieces share one bucket-key column. Raw keys of the two
+# families do coincide: coarse keys are plain prefixes in both, and v6
+# refined tags 5-8 are v4's when the adaptive v6 coarse level is 28 or
+# below. A /60 split gives tag 15 keys whose bit 59 is set.
+
+
+def _low_tags() -> GeoDatabase:
+    """The dense v4 layout (kept keys at /28, tag 7) beside v6 ranges
+    whose raw keys equal v4 ones: a /8 drives the v6 coarse level to /24;
+    ``8:100::/32`` has the coarse key of v4's 8.1.0.0/16; and 40 /48s in
+    two /28s of ``a02:300::/24`` are split to /28 keys equal to those of
+    10.2.3.16/28 and 10.2.3.32/28."""
+    pairs = [("2000::", "20ff:ffff:ffff:ffff:ffff:ffff:ffff:ffff"),
+             _v6(0x00080100 << 96, 32)]
+    pairs += [_v6((hi << 96) | (k << 80), 48)
+              for hi in (0x0A020310, 0x0A020320) for k in range(20)]
+    db = _mk_db(_named(pairs, "t"))
+    v4 = GeoDatabase.from_rows(_v4_rows(straddle=True), profile="geoip2_c")
+    db.starts, db.ends, db.attrs = v4.starts, v4.ends, v4.attrs
+    return db
+
+
+def _tag_15() -> GeoDatabase:
+    """The dense v4 layout beside 50 /72s sharing one /64 above 8000::,
+    split down to /60: tag 15 keys with bit 59 set."""
+    hi = 0xFD00ABCD00010002
+    pairs = [_v6((hi << 64) | (k << 56), 72) for k in range(50)]
+    pairs.append(_v6(0xFD00ABCD0002 << 80, 48))
+    db = _mk_db(_named(pairs, "f"))
+    v4 = GeoDatabase.from_rows(_v4_rows(straddle=True), profile="geoip2_c")
+    db.starts, db.ends, db.attrs = v4.starts, v4.ends, v4.attrs
+    return db
+
+
+KEY_SPACES = {"low_tags": _low_tags, "tag_15": _tag_15}
+
+
+@pytest.mark.parametrize("name", sorted(KEY_SPACES))
+def test_one_table_key_families_disjoint(spark, name):
+    db = KEY_SPACES[name]()
+    lay4, lay6 = v4_bucket_layout(db), v6_bucket_layout(db)
+    n4, n6 = len(db.starts), len(db.starts6)
+    _assert_layout_bounds(lay4, n4, n4 + 65536, 32)
+    _assert_layout_bounds(lay6, n6, 2 * n6 + 65536, 60)
+    tags6 = set((lay6.keys.view(np.uint64) >> np.uint64(60)).tolist())
+    if name == "low_tags":
+        assert lay6.coarse_bits <= 28
+        assert tags6 & {5, 6, 7, 8}
+        # without the tag bit the families would share buckets
+        assert set(lay4.keys.tolist()) & set(lay6.keys.tolist())
+    else:
+        assert 15 in tags6
+        assert np.any(lay6.keys & np.int64(V4_KEY_BIT))
+    keys4 = set((lay4.keys | np.int64(V4_KEY_BIT)).tolist())
+    assert not keys4 & set(lay6.keys.tolist())
+
+    # the Spark table: every bucket holds pieces of one family only, and
+    # each family's pieces are its layout's
+    table = range_table(spark, db, ["city.names.en"], "__t_")
+    per_key = {r["k"]: (r["v4"], r["v6"]) for r in table.groupBy(
+        F.col("__t___gb").alias("k")).agg(
+        F.count("__t___gs").alias("v4"),
+        F.count("__t___g6sh").alias("v6")).collect()}
+    assert all(min(pair) == 0 for pair in per_key.values())
+    assert sum(v4 for v4, _ in per_key.values()) == lay4.rows
+    assert sum(v6 for _, v6 in per_key.values()) == lay6.rows
+    assert {k for k, (v4, _) in per_key.items() if v4} == keys4
+    assert max(max(pair) for pair in per_key.values()) == max(
+        lay4.max_bucket_rows, lay6.max_bucket_rows)
+
+
+@pytest.mark.parametrize("name", sorted(KEY_SPACES))
+def test_one_table_values(spark, name):
+    """Values through the one join per key match ``lookup_batch`` at every
+    range's edges, v4 probes also as ``::a.b.c.d`` / ``::ffff:a.b.c.d``."""
+    db = KEY_SPACES[name]()
+    probes = _edge_probes(db, aliased=True)
+    df = spark.createDataFrame(list(enumerate(probes)), "i long, ip string")
+    jvm, enr = _enrich_city_latitude(spark, db, df)
+    want = _reference_city_latitude(db, probes)
+    for k, p in enumerate(probes):
+        assert jvm[k] == want[k], (p, jvm[k], want[k])
+    assert sum(w != (None, None) for w in want) > len(probes) // 2
+    plan = enr.transform(df)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastHashJoin") == 1, plan

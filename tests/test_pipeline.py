@@ -302,10 +302,14 @@ def test_iceberg_roundtrip_when_available(spark, pages_dir, tmp_path):
 def test_input_lineage_recorded(spark, pages_dir, tmp_path):
     from fluent_plugin_geoip_spark.operators.route import read_input_lineage
     out = str(tmp_path / "routed")
-    GeoipPipeline(spark).run(spark.read.parquet(pages_dir), out_dir=out)
+    pipe = GeoipPipeline(spark)
+    pipe.run(spark.read.parquet(pages_dir), out_dir=out)
     inputs = read_input_lineage(out)
     assert inputs and all(pages_dir.split("/")[-1] in p or "pages" in p
                           for p in inputs)
+    # the scan's file list, which is the enriched frame's
+    enriched = pipe.enrich(spark.read.parquet(pages_dir))
+    assert inputs == sorted(enriched.inputFiles())
 
 
 def test_non_resume_cleans_stale_partitions(spark, pages_dir, tmp_path):
@@ -603,7 +607,7 @@ def test_compiled_pipeline_reuse_matches_fresh(spark, dual_db, crossing):
         assert got.columns == [*df.columns, "host", "client_ip",
                                *ENRICHED[1:5], *extra, *ENRICHED[5:]]
         assert _has_arrow_crossing(got) == (crossing == "arrow")
-    assert len(pipe.enricher._plans) == 3  # one per distinct column list
+    assert len(pipe._plans) == 3  # one per distinct column list
     hits = {r["url"]: r for r in _enriched_rows(pipe.enrich(base), extra)}
     assert hits["http://www.site3.com/p"]["city"] == "DE-3"
     assert hits["http://www.site4.com/p"]["asn"] == 64515

@@ -3,7 +3,8 @@
 - column pruning reaches the parquet scan (a rollup must not read html)
 - predicate pushdown reaches the scan (PushedFilters)
 - the enrich stage is broadcast hash joins with no Python worker and no
-  shuffle (narrow map)
+  shuffle (narrow map): one per lookup key and database, each key parsed
+  once, and its largest generated method under HotSpot's JIT limit
 - the routed fan-out introduces exactly one Exchange (the REBALANCE on the
   route key)
 - aggregates run as partial+final hash aggregation (map-side combine)
@@ -90,8 +91,8 @@ def test_aggregate_partial_final(spark, pages_parquet):
 
 
 def test_asn_enrich_jvm_join_two_broadcasts_no_python(spark, pages_parquet):
-    """City + ASN: two broadcast joins, still zero Python workers and
-    zero shuffles."""
+    """City + ASN on v4-only databases: one broadcast join per database,
+    two in all, still zero Python workers and zero shuffles."""
     pages = spark.read.parquet(pages_parquet)
     enriched = GeoipPipeline(spark, enable_asn=True).enrich(pages)
     plan = explain(enriched)
@@ -271,9 +272,10 @@ def test_jvm_join_enrich_no_python_and_broadcast(spark):
 
 def test_jvm_join_v6_db_no_python_two_broadcasts(spark):
     """A v6-capable database must STILL enrich with no Python worker —
-    the address parses JVM-side (functions.ipv6) and the native-v6 probe is
-    a SECOND BroadcastHashJoin against the bias-flipped 128-bit range
-    table. No shuffle Exchange; left joins preserve row count."""
+    the address parses JVM-side (functions.ipv6), and the v4 and native-v6
+    probes share ONE BroadcastHashJoin against the database's one range
+    table (v4 pieces and bias-flipped 128-bit v6 pieces under one bucket
+    key). No shuffle Exchange; the left join preserves row count."""
     from fluent_plugin_geoip_spark.config import GeoipConfig
     from fluent_plugin_geoip_spark.operators.enrich import GeoipEnricher
     from fluent_plugin_geoip_spark.operators.geolookup import GeoDatabase
@@ -294,7 +296,7 @@ def test_jvm_join_v6_db_no_python_two_broadcasts(spark):
     tree = plan.split("\n\n")[0]
     assert "ArrowEvalPython" not in tree, tree
     assert "BatchEvalPython" not in tree, tree
-    assert tree.count("BroadcastHashJoin") == 2, tree
+    assert tree.count("BroadcastHashJoin") == 1, tree
     assert "Exchange hashpartitioning" not in tree, tree
     assert out.count() == 5
 
@@ -364,8 +366,9 @@ def test_paragraph_dedup_partial_agg_no_window(spark, tmp_path_factory):
 
 def test_jvm_join_v6_multi_key(spark):
     """Two lookup keys through the v6 jvm path: each key gets its own
-    parse column + v4/v6 broadcast join pair (4 BroadcastHashJoins, no
-    Python), and the per-key structs stay independent."""
+    parse columns + one broadcast join against the database's range table
+    (2 BroadcastHashJoins, no Python), and the per-key values stay
+    independent."""
     from fluent_plugin_geoip_spark.config import GeoipConfig
     from fluent_plugin_geoip_spark.operators.enrich import GeoipEnricher
     from fluent_plugin_geoip_spark.operators.geolookup import GeoDatabase
@@ -384,8 +387,116 @@ def test_jvm_join_v6_multi_key(spark):
     plan = explain(out)
     tree = plan.split("\n\n")[0]
     assert "ArrowEvalPython" not in tree, tree
-    assert tree.count("BroadcastHashJoin") == 4, tree
+    assert tree.count("BroadcastHashJoin") == 2, tree
     rows = {(r.src, r.src_c, r.dst_c) for r in out.collect()}
     assert ("2001:db8::1", "V6", "US") in rows
     assert ("8.8.8.8", "US", "AU") in rows
     assert ("garbage", None, None) in rows
+
+
+def _net_doc(cc: str, k: int) -> dict:
+    return {"country": {"iso_code": cc}, "city": {"names": {"en": f"{cc}-{k}"}},
+            "location": {"latitude": float(k % 90), "longitude": -1.0},
+            "asn": 64500 + k % 4000, "as_org": f"AS{k % 4000}"}
+
+
+def _dual_stack_pipeline(spark, tmp_path, nets):
+    from fluent_plugin_geoip_spark.operators.geolookup import GeoDatabase
+    from fluent_plugin_geoip_spark.sources.mmdb import build_mmdb
+    path = tmp_path / "dual.mmdb"
+    path.write_bytes(build_mmdb(nets))
+    db = GeoDatabase.from_mmdb(str(path))
+    assert db.has_ipv6
+    return GeoipPipeline(spark, database=db, enable_asn=True,
+                         asn_database=db)
+
+
+def _dual_pages(spark):
+    ips = ["1.2.3.4", "2001:db8::1", "::ffff:1.2.3.4", "2400:cb00:7::1",
+           "garbage"]
+    return spark.createDataFrame(
+        [(f"http://www.site{i}.com/p", f"{ip} - - [10/Oct/2000:13:55:36 "
+          f"-0700] \"GET / HTTP/1.0\" 200 1", "en")
+         for i, ip in enumerate(ips)], "url string, text string, lang string")
+
+
+def test_city_asn_dual_stack_one_parse_two_broadcasts(spark, tmp_path):
+    """City + ASN on a dual-stack database: ``client_ip`` is parsed once
+    (the v6 parse appears once in the optimized plan) and each database
+    is one BroadcastHashJoin, two in all; no Python, no shuffle."""
+    nets = [("1.2.0.0/16", _net_doc("US", 1)), ("2001:db8::/32",
+                                               _net_doc("DE", 2))]
+    nets += [(f"2400:cb00:{k:x}::/48", _net_doc("FR", 10 + k))
+             for k in range(40)]
+    enriched = _dual_stack_pipeline(spark, tmp_path, nets).enrich(
+        _dual_pages(spark))
+    tree = explain(enriched).split("\n\n")[0]
+    assert "ArrowEvalPython" not in tree, tree
+    assert tree.count("BroadcastHashJoin") == 2, tree
+    assert _shuffles(tree) == 0, tree
+    # substring_index isolates the dotted-quad tail, once per v6 parse
+    optimized = enriched._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("substring_index(") == 1, optimized
+    rows = {r.url: (r.country, r.asn) for r in enriched.collect()}
+    assert rows["http://www.site1.com/p"] == ("DE", 64502)
+    assert rows["http://www.site2.com/p"] == ("US", 64501)
+    assert rows["http://www.site3.com/p"] == ("FR", 64517)
+
+
+def _rollup_bigdb_nets(seed: int = 5) -> list:
+    """A database of the benchmark's rollup kind: 8,192 v4 /18s scattered
+    over unicast space and 4,096 v6 /48s in three /32 allocations
+    (90/7/3 %), each with a city + ASN document."""
+    import ipaddress
+
+    import numpy as np
+    rng = np.random.default_rng(seed)
+    slots = 1024 + np.sort(rng.choice((224 - 1) << 10, 8192, replace=False))
+    nets = [(f"{ipaddress.IPv4Address(int(s) << 14)}/18",
+             _net_doc("C%02d" % (k % 40), k)) for k, s in enumerate(slots)]
+    for a, n in zip(rng.choice(1 << 16, 3, replace=False).tolist(),
+                    (3686, 287, 123)):
+        for s in rng.choice(1 << 16, n, replace=False).tolist():
+            net = (0x2400 << 112) | (a << 96) | (s << 80)
+            nets.append((f"{ipaddress.IPv6Address(net)}/48",
+                         _net_doc("C%02d" % (s % 40), 8192 + s)))
+    return nets
+
+
+def _deep_nets() -> list:
+    """Dense buckets at every split level: 200 v4 /24s in one /16 and 64
+    /30s in one /24 (three v4 split levels), 300 v6 /48s in one /32 and
+    50 /72s sharing one /64 (seven v6 split levels, down to /60)."""
+    import ipaddress
+    nets = [(f"10.1.{k}.0/24", _net_doc("A", k)) for k in range(200)]
+    nets += [(f"10.2.3.{4 * k}/30", _net_doc("B", k)) for k in range(64)]
+    nets += [(f"2400:5678:{k:x}::/48", _net_doc("C", k)) for k in range(300)]
+    hi = 0x2400ABCD00010002
+    nets += [(f"{ipaddress.IPv6Address((hi << 64) | (k << 56))}/72",
+              _net_doc("D", k)) for k in range(50)]
+    return nets
+
+
+@pytest.mark.parametrize("kind", ["rollup_bigdb", "deep"])
+def test_fused_enrich_stage_method_under_jit_limit(spark, tmp_path, kind):
+    """The fused city + ASN enrich stage's largest generated method stays
+    under HotSpot's 8,000-byte limit (a larger method is never
+    JIT-compiled and the stage runs interpreted), on the benchmark's
+    rollup database and on a database with the deepest split levels."""
+    import re
+    nets = _rollup_bigdb_nets() if kind == "rollup_bigdb" else _deep_nets()
+    pipe = _dual_stack_pipeline(spark, tmp_path, nets)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        enriched = pipe.enrich(_dual_pages(spark))
+        codegen = spark._jvm.PythonSQLUtils.explainString(
+            enriched._jdf.queryExecution(), "codegen")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sizes = [int(m) for m in re.findall(r"maxMethodCodeSize:(\d+)", codegen)]
+    assert sizes and max(sizes) < 8000, sizes
+    stats = pipe.enricher.table_stats
+    assert stats["v4"]["max_bucket_rows"] <= 32
+    if kind == "deep":
+        assert stats["v6"]["max_bucket_rows"] == 50  # one /60 holds them

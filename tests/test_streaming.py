@@ -53,7 +53,8 @@ def test_stream_reuses_batch_compiled_pipeline(spark, staged_pages,
     built pipeline's stream, and no second plan is compiled."""
     pipe = GeoipPipeline(spark)
     pipe.run(spark.read.parquet(staged_pages))
-    compiled = set(pipe.enricher._plans)
+    compiled = set(pipe._plans)
+    assert compiled
     counts = {}
     for name, pipeline in (("reused", pipe), ("fresh", None)):
         out = str(tmp_path / name)
@@ -65,7 +66,7 @@ def test_stream_reuses_batch_compiled_pipeline(spark, staged_pages,
         counts[name] = stream_sink_counts(out)
     assert counts["reused"] == counts["fresh"]
     assert sum(counts["reused"].values()) == N
-    assert set(pipe.enricher._plans) == compiled
+    assert set(pipe._plans) == compiled
 
 
 def test_stream_checkpoint_resume(spark, staged_pages, tmp_path):
