@@ -296,12 +296,6 @@ class GeoipEnricher:
     def transform(self, df: DataFrame) -> DataFrame:
         return apply_plan([self], self._plans, df)
 
-    def compile(self, columns: tuple[str, ...],
-                case_sensitive: bool = False) -> EnrichPlan:
-        """The enrich stage for inputs with these column names, under
-        ``spark.sql.caseSensitive`` = ``case_sensitive``."""
-        return compile_plan([self], columns, case_sensitive)
-
     def _key_columns(self) -> set[str]:
         """The top-level input columns the lookup keys read."""
         paths = (self.compiled.accessors[k] for k in self._attrs_by_key)
@@ -390,8 +384,8 @@ class GeoipEnricher:
         deterministic tables on the (immutable) db rather than the
         enricher reuses the one-time construction across invocations in
         the same session. Keyed on the session too, so a new SparkSession
-        (tests) never sees another session's DataFrames. This caches a
-        logical LOCAL RELATION (the range table), never a query result —
+        (tests) never sees another session's DataFrames. This caches
+        logical LOCAL RELATIONS (the range tables), never a query result —
         every probe still computes from its inputs."""
         cache = getattr(self.db, "_expanded_plan_cache", None)
         if cache is None:
@@ -399,18 +393,34 @@ class GeoipEnricher:
             object.__setattr__(self.db, "_expanded_plan_cache", cache)
         return cache
 
+    def _expanded_tables(self, attrs: list[str]) -> tuple:
+        """The expanded bucket tables of ``attrs``: the v4 one and, for a
+        v6-capable database, the v6 one (else None), built once per attr
+        set (common-subexpression reuse of the reference's uniq
+        placeholder dedup, rb:86)."""
+        from .geolookup import expanded_bucket_table, expanded_bucket_table_v6
+        cache = self._db_plan_cache()
+        key = (id(self.spark), "expanded", self.JVM_JOIN_SHIFT, *attrs)
+        if key not in cache:
+            cache[key] = (
+                expanded_bucket_table(self.spark, self.db, attrs,
+                                      shift=self.JVM_JOIN_SHIFT),
+                expanded_bucket_table_v6(self.spark, self.db, attrs)[0]
+                if self.db.has_ipv6 else None)
+        return cache[key]
+
     def _range_table(self, attrs: list[str], prefix: str) -> DataFrame:
         """The broadcast-hinted range table of ``attrs``, its columns
-        named ``prefix`` + name, built once per prefix and attr set
-        (common-subexpression reuse of the reference's uniq placeholder
-        dedup, rb:86)."""
+        named ``prefix`` + name. A join position's prefix is part of the
+        table, so each prefix gets its own copy, made JVM-side from the
+        expanded tables, which are built once per attr set."""
         from .geolookup import range_table
         cache = self._db_plan_cache()
         key = (id(self.spark), prefix, self.JVM_JOIN_SHIFT, *attrs)
         if key not in cache:
             cache[key] = F.broadcast(range_table(
                 self.spark, self.db, attrs, prefix,
-                shift=self.JVM_JOIN_SHIFT))
+                *self._expanded_tables(attrs)))
         return cache[key]
 
     def _join(self, j: int, attrs: list[str], prefix: str) -> Join:

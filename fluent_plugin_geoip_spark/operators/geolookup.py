@@ -763,13 +763,13 @@ _BOUNDS = ("__gs", "__ge", "__g6sh", "__g6sl", "__g6eh", "__g6el")
 
 
 def range_table(spark, db: GeoDatabase, attr_paths: list[str], prefix: str,
-                shift: int = 16) -> DataFrame:
+                v4: DataFrame, v6: DataFrame | None = None) -> DataFrame:
     """The one range table the enrich join broadcasts and probes for ``db``:
-    the pieces of :func:`expanded_bucket_table` (key tagged with
-    ``V4_KEY_BIT``) and, for a v6-capable database, those of
-    :func:`expanded_bucket_table_v6`, under one long bucket key ``__gb``.
-    A v4 piece has null v6 bounds, a v6 piece null v4 bounds. Every
-    column is named ``prefix`` + its name.
+    the pieces of ``v4``, the :func:`expanded_bucket_table` of
+    ``attr_paths`` (key tagged with ``V4_KEY_BIT``) and, for a v6-capable
+    database, those of ``v6``, its :func:`expanded_bucket_table_v6`, under
+    one long bucket key ``__gb``. A v4 piece has null v6 bounds, a v6
+    piece null v4 bounds. Every column is named ``prefix`` + its name.
 
     The rows are copied JVM-side into one local relation (no Spark job,
     no Python rows), so a query plans one scan with no projection to
@@ -782,10 +782,8 @@ def range_table(spark, db: GeoDatabase, attr_paths: list[str], prefix: str,
             f"{b if b in bounds else 'CAST(NULL AS BIGINT)'} AS `{prefix}{b}`"
             for b in _BOUNDS], *[f"`{n}` AS `{prefix}{n}`" for n in names])
 
-    v4 = expanded_bucket_table(spark, db, attr_paths, shift=shift)
     parts = [family(v4, f"__gb | {V4_KEY_BIT}", _BOUNDS[:2])]
-    if db.has_ipv6:
-        v6 = expanded_bucket_table_v6(spark, db, attr_paths)[0]
+    if v6 is not None:
         parts.append(family(v6, "__g6b", _BOUNDS[2:]))
     schema = T.StructType(
         [T.StructField(prefix + "__gb", T.LongType(), False)]

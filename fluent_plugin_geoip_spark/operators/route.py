@@ -230,7 +230,6 @@ def route_and_write(
     stat_cols: tuple[str, ...] = (),
     key_col: str = "url",
     audit: str = "full",
-    input_files: list[str] | None = None,
 ) -> tuple[dict, list]:
     """Fan the DataFrame out to ``out_dir/<route_col>=<value>/`` sinks.
 
@@ -258,11 +257,6 @@ def route_and_write(
     sink (driver-side FS metadata, no data read) — the write-leg
     diagnosability the scaling analysis needs. The fan-out shuffle is an
     AQE rebalance on ``route_col`` (see the module docstring).
-
-    ``input_files``: the source files recorded in the input lineage;
-    default ``df.inputFiles()``. A caller that holds the scan the frame
-    was derived from passes its file list, which costs no optimization of
-    the frame's whole plan.
     """
     if audit not in ("full", "counts", "off"):
         raise ValueError(f"audit must be 'full'|'counts'|'off', got {audit!r}")
@@ -332,8 +326,7 @@ def route_and_write(
     # input lineage: which source splits fed this run (driver-side metadata,
     # no extra job; empty for purely generated inputs)
     try:
-        inputs = sorted(df.inputFiles() if input_files is None
-                        else input_files)
+        inputs = sorted(df.inputFiles())
     except Exception:
         inputs = []
     write_input_lineage(out_dir, inputs)

@@ -143,11 +143,9 @@ class GeoipPipeline:
         if out_dir is not None:
             frame = enriched.drop("access")
             plan_build_s = time.perf_counter() - t0
-            # the scan's file list: the enriched frame's is the same, but
-            # asking it runs the optimizer over the whole enrich plan
             manifest, stats = route_and_write(
                 frame, out_dir, resume=resume, stat_cols=("lang",),
-                audit=audit, input_files=pages.inputFiles())
+                audit=audit)
             # counts derive from the SAME lineage aggregate (no extra scan);
             # on resume the stats cover only partitions written this run
             table = pa.table([

@@ -427,7 +427,10 @@ def test_one_table_key_families_disjoint(spark, name):
 
     # the Spark table: every bucket holds pieces of one family only, and
     # each family's pieces are its layout's
-    table = range_table(spark, db, ["city.names.en"], "__t_")
+    attrs = ["city.names.en"]
+    table = range_table(spark, db, attrs, "__t_",
+                        expanded_bucket_table(spark, db, attrs),
+                        expanded_bucket_table_v6(spark, db, attrs)[0])
     per_key = {r["k"]: (r["v4"], r["v6"]) for r in table.groupBy(
         F.col("__t___gb").alias("k")).agg(
         F.count("__t___gs").alias("v4"),
