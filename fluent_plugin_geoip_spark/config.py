@@ -130,9 +130,6 @@ class GeoipConfig:
     # file (filter_geoip.rb:37, load at rb:204-206); used when
     # backend_library == 'geoip'.
     geoip_database: str | None = None
-    # Spark-only knob: use native double→string cast in interpolation mode
-    # (fast, JVM-side) instead of the byte-exact Ruby-repr pandas UDF.
-    fast_float_str: bool = False
 
     @classmethod
     def from_dict(cls, conf: dict) -> "GeoipConfig":

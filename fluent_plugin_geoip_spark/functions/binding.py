@@ -42,18 +42,20 @@ def is_plan_independent(col: Column) -> bool:
     literals and functions, so the identical tree resolves correctly
     against ANY plan with the referenced column names.
 
-    Guard for expression-tree memoization (round 9) and for the enrich
-    plan ``GeoipEnricher`` compiles once and applies to every input: a
-    Column taken from a DataFrame (``df.ip``) embeds a resolved
-    ``AttributeReference`` with a plan-specific exprId, while
-    ``Column.toString()`` — the natural memo key — prints it WITHOUT the
-    exprId. Caching such a tree re-binds the stale exprId into later
+    Guard for expression-tree memoization (round 9), and a property of
+    every entry of the enrich plan ``GeoipEnricher`` compiles once and
+    applies to every input: a Column taken from a DataFrame (``df.ip``)
+    embeds a resolved ``AttributeReference`` with a plan-specific exprId,
+    while ``Column.toString()`` — the natural memo key — prints it WITHOUT
+    the exprId. Caching such a tree re-binds the stale exprId into later
     plans and fails analysis with MISSING_ATTRIBUTES (or, worse, silently
     reads the wrong column in a self-join).
 
     The check walks the JVM ColumnNode tree and accepts only node classes
-    of the plan-agnostic AST. Resolved leaves, and Python UDF calls,
-    arrive as classic ``ExpressionColumnNode`` wrappers and fail it. The
+    of the plan-agnostic AST. Resolved leaves, and direct Python UDF
+    calls, arrive as classic ``ExpressionColumnNode`` wrappers and fail
+    it; a UDF called by its registered name is an unresolved function and
+    passes. The
     walk costs a few py4j round trips per node, so callers run it when
     they build a tree, not per query."""
     stack = [col._jc.node()]

@@ -16,9 +16,10 @@ element types inferred statically from the template; mode 3 → ``F.concat``
 over literal segments and stringified placeholder columns. Ruby's shortest-
 roundtrip float ``to_s`` is byte-matched by Python ``repr`` — kept in a tiny
 Arrow-batched pandas UDF (``ruby_double_str``) because Spark's native
-double→string cast differs in scientific-notation corners; a fast JVM-side
-cast path is available via ``fast_float_str`` for the lat/lon domain where
-the two provably agree.
+double→string cast differs in scientific-notation corners. The compiled
+Column calls it by name (``RUBY_DOUBLE_STR``, registered in the session by
+:func:`register_ruby_double_str`), so it resolves against any plan like a
+built-in function.
 """
 
 from __future__ import annotations
@@ -102,6 +103,15 @@ def ruby_double_str(s: pd.Series) -> pd.Series:
     return vals
 
 
+# the session-registered name of ``ruby_double_str``; an interpolated
+# double calls it by name, so the Column holds no resolved UDF
+RUBY_DOUBLE_STR = "__geoip_ruby_double_str"
+
+
+def register_ruby_double_str(spark) -> None:
+    spark.udf.register(RUBY_DOUBLE_STR, ruby_double_str)
+
+
 def typed_null(dtype: str) -> Column:
     return F.lit(None).cast(_SPARK_TYPES[dtype])
 
@@ -118,16 +128,14 @@ def template_mode(template: str) -> str:
     return "interpolate"
 
 
-def compile_template(
-    template: str,
-    ph_cols: dict[str, tuple[Column, str]],
-    fast_float_str: bool = False,
-) -> Column:
+def compile_template(template: str,
+                     ph_cols: dict[str, tuple[Column, str]]) -> Column:
     """Compile one template to a Column.
 
     ``ph_cols`` maps canonical placeholder text ``${attr['key']}`` to a
     ``(Column, dtype)`` pair (already carrying hit/miss + lat-lon-default
-    semantics).
+    semantics). An interpolated double calls ``RUBY_DOUBLE_STR``, which
+    must be registered in the session that resolves the Column.
     """
     mode = template_mode(template)
     if mode == "single":
@@ -135,7 +143,7 @@ def compile_template(
         return col
     if mode == "json":
         return _compile_json(template, ph_cols)
-    return _compile_interpolate(template, ph_cols, fast_float_str)
+    return _compile_interpolate(template, ph_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -215,21 +223,16 @@ def _unify_dtypes(dtypes: list[str], context) -> str:
 # mode 3: string interpolation
 # ---------------------------------------------------------------------------
 
-def _stringify(col: Column, dtype: str, fast_float_str: bool) -> Column:
+def _stringify(col: Column, dtype: str) -> Column:
     if dtype == "double":
-        if fast_float_str:
-            return F.coalesce(col.cast("string"), F.lit(""))
-        return ruby_double_str(col)
+        return F.call_function(RUBY_DOUBLE_STR, col)
     if dtype == "string":
         return F.coalesce(col, F.lit(""))
     return F.coalesce(col.cast("string"), F.lit(""))
 
 
-def _compile_interpolate(
-    template: str,
-    ph_cols: dict[str, tuple[Column, str]],
-    fast_float_str: bool,
-) -> Column:
+def _compile_interpolate(template: str,
+                         ph_cols: dict[str, tuple[Column, str]]) -> Column:
     parts: list[Column] = []
     pos = 0
     for m in RE_PLACEHOLDER_SCAN.finditer(template):
@@ -241,7 +244,7 @@ def _compile_interpolate(
             # the WHOLE match (incl. quotes) and misses → empty string (rb:134).
             continue
         col, dtype = ph_cols[m.group(1)]
-        parts.append(_stringify(col, dtype, fast_float_str))
+        parts.append(_stringify(col, dtype))
     if pos < len(template):
         parts.append(F.lit(template[pos:]))
     if not parts:

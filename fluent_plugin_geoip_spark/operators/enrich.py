@@ -36,52 +36,30 @@ from pyspark.sql.classic.column import _to_seq
 from ..config import (
     CompiledConfig, GeoipConfig, accessor_column, compile_config,
 )
-from ..functions.binding import is_plan_independent
 from ..functions.ipv4 import ipv4_str_to_long
-from ..functions.templates import compile_template, typed_null
-from .geolookup import GeoDatabase, sanitize_attr
+from ..functions.templates import (
+    compile_template, register_ruby_double_str, template_mode, typed_null,
+)
+from . import geolookup
+from .geolookup import (
+    V4_KEY_BIT, GeoDatabase, memo_on_db, sanitize_attr, v4_bucket_layout,
+    v6_bucket_layout,
+)
 
 SKIP_FLAG = "geoip_skipped"
 
 
-def _compiled(entry):
-    """A compile-time entry as the plan keeps it. A plain Column is one
-    the enricher built from column names, literals and built-in functions
-    only, and is kept as is. A factory builds a Column that may hold a
-    Python UDF call (a template output that formats a float the Ruby
-    way): it is run once and its Column kept if it resolves by name
-    against any plan (``is_plan_independent``); otherwise the factory is
-    kept and the Column rebuilt on each use."""
-    if callable(entry):
-        col = entry()
-        return col if is_plan_independent(col) else entry
-    return entry
-
-
-def _thaw(entry) -> Column:
-    return entry() if callable(entry) else entry
-
-
-def _java_columns(spark: SparkSession, cols: list[Column]):
-    return _to_seq(spark.sparkContext, [c._jc for c in cols])
-
-
 class Projection:
-    """One ``select`` of a compiled plan. When every entry is a Column,
-    the JVM column list is built once here, so applying the projection is
-    a single py4j call instead of one per column."""
+    """One ``select`` of a compiled plan. The JVM column list is built
+    once here, so applying the projection is a single py4j call instead
+    of one per column."""
 
-    def __init__(self, spark: SparkSession, entries: list):
+    def __init__(self, spark: SparkSession, entries: list[Column]):
         self.entries = entries
-        self._jcols = (None if any(callable(e) for e in entries)
-                       else _java_columns(spark, entries))
+        self._jcols = _to_seq(spark.sparkContext, [c._jc for c in entries])
 
     def apply(self, df: DataFrame) -> DataFrame:
-        jcols = self._jcols
-        if jcols is None:
-            jcols = _java_columns(df.sparkSession,
-                                  [_thaw(e) for e in self.entries])
-        return DataFrame(df._jdf.select(jcols), df.sparkSession)
+        return DataFrame(df._jdf.select(self._jcols), df.sparkSession)
 
 
 class Join:
@@ -116,8 +94,9 @@ class EnrichPlan:
       the last enricher's output projection; the join columns go with
       their enricher's.
 
-    Column entries are Columns, or factories for the UDF-bearing Columns
-    that fail ``is_plan_independent``."""
+    Every entry is a Column built from column names, literals and
+    functions called by name (the Ruby float formatter too), so it
+    resolves against any input with these column names."""
 
     steps: list
 
@@ -126,7 +105,7 @@ class EnrichPlan:
             df = step.apply(df)
         return df
 
-    def entries(self) -> list:
+    def entries(self) -> list[Column]:
         """Every Column entry, in application order."""
         return [e for step in self.steps for e in step.entries]
 
@@ -186,10 +165,6 @@ def _compile_group(group: list[GeoipEnricher], columns: list[str], norm,
     parse of their lookup keys; return the output column names."""
     from ..functions.ipv6 import ipv6_str_to_longs
     spark = group[0].spark
-
-    def projection(cols: list) -> Projection:
-        return Projection(spark, [_compiled(c) for c in cols])
-
     accessors = {k: e.compiled.accessors[k]
                  for e in group for k in e._attrs_by_key}
     v6_keys = {k for e in group if e.db.has_ipv6 for k in e._attrs_by_key}
@@ -232,7 +207,8 @@ def _compile_group(group: list[GeoipEnricher], columns: list[str], norm,
         # two split levels that took the fused probe stage's largest
         # method from 6.8 KB to 8.0 KB, at HotSpot's 8,000-byte JIT limit
         parse(2, f"__ip6h_{j}", F.when(~mapped, hi6))
-    steps += [projection([F.col("*"), *layer]) for layer in layers if layer]
+    steps += [Projection(spark, [F.col("*"), *layer])
+              for layer in layers if layer]
 
     n_joins = sum(isinstance(s, Join) for s in steps)
     for n, e in enumerate(group):
@@ -243,8 +219,8 @@ def _compile_group(group: list[GeoipEnricher], columns: list[str], norm,
             steps.append(e._join(key_index[key], attrs, prefix))
         output, columns = e._output(columns, prefixes, norm)
         # the parse columns stay for the group's later enrichers
-        steps.append(projection(
-            output + (parsed if n < len(group) - 1 else [])))
+        steps.append(Projection(
+            spark, output + (parsed if n < len(group) - 1 else [])))
     return columns
 
 
@@ -278,6 +254,11 @@ class GeoipEnricher:
         # the reference's load-at-configure (filter_geoip.rb:204-217)
         self.db = database if database is not None else config.load_database()
         self.compiled: CompiledConfig = compile_config(config)
+        # a mode-3 template formats its doubles with the Ruby float
+        # formatter, which the compiled plan calls by name
+        if any(template_mode(t) == "interpolate"
+               for t in self.compiled.templates.values()):
+            register_ruby_double_str(spark)
         # attrs needed per lookup key (common-subexpression reuse of the
         # reference's uniq placeholder dedup, rb:86).
         self._attrs_by_key: dict[str, list[str]] = {}
@@ -307,7 +288,7 @@ class GeoipEnricher:
                 *([SKIP_FLAG] if self.config.skip_adding_null_record else [])]
 
     def _output(self, columns: list[str], prefixes: dict[str, str],
-                norm) -> tuple[list, list[str]]:
+                norm) -> tuple[list[Column], list[str]]:
         """The output projection over inputs named ``columns``, with each
         lookup key's join columns under ``prefixes[key]``: its entries and
         its column names."""
@@ -315,7 +296,9 @@ class GeoipEnricher:
         ph_cols = {ph.text: self._placeholder_column(ph, prefixes)
                    for ph in comp.placeholders}
         skip_cond = self._skip_condition(prefixes, ph_cols)
-        fields = {f: self._output_column(f, t, ph_cols, skip_cond, f in columns)
+        present = {norm(c) for c in columns}
+        fields = {f: self._output_column(f, t, ph_cols, skip_cond,
+                                         norm(f) in present)
                   for f, t in comp.templates.items()}
         if skip_cond is not None:
             fields[SKIP_FLAG] = skip_cond.alias(SKIP_FLAG)
@@ -354,21 +337,16 @@ class GeoipEnricher:
         return skip_cond
 
     def _output_column(self, out_field: str, template: str, ph_cols,
-                       skip_cond: Column | None, exists: bool):
-        """add_geoip_field (rb:124-137): a factory of one template's output
-        Column."""
-        def build() -> Column:
-            col = compile_template(template, ph_cols,
-                                   self.config.fast_float_str)
-            if skip_cond is not None:
-                # skipped rows keep their pre-existing value (record
-                # returned unmodified, rb:122-123); fields that did not
-                # pre-exist stay null (fixed-schema DataFrame restatement
-                # of "not added").
-                existing = _quoted(out_field) if exists else F.lit(None)
-                col = F.when(skip_cond, existing).otherwise(col)
-            return col.alias(out_field)
-        return build
+                       skip_cond: Column | None, exists: bool) -> Column:
+        """add_geoip_field (rb:124-137): one template's output Column."""
+        col = compile_template(template, ph_cols)
+        if skip_cond is not None:
+            # skipped rows keep their pre-existing value (record returned
+            # unmodified, rb:122-123); fields that did not pre-exist stay
+            # null (fixed-schema DataFrame restatement of "not added").
+            existing = _quoted(out_field) if exists else F.lit(None)
+            col = F.when(skip_cond, existing).otherwise(col)
+        return col.alias(out_field)
 
     # coarse /16 prefix buckets: 65 536 of them cap the coarse expansion
     # at +65 536 rows. Real databases still pack hundreds of ranges into
@@ -377,51 +355,30 @@ class GeoipEnricher:
     # ``geolookup.BUCKET_CAP`` pieces deeper (``BucketLayout``)
     JVM_JOIN_SHIFT = 16
 
-    def _db_plan_cache(self) -> dict:
-        """Range-table cache stored ON the GeoDatabase instance:
-        databases are driver-cached per file (`geolookup._DB_CACHE`), but
-        enrichers are rebuilt per query invocation — keying the
-        deterministic tables on the (immutable) db rather than the
-        enricher reuses the one-time construction across invocations in
-        the same session. Keyed on the session too, so a new SparkSession
-        (tests) never sees another session's DataFrames. This caches
-        logical LOCAL RELATIONS (the range tables), never a query result —
-        every probe still computes from its inputs."""
-        cache = getattr(self.db, "_expanded_plan_cache", None)
-        if cache is None:
-            cache = {}
-            object.__setattr__(self.db, "_expanded_plan_cache", cache)
-        return cache
-
     def _expanded_tables(self, attrs: list[str]) -> tuple:
         """The expanded bucket tables of ``attrs``: the v4 one and, for a
         v6-capable database, the v6 one (else None), built once per attr
         set (common-subexpression reuse of the reference's uniq
         placeholder dedup, rb:86)."""
-        from .geolookup import expanded_bucket_table, expanded_bucket_table_v6
-        cache = self._db_plan_cache()
-        key = (id(self.spark), "expanded", self.JVM_JOIN_SHIFT, *attrs)
-        if key not in cache:
-            cache[key] = (
-                expanded_bucket_table(self.spark, self.db, attrs,
-                                      shift=self.JVM_JOIN_SHIFT),
-                expanded_bucket_table_v6(self.spark, self.db, attrs)[0]
-                if self.db.has_ipv6 else None)
-        return cache[key]
+        return memo_on_db(
+            self.db, (id(self.spark), "expanded", self.JVM_JOIN_SHIFT, *attrs),
+            lambda: (
+                geolookup.expanded_bucket_table(self.spark, self.db, attrs,
+                                                shift=self.JVM_JOIN_SHIFT),
+                geolookup.expanded_bucket_table_v6(self.spark, self.db,
+                                                   attrs)[0]
+                if self.db.has_ipv6 else None))
 
     def _range_table(self, attrs: list[str], prefix: str) -> DataFrame:
         """The broadcast-hinted range table of ``attrs``, its columns
         named ``prefix`` + name. A join position's prefix is part of the
         table, so each prefix gets its own copy, made JVM-side from the
         expanded tables, which are built once per attr set."""
-        from .geolookup import range_table
-        cache = self._db_plan_cache()
-        key = (id(self.spark), prefix, self.JVM_JOIN_SHIFT, *attrs)
-        if key not in cache:
-            cache[key] = F.broadcast(range_table(
+        return memo_on_db(
+            self.db, (id(self.spark), prefix, self.JVM_JOIN_SHIFT, *attrs),
+            lambda: F.broadcast(geolookup.range_table(
                 self.spark, self.db, attrs, prefix,
-                *self._expanded_tables(attrs)))
-        return cache[key]
+                *self._expanded_tables(attrs))))
 
     def _join(self, j: int, attrs: list[str], prefix: str) -> Join:
         """Geolocate the plan's j-th lookup key: one broadcast-hash join
@@ -437,8 +394,6 @@ class GeoipEnricher:
         is none, the native-v6 high half against the bias-flipped 128-bit
         bounds. A row probes one family at most, and ``V4_KEY_BIT`` keeps
         the two families' bucket keys apart."""
-        from .geolookup import V4_KEY_BIT, v4_bucket_layout, v6_bucket_layout
-
         def col(name: str) -> Column:
             return F.col(prefix + name)
 
@@ -462,7 +417,7 @@ class GeoipEnricher:
             match = match | (((fhi > sh) | ((fhi == sh) & (flo >= sl)))
                              & ((fhi < eh) | ((fhi == eh) & (flo <= el))))
         return Join(self._range_table(attrs, prefix),
-                    _compiled((key == col("__gb")) & match))
+                    (key == col("__gb")) & match)
 
     def _placeholder_column(self, ph, prefixes) -> tuple[Column, str]:
         dtype = self.db.attr_type(ph.geoip_key)

@@ -584,10 +584,19 @@ def _bucket_layout(lo: np.ndarray, hi: np.ndarray, width: int,
                         np.concatenate(out_idx), np.concatenate(out_keys), peak)
 
 
-def _memo_layout(db: GeoDatabase, key: tuple, build) -> BucketLayout:
-    # memoized on the (immutable, driver-cached) database: the table
-    # builders and the enricher's probe key share one layout
-    cache = db.__dict__.setdefault("_bucket_layouts", {})
+def memo_on_db(db: GeoDatabase, key: tuple, build):
+    """``build()``, memoized on the (immutable) database under ``key``.
+
+    Databases are driver-cached per file (``_DB_CACHE``), but enrichers
+    are rebuilt per query invocation: keying the deterministic bucket
+    layouts and range tables on the db rather than the enricher reuses
+    their one-time construction across invocations, and the table
+    builders and the enricher's probe key share one layout. Keys of
+    DataFrames carry the session too, so a new SparkSession (tests) never
+    sees another session's DataFrames. This caches layouts and logical
+    LOCAL RELATIONS (the range tables), never a query result — every
+    probe still computes from its inputs."""
+    cache = db.__dict__.setdefault("_memo", {})
     if key not in cache:
         cache[key] = build()
     return cache[key]
@@ -596,7 +605,7 @@ def _memo_layout(db: GeoDatabase, key: tuple, build) -> BucketLayout:
 def v4_bucket_layout(db: GeoDatabase, shift: int = 16) -> BucketLayout:
     """Bucket layout of the v4 table: coarse ``/(32 − shift)`` buckets,
     dense ones split down to /32 at most."""
-    return _memo_layout(db, ("v4", shift), lambda: _bucket_layout(
+    return memo_on_db(db, ("v4", shift), lambda: _bucket_layout(
         db.starts.astype(np.uint64), db.ends.astype(np.uint64),
         32, 32 - shift, 32))
 
@@ -637,7 +646,7 @@ def v6_bucket_layout(db: GeoDatabase,
                     break
                 bits -= 4
         return _bucket_layout(s_hi, e_hi, 64, bits, _V6_FINEST_BITS)
-    return _memo_layout(db, ("v6", prefix_bits), build)
+    return memo_on_db(db, ("v6", prefix_bits), build)
 
 
 def expanded_bucket_table(spark, db: GeoDatabase, attr_paths: list[str],

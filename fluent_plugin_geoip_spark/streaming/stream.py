@@ -85,19 +85,26 @@ def make_batch_handler(out_dir: str):
     with ``operators.route.compact_stream_sinks``, which understands this
     handler's ``batch_id=<n>/route_country=<c>`` nesting and preserves
     replay idempotency (``compact_sinks`` expects the flat batch layout
-    and would no-op here)."""
+    and would no-op here).
+
+    The lineage row counts what the batch wrote, read back from its
+    ``batch_id=<n>`` partition (a batch that wrote nothing records no
+    sinks), so the batch's plan runs once."""
     lineage_dir = f"{out_dir}/_lineage/batches"
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         routed = (batch_df.withColumn("batch_id", F.lit(batch_id))
                   .hint("rebalance", "route_country"))
+        written = f"{out_dir}/data/batch_id={batch_id}"
         with dynamic_overwrite(spark):
             (routed.write.mode("overwrite")
                 .partitionBy("batch_id", "route_country")
                 .parquet(f"{out_dir}/data"))
-        stats = (batch_df.groupBy("route_country")
-                 .agg(F.count("*").alias("rows")).collect())
+        fs, path, _ = _fs_for(spark, written)
+        stats = (spark.read.parquet(written).groupBy("route_country")
+                 .agg(F.count("*").alias("rows")).collect()
+                 if fs.exists(path) else [])
         # Hadoop-FS write (round 5): works when out_dir is s3a://hdfs://,
         # same portability contract as the batch manifests (route.py)
         _fs_write_text(

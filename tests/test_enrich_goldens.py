@@ -350,18 +350,6 @@ def test_legacy_int_attrs(spark):  # dma/area ints (README.md:341-342)
     assert out[1]["dma"] is None and out[1]["concat"] == "-"
 
 
-def test_fast_float_str_parity(spark):
-    """fast JVM-side cast path must match the exact-repr path on golden values."""
-    cfg = GeoipConfig(
-        lookup_keys=["host"], fast_float_str=True,
-        records={"float_concat":
-                 "${location.latitude['host']},${location.longitude['host']}"})
-    schema = T.StructType([T.StructField("host", S)])
-    out = run(spark, cfg, [("66.102.3.80",), ("203.0.113.1",)], schema)
-    assert out[0]["float_concat"] == "37.419200000000004,-122.0574"
-    assert out[1]["float_concat"] == ","
-
-
 def test_skip_null_record_first_surviving_placeholder(spark):
     """rb:122-123 + rb:191: the skip check reads the first placeholder whose
     lookup HIT (create_placeholder only inserts survivors) — a miss on the
@@ -438,6 +426,30 @@ def test_ruby_double_strs_vectorized_matches_scalar_reference():
         assert g == _ruby_float_repr(v), (v, g)
     assert list(ruby_double_strs(np.array([float("nan")]))) == [""]
     assert list(ruby_double_strs(np.array([]))) == []
+
+
+def test_ruby_double_str_called_by_name(spark):
+    """The registered formatter, called by name, is a plan-agnostic Column
+    that still plans as an Arrow crossing and prints Ruby's Float#to_s;
+    null and NaN interpolate as ''."""
+    from pyspark.sql import functions as F
+
+    from fluent_plugin_geoip_spark.functions.binding import (
+        is_plan_independent)
+    from fluent_plugin_geoip_spark.functions.templates import (
+        RUBY_DOUBLE_STR, register_ruby_double_str,
+    )
+    register_ruby_double_str(spark)
+    col = F.call_function(RUBY_DOUBLE_STR, F.col("v"))
+    assert is_plan_independent(col)
+    df = spark.createDataFrame(
+        [(0, 37.419200000000004), (1, 1e16), (2, 1e-5), (3, None),
+         (4, float("nan"))], "id int, v double")
+    out = df.select("id", col.alias("s"))
+    assert "ArrowEvalPython" in \
+        out._jdf.queryExecution().executedPlan().toString()
+    assert [r.s for r in out.orderBy("id").collect()] == [
+        "37.419200000000004", "1.0e+16", "1.0e-05", "", ""]
 
 
 def test_mixed_type_array_template_falls_back_to_string(spark):

@@ -556,9 +556,9 @@ def _enriched_rows(df, extra=()):
 # The compiled-plan tests run twice: "jvm_join", where every template output
 # is a JVM expression over the range-table joins and the plan runs no
 # Python, and "arrow", with one more output that interpolates a double into
-# a string. That output goes through the Ruby float-format pandas UDF (an
-# Arrow crossing), which the compiled plan keeps as a factory and rebuilds
-# on each use.
+# a string. That output calls the Ruby float-format pandas UDF by its
+# session-registered name (an Arrow crossing); the compiled plan keeps it
+# as a Column like every other entry.
 CROSSINGS = ["jvm_join", "arrow"]
 
 
@@ -679,6 +679,39 @@ def test_compiled_plan_follows_case_sensitivity(spark, dual_db, crossing):
     rows = {r["ip"]: r for r in got.collect()}
     assert rows["8.8.8.8"]["country"] == "JP"
     assert len(enr._plans) == 2
+
+
+@pytest.mark.parametrize("case_sensitive", ["false", "true"])
+def test_skip_keeps_input_field_of_any_case(spark, dual_db, case_sensitive):
+    """skip_adding_null_record returns a skipped record unmodified
+    (rb:122-123). Case-insensitive, the field ``country`` replaces the
+    input ``Country`` in place and a skipped row keeps its old value;
+    case-sensitive, ``country`` is a new column, null on a skipped row."""
+    from fluent_plugin_geoip_spark.config import GeoipConfig
+    from fluent_plugin_geoip_spark.operators.enrich import (
+        SKIP_FLAG, GeoipEnricher,
+    )
+    cfg = GeoipConfig(lookup_keys=["ip"], skip_adding_null_record=True,
+                      records={"country": "${country.iso_code['ip']}"})
+    df = spark.createDataFrame(
+        [(i, ip, "old") for i, ip in enumerate(DUAL_IPS)],
+        "id int, ip string, Country string")
+    spark.conf.set("spark.sql.caseSensitive", case_sensitive)
+    try:
+        got = GeoipEnricher(spark, cfg, dual_db).transform(df)
+        columns = got.columns
+        rows = {r["ip"]: r.asDict() for r in got.collect()}
+    finally:
+        spark.conf.unset("spark.sql.caseSensitive")
+    skipped, hit = rows["9.9.9.9"], rows["8.8.8.8"]
+    assert skipped[SKIP_FLAG] and not hit[SKIP_FLAG]
+    assert hit["country"] == "JP"
+    if case_sensitive == "false":
+        assert columns == ["id", "ip", "country", SKIP_FLAG]
+        assert skipped["country"] == "old"
+    else:
+        assert columns == ["id", "ip", "Country", "country", SKIP_FLAG]
+        assert skipped["Country"] == "old" and skipped["country"] is None
 
 
 def test_run_reports_table_stats(spark, dual_db):

@@ -257,9 +257,7 @@ def test_jvm_join_enrich_no_python_and_broadcast(spark):
     cfg = GeoipConfig(
         lookup_keys=["ip"],
         records={"country": "${country.iso_code['ip']}",
-                 "latlon": "${location.latitude['ip']},"
-                           "${location.longitude['ip']}"},
-        fast_float_str=True)  # JVM float repr — keeps the plan Python-free
+                 "latlon": "${location.latitude['ip']}"})
     out = GeoipEnricher(spark, cfg, world_db()).transform(df)
     plan = explain(out)
     tree = plan.split("\n\n")[0]
@@ -285,9 +283,7 @@ def test_jvm_join_v6_db_no_python_two_broadcasts(spark):
     cfg = GeoipConfig(
         lookup_keys=["ip"],
         records={"country": "${country.iso_code['ip']}",
-                 "latlon": "${location.latitude['ip']},"
-                           "${location.longitude['ip']}"},
-        fast_float_str=True)
+                 "latlon": "${location.latitude['ip']}"})
     df = spark.createDataFrame(
         [("2001:db8::1234",), ("::ffff:66.102.3.80",), ("66.102.3.80",),
          ("garbage",), ("",)], "ip string")

@@ -50,13 +50,23 @@ def test_stream_reuses_batch_compiled_pipeline(spark, staged_pages,
                                                tmp_path):
     """A pipeline whose plan a batch run compiled is applied unchanged to
     the streaming source (same column names): its sinks match a freshly
-    built pipeline's stream, and no second plan is compiled."""
-    pipe = GeoipPipeline(spark)
+    built pipeline's stream, and no second plan is compiled. One record
+    interpolates a double, so the stream resolves the Ruby float
+    formatter the plan calls by name."""
+    from fluent_plugin_geoip_spark.functions.templates import (
+        _ruby_float_repr,
+    )
+    from fluent_plugin_geoip_spark.plans.pipeline import FLAGSHIP_RECORDS
+    records = {**FLAGSHIP_RECORDS,
+               "at": "${city.names.en['client_ip']} "
+                     "${location.latitude['client_ip']}"}
+    pipe = GeoipPipeline(spark, records=records)
     pipe.run(spark.read.parquet(staged_pages))
     compiled = set(pipe._plans)
     assert compiled
-    counts = {}
-    for name, pipeline in (("reused", pipe), ("fresh", None)):
+    counts, written = {}, {}
+    for name, pipeline in (("reused", pipe),
+                           ("fresh", GeoipPipeline(spark, records=records))):
         out = str(tmp_path / name)
         q = start_pipeline_stream(spark, staged_pages, out,
                                   str(tmp_path / f"{name}_ckpt"),
@@ -64,8 +74,16 @@ def test_stream_reuses_batch_compiled_pipeline(spark, staged_pages,
         q.processAllAvailable()
         q.stop()
         counts[name] = stream_sink_counts(out)
+        written[name] = sorted(
+            tuple(r) for r in spark.read.parquet(f"{out}/data")
+            .select("url", "city", "latitude", "at").collect())
     assert counts["reused"] == counts["fresh"]
     assert sum(counts["reused"].values()) == N
+    assert written["reused"] == written["fresh"]
+    assert all(at == f"{city or ''} "
+                     f"{'' if lat is None else _ruby_float_repr(lat)}"
+               for _, city, lat, at in written["reused"])
+    assert any(lat is not None for _, _, lat, _ in written["reused"])
     assert set(pipe._plans) == compiled
 
 
@@ -258,6 +276,33 @@ def test_foreach_batch_replay_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(f"{out}/data").count() == first == 500
     handler(enriched, 1)  # a genuinely new batch appends
     assert spark.read.parquet(f"{out}/data").count() == 1000
+
+
+def test_batch_handler_computes_each_row_once(spark, tmp_path):
+    """The handler's per-sink lineage counts what it wrote, read back from
+    the batch's partition: a row's Python UDF runs once per micro-batch,
+    not again for the counts. A batch that writes nothing records no
+    sinks."""
+    import json
+
+    from fluent_plugin_geoip_spark.streaming.stream import make_batch_handler
+    out = str(tmp_path / "sink")
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def route(i):
+        evaluated.add(1)
+        return "A" if i % 3 else "B"
+
+    batch = spark.range(30).withColumn("route_country", route("id"))
+    handler = make_batch_handler(out)
+    handler(batch, 0)
+    assert evaluated.value == 30
+    assert stream_sink_counts(out) == {"A": 20, "B": 10}
+    handler(batch.limit(0), 1)
+    with open(f"{out}/_lineage/batches/batch-1.json") as f:
+        assert json.load(f)["sinks"] == {}
+    assert stream_sink_counts(out) == {"A": 20, "B": 10}
 
 
 def test_incremental_dedup_stream(spark, tmp_path):
