@@ -23,6 +23,13 @@ Scale design:
   scale with executors. The manifest records ``files``/``bytes`` per
   sink, so the write-leg shape (files per sink, bytes per row) is
   diagnosable from the lineage alone.
+- **sink encoding**: every partitioned sink write goes through
+  :func:`_write_sinks`, which caps parquet's dictionary at
+  ``SINK_DICT_PAGE_BYTES`` (16 KiB). Low-cardinality columns (``lang``,
+  ``country``, ``city``, lat/lon) keep their dictionaries; all-distinct
+  ones (``url``, ``html``, ``text``, ``host``, ``client_ip``,
+  ``warc_ts``) fall back to plain encoding after 16 KiB instead of
+  hashing every value into a 1 MiB dictionary that is thrown away.
 - **idempotent retries / resume**: dynamic partition overwrite
   (``partitionOverwriteMode=dynamic``) makes re-writing a partition atomic at
   the partition level; the manifest records per-partition row counts +
@@ -37,6 +44,8 @@ import logging
 import os
 import time
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..confutil import dynamic_overwrite
@@ -45,6 +54,12 @@ log = logging.getLogger(__name__)
 
 UNROUTED = "__unrouted__"
 MANIFEST_DIR = "_lineage"
+# parquet dictionary cap of every sink write (parquet's default is 1 MiB):
+# a column whose dictionary passes it is written plain encoded, e.g. after
+# ~1,365 distinct INT96 timestamps or a few dozen html values
+SINK_DICT_PAGE_BYTES = 16 * 1024
+_LOGICAL_RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_FILE_RELATION = "org.apache.spark.sql.execution.FileRelation"
 
 
 def _active_spark():
@@ -116,6 +131,19 @@ def _fs_write_text(path_str: str, text: str) -> None:
         raise IOError(f"rename {_tmp_name(path_str)} -> {path_str} failed")
 
 
+def _write_sinks(df: DataFrame, path: str, partition_cols: tuple[str, ...],
+                 fmt: str) -> None:
+    """The one partitioned sink write: overwrite ``path`` partitioned by
+    ``partition_cols``, with parquet dictionaries capped at
+    ``SINK_DICT_PAGE_BYTES``. Whether the overwrite is static or dynamic is
+    the caller's ``dynamic_overwrite`` block. Formats other than parquet
+    ignore the option (an Iceberg table takes its
+    ``write.parquet.dict-size-bytes`` table property instead)."""
+    (df.write.mode("overwrite").partitionBy(*partition_cols).format(fmt)
+     .option("parquet.dictionary.page.size", SINK_DICT_PAGE_BYTES)
+     .save(path))
+
+
 def list_partition_values(spark, out_dir: str, route_col: str) -> list[str]:
     """Partition values present on disk, via the Hadoop FS API so it works on
     any scheme Spark can reach (file://, hdfs://, s3a://). Driver-side
@@ -154,7 +182,8 @@ def _clean_stale_output(spark, out_dir: str, route_col: str,
 
 
 def sink_file_stats(spark, out_dir: str, route_col: str,
-                    vals: list[str]) -> dict[str, tuple[int, int]]:
+                    vals: list[str] | None = None
+                    ) -> dict[str, tuple[int, int]]:
     """(file_count, total_bytes) per partition value — driver-side Hadoop FS
     metadata listing only (no data read). Feeds the manifest's
     ``files``/``bytes`` fields so the sink-write leg is diagnosable.
@@ -164,33 +193,38 @@ def sink_file_stats(spark, out_dir: str, route_col: str,
     per sink — on an object store that is one LIST request per country,
     growing with sink cardinality; ``listFiles(recursive)`` maps to a
     single flat prefix LIST). A file counts toward the partition dir it
-    sits DIRECTLY under, matching the old per-dir semantics."""
+    sits DIRECTLY under, matching the old per-dir semantics; the partition
+    value and the hidden-name check come from the file's path string
+    relative to the qualified root, one ``toString`` per file.
+
+    With ``vals`` the result has exactly those keys (``(0, 0)`` for a value
+    with no files); without, it has every partition value that holds a
+    visible file, so the same listing also says which partitions exist."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    out: dict[str, tuple[int, int]] = {v: (0, 0) for v in vals}
+    out: dict[str, tuple[int, int]] = {v: (0, 0) for v in vals or ()}
     root = jvm.org.apache.hadoop.fs.Path(out_dir)
     fs = root.getFileSystem(conf)
     if not fs.exists(root):
         return out
-    want = set(vals)
     prefix = route_col + "="
-    qual_root = fs.makeQualified(root).toString()
+    qual_root = fs.makeQualified(root).toString().rstrip("/") + "/"
     it = fs.listFiles(root, True)
     while it.hasNext():
         st = it.next()
-        p = st.getPath()
-        if p.getName().startswith(("_", ".")):
+        path = st.getPath().toString()
+        if not path.startswith(qual_root):
             continue
-        parent = p.getParent()
         # partition dirs sit DIRECTLY under the root — anything deeper
         # (e.g. a compaction stage under _lineage/) must not be counted
-        if (parent.getName().startswith(prefix)
-                and parent.getParent() is not None
-                and parent.getParent().toString() == qual_root):
-            v = parent.getName().split("=", 1)[1]
-            if v in want:
-                files, nbytes = out[v]
-                out[v] = (files + 1, nbytes + st.getLen())
+        parts = path[len(qual_root):].split("/")
+        if (len(parts) != 2 or not parts[0].startswith(prefix)
+                or parts[1].startswith(("_", "."))):
+            continue
+        v = parts[0][len(prefix):]
+        if vals is None or v in out:
+            files, nbytes = out.get(v, (0, 0))
+            out[v] = (files + 1, nbytes + st.getLen())
     return out
 
 
@@ -282,21 +316,20 @@ def route_and_write(
     # hot countries split, small ones merged (see module doc)
     routed = df.hint("rebalance", route_col)
     with dynamic_overwrite(spark):
-        (routed.write.mode("overwrite").partitionBy(route_col).format(fmt)
-            .save(out_dir))
+        _write_sinks(routed, out_dir, (route_col,), fmt)
 
     # lineage accounting: ONE column-pruned aggregate over the files written
     # THIS RUN (attests what is actually on disk, unlike pre-write counters;
     # the isin filter on the partition column prunes completed partitions at
-    # the source listing, so the audit never grows with sink history).
-    new_vals = [v for v in list_partition_values(spark, out_dir, route_col)
-                if v not in done]
+    # the source listing, so the audit never grows with sink history). One
+    # recursive listing gives both the partitions on disk and their shape.
+    fstats = sink_file_stats(spark, out_dir, route_col)
+    new_vals = sorted(v for v in fstats if v not in done)
     if not new_vals:
         # nothing was written (empty input / all partitions resumed)
         write_manifest(out_dir, done)
         return dict(done), []
     manifest = dict(done)
-    fstats = sink_file_stats(spark, out_dir, route_col, new_vals)
     if audit == "off":
         now = int(time.time())
         for v in new_vals:
@@ -323,14 +356,31 @@ def route_and_write(
                 ent["checksum"] += int(r["checksum"] or 0)
             ent["files"], ent["bytes"] = fstats[key]
     write_manifest(out_dir, manifest)
-    # input lineage: which source splits fed this run (driver-side metadata,
-    # no extra job; empty for purely generated inputs)
-    try:
-        inputs = sorted(df.inputFiles())
-    except Exception:
-        inputs = []
-    write_input_lineage(out_dir, inputs)
+    write_input_lineage(out_dir, input_files(df))
     return manifest, stats
+
+
+def input_files(df: DataFrame) -> list[str]:
+    """Which source files fed ``df`` (driver-side metadata, no job; empty
+    for purely generated inputs): the ``inputFiles()`` of every file-based
+    ``LogicalRelation`` leaf of the already-analyzed plan. Equal to
+    ``sorted(df.inputFiles())``, which optimizes the whole plan again only
+    to find the same scans. Local relations (the range tables) read no
+    file and are skipped."""
+    try:
+        gw = df.sparkSession.sparkContext._gateway
+        files: set[str] = set()
+        it = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+        while it.hasNext():
+            leaf = it.next()
+            if not is_instance_of(gw, leaf, _LOGICAL_RELATION):
+                continue
+            rel = leaf.relation()
+            if is_instance_of(gw, rel, _FILE_RELATION):
+                files.update(rel.inputFiles())
+        return sorted(files)
+    except Py4JError:
+        return []
 
 
 def write_input_lineage(out_dir: str, inputs: list[str]) -> None:
@@ -380,9 +430,8 @@ def compact_sinks(spark, out_dir: str, route_col: str = "route_country",
     Returns {partition value: (files_before, files_after)} for the
     partitions it rewrote.
     """
-    vals = list_partition_values(spark, out_dir, route_col)
-    before = sink_file_stats(spark, out_dir, route_col, vals)
-    todo = [v for v in vals if before[v][0] > max_files_per_sink]
+    before = sink_file_stats(spark, out_dir, route_col)
+    todo = sorted(v for v in before if before[v][0] > max_files_per_sink)
     if not todo:
         return {}
     frag = (spark.read.format(fmt).load(out_dir)
@@ -410,13 +459,10 @@ def compact_sinks(spark, out_dir: str, route_col: str = "route_country",
     sfs = sp.getFileSystem(spark._jsc.hadoopConfiguration())
     if sfs.exists(sp):
         sfs.delete(sp, True)
-    (frag.hint("rebalance", route_col)
-     .write.mode("overwrite").partitionBy(route_col).format(fmt)
-     .save(stage))
+    _write_sinks(frag.hint("rebalance", route_col), stage, (route_col,), fmt)
     with dynamic_overwrite(spark):
-        (spark.read.format(fmt).load(stage)
-         .write.mode("overwrite").partitionBy(route_col).format(fmt)
-         .save(out_dir))
+        _write_sinks(spark.read.format(fmt).load(stage), out_dir,
+                     (route_col,), fmt)
     sfs.delete(sp, True)
     after = sink_file_stats(spark, out_dir, route_col, todo)
     if manifest:
@@ -487,8 +533,7 @@ def compact_stream_sinks(spark, out_dir: str,
     merged = (spark.read.format(fmt).load(data_dir)
               .filter(F.col("batch_id").isin(fold)).drop("batch_id"))
     _delete_path(spark, stage)
-    (merged.write.mode("overwrite").partitionBy(route_col).format(fmt)
-     .save(stage))
+    _write_sinks(merged, stage, (route_col,), fmt)
     if _crash_point == "after_stage":   # test seam: simulated crash
         return {}
     _fs_write_text(
@@ -517,10 +562,9 @@ def _finish_stream_compaction(spark, out_dir: str, route_col: str,
     sfs, sp, _ = _fs_for(spark, stage)
     if sfs.exists(sp):
         with dynamic_overwrite(spark):
-            (spark.read.format(fmt).load(stage)
-             .withColumn("batch_id", F.lit(int(target)))
-             .write.mode("overwrite").partitionBy("batch_id", route_col)
-             .format(fmt).save(data_dir))
+            _write_sinks(spark.read.format(fmt).load(stage)
+                         .withColumn("batch_id", F.lit(int(target))),
+                         data_dir, ("batch_id", route_col), fmt)
     if _crash_point == "after_overwrite":  # test seam: simulated crash
         return {}
     for n in fold:

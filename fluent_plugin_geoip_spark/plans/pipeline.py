@@ -68,6 +68,10 @@ class PipelineResult:
     table_stats``, taken from the NumPy layout when the plan is compiled,
     so reporting it runs no job). ``manifest``: the routed run's per-sink
     lineage.
+
+    On a routed run, ``counts`` comes from the post-write audit aggregate,
+    so with ``resume=True`` it covers only the partitions written in this
+    run, not the ones a previous run completed.
     """
     enriched: DataFrame
     counts: DataFrame
@@ -132,7 +136,16 @@ class GeoipPipeline:
         The aggregate-only run is one Spark action: the small country ×
         lang rollup is collected once, as Arrow, and ``counts`` is built
         from it locally. ``metrics["plan_build_s"]`` is the wall time
-        from entry to the call that runs the first action."""
+        from entry to the call that runs the first action.
+
+        A routed run takes ``counts`` from the audit's read-back, so
+        ``audit`` is ``"full"`` or ``"counts"``; to route with no read-back
+        call ``route_and_write(..., audit="off")`` directly."""
+        if audit == "off":
+            raise ValueError(
+                "run() builds counts from the audit read-back, so audit='off'"
+                " would return empty counts; call route_and_write(enriched,"
+                " out_dir, audit='off') to route without it")
         t0 = time.perf_counter()
         enriched = self.enrich(pages)
         obs = None

@@ -23,6 +23,20 @@ the benchmarks in BASELINE.md, not guessed):
   rule the session DEFAULT stays on the codec with zero observed crashes;
   pass ``codec="zstd"`` (or spark.sql.parquet.compression.codec) to opt
   in where worker stability has been verified.
+- sink encoding is not a session setting: every partitioned sink write
+  (``operators.route._write_sinks``) caps parquet's dictionary at 16 KiB
+  (``route.SINK_DICT_PAGE_BYTES``; parquet's default is 1 MiB).
+  Low-cardinality columns (``lang``, ``country``, ``city``, lat/lon) keep
+  their dictionaries; an all-distinct column falls back to plain encoding
+  once its dictionary passes 16 KiB (~1,365 INT96 ``warc_ts`` values, a
+  few dozen ``html`` values) instead of hashing every value into a
+  dictionary parquet throws away at the end of the first page. On
+  perfbench's ``batch_route`` (100k pages, 4-vCPU VM, traced, seed 5)
+  the sink files shrink slightly (``route.bytes`` 11.08 → 10.87 MB) and
+  the run's task CPU falls (``spark.task_cpu_s`` 1.79 / 1.65 → 1.49 /
+  1.51 s over two runs each); untraced ``cpu_norm_s`` 2.85 → 2.26 s
+  (seed 31, 10 interleaved pairs). Keep the cap a constant: a session
+  setting would change every other parquet write of the caller's job.
 """
 
 from __future__ import annotations

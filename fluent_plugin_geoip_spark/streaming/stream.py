@@ -28,7 +28,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..confutil import dynamic_overwrite
-from ..operators.route import _fs_for, _fs_read_text, _fs_write_text
+from ..operators.route import (
+    _fs_for, _fs_read_text, _fs_write_text, _write_sinks,
+)
 from ..plans.pipeline import FLAGSHIP_RECORDS, GeoipPipeline
 
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, text string, "
@@ -98,9 +100,8 @@ def make_batch_handler(out_dir: str):
                   .hint("rebalance", "route_country"))
         written = f"{out_dir}/data/batch_id={batch_id}"
         with dynamic_overwrite(spark):
-            (routed.write.mode("overwrite")
-                .partitionBy("batch_id", "route_country")
-                .parquet(f"{out_dir}/data"))
+            _write_sinks(routed, f"{out_dir}/data",
+                         ("batch_id", "route_country"), "parquet")
         fs, path, _ = _fs_for(spark, written)
         stats = (spark.read.parquet(written).groupBy("route_country")
                  .agg(F.count("*").alias("rows")).collect()

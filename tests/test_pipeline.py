@@ -245,6 +245,33 @@ def test_resume_skips_completed_partitions(spark, pages_dir, tmp_path):
     assert written.count() == N
 
 
+def test_resume_counts_cover_only_written_partitions(spark, pages_dir,
+                                                     tmp_path):
+    """A resumed run's counts come from the audit of the partitions it
+    wrote, not from the ones a previous run completed."""
+    pages = spark.read.parquet(pages_dir)
+    out = str(tmp_path / "routed")
+    pipe = GeoipPipeline(spark)
+    first = pipe.run(pages, out_dir=out)
+    write_manifest(out, {k: v for k, v in first.manifest.items()
+                         if k != "FR"})
+    second = pipe.run(pages, out_dir=out, resume=True)
+    fr = sorted(tuple(r) for r in first.counts.collect() if r[0] == "FR")
+    assert fr
+    assert sorted(tuple(r) for r in second.counts.collect()) == fr
+
+
+def test_run_refuses_audit_off(spark, pages_dir, tmp_path):
+    """run() builds counts from the audit read-back, so audit='off' would
+    return empty counts: it raises, names the call that routes without an
+    audit, and writes nothing."""
+    out = tmp_path / "routed"
+    with pytest.raises(ValueError, match=r"route_and_write\(.*audit='off'"):
+        GeoipPipeline(spark).run(spark.read.parquet(pages_dir),
+                                 out_dir=str(out), audit="off")
+    assert not out.exists()
+
+
 def test_asn_enrichment_self_consistent(spark):
     """FIXTURES.md §4: every generated IP's ASN matches the generator table."""
     import ipaddress
