@@ -613,9 +613,10 @@ def v4_bucket_layout(db: GeoDatabase, shift: int = 16) -> BucketLayout:
 def _v6_words(db: GeoDatabase) -> tuple[np.ndarray, ...]:
     """(start hi, start lo, end hi, end lo) uint64 halves of the v6 bounds.
 
-    'S16' tobytes() restores the NUL padding element access strips (see
-    _u128_to_biased_pair); big-endian u64 views give the halves fully
-    vectorized."""
+    numpy 'S16' element access strips trailing NUL bytes (2001:db8::
+    comes back 4 bytes long, which a bytewise int read would misread by a
+    factor of 2^96); ``tobytes()`` keeps the full 16-byte right padding,
+    and big-endian u64 views give the halves fully vectorized."""
     def halves(a: np.ndarray):
         raw = np.frombuffer(a.tobytes(), dtype=">u8").reshape(-1, 2) \
             if len(a) else np.zeros((0, 2), dtype=">u8")
@@ -702,23 +703,6 @@ def expanded_bucket_table(spark, db: GeoDatabase, attr_paths: list[str],
     return _expanded_df(spark, schema, idx, fixed, attr_specs)
 
 
-_BIAS = 1 << 63
-
-
-def _u128_to_biased_pair(b: bytes) -> tuple[int, int]:
-    """16-byte big-endian address → (hi, lo) as BIAS-FLIPPED signed longs:
-    unsigned u ↦ u − 2^63, a monotone map, so SIGNED (hi, lo) tuple order
-    equals unsigned 128-bit order. The probe side applies the same flip
-    via XOR with min-long (flips bit 63 — identical map).
-
-    Right-pads to 16 bytes first: numpy 'S16' element access STRIPS
-    trailing NUL bytes (an address like 2001:db8:: comes back 4 bytes
-    long), which int.from_bytes would misread by a factor of 2^96."""
-    v = int.from_bytes(b.ljust(16, b"\x00"), "big")
-    hi, lo = v >> 64, v & ((1 << 64) - 1)
-    return hi - _BIAS, lo - _BIAS
-
-
 def expanded_bucket_table_v6(spark, db: GeoDatabase, attr_paths: list[str],
                              prefix_bits: int | None = None):
     """The native-IPv6 range table expanded into address-prefix buckets —
@@ -729,7 +713,7 @@ def expanded_bucket_table_v6(spark, db: GeoDatabase, attr_paths: list[str],
     (:func:`v6_bucket_layout`: adaptive coarse level, dense buckets split
     down to /60), and the 128-bit BETWEEN rides as a join filter over
     bias-flipped (hi, lo) tuple comparisons (signed order == unsigned
-    order after the flip; see :func:`_u128_to_biased_pair`). Ranges are
+    order after the XOR flip of bit 63 below). Ranges are
     disjoint, so at most one piece matches and a left join preserves
     row count.
 
@@ -743,8 +727,8 @@ def expanded_bucket_table_v6(spark, db: GeoDatabase, attr_paths: list[str],
     coarse ``prefix_bits``."""
     lay = v6_bucket_layout(db, prefix_bits)
     idx = lay.idx
-    # bias flip (unsigned u ↦ u − 2^63): XOR of bit 63 reinterpreted
-    # signed — identical map to _u128_to_biased_pair
+    # bias flip (unsigned u ↦ u − 2^63, monotone): XOR of bit 63
+    # reinterpreted signed; the probe side applies the same XOR
     top = np.uint64(1 << 63)
     s_hi_b, s_lo_b, e_hi_b, e_lo_b = (
         (w ^ top).view(np.int64) for w in _v6_words(db))

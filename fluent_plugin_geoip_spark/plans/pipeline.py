@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, types as T
 
 from ..config import GeoipConfig
 from ..operators.aggregate import (
-    country_lang_columns, pipeline_metric_columns, sink_counts,
+    country_lang_columns, pipeline_metric_columns,
 )
 from ..operators.enrich import GeoipEnricher, apply_plan
 from ..operators.geolookup import GeoDatabase
@@ -182,6 +182,3 @@ class GeoipPipeline:
             tables["asn"] = dict(self.asn_enricher.table_stats)
         return PipelineResult(enriched=enriched, counts=counts,
                               metrics=metrics, manifest=manifest)
-
-    def sink_counts(self, enriched: DataFrame) -> DataFrame:
-        return sink_counts(enriched)

@@ -11,19 +11,10 @@ the benchmarks in BASELINE.md, not guessed):
 - Arrow batch 64k (default 10k pays the JVM↔Python crossing 6× as often
   for the pandas UDFs, ``ruby_double_str`` and ``lang_id_pandas``, at
   identical memory footprint)
-- dynamic partition overwrite (idempotent per-partition routing writes)
-- parquet codec snappy (default). zstd writes 37% fewer sink bytes at
-  wall-clock parity (measured A/B at 16 cores / 5M rows on tmpfs: snappy
-  11.96 s / 706 MB, zstd 12.07 s / 444 MB, uncompressed 15.37 s / 2546 MB)
-  and is worth opting into per job — BUT across rounds 4-5 three zstd
-  scaling-sweep children died with Python-worker "Connection reset" during
-  the enrich Arrow read (3/14 zstd sweep children vs 0/13 snappy; a
-  dedicated 12-child repro loop was clean on both, so the crash is rare
-  and window-dependent, but codec-correlated). Per BASELINE.md's decision
-  rule the session DEFAULT stays on the codec with zero observed crashes;
-  pass ``codec="zstd"`` (or spark.sql.parquet.compression.codec) to opt
-  in where worker stability has been verified.
-- sink encoding is not a session setting: every partitioned sink write
+- the partition overwrite mode is not a session setting: each sink write
+  (``operators.route._write_sinks``) sets static or dynamic for its own
+  ``save`` only, so the caller's other writes keep Spark's static default
+- sink encoding is not a session setting either: every partitioned sink write
   (``operators.route._write_sinks``) caps parquet's dictionary at 16 KiB
   (``route.SINK_DICT_PAGE_BYTES``; parquet's default is 1 MiB).
   Low-cardinality columns (``lang``, ``country``, ``city``, lat/lon) keep
@@ -46,7 +37,6 @@ from pyspark.sql import SparkSession
 
 def build_session(master: str | None = None, cores: int | None = None,
                   app_name: str = "fluent_plugin_geoip_spark",
-                  codec: str = "snappy",
                   **extra: str) -> SparkSession:
     b = SparkSession.builder.appName(app_name)
     if master:
@@ -58,8 +48,6 @@ def build_session(master: str | None = None, cores: int | None = None,
          .config("spark.sql.adaptive.skewJoin.enabled", "true")
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-         .config("spark.sql.parquet.compression.codec", codec)
          .config("spark.sql.session.timeZone", "UTC"))
     for k, v in extra.items():
         b = b.config(k, v)

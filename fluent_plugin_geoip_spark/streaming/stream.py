@@ -99,9 +99,8 @@ def make_batch_handler(out_dir: str):
         routed = (batch_df.withColumn("batch_id", F.lit(batch_id))
                   .hint("rebalance", "route_country"))
         written = f"{out_dir}/data/batch_id={batch_id}"
-        with dynamic_overwrite(spark):
-            _write_sinks(routed, f"{out_dir}/data",
-                         ("batch_id", "route_country"), "parquet")
+        _write_sinks(routed, f"{out_dir}/data",
+                     ("batch_id", "route_country"), "parquet", dynamic=True)
         fs, path, _ = _fs_for(spark, written)
         stats = (spark.read.parquet(written).groupBy("route_country")
                  .agg(F.count("*").alias("rows")).collect()

@@ -353,6 +353,36 @@ def test_non_resume_cleans_stale_partitions(spark, pages_dir, tmp_path):
     assert spark.read.parquet(out).count() == N
 
 
+def test_fresh_route_lists_nothing_before_write(spark, pages_dir, tmp_path,
+                                                monkeypatch):
+    """resume=False is one static overwrite of the sink: no partition
+    listing before the write, the stale partition and its manifest entry
+    gone, and a caller whose session defaults to dynamic keeps dynamic."""
+    from fluent_plugin_geoip_spark.confutil import OVERWRITE_MODE, scoped_conf
+    from fluent_plugin_geoip_spark.operators import route
+    pages = spark.read.parquet(pages_dir)
+    out = str(tmp_path / "routed")
+    pipe = GeoipPipeline(spark)
+    pipe.run(pages, out_dir=out)
+    spark.createDataFrame([("stale", "en", "x")],
+                          "url string, lang string, text string") \
+        .write.parquet(f"{out}/route_country=ZZ")
+    write_manifest(out, {**read_manifest(out),
+                         "ZZ": {"rows": 1, "checksum": 0, "completed_at": 1}})
+
+    def no_listing(*_args, **_kwargs):
+        raise AssertionError("list_partition_values called")
+    monkeypatch.setattr(route, "list_partition_values", no_listing)
+    enriched = pipe.enrich(pages).drop("access")
+    with scoped_conf(spark, OVERWRITE_MODE, "dynamic"):
+        manifest, _ = route.route_and_write(enriched, out, resume=False)
+        assert spark.conf.get(OVERWRITE_MODE) == "dynamic"
+    assert not os.path.exists(f"{out}/route_country=ZZ")
+    assert "ZZ" not in manifest and "ZZ" not in read_manifest(out)
+    assert sum(v["rows"] for v in manifest.values()) == N
+    assert spark.read.parquet(out).count() == N
+
+
 def test_resume_audit_is_partition_pruned(spark, pages_dir, tmp_path):
     """The post-write lineage audit must scan only partitions written this
     run: stats cover no completed partition, and the pruning mechanism (an
@@ -401,7 +431,7 @@ def test_manifest_io_through_hadoop_fs(spark, tmp_path):
 
 def test_resume_through_scheme_qualified_out_dir(spark, pages_dir, tmp_path):
     """Full route→manifest→resume cycle with a scheme-qualified out_dir —
-    every FS touch (partition listing, stale clean, manifest, lineage) must
+    every FS touch (sink overwrite, file listing, manifest, lineage) must
     survive the file:// prefix."""
     pages = spark.read.parquet(pages_dir)
     out = "file://" + str(tmp_path / "routed")

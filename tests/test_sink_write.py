@@ -190,3 +190,6 @@ def test_sink_writes_go_through_one_writer():
     assert _top_level_calls(stream, "partitionBy") <= STATE_WRITERS
     assert (_top_level_calls(route, "_write_sinks")
             | _top_level_calls(stream, "_write_sinks")) == SINK_WRITERS
+    # the overwrite mode is _write_sinks' argument, not a caller's block
+    assert not _top_level_calls(route, "dynamic_overwrite")
+    assert _top_level_calls(stream, "dynamic_overwrite") <= STATE_WRITERS
