@@ -234,7 +234,9 @@ class GeoipEnricher:
     v6-capable database, the v6 pieces of
     :func:`..operators.geolookup.expanded_bucket_table_v6`, with the
     address parsed JVM-side by :func:`..functions.ipv6.ipv6_str_to_longs`),
-    so the enrich stage stays inside the JVM with no Python worker.
+    so the enrich stage stays inside the JVM with no Python worker. The
+    database's ranges alone choose each family's bucket levels
+    (``geolookup.v4_bucket_layout`` / ``v6_bucket_layout``, one rule).
     ``GeoDatabase.lookup_batch`` is the driver-side reference the tests
     hold it to.
 
@@ -268,9 +270,10 @@ class GeoipEnricher:
                 if ph.geoip_key not in self._attrs_by_key[ph.record_key]:
                     self._attrs_by_key[ph.record_key].append(ph.geoip_key)
         # shape of each expanded range table the enrich joins probe,
-        # ``{"v4"|"v6": {"rows": ..., "max_bucket_rows": ...}}``, filled
-        # from the NumPy layout when a plan is compiled
-        self.table_stats: dict[str, dict[str, int]] = {}
+        # ``{"v4"|"v6": BucketLayout.stats()}`` (rows, largest bucket,
+        # coarse level, split levels), filled from the NumPy layout when a
+        # plan is compiled
+        self.table_stats: dict[str, dict] = {}
         # (input column names, spark.sql.caseSensitive) → compiled plan
         self._plans: dict[tuple[tuple[str, ...], bool], EnrichPlan] = {}
 
@@ -348,23 +351,15 @@ class GeoipEnricher:
             col = F.when(skip_cond, existing).otherwise(col)
         return col.alias(out_field)
 
-    # coarse /16 prefix buckets: 65 536 of them cap the coarse expansion
-    # at +65 536 rows. Real databases still pack hundreds of ranges into
-    # one /16 (a dual-stack table's busiest v6 /32 held 3,686), so the
-    # table builders split every bucket of more than
-    # ``geolookup.BUCKET_CAP`` pieces deeper (``BucketLayout``)
-    JVM_JOIN_SHIFT = 16
-
     def _expanded_tables(self, attrs: list[str]) -> tuple:
         """The expanded bucket tables of ``attrs``: the v4 one and, for a
         v6-capable database, the v6 one (else None), built once per attr
         set (common-subexpression reuse of the reference's uniq
         placeholder dedup, rb:86)."""
         return memo_on_db(
-            self.db, (id(self.spark), "expanded", self.JVM_JOIN_SHIFT, *attrs),
+            self.db, (id(self.spark), "expanded", *attrs),
             lambda: (
-                geolookup.expanded_bucket_table(self.spark, self.db, attrs,
-                                                shift=self.JVM_JOIN_SHIFT),
+                geolookup.expanded_bucket_table(self.spark, self.db, attrs),
                 geolookup.expanded_bucket_table_v6(self.spark, self.db,
                                                    attrs)[0]
                 if self.db.has_ipv6 else None))
@@ -373,9 +368,11 @@ class GeoipEnricher:
         """The broadcast-hinted range table of ``attrs``, its columns
         named ``prefix`` + name. A join position's prefix is part of the
         table, so each prefix gets its own copy, made JVM-side from the
-        expanded tables, which are built once per attr set."""
+        expanded tables, which are built once per attr set. The bucket
+        layout is a function of the database alone, so the memo key is
+        the session, the prefix and the attrs."""
         return memo_on_db(
-            self.db, (id(self.spark), prefix, self.JVM_JOIN_SHIFT, *attrs),
+            self.db, (id(self.spark), prefix, *attrs),
             lambda: F.broadcast(geolookup.range_table(
                 self.spark, self.db, attrs, prefix,
                 *self._expanded_tables(attrs))))
@@ -400,7 +397,7 @@ class GeoipEnricher:
         has6 = self.db.has_ipv6
         word4 = f"__ip4e_{j}" if has6 else f"__ip_{j}"
         ip4 = F.col(word4)
-        lay4 = v4_bucket_layout(self.db, self.JVM_JOIN_SHIFT)
+        lay4 = v4_bucket_layout(self.db)
         self.table_stats["v4"] = lay4.stats()
         key = lay4.probe_key(ip4, f"`{word4}`").bitwiseOR(F.lit(V4_KEY_BIT))
         match = ip4.between(col("__gs"), col("__ge"))

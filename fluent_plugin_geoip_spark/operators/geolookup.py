@@ -521,8 +521,10 @@ class BucketLayout:
     def rows(self) -> int:
         return len(self.idx)
 
-    def stats(self) -> dict[str, int]:
-        return {"rows": self.rows, "max_bucket_rows": self.max_bucket_rows}
+    def stats(self) -> dict:
+        return {"rows": self.rows, "max_bucket_rows": self.max_bucket_rows,
+                "coarse_bits": self.coarse_bits,
+                "split_levels": [bits for bits, _ in self.dense]}
 
     def probe_key(self, word: Column, word_sql: str) -> Column:
         """The probe side's bucket key for ``word`` (``word_sql``: the same
@@ -551,25 +553,52 @@ class BucketLayout:
 
 
 def _bucket_layout(lo: np.ndarray, hi: np.ndarray, width: int,
-                   coarse_bits: int, finest_bits: int) -> BucketLayout:
+                   finest_bits: int) -> BucketLayout:
     """Expand sorted, disjoint ranges (``lo``/``hi``: uint64 words of each
-    range's first/last address) into ``coarse_bits``-prefix buckets, then
-    split every bucket of more than ``BUCKET_CAP`` pieces ``_SPLIT_BITS``
-    deeper until none is left or ``finest_bits`` is reached. O(pieces)
-    NumPy per level: pieces stay sorted by prefix, so buckets are runs."""
+    range's first/last address, n of them) into coarse prefix buckets,
+    then split every bucket of more than C = ``BUCKET_CAP`` pieces
+    ``_SPLIT_BITS`` deeper until none is left or ``finest_bits`` is
+    reached. O(pieces) NumPy per level: buckets are runs of sorted pieces.
+
+    The coarse level, one rule for both families: start at /32; while the
+    coarse expansion Σ((hi ≫ s) − (lo ≫ s) + 1) exceeds 2n rows, coarsen
+    by 4 bits, but from /16 on only to a level with no bucket over C
+    pieces, and never past /4 (a JVM shift count is taken mod 64, so /0
+    would break the bucket equi-key). So:
+
+    - rows ≤ max(2n, n + 2^16) + 15·levels·n/C: the rule stops above /16
+      only at ≤ 2n coarse rows, and at /b ≤ /16 disjoint ranges add
+      Σ(k_i − 1) < 2^b; a split adds ≤ 15 rows and one level has ≤ n/C
+      split buckets (a range has pieces in at most two buckets it does
+      not cover whole, and in two split ones only if it sticks out of the
+      first one's right edge, which one range per bucket can do; D split
+      buckets of ≥ C + 1 pieces give (C + 1)·D ≤ n + D);
+    - every split level is /16 or finer: levels ≤ (finest_bits − 16)/4;
+    - every bucket holds ≤ C pieces, except where more than C ranges
+      share one finest prefix (impossible at v4's /32)."""
     def prefix(words: np.ndarray, bits: int) -> np.ndarray:
         return (words >> np.uint64(width - bits)).astype(np.int64)
 
-    b0 = prefix(lo, coarse_bits)
-    idx, pre = _spread(np.arange(len(lo)), b0, prefix(hi, coarse_bits) - b0 + 1)
-    bits, dense, out_idx, out_keys, peak = coarse_bits, [], [], [], 0
+    def expand(bits: int) -> tuple[np.ndarray, np.ndarray]:
+        b0 = prefix(lo, bits)
+        return _spread(np.arange(len(lo)), b0, prefix(hi, bits) - b0 + 1)
+
+    coarse = 32
+    while coarse > 4 and int(
+            (prefix(hi, coarse) - prefix(lo, coarse) + 1).sum()) > 2 * len(lo):
+        if coarse <= 16 and np.bincount(
+                expand(coarse - _SPLIT_BITS)[1]).max() > BUCKET_CAP:
+            break
+        coarse -= _SPLIT_BITS
+    idx, pre = expand(coarse)
+    bits, dense, out_idx, out_keys, peak = coarse, [], [], [], 0
     while True:
         first = np.flatnonzero(np.r_[True, pre[1:] != pre[:-1]])
         run = np.diff(np.r_[first, len(pre)])
         split = (run > BUCKET_CAP) & (bits < finest_bits)
         keep = ~np.repeat(split, run)
         out_idx.append(idx[keep])
-        out_keys.append(pre[keep] if bits == coarse_bits
+        out_keys.append(pre[keep] if bits == coarse
                         else pre[keep] | np.int64(_level_tag(bits)))
         peak = max(peak, int(run[~split].max(initial=0)))
         if not split.any():
@@ -580,7 +609,7 @@ def _bucket_layout(lo: np.ndarray, hi: np.ndarray, width: int,
         c0 = np.maximum(prefix(lo[idx], bits), parent)
         c1 = np.minimum(prefix(hi[idx], bits), parent | ((1 << _SPLIT_BITS) - 1))
         idx, pre = _spread(idx, c0, c1 - c0 + 1)
-    return BucketLayout(width, coarse_bits, tuple(dense),
+    return BucketLayout(width, coarse, tuple(dense),
                         np.concatenate(out_idx), np.concatenate(out_keys), peak)
 
 
@@ -602,12 +631,12 @@ def memo_on_db(db: GeoDatabase, key: tuple, build):
     return cache[key]
 
 
-def v4_bucket_layout(db: GeoDatabase, shift: int = 16) -> BucketLayout:
-    """Bucket layout of the v4 table: coarse ``/(32 − shift)`` buckets,
-    dense ones split down to /32 at most."""
-    return memo_on_db(db, ("v4", shift), lambda: _bucket_layout(
-        db.starts.astype(np.uint64), db.ends.astype(np.uint64),
-        32, 32 - shift, 32))
+def v4_bucket_layout(db: GeoDatabase) -> BucketLayout:
+    """Bucket layout of the v4 table (:func:`_bucket_layout`'s rule): the
+    coarse level the ranges choose, /32 down to /4, dense buckets split
+    down to /32; rows ≤ max(2n, n + 2^16) + 15·levels·n/C, levels ≤ 4."""
+    return memo_on_db(db, ("v4",), lambda: _bucket_layout(
+        db.starts.astype(np.uint64), db.ends.astype(np.uint64), 32, 32))
 
 
 def _v6_words(db: GeoDatabase) -> tuple[np.ndarray, ...]:
@@ -624,34 +653,18 @@ def _v6_words(db: GeoDatabase) -> tuple[np.ndarray, ...]:
     return (*halves(db.starts6), *halves(db.ends6))
 
 
-def v6_bucket_layout(db: GeoDatabase,
-                     prefix_bits: int | None = None) -> BucketLayout:
-    """Bucket layout of the v6 table over the high half of the address.
-
-    ``prefix_bits`` (the coarse level) defaults adaptively: start at /32
-    and coarsen by 4 bits while the expansion exceeds ``2·n + 65 536``
-    rows, so very wide ranges degrade to fewer, larger buckets instead
-    of an unbounded emit. Dense buckets are then split down to /60."""
+def v6_bucket_layout(db: GeoDatabase) -> BucketLayout:
+    """Bucket layout of the v6 table over the high half of the address,
+    by v4's coarse-level rule (:func:`_bucket_layout`): dense buckets
+    split down to /60; rows ≤ max(2n, n + 2^16) + 15·levels·n/C, levels
+    ≤ 11."""
     def build() -> BucketLayout:
         s_hi, _, e_hi, _ = _v6_words(db)
-        bits = prefix_bits
-        if bits is None:
-            # floor at 4: a JVM shift count is taken mod 64, so bits=0
-            # (shift 64) would make the probe's >>> a no-op and break
-            # the bucket equi-key
-            bits = 32
-            while bits > 4:
-                shift = np.uint64(64 - bits)
-                total = int(((e_hi >> shift) - (s_hi >> shift) + 1).sum())
-                if total <= 2 * len(s_hi) + 65536:
-                    break
-                bits -= 4
-        return _bucket_layout(s_hi, e_hi, 64, bits, _V6_FINEST_BITS)
-    return memo_on_db(db, ("v6", prefix_bits), build)
+        return _bucket_layout(s_hi, e_hi, 64, _V6_FINEST_BITS)
+    return memo_on_db(db, ("v6",), build)
 
 
-def expanded_bucket_table(spark, db: GeoDatabase, attr_paths: list[str],
-                          shift: int = 16):
+def expanded_bucket_table(spark, db: GeoDatabase, attr_paths: list[str]):
     """The range table expanded into IP-prefix buckets for the enrich
     joins (:class:`..operators.enrich.GeoipEnricher`).
 
@@ -663,34 +676,19 @@ def expanded_bucket_table(spark, db: GeoDatabase, attr_paths: list[str],
     bucket the pieces inherit the table's non-overlap, so at most one
     range matches and a left join preserves row count.
 
-    Buckets are cut to fit the key distribution rather than at one fixed
-    bit position: coarse ``/(32 − shift)`` buckets (/16 by default), and
-    every bucket holding more than ``BUCKET_CAP`` pieces split 4 bits
-    deeper, repeatedly, down to /32 (:func:`v4_bucket_layout`). Refined
-    keys carry a level tag; coarse keys are the plain prefix, so a table
-    with no dense bucket is exactly the fixed-/16 table. The probe key is
-    :meth:`BucketLayout.probe_key`.
-
-    Both bounds hold on every layout of disjoint ranges, n of them:
-
-    - rows ≤ n + 2^(32−shift) + 15·levels·n/C, with C = ``BUCKET_CAP``
-      and levels the number of split levels (≤ 4): the coarse expansion
-      adds Σ(k_i − 1) ≤ 2^(32−shift) rows; a split adds at most 15 rows;
-      and one level has at most n/C split buckets. (A range has pieces
-      in at most two buckets it does not cover whole, those holding its
-      first and last address, and in two split ones only if it sticks
-      out of the first one's right edge, which one range per bucket can
-      do; D split buckets of ≥ C + 1 pieces each give (C + 1)·D ≤ n + D.)
-    - every bucket holds at most C pieces. (The one exception of the
-      general construction, more than C ranges sharing one finest
-      prefix, cannot occur at /32: one address is one range.)
+    Buckets fit the key distribution (:func:`v4_bucket_layout`): a coarse
+    level the ranges choose, /32 down to /4, and dense buckets split 4
+    bits deeper down to /32; rows ≤ max(2n, n + 2^16) + 15·levels·n/C
+    with at most 4 split levels, and no bucket over C = ``BUCKET_CAP``
+    pieces. Refined keys carry a level tag; coarse keys are the plain
+    prefix. The probe key is :meth:`BucketLayout.probe_key`.
 
     Returns a DataFrame with ``__gb`` (bucket key), ``__gs``/``__ge``
     (range bounds) and one correctly-typed column per sanitized attr
     path (null column for paths the DB lacks). One-time driver cost is
     O(expanded rows) — the same class as parsing the database file.
     """
-    lay = v4_bucket_layout(db, shift)
+    lay = v4_bucket_layout(db)
     idx = lay.idx
     schema = T.StructType(
         [T.StructField("__gb", T.LongType(), False),
@@ -703,29 +701,26 @@ def expanded_bucket_table(spark, db: GeoDatabase, attr_paths: list[str],
     return _expanded_df(spark, schema, idx, fixed, attr_specs)
 
 
-def expanded_bucket_table_v6(spark, db: GeoDatabase, attr_paths: list[str],
-                             prefix_bits: int | None = None):
+def expanded_bucket_table_v6(spark, db: GeoDatabase, attr_paths: list[str]):
     """The native-IPv6 range table expanded into address-prefix buckets —
     the v6 leg of the all-JVM enrich path (round-7 VERDICT item 2).
 
     Same construction as :func:`expanded_bucket_table`, lifted to 128
     bits carried as two longs: buckets are prefixes of the high half
-    (:func:`v6_bucket_layout`: adaptive coarse level, dense buckets split
+    (:func:`v6_bucket_layout`: v4's coarse-level rule, dense buckets split
     down to /60), and the 128-bit BETWEEN rides as a join filter over
     bias-flipped (hi, lo) tuple comparisons (signed order == unsigned
     order after the XOR flip of bit 63 below). Ranges are
     disjoint, so at most one piece matches and a left join preserves
     row count.
 
-    Bounds, for n ranges and C = ``BUCKET_CAP``: rows ≤ R + 15·levels·
-    n/C, where R ≤ 2·n + 65 536 is the coarse expansion the
-    adaptive level admits (R ≤ n + 2^prefix_bits for an explicit level)
-    and levels ≤ (60 − prefix_bits)/4; every bucket holds at most C
-    pieces, except where more than C ranges share one /60. Returns
-    ``__g6b`` (bucket key), ``__g6sh/__g6sl/__g6eh/__g6el`` (bias-flipped
-    bounds) + one typed column per sanitized attr path, and the chosen
-    coarse ``prefix_bits``."""
-    lay = v6_bucket_layout(db, prefix_bits)
+    Bounds, for n ranges and C = ``BUCKET_CAP``: rows ≤ max(2n, n + 2^16)
+    + 15·levels·n/C, with at most 11 split levels, all at /16 or finer;
+    every bucket holds at most C pieces, except where more than C ranges
+    share one /60. Returns ``__g6b`` (bucket key),
+    ``__g6sh/__g6sl/__g6eh/__g6el`` (bias-flipped bounds) + one typed
+    column per sanitized attr path, and the chosen coarse level."""
+    lay = v6_bucket_layout(db)
     idx = lay.idx
     # bias flip (unsigned u ↦ u − 2^63, monotone): XOR of bit 63
     # reinterpreted signed; the probe side applies the same XOR
@@ -748,8 +743,9 @@ def expanded_bucket_table_v6(spark, db: GeoDatabase, attr_paths: list[str],
 
 # Set on every v4 bucket key of a range table, so the two families'
 # keys never meet: a v4 key is a prefix below 2^32 under level tag 0 or
-# 5-8 (bits 60-63), and a v6 key with tag t is a prefix below 2^(4t), so
-# its bit 59 can be set only at t = 15, a tag no v4 key has.
+# 5-8 (bits 60-63; no split level is coarser than /16, so refined v4
+# levels are /20 to /32), and a v6 key with tag t is a prefix below
+# 2^(4t), so its bit 59 can be set only at t = 15, a tag no v4 key has.
 V4_KEY_BIT = 1 << 59
 
 _BOUNDS = ("__gs", "__ge", "__g6sh", "__g6sl", "__g6eh", "__g6el")

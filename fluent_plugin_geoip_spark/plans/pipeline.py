@@ -63,7 +63,9 @@ class PipelineResult:
     needs no ``unpersist``. ``metrics``: the observed row counters (with
     ``collect_metrics``), ``plan_build_s`` and ``table_stats``, the shape
     of each expanded range table the enrich joins probe:
-    ``{"city": {"v4": {"rows", "max_bucket_rows"}, "v6": ...}}``, plus an
+    ``{"city": {"v4": {"rows", "max_bucket_rows", "coarse_bits",
+    "split_levels"}, "v6": ...}}`` (the coarse level and split levels the
+    layout rule chose, ``geolookup.BucketLayout.stats``), plus an
     ``"asn"`` entry when ASN enrichment is on (``GeoipEnricher.
     table_stats``, taken from the NumPy layout when the plan is compiled,
     so reporting it runs no job). ``manifest``: the routed run's per-sink

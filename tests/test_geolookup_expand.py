@@ -1,20 +1,23 @@
 """Pins for the expanded-range-table construction (geolookup):
 
-- the v6 adaptive prefix coarsening (round-8 VERDICT item 3): a
-  pathological wide range must degrade ``prefix_bits`` instead of
-  emitting an unbounded bucket expansion, the expansion bound must hold,
-  and the enrich joins must still match ``GeoDatabase.lookup_batch`` (the
-  NumPy searchsorted probe) on the coarser buckets — probes inside, at
-  both edges of, and outside the wide range;
-- the shift floor (``>4``): a near-/0 range drives ``prefix_bits`` to
-  the floor of 4 and lookups still work (a JVM shift count is mod 64,
-  so prefix_bits=0 would silently break the bucket equi-key);
+- the coarse level the ranges choose, one rule for both families (start
+  at /32, coarsen 4 bits while the coarse expansion exceeds 2n rows,
+  from /16 on only to a level with no bucket over ``BUCKET_CAP``, never
+  past /4): a pathological wide range must coarsen the level instead of
+  emitting an unbounded bucket expansion, and the enrich joins must
+  still match ``GeoDatabase.lookup_batch`` (the NumPy searchsorted
+  probe) on the coarser buckets — probes inside, at both edges of, and
+  outside the wide range;
+- the floor (/4): a near-/0 range drives the coarse level to /4 and
+  lookups still work (a JVM shift count is mod 64, so /0 would silently
+  break the bucket equi-key);
 - the vectorized pyarrow construction (round-8 VERDICT item 2) yields
   the same rows as a hand-built expectation, including NaN → SQL null
   for double attrs (F7);
 - the bounded-probe layouts (dense buckets split deeper): bucket cap,
-  row bound and range-level value parity on adversarial databases
-  (section below);
+  row bound, split levels and range-level value parity on adversarial
+  databases, the world fixture and a /1 beside a dense cluster (section
+  below);
 - the one range table per database (``range_table``): v4 and v6 pieces
   under one bucket key never share a key, even where the two families'
   raw keys coincide (last section).
@@ -32,6 +35,7 @@ from fluent_plugin_geoip_spark.operators.geolookup import (
     BUCKET_CAP, V4_KEY_BIT, GeoDatabase, expanded_bucket_table,
     expanded_bucket_table_v6, range_table, v4_bucket_layout, v6_bucket_layout,
 )
+from fluent_plugin_geoip_spark.sources.fixtures import world_db
 from fluent_plugin_geoip_spark.sources.mmdb import build_mmdb
 
 
@@ -89,7 +93,7 @@ def _reference_city_latitude(db: GeoDatabase, probes: list[str]):
 
 WIDE = [
     # a /8-class range: hi spans 2^56 addresses → at /32 buckets that is
-    # 2^24 emitted rows, far past 2n+65536 → the loop must coarsen
+    # 2^24 emitted rows, far past 2n → the rule must coarsen
     ("2000::", "20ff:ffff:ffff:ffff:ffff:ffff:ffff:ffff",
      {"city.names.en": "Wide City", "location.latitude": -5.5}),
     # narrow /32 neighbours on both sides of the wide range
@@ -103,32 +107,25 @@ WIDE = [
 def test_v6_coarsening_bounds_expansion(spark):
     db = _mk_db(WIDE)
     df, bits = expanded_bucket_table_v6(spark, db, ["city.names.en"])
-    # the /8-class range spans 2^(bits-8) buckets: 2^24 at /32, 2^20 at
-    # /28 — both past 2n+65536 — and exactly 2^16 at /24, which fits
-    assert bits == 24
+    # the /8-class range spans 2^(bits-8) buckets: 2^24 at /32 down to
+    # 16 at /12 — all past 2n = 6 — and one at /8, which fits; no bucket
+    # at /12 or /8 holds more than BUCKET_CAP pieces
+    assert bits == 8
     n_rows = df.count()
-    assert n_rows <= 2 * len(db.starts6) + 65536
-    # wide range: one row per /24 bucket it intersects; narrows: one each
-    assert n_rows == (1 << 16) + 1 + 1
+    assert n_rows <= 2 * len(db.starts6)
+    # wide range: one /8 bucket; narrows: one each
+    assert n_rows == 1 + 1 + 1
 
 
 def test_v6_coarsening_full_space_and_floor(spark):
     db = _mk_db([("::", "efff:ffff:ffff:ffff:ffff:ffff:ffff:ffff",
                   {"city.names.en": "Everything"})])
     df, bits = expanded_bucket_table_v6(spark, db, ["city.names.en"])
-    # a near-/0 range coarsens until the bound holds: 0xf000 buckets at
-    # /16 is the first level under 2n+65536. (The adaptive loop can in
-    # fact ALWAYS stop by /16: disjoint ranges give Σ(k_i−1) ≤ 2^bits,
-    # so total ≤ n + 65536 ≤ 2n + 65536 — the >4 floor is a pure
-    # defensive backstop, pinned below via the explicit-arg path.)
-    assert bits == 16
-    assert df.count() == 0xF000
-    # explicit prefix_bits=4 (the floor): bucket math must stay correct —
-    # the range spans hi prefixes 0x0..0xe at /4
-    df4, bits4 = expanded_bucket_table_v6(
-        spark, db, ["city.names.en"], prefix_bits=4)
-    assert bits4 == 4
-    assert df4.count() == 15
+    # a near-/0 range is past 2n = 2 rows at every level above the floor
+    # (0xf0 buckets at /8), so the rule stops at /4, where the range
+    # spans hi prefixes 0x0..0xe: bucket math must stay correct there
+    assert bits == 4
+    assert df.count() == 15
 
 
 @pytest.mark.parametrize("probe", [
@@ -269,8 +266,29 @@ def _aliased(tmp_path) -> GeoDatabase:
     return GeoDatabase.from_mmdb(str(path))
 
 
+def _half_cluster() -> GeoDatabase:
+    """In each family a /1 beside 40 ranges in one bucket of the last
+    split level: 40 /30s in 10.2.3.0/24 next to 128.0.0.0/1, and 40 /64s
+    in one /56 next to 8000::/1. The /1 pushes the coarse level past /16,
+    and the cluster stops it there: at /12 one bucket would hold 41
+    pieces. Below /16 the cluster is split at every level, down to /28
+    (three v4 split levels) and /60 (eleven v6 ones)."""
+    hi = 0x2400ABCD00010200
+    pairs = [_v6(1 << 127, 1)] + [_v6((hi | k) << 64, 64) for k in range(40)]
+    db = _mk_db(_named(pairs, "h"))
+    ranges = [(1 << 31, 1 << 31)] + [
+        ((10 << 24) | (2 << 16) | (3 << 8) | (k << 2), 4) for k in range(40)]
+    v4 = GeoDatabase.from_rows(
+        [{"range_start": s, "range_end": s + size - 1,
+          "city.names.en": f"q{k}", "location.latitude": float(k)}
+         for k, (s, size) in enumerate(ranges)], profile="geoip2_c")
+    db.starts, db.ends, db.attrs = v4.starts, v4.ends, v4.attrs
+    return db
+
+
 LAYOUTS = {"dense_48s": _dense_48s, "wide_29": _wide_29, "sub_64": _sub_64,
-           "dense_v4": _dense_v4, "aliased": _aliased}
+           "dense_v4": _dense_v4, "aliased": _aliased, "world": world_db,
+           "half_cluster": _half_cluster}
 
 
 def _build(name, tmp_path) -> GeoDatabase:
@@ -278,10 +296,14 @@ def _build(name, tmp_path) -> GeoDatabase:
     return maker(tmp_path) if name == "aliased" else maker()
 
 
-def _assert_layout_bounds(lay, n: int, coarse_rows: int, finest: int):
+def _assert_layout_bounds(lay, n: int, finest: int):
     if not n:
         assert lay.rows == lay.max_bucket_rows == 0 and not lay.dense
         return
+    # a coarse level below /16 has no split level, so every split level
+    # lies between /16 and the finest one
+    assert lay.coarse_bits >= 16 or not lay.dense
+    assert len(lay.dense) <= (finest - 16) // 4
     keys, counts = np.unique(lay.keys, return_counts=True)
     assert lay.rows == len(lay.keys) and lay.max_bucket_rows == counts.max()
     # refined keys carry level/4 in their top 4 bits; coarse keys 0
@@ -291,6 +313,7 @@ def _assert_layout_bounds(lay, n: int, coarse_rows: int, finest: int):
     assert level.max() == max(split_to, default=0)
     over = counts > BUCKET_CAP
     assert np.all(level[over] == finest), (level[over], counts[over])
+    coarse_rows = max(2 * n, n + 65536)
     assert lay.rows <= coarse_rows + 15 * len(lay.dense) * n / BUCKET_CAP
     # no range has two pieces in one bucket (a left join would duplicate)
     pieces = np.unique(np.stack([lay.idx, lay.keys], axis=1), axis=0)
@@ -301,12 +324,22 @@ def _assert_layout_bounds(lay, n: int, coarse_rows: int, finest: int):
 def test_adversarial_layout_bounds(name, tmp_path):
     db = _build(name, tmp_path)
     n4, n6 = len(db.starts), len(db.starts6)
-    _assert_layout_bounds(v4_bucket_layout(db), n4, n4 + 65536, 32)
-    lay6 = v6_bucket_layout(db)
-    _assert_layout_bounds(lay6, n6, 2 * n6 + 65536, 60)
-    if n6:
-        # every v6 layout here fits the /32 guard: the /29 spans 8 /32s
+    lay4, lay6 = v4_bucket_layout(db), v6_bucket_layout(db)
+    _assert_layout_bounds(lay4, n4, 32)
+    _assert_layout_bounds(lay6, n6, 60)
+    if n6 and name != "half_cluster":
+        # these v6 layouts stay at /32: the /29 spans 8 /32s, ≤ 2n rows
         assert lay6.coarse_bits == 32
+    if name == "world":
+        # 48 /7s: at /8 each is two buckets of one piece, 96 = 2n rows
+        assert lay4.stats() == {"rows": 96, "max_bucket_rows": 1,
+                                "coarse_bits": 8, "split_levels": []}
+    if name == "half_cluster":
+        # the /1 is 2^15 buckets at /16; the cluster keeps it from /12
+        assert (lay4.coarse_bits, lay6.coarse_bits) == (16, 16)
+        assert [b for b, _ in lay4.dense] == [16, 20, 24]
+        assert [b for b, _ in lay6.dense] == list(range(16, 60, 4))
+        assert lay4.max_bucket_rows == 4 and lay6.max_bucket_rows == 16
     if name == "sub_64":
         # the one exception: 50 ranges share a /64 → one /60 bucket
         assert lay6.max_bucket_rows == 50
@@ -319,7 +352,8 @@ def test_adversarial_layout_bounds(name, tmp_path):
         assert lay6.dense[0][1].tolist() == [0x24001234, 0x24001235]
     if name in ("dense_v4", "aliased"):
         # /16 → /20 → /24 → /28: the 64 /30s need three split levels
-        assert [b for b, _ in v4_bucket_layout(db).dense] == [16, 20, 24]
+        assert lay4.coarse_bits == 16
+        assert [b for b, _ in lay4.dense] == [16, 20, 24]
 
 
 def _edge_probes(db: GeoDatabase, aliased: bool) -> list[str]:
@@ -338,7 +372,7 @@ def _edge_probes(db: GeoDatabase, aliased: bool) -> list[str]:
         lo = int.from_bytes(s.ljust(16, b"\x00"), "big")
         hi = int.from_bytes(e.ljust(16, b"\x00"), "big")
         out += [str(ipaddress.IPv6Address(a))
-                for a in (lo, (lo + hi) // 2, hi, hi + 1)]
+                for a in (lo, (lo + hi) // 2, hi, hi + 1) if a < 1 << 128]
     return out
 
 
@@ -357,30 +391,32 @@ def test_adversarial_layout_values(spark, name, tmp_path):
     # table shape reported by the enricher, cross-checked on the tables
     assert set(enr.table_stats) == ({"v4", "v6"} if db.has_ipv6 else {"v4"})
     v4 = expanded_bucket_table(spark, db, ["city.names.en"])
-    tables = {"v4": (v4, "__gb")}
+    tables = {"v4": (v4, "__gb", v4_bucket_layout(db))}
     if db.has_ipv6:
         tables["v6"] = (expanded_bucket_table_v6(
-            spark, db, ["city.names.en"])[0], "__g6b")
-    for tag, (t, col) in tables.items():
+            spark, db, ["city.names.en"])[0], "__g6b", v6_bucket_layout(db))
+    for tag, (t, col, lay) in tables.items():
         peak = t.groupBy(col).count().agg(F.max("count")).first()[0]
-        assert enr.table_stats[tag] == {"rows": t.count(),
-                                        "max_bucket_rows": peak}
+        assert enr.table_stats[tag] == {
+            "rows": t.count(), "max_bucket_rows": peak,
+            "coarse_bits": lay.coarse_bits,
+            "split_levels": [b for b, _ in lay.dense]}
 
 
 # ---------------------------------------------------------------------------
 # one range table per database: the v4 pieces (keys tagged V4_KEY_BIT)
 # and the v6 pieces share one bucket-key column. Raw keys of the two
 # families do coincide: coarse keys are plain prefixes in both, and v6
-# refined tags 5-8 are v4's when the adaptive v6 coarse level is 28 or
-# below. A /60 split gives tag 15 keys whose bit 59 is set.
+# refined tags 5-8 are v4's when the v6 coarse level is 28 or below. A /60 split gives tag 15 keys whose bit 59 is set.
 
 
 def _low_tags() -> GeoDatabase:
     """The dense v4 layout (kept keys at /28, tag 7) beside v6 ranges
-    whose raw keys equal v4 ones: a /8 drives the v6 coarse level to /24;
-    ``8:100::/32`` has the coarse key of v4's 8.1.0.0/16; and 40 /48s in
-    two /28s of ``a02:300::/24`` are split to /28 keys equal to those of
-    10.2.3.16/28 and 10.2.3.32/28."""
+    whose raw keys equal v4 ones: a /8 pushes the v6 coarse level past
+    /32, and the 40 /48s in two /28s of ``a02:300::/24`` stop it at /16
+    (at /12 one bucket would hold them all) and are split to /28 keys
+    (tag 7) equal to those of 10.2.3.16/28 and 10.2.3.32/28: two shared
+    raw keys. ``8:100::/32`` is one more coarse (tag 0) piece."""
     pairs = [("2000::", "20ff:ffff:ffff:ffff:ffff:ffff:ffff:ffff"),
              _v6(0x00080100 << 96, 32)]
     pairs += [_v6((hi << 96) | (k << 80), 48)
@@ -411,8 +447,8 @@ def test_one_table_key_families_disjoint(spark, name):
     db = KEY_SPACES[name]()
     lay4, lay6 = v4_bucket_layout(db), v6_bucket_layout(db)
     n4, n6 = len(db.starts), len(db.starts6)
-    _assert_layout_bounds(lay4, n4, n4 + 65536, 32)
-    _assert_layout_bounds(lay6, n6, 2 * n6 + 65536, 60)
+    _assert_layout_bounds(lay4, n4, 32)
+    _assert_layout_bounds(lay6, n6, 60)
     tags6 = set((lay6.keys.view(np.uint64) >> np.uint64(60)).tolist())
     if name == "low_tags":
         assert lay6.coarse_bits <= 28

@@ -774,7 +774,8 @@ def test_skip_keeps_input_field_of_any_case(spark, dual_db, case_sensitive):
 def test_run_reports_table_stats(spark, dual_db):
     """``run()`` reports the shape of every range table the enrich joins
     probe, per lookup database, and it matches the tables Spark holds:
-    their rows and their largest bucket."""
+    their rows and their largest bucket; and the coarse level and split
+    levels the layout rule chose."""
     from fluent_plugin_geoip_spark.operators.geolookup import (
         expanded_bucket_table, expanded_bucket_table_v6,
     )
@@ -782,11 +783,15 @@ def test_run_reports_table_stats(spark, dual_db):
     tables = {"v4": (expanded_bucket_table(spark, dual_db, ["asn"]), "__gb"),
               "v6": (expanded_bucket_table_v6(spark, dual_db, ["asn"])[0],
                      "__g6b")}
+    # v4: a /16 and a /24 fit 2n rows at /16; v6: the /32 holding the
+    # 40 /48s (2400:cb00:0-27::) is split down to /44
+    levels = {"v4": (16, []), "v6": (32, [32, 36, 40])}
     want = {}
     for tag, (t, col) in tables.items():
         peak = t.groupBy(col).count().agg(F.max("count")).first()[0]
-        want[tag] = {"rows": t.count(), "max_bucket_rows": peak}
-    # the /32 holding the 40 /48s is split deeper
+        want[tag] = {"rows": t.count(), "max_bucket_rows": peak,
+                     "coarse_bits": levels[tag][0],
+                     "split_levels": levels[tag][1]}
     assert want["v6"]["max_bucket_rows"] < 40
     assert res.metrics["table_stats"] == {"city": want, "asn": want}
     v4_only = GeoipPipeline(spark).run(dual_pages(spark))

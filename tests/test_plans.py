@@ -494,5 +494,12 @@ def test_fused_enrich_stage_method_under_jit_limit(spark, tmp_path, kind):
     assert sizes and max(sizes) < 8000, sizes
     stats = pipe.enricher.table_stats
     assert stats["v4"]["max_bucket_rows"] <= 32
+    if kind == "rollup_bigdb":
+        # the /18s fit 2n rows at /16; the 90 % /32 is split twice
+        assert stats["v4"] == {"rows": 8192, "max_bucket_rows": 3,
+                               "coarse_bits": 16, "split_levels": []}
+        assert stats["v6"]["rows"] == 4096
+        assert stats["v6"]["coarse_bits"] == 32
+        assert stats["v6"]["split_levels"] == [32, 36]
     if kind == "deep":
         assert stats["v6"]["max_bucket_rows"] == 50  # one /60 holds them
