@@ -28,15 +28,16 @@ def country_lang_counts(df: DataFrame, country_col: str = "country") -> DataFram
     return df.groupBy(*keys).agg(*aggs)
 
 
-def sink_counts(df: DataFrame, route_col: str = "route_country") -> DataFrame:
-    return df.groupBy(route_col).agg(F.count("*").alias("rows"))
-
-
 def pipeline_metric_columns(country_col: str = "country",
                             ip_col: str = "client_ip") -> list[Column]:
     """rows_total / rows_parsed / rows_enriched / rows_missed counters, for
     ``DataFrame.observe``: they materialize when the observed DataFrame is
-    consumed by an action; read them via ``Observation.get``."""
+    consumed by an action; read them via ``Observation.get``.
+
+    ``rows_parsed`` counts rows whose ``ip_col`` is dotted-quad text; IPv6
+    text is not counted, parsed or not, so on dual-stack input it can read
+    below ``rows_enriched``. ``rows_enriched`` counts rows with a non-null
+    ``country_col``, ``rows_missed`` the rest."""
     return [
         F.count(F.lit(1)).alias("rows_total"),
         F.count(F.when(F.col(ip_col).rlike(r"^\d+\.\d+\.\d+\.\d+$"), 1))

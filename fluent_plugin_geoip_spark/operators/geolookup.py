@@ -43,12 +43,6 @@ GEOIP2_COMPAT_KEYS = [
 ]
 BACKEND_LIBRARIES = ("geoip", "geoip2_compat", "geoip2_c")
 
-# dtypes for flat-backend attrs (README.md:341-342: dma/area are ints).
-_FLAT_DTYPES = {
-    "latitude": "double", "longitude": "double",
-    "dma_code": "int", "area_code": "int",
-}
-
 _SPARK_TYPES = {
     "string": T.StringType(),
     "double": T.DoubleType(),
@@ -116,14 +110,22 @@ def _db_cache_put(key: tuple, db: "GeoDatabase") -> None:
 
 @dataclass
 class GeoDatabase:
-    """Sorted, non-overlapping IPv4 range table with per-range attributes.
+    """A database's sorted, non-overlapping IPv4 and IPv6 range tables with
+    per-range attributes.
 
-    ``attrs`` maps canonical attr dot-paths (e.g. ``city.names.en``,
-    ``location.latitude`` for the geoip2_c profile; flat keys like ``city``
-    for geoip/geoip2_compat) to per-range value arrays. A path absent from
-    ``attrs`` resolves to null for every range — mirroring geoip2_c's
-    "any field may be dug, missing digs return nil" semantics
-    (filter_geoip.rb:96-99, 187-202).
+    ``starts``/``ends`` are the int64 IPv4 bounds; ``starts6``/``ends6``
+    the IPv6 ones, 16-byte big-endian ('S16' NumPy arrays: lexicographic
+    order is numeric order), empty for a v4-only database. ``attrs`` and
+    ``attrs6`` map canonical attr dot-paths (e.g. ``city.names.en``,
+    ``location.latitude`` for the geoip2_c profile; flat keys like
+    ``city`` for geoip/geoip2_compat) to each family's per-range value
+    arrays, under one ``dtypes`` map. A path absent from ``attrs``
+    resolves to null for every range — mirroring geoip2_c's "any field may
+    be dug, missing digs return nil" semantics (filter_geoip.rb:96-99,
+    187-202).
+
+    Every loader goes through one builder, :meth:`_build`, and both
+    driver-side lookups through one locate step, :meth:`_locate`.
     """
 
     profile: str
@@ -131,9 +133,6 @@ class GeoDatabase:
     ends: np.ndarray
     attrs: dict[str, np.ndarray]
     dtypes: dict[str, str] = field(default_factory=dict)
-    # optional native-IPv6 table: sorted 16-byte big-endian bounds ('S16'
-    # numpy arrays — lexicographic order == numeric order) + per-range attr
-    # arrays sharing the same dtype map. Empty for v4-only databases.
     starts6: np.ndarray = field(
         default_factory=lambda: np.array([], dtype="S16"))
     ends6: np.ndarray = field(
@@ -145,43 +144,73 @@ class GeoDatabase:
         return len(self.starts6) > 0
 
     @classmethod
-    def from_rows(cls, rows: list[dict], profile: str = "geoip2_c",
-                  dtypes: dict[str, str] | None = None) -> "GeoDatabase":
-        """Build from dicts with ``range_start``/``range_end`` + attr values."""
+    def _build(cls, profile: str, docs: list[dict], dtypes: dict[str, str],
+               v4: tuple, v6: tuple | None = None) -> "GeoDatabase":
+        """The one builder. ``docs`` holds one flat attr dict per record;
+        ``v4`` / ``v6`` are a family's (starts, ends, record row) arrays,
+        in any order. ``dtypes`` names known attr dtypes; the others come
+        from :func:`attr_dtype`.
+
+        Each attr column is built once per record, and every per-range
+        array is that column indexed by the family's record rows. Both
+        families are sorted and checked (no range ending before it
+        starts, no overlap) by the same code. Each family carries every
+        attr key of ``docs``, all-null where its own records lack it; a
+        family with no ranges carries none."""
         if profile not in BACKEND_LIBRARIES:
             raise ValueError(f"unknown backend profile: {profile}")
-        rows = sorted(rows, key=lambda r: r["range_start"])
-        starts = np.array([r["range_start"] for r in rows], dtype=np.int64)
-        ends = np.array([r["range_end"] for r in rows], dtype=np.int64)
-        if np.any(ends < starts):
-            raise ValueError("range_end < range_start")
-        if len(starts) > 1 and np.any(starts[1:] <= ends[:-1]):
-            raise ValueError("overlapping IP ranges")
-        keys: list[str] = sorted({k for r in rows for k in r} - {"range_start", "range_end"})
-        dtypes = dict(dtypes or {})
-        attrs: dict[str, np.ndarray] = {}
-        for k in keys:
-            dt = dtypes.get(k) or attr_dtype(profile, k)
-            dtypes[k] = dt
-            vals = [r.get(k) for r in rows]
-            if dt == "double":
-                attrs[k] = np.array([np.nan if v is None else float(v) for v in vals],
-                                    dtype=np.float64)
-            else:
-                attrs[k] = np.array(vals, dtype=object)
-        return cls(profile=profile, starts=starts, ends=ends, attrs=attrs, dtypes=dtypes)
+        cols: dict[str, np.ndarray] = {}
+        for k in sorted({k for d in docs for k in d}):
+            dt = dtypes[k] = dtypes.get(k) or attr_dtype(profile, k)
+            vals = [d.get(k) for d in docs]
+            cols[k] = (np.array([np.nan if v is None else float(v) for v in vals],
+                                dtype=np.float64)
+                       if dt == "double" else np.array(vals, dtype=object))
+
+        def family(starts, ends, rows):
+            order = np.argsort(starts, kind="stable")
+            starts, ends, rows = starts[order], ends[order], rows[order]
+            if np.any(ends < starts):
+                raise ValueError("range_end < range_start")
+            if np.any(starts[1:] <= ends[:-1]):
+                raise ValueError("overlapping IP ranges")
+            return starts, ends, (
+                {k: c[rows] for k, c in cols.items()} if len(rows) else {})
+
+        starts, ends, attrs = family(*v4)
+        db = cls(profile=profile, starts=starts, ends=ends, attrs=attrs,
+                 dtypes=dtypes)
+        if v6 is not None:
+            db.starts6, db.ends6, db.attrs6 = family(*v6)
+        return db
+
+    @classmethod
+    def from_rows(cls, rows: list[dict], profile: str = "geoip2_c",
+                  dtypes: dict[str, str] | None = None) -> "GeoDatabase":
+        """Build from dicts with ``range_start``/``range_end`` + attr values,
+        one record per row."""
+        docs = [{k: v for k, v in r.items() if k not in ("range_start", "range_end")}
+                for r in rows]
+        v4 = (np.array([r["range_start"] for r in rows], dtype=np.int64),
+              np.array([r["range_end"] for r in rows], dtype=np.int64),
+              np.arange(len(docs)))
+        return cls._build(profile, docs, dict(dtypes or {}), v4)
 
     @classmethod
     def from_mmdb(cls, path: str, profile: str = "geoip2_c") -> "GeoDatabase":
         """Load a real MaxMind database file (the reference's primary config
         surface: ``geoip2_database``, filter_geoip.rb:41-43, 204-217).
 
-        The .mmdb tree is walked once on the driver into sorted IPv4 range
-        arrays (``sources.mmdb``, a from-scratch reader of the public spec);
-        nested docs flatten to the dot-path attrs the placeholder DSL digs.
-        ``profile='geoip2_compat'`` additionally applies the compat gem's
-        flat-key mapping. The legacy ``geoip`` backend reads GeoCityLite
-        .dat, a different format — not supported; use ``from_rows``.
+        The .mmdb tree is walked once on the driver (``sources.mmdb``, a
+        from-scratch reader of the public spec), the IPv4 subtree and the
+        native-IPv6 networks each into one range family. Each distinct
+        data record, whichever family meets it first, is decoded and
+        flattened once, to the dot-path attrs the placeholder DSL digs;
+        ``profile='geoip2_compat'`` then applies the compat gem's flat-key
+        mapping. Dtypes follow the values: a key holding both ints and
+        floats is double, one holding any other mix is string. The legacy
+        ``geoip`` backend reads GeoCityLite .dat, a different format — use
+        ``from_dat``.
         """
         from ..sources.mmdb import MMDBReader, flatten_doc
         if profile == "geoip":
@@ -195,18 +224,20 @@ class GeoDatabase:
             return cached
         reader = MMDBReader.open(path)
 
-        def project(doc: dict) -> dict:
-            flat = flatten_doc(doc)
+        def decode(rec: int) -> dict:
+            flat = flatten_doc(reader.record_data(rec))
             if profile == "geoip2_compat":
                 flat = {k: flat.get(p) for k, p in COMPAT_FROM_NESTED.items()
                         if flat.get(p) is not None}
             return flat
 
-        ranges4 = [(s, e, project(d)) for s, e, d in reader.iter_ipv4_ranges()]
-        ranges6 = [(s, e, project(d)) for s, e, d in reader.iter_ipv6_ranges()]
+        seen: dict = {}
+        v4 = _record_ranges(reader._ipv4_records(), seen, decode, np.int64)
+        v6 = _record_ranges(reader._ipv6_records(), seen, decode, "S16")
+        docs = [doc for _, doc in seen.values()]
         dtypes: dict[str, str] = {}
-        for _, _, flat in ranges4 + ranges6:
-            for k, v in flat.items():
+        for doc in docs:
+            for k, v in doc.items():
                 if isinstance(v, bool):
                     dt = "boolean"
                 elif isinstance(v, float):
@@ -216,36 +247,14 @@ class GeoDatabase:
                 else:
                     dt = "string"
                 if dtypes.setdefault(k, dt) != dt:
-                    # mixed int/float across ranges → double; else stringify
+                    # mixed int/float across records → double; else stringify
                     dtypes[k] = ("double" if {dtypes[k], dt} == {"long", "double"}
                                  else "string")
-
-        def norm(v, dt):
-            if dt == "double" and isinstance(v, (int, float)) \
-                    and not isinstance(v, bool):
-                return float(v)
-            if dt == "string" and v is not None and not isinstance(v, str):
-                return str(v)
-            return v
-
-        rows = []
-        for start, end, flat in ranges4:
-            row: dict = {"range_start": start, "range_end": end}
-            for k, v in flat.items():
-                row[k] = norm(v, dtypes[k])
-            rows.append(row)
-        db = cls.from_rows(rows, profile=profile, dtypes=dtypes)
-        if ranges6:
-            ranges6.sort(key=lambda r: r[0])
-            db.starts6 = np.array([s for s, _, _ in ranges6], dtype="S16")
-            db.ends6 = np.array([e for _, e, _ in ranges6], dtype="S16")
-            for k, dt in dtypes.items():
-                vals = [norm(f.get(k), dt) for _, _, f in ranges6]
-                if dt == "double":
-                    db.attrs6[k] = np.array(
-                        [np.nan if v is None else v for v in vals], dtype=np.float64)
-                else:
-                    db.attrs6[k] = np.array(vals, dtype=object)
+        # the builder makes every double a float; stringify the rest here
+        docs = [{k: str(v) if dtypes[k] == "string" and v is not None
+                 and not isinstance(v, str) else v for k, v in doc.items()}
+                for doc in docs]
+        db = cls._build(profile, docs, dtypes, v4, v6)
         _db_cache_put(key, db)
         return db
 
@@ -257,10 +266,11 @@ class GeoDatabase:
 
         The binary tree is walked once on the driver into the sorted range
         arrays (``sources.dat``, a from-scratch reader of the public legacy
-        format); attrs are the flat legacy keys with the C library's
-        single-precision coordinates (the reference's 37.4192008972168
-        golden, test_filter_geoip.rb:1024-1027). Always profile ``geoip``
-        (the whitelist the reference enforces for this backend, rb:93-95).
+        format), each distinct record decoded once; attrs are the flat
+        legacy keys with the C library's single-precision coordinates (the
+        reference's 37.4192008972168 golden, test_filter_geoip.rb:1024-1027).
+        Always profile ``geoip`` (the whitelist the reference enforces for
+        this backend, rb:93-95).
         """
         from ..sources.dat import DATReader
         key = _db_cache_key(path, "geoip")
@@ -268,44 +278,63 @@ class GeoDatabase:
         if cached is not None:
             return cached
         reader = DATReader.open(path)
-        rows = [{"range_start": s, "range_end": e, **attrs}
-                for s, e, attrs in reader.iter_ipv4_ranges()]
-        db = cls.from_rows(rows, profile="geoip")
+        seen: dict = {}
+        v4 = _record_ranges(reader._records(), seen, reader.record_attrs,
+                            np.int64)
+        db = cls._build("geoip", [doc for _, doc in seen.values()], {}, v4)
         _db_cache_put(key, db)
         return db
 
     def attr_type(self, attr_path: str) -> str:
         return attr_dtype(self.profile, attr_path, self.dtypes)
 
+    def _locate(self, ips: pd.Series) -> tuple[np.ndarray, ...]:
+        """The one address → range step of the driver-side lookups:
+        ``(hit4, hit6, pos)``, whether each address hits the v4 or the v6
+        table and the position of its range there.
+
+        v4 text probes the v4 table. When the database has a v6 table, v6
+        text probes it, except addresses in the v4 subtree — v4-mapped
+        ``::ffff:a.b.c.d`` and IPv4-compatible ``::a.b.c.d`` (first 96 bits
+        zero) — which probe the v4 table: libmaxminddb walks the tree, so
+        both prefixes land on the IPv4 data, and ``iter_ipv6_ranges``
+        leaves ::/96 out of the v6 table for the same reason.
+
+        Scale note (round-4 VERDICT finding 3): a vectorized ``':'``
+        pre-mask picks the candidate rows, so the per-row ``inet_pton``
+        loop touches ONLY v6-shaped strings — on a v4-majority workload the
+        Python loop is proportional to the v6 fraction, not the batch."""
+        import socket
+        values, valid = ipv4_to_uint32(ips)
+        keys6 = np.zeros(len(values), dtype="S16")
+        valid6 = np.zeros(len(values), dtype=bool)
+        if self.has_ipv6 and len(values):
+            s = ips.reset_index(drop=True)
+            cand = s.astype("string").str.contains(":", regex=False)
+            for i in np.flatnonzero(cand.to_numpy(dtype="bool", na_value=False)):
+                try:
+                    b = socket.inet_pton(socket.AF_INET6, s.iloc[int(i)])
+                except (OSError, TypeError):
+                    continue
+                if b[:10] == bytes(10) and b[10:12] in (b"\xff\xff", b"\x00\x00"):
+                    values[i], valid[i] = int.from_bytes(b[12:], "big"), True
+                else:
+                    keys6[i], valid6[i] = b, True
+        hit4, pos4 = _probe(self.starts, self.ends, values, valid)
+        hit6, pos6 = _probe(self.starts6, self.ends6, keys6, valid6)
+        return hit4, hit6, np.where(hit6, pos6, pos4)
+
     def lookup_doc(self, ip: str):
         """Driver-side single-IP probe returning the full raw document
         (nested for geoip2_c, flat for the compat profiles) — the dump CLI's
-        counterpart of the reference's utils/dump.rb:18-27. Handles both
-        IPv4 and (when the DB carries a v6 table) IPv6 addresses; returns
-        None on a miss."""
-        attrs, i = self.attrs, -1
-        if ":" in ip and self.has_ipv6:
-            idx, keys, v4map = self._parse_v6(pd.Series([ip]))
-            if v4map:
-                return self.lookup_doc(
-                    ".".join(str(b) for b in v4map[0][1].to_bytes(4, "big")))
-            if not idx:
-                return None
-            k = np.array(keys, dtype="S16")
-            i = int(np.searchsorted(self.starts6, k[0], side="right")) - 1
-            if i < 0 or self.ends6[i] < k[0]:
-                return None
-            attrs = self.attrs6
-        else:
-            values, valid = ipv4_to_uint32(pd.Series([ip]))
-            if not valid[0] or len(self.starts) == 0:
-                return None
-            i = int(np.searchsorted(self.starts, values[0], side="right")) - 1
-            if i < 0 or self.ends[i] < values[0]:
-                return None
+        counterpart of the reference's utils/dump.rb:18-27. Routes the
+        address as :meth:`_locate` does; returns None on a miss."""
+        hit4, hit6, pos = self._locate(pd.Series([ip]))
+        if not (hit4[0] or hit6[0]):
+            return None
         flat = {}
-        for k, arr in attrs.items():
-            v = arr[i]
+        for k, arr in (self.attrs6 if hit6[0] else self.attrs).items():
+            v = arr[pos[0]]
             if v is None or (isinstance(v, float) and np.isnan(v)):
                 continue
             flat[k] = v.item() if isinstance(v, np.generic) else v
@@ -316,118 +345,54 @@ class GeoDatabase:
 
     def lookup_batch(self, ips: pd.Series, attr_paths: list[str]) -> pd.DataFrame:
         """Probe a batch of address strings: ``__hit__`` + one column per
-        attr. IPv4 goes through the vectorized uint32 path; when the
-        database carries a v6 table, addresses containing ``:`` probe it
-        (v4-mapped ``::ffff:a.b.c.d`` text maps onto the v4 space, matching
-        libmaxminddb's behavior in the reference backend)."""
-        values, valid = ipv4_to_uint32(ips)
-        if not self.has_ipv6:
-            return self.lookup_batch_ints(values, valid, attr_paths)
-        idx6, keys6, v4map = self._parse_v6(ips)
-        for i, u32 in v4map:  # v4-mapped text probes the v4 table
-            values[i] = u32
-            valid[i] = True
-        out = self.lookup_batch_ints(values, valid, attr_paths)
-        self._overlay_v6(out, idx6, keys6, attr_paths)
-        return out
-
-    def _parse_v6(self, ips: pd.Series):
-        """Indices + packed 16-byte keys of parseable IPv6 strings; addresses
-        living in the v4 subtree — v4-mapped ``::ffff:a.b.c.d`` AND
-        IPv4-compatible ``::a.b.c.d`` (first 96 bits zero) — are returned
-        separately as (positional index, uint32). libmaxminddb walks the
-        tree, so both prefixes land on the IPv4 data; ``iter_ipv6_ranges``
-        excludes ::/96 from the v6 table for the same reason.
-
-        Scale note (round-4 VERDICT finding 3): a vectorized ``':'``
-        pre-mask picks the candidate rows, so the per-row ``inet_pton``
-        loop touches ONLY v6-shaped strings — on a v4-majority workload the
-        Python loop is proportional to the v6 fraction, not the batch."""
-        import socket
-        idx, keys, v4map = [], [], []
-        if len(ips) == 0:
-            return idx, keys, v4map
-        s = ips.reset_index(drop=True)
-        cand = s.astype("string").str.contains(":", regex=False)
-        for i in np.flatnonzero(cand.to_numpy(dtype="bool", na_value=False)):
-            try:
-                b = socket.inet_pton(socket.AF_INET6, s.iloc[int(i)])
-            except (OSError, TypeError):
-                continue
-            if b[:10] == b"\x00" * 10 and b[10:12] in (b"\xff\xff", b"\x00\x00"):
-                v4map.append((int(i), int.from_bytes(b[12:], "big")))
-            else:
-                idx.append(int(i))
-                keys.append(b)
-        return idx, keys, v4map
-
-    def _overlay_v6(self, out: pd.DataFrame, idx: list[int],
-                    keys: list[bytes], attr_paths: list[str]) -> None:
-        """Overwrite rows whose address hits the native-IPv6 table."""
-        if not idx:
-            return
-        k = np.array(keys, dtype="S16")
-        pos = np.searchsorted(self.starts6, k, side="right") - 1
-        posc = np.clip(pos, 0, len(self.starts6) - 1)
-        hit = (pos >= 0) & (self.ends6[posc] >= k)
-        rows = [r for r, h in zip(idx, hit) if h]
-        if not rows:
-            return
-        hpos = posc[hit]
-        out.loc[rows, "__hit__"] = True
-        for p in attr_paths:
-            arr = self.attrs6.get(p)
-            name = sanitize_attr(p)
-            if arr is None:
-                continue  # stays null
-            vals = arr[hpos]
-            dt = self.attr_type(p)
-            if dt == "double":
-                vals = [None if (v is None or (isinstance(v, float) and np.isnan(v)))
-                        else float(v) for v in vals]
-            elif dt in ("int", "long"):
-                vals = [None if v is None else int(v) for v in vals]
-            out.loc[rows, name] = pd.Series(vals, index=rows, dtype=out[name].dtype)
-
-    def lookup_batch_ints(self, values: np.ndarray, valid: np.ndarray,
-                          attr_paths: list[str]) -> pd.DataFrame:
-        n = len(values)
-        if len(self.starts) == 0:
-            hit = np.zeros(n, dtype=bool)
-            idx = np.zeros(n, dtype=np.int64)
-        else:
-            idx = np.searchsorted(self.starts, values, side="right") - 1
-            idx_c = np.clip(idx, 0, len(self.starts) - 1)
-            hit = valid & (idx >= 0) & (self.ends[idx_c] >= values)
-            idx = idx_c
-        out: dict[str, object] = {"__hit__": hit}
+        attr (Float64 for doubles, Int64 for ints and longs, object
+        otherwise; null on a miss). Addresses route as :meth:`_locate`
+        does; a v4-mapped ``::ffff:a.b.c.d`` maps onto the v4 space,
+        matching libmaxminddb's behavior in the reference backend."""
+        hit4, hit6, pos = self._locate(ips)
+        out: dict[str, object] = {"__hit__": hit4 | hit6}
         for p in attr_paths:
             dt = self.attr_type(p)
-            arr = self.attrs.get(p)
-            name = sanitize_attr(p)
-            if arr is None:
-                if dt == "double":
-                    out[name] = pd.array([None] * n, dtype="Float64")
-                elif dt in ("int", "long"):
-                    out[name] = pd.array([None] * n, dtype="Int64")
-                else:
-                    out[name] = pd.array([None] * n, dtype=object)
-                continue
-            g = arr[idx] if n else arr[:0]
+            vals = (np.full(len(pos), np.nan) if dt == "double"
+                    else np.full(len(pos), None, dtype=object))
+            for hit, attrs in ((hit4, self.attrs), (hit6, self.attrs6)):
+                if p in attrs:
+                    vals[hit] = attrs[p][pos[hit]]
             if dt == "double":
-                vals = pd.array(g, dtype="Float64")
-                vals[~hit | np.isnan(arr[idx] if n else np.zeros(0))] = None
-                out[name] = vals
+                col = pd.array(vals, dtype="Float64")  # NaN → null
             elif dt in ("int", "long"):
-                vals = pd.array(
-                    [None if (not h or v is None) else int(v) for h, v in zip(hit, g)],
-                    dtype="Int64")
-                out[name] = vals
+                col = pd.array([None if v is None else int(v) for v in vals],
+                               dtype="Int64")
             else:
-                vals = g.copy() if n else np.array([], dtype=object)
-                vals[~hit] = None
-                out[name] = pd.array(vals, dtype=object)
+                col = pd.array(vals, dtype=object)
+            out[sanitize_attr(p)] = col
         return pd.DataFrame(out)
+
+
+def _record_ranges(walk, seen: dict, decode, dtype) -> tuple[np.ndarray, ...]:
+    """(starts, ends, record rows) arrays of one family's ``(start, end,
+    record)`` walk, for :meth:`GeoDatabase._build`. ``seen`` maps each
+    walk record met so far, in either family, to its (row, decoded doc):
+    a record is decoded once, when first met. Keyed on the walk's record
+    value, not on a doc's ``id()``, which a freed doc hands on."""
+    ranges = []
+    for start, end, rec in walk:
+        if rec not in seen:
+            seen[rec] = (len(seen), decode(rec))
+        ranges.append((start, end, seen[rec][0]))
+    starts, ends, rows = zip(*ranges) if ranges else ((), (), ())
+    return (np.array(starts, dtype=dtype), np.array(ends, dtype=dtype),
+            np.array(rows, dtype=np.int64))
+
+
+def _probe(starts: np.ndarray, ends: np.ndarray, keys: np.ndarray,
+           valid: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(hit, position) of the range holding each key in one sorted,
+    disjoint family: one ``searchsorted``."""
+    if len(starts) == 0:
+        return np.zeros(len(keys), dtype=bool), np.zeros(len(keys), dtype=np.int64)
+    pos = np.searchsorted(starts, keys, side="right") - 1
+    return valid & (pos >= 0) & (ends[pos] >= keys), pos
 
 
 _PA_TYPES = {"string": "string", "double": "float64", "int": "int32",

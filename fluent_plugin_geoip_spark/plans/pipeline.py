@@ -61,7 +61,10 @@ class PipelineResult:
     (``COUNTS_SCHEMA``). It holds the already-computed rollup, so reading
     it runs no job and starts no Python worker; it is not cached and
     needs no ``unpersist``. ``metrics``: the observed row counters (with
-    ``collect_metrics``), ``plan_build_s`` and ``table_stats``, the shape
+    ``collect_metrics``; ``aggregate.pipeline_metric_columns``:
+    ``rows_parsed`` counts dotted-quad ``client_ip`` text only, so on
+    dual-stack input it can read below ``rows_enriched``), ``plan_build_s``
+    and ``table_stats``, the shape
     of each expanded range table the enrich joins probe:
     ``{"city": {"v4": {"rows", "max_bucket_rows", "coarse_bits",
     "split_levels"}, "v6": ...}}`` (the coarse level and split levels the
@@ -156,10 +159,9 @@ class GeoipPipeline:
             enriched = enriched.observe(obs, *self._metrics)
         manifest = {}
         if out_dir is not None:
-            frame = enriched.drop("access")
             plan_build_s = time.perf_counter() - t0
             manifest, stats = route_and_write(
-                frame, out_dir, resume=resume, stat_cols=("lang",),
+                enriched, out_dir, resume=resume, stat_cols=("lang",),
                 audit=audit)
             # counts derive from the SAME lineage aggregate (no extra scan);
             # on resume the stats cover only partitions written this run

@@ -357,6 +357,18 @@ class DATReader:
         the tree, disjoint, in no particular order; records are decoded once
         per distinct data offset."""
         attr_cache: dict[int, dict] = {}
+        for start, end, rec in self._records():
+            if rec not in attr_cache:
+                attr_cache[rec] = self.record_attrs(rec)
+            # an empty attrs dict is still a HIT (a record whose fields
+            # are all absent — the reference's lat/lon-0.0-on-nil
+            # scenario, test_filter_geoip.rb:456-480)
+            yield start, end, attr_cache[rec]
+
+    def _records(self):
+        """The walk behind :meth:`iter_ipv4_ranges`: ``(range_start,
+        range_end, record)``, with the tree's terminal value (one per data
+        record) in place of the decoded attrs."""
         stack: list[tuple[int, int, int]] = [(0, 0, 0)]  # node, prefix, depth
         while stack:
             n, prefix, depth = stack.pop()
@@ -368,14 +380,8 @@ class DATReader:
                 if rec < self.segments:
                     stack.append((rec, child_prefix, depth + 1))
                 elif rec > self.segments:
-                    if rec not in attr_cache:
-                        attr_cache[rec] = self.record_attrs(rec)
-                    # an empty attrs dict is still a HIT (a record whose
-                    # fields are all absent — the reference's lat/lon-
-                    # 0.0-on-nil scenario, test_filter_geoip.rb:456-480)
                     span = 1 << (32 - (depth + 1))
-                    yield (child_prefix, child_prefix + span - 1,
-                           attr_cache[rec])
+                    yield child_prefix, child_prefix + span - 1, rec
                 # rec == segments → miss, nothing to emit
 
     def lookup(self, ip_int: int) -> dict | None:

@@ -254,10 +254,30 @@ class MMDBReader:
         """Yield ``(range_start, range_end, nested_doc)`` for every IPv4
         network in the tree, disjoint and in no particular order. Records
         are decoded once per distinct data offset."""
+        return self._decoded(self._ipv4_records())
+
+    def iter_ipv6_ranges(self):
+        """Yield ``(start_bytes16, end_bytes16, nested_doc)`` for every
+        native-IPv6 network, EXCLUDING the ::/96 IPv4 subtree (covered by
+        ``iter_ipv4_ranges``) and skipping aliased subtrees (GeoLite2 points
+        2002::/16 / ::ffff:0:0/96 etc. back at the IPv4 subtree — node reuse
+        is detected with a visited set so each network is yielded once)."""
+        return self._decoded(self._ipv6_records())
+
+    def _decoded(self, walk):
+        docs: dict[int, dict] = {}
+        for start, end, rec in walk:
+            if rec not in docs:
+                docs[rec] = self.record_data(rec)
+            yield start, end, docs[rec]
+
+    def _ipv4_records(self):
+        """The walk behind :meth:`iter_ipv4_ranges`: ``(range_start,
+        range_end, record)``, with the tree's record value (one per data
+        record) in place of the decoded doc."""
         root = self._ipv4_root()
         if root is None:
             return
-        doc_cache: dict[int, dict] = {}
         stack: list[tuple[int, int, int]] = [(root, 0, 0)]  # node, prefix, depth
         while stack:
             node, prefix, depth = stack.pop()
@@ -271,20 +291,14 @@ class MMDBReader:
                 if rec < self.node_count:
                     stack.append((rec, child_prefix, depth + 1))
                 else:
-                    if rec not in doc_cache:
-                        doc_cache[rec] = self.record_data(rec)
                     span = 1 << (32 - (depth + 1))
-                    yield child_prefix, child_prefix + span - 1, doc_cache[rec]
+                    yield child_prefix, child_prefix + span - 1, rec
 
-    def iter_ipv6_ranges(self):
-        """Yield ``(start_bytes16, end_bytes16, nested_doc)`` for every
-        native-IPv6 network, EXCLUDING the ::/96 IPv4 subtree (covered by
-        ``iter_ipv4_ranges``) and skipping aliased subtrees (GeoLite2 points
-        2002::/16 / ::ffff:0:0/96 etc. back at the IPv4 subtree — node reuse
-        is detected with a visited set so each network is yielded once)."""
+    def _ipv6_records(self):
+        """The walk behind :meth:`iter_ipv6_ranges`: ``(start_bytes16,
+        end_bytes16, record)``."""
         if self.ip_version != 6:
             return
-        doc_cache: dict[int, dict] = {}
         # the IPv4 subtree (under the 96-zero spine) is enumerated by
         # iter_ipv4_ranges; collect its node set so aliases pointing back at
         # it (GeoLite2 aliases 2002::/16, ::ffff:0:0/96, … to the v4 space)
@@ -316,15 +330,13 @@ class MMDBReader:
                         continue  # the v4 subtree itself, or an alias to it
                     walk.append((rec, child_prefix, depth + 1))
                 else:
-                    if rec not in doc_cache:
-                        doc_cache[rec] = self.record_data(rec)
                     plen = depth + 1
                     start = child_prefix << (128 - plen)
                     end = start + (1 << (128 - plen)) - 1
                     if end < (1 << 32):
                         continue  # inside ::/96 → IPv4-embedded, not native v6
                     yield (start.to_bytes(16, "big"), end.to_bytes(16, "big"),
-                           doc_cache[rec])
+                           rec)
 
 
 def flatten_doc(doc, prefix: str = "") -> dict:

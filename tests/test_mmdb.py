@@ -391,6 +391,44 @@ def test_int32_short_width_decodes_unsigned():
     assert decode_value(blob0, 0)[0] == 0
 
 
+@pytest.mark.parametrize("profile", ["geoip2_c", "geoip2_compat"])
+def test_from_mmdb_flattens_each_record_once(tmp_path, monkeypatch, profile):
+    """N ranges sharing K << N records: ``from_mmdb`` flattens each data
+    record once, in whichever family meets it first, and every range of
+    both families reads its own record's values."""
+    import ipaddress
+
+    from fluent_plugin_geoip_spark.sources import mmdb
+    k, n4, n6 = 5, 120, 40
+    docs = [{"country": {"iso_code": f"C{j}"}, "asn": 64500 + j,
+             "location": {"latitude": float(j)}} for j in range(k)]
+    v4 = [f"10.{i // 256}.{i % 256}.0" for i in range(n4)]
+    v6 = [str(ipaddress.IPv6Address((0x2400 << 112) | (i << 80)))
+          for i in range(n6)]
+    nets = ([(f"{a}/24", docs[i % k]) for i, a in enumerate(v4)]
+            + [(f"{a}/48", docs[(3 * i + 1) % k]) for i, a in enumerate(v6)])
+    path = tmp_path / "shared.mmdb"
+    path.write_bytes(build_mmdb(nets))
+    calls = []
+    flatten = mmdb.flatten_doc
+
+    def counting(doc, prefix=""):
+        if not prefix:  # the top-level call, not flatten_doc's recursion
+            calls.append(1)
+        return flatten(doc, prefix)
+
+    monkeypatch.setattr(mmdb, "flatten_doc", counting)
+    db = GeoDatabase.from_mmdb(str(path), profile=profile)
+    assert len(calls) == k
+    assert (len(db.starts), len(db.starts6)) == (n4, n6)
+    attr = "country.iso_code" if profile == "geoip2_c" else "country_code"
+    out = db.lookup_batch(pd.Series(v4 + v6), [attr])
+    assert out["__hit__"].all()
+    want = [f"C{i % k}" for i in range(n4)] + [
+        f"C{(3 * i + 1) % k}" for i in range(n6)]
+    assert out[attr.replace(".", "_")].tolist() == want
+
+
 def test_ipv6_dump_doc(v6_mmdb_path):
     db = GeoDatabase.from_mmdb(v6_mmdb_path)
     assert db.lookup_doc("2001:db8::42")["country"]["iso_code"] == "V6"

@@ -473,14 +473,36 @@ def _deep_nets() -> list:
     return nets
 
 
-@pytest.mark.parametrize("kind", ["rollup_bigdb", "deep"])
+def _half_cluster_nets() -> list:
+    """``half_cluster`` of tests/test_geolookup_expand.py as a database
+    file: in each family a /1 beside 40 ranges in one bucket of the last
+    split level (v4 /16 with three split levels, v6 /16 with eleven)."""
+    import ipaddress
+    nets = [("128.0.0.0/1", _net_doc("H", 0))]
+    nets += [(f"10.2.3.{4 * k}/30", _net_doc("H", 1 + k)) for k in range(40)]
+    nets += [("8000::/1", _net_doc("H", 41))]
+    hi = 0x2400ABCD00010200
+    nets += [(f"{ipaddress.IPv6Address((hi | k) << 64)}/64",
+              _net_doc("H", 42 + k)) for k in range(40)]
+    return nets
+
+
+_NETS = {"rollup_bigdb": _rollup_bigdb_nets, "deep": _deep_nets,
+         "half_cluster": _half_cluster_nets}
+
+
+@pytest.mark.parametrize("kind", ["rollup_bigdb", "deep", pytest.param(
+    "half_cluster", marks=pytest.mark.xfail(strict=True, reason=(
+        "largest method 8,389 bytes: each split level nests one more CASE "
+        "WHEN in the probe key (ROADMAP item 2)")))])
 def test_fused_enrich_stage_method_under_jit_limit(spark, tmp_path, kind):
     """The fused city + ASN enrich stage's largest generated method stays
     under HotSpot's 8,000-byte limit (a larger method is never
     JIT-compiled and the stage runs interpreted), on the benchmark's
-    rollup database and on a database with the deepest split levels."""
+    rollup database, on a database with the deepest split levels, and on
+    one split at every level below /16 in both families."""
     import re
-    nets = _rollup_bigdb_nets() if kind == "rollup_bigdb" else _deep_nets()
+    nets = _NETS[kind]()
     pipe = _dual_stack_pipeline(spark, tmp_path, nets)
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
