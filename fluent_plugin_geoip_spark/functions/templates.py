@@ -36,16 +36,9 @@ from ..config import (
     RE_PLACEHOLDER_SCAN, RE_PLACEHOLDER_SINGLE, GeoipConfigError,
     is_json_template,
 )
+from ..operators.geolookup import _SPARK_TYPES
 
 log = logging.getLogger(__name__)
-
-_SPARK_TYPES = {
-    "string": T.StringType(),
-    "double": T.DoubleType(),
-    "int": T.IntegerType(),
-    "long": T.LongType(),
-    "boolean": T.BooleanType(),
-}
 
 
 def _ruby_float_repr(v: float) -> str:

@@ -85,8 +85,9 @@ class EnrichPlan:
       the plan's j-th distinct key and materialized once however many
       databases probe it: ``__ip_<j>`` (the v4 parse) and, where a
       v6-capable database probes the key, ``__ip6_<j>`` (the v6 parse),
-      ``__ip4e_<j>`` (the v4 word, mapped and compat text folded) and
-      ``__ip6h_<j>`` (the native-v6 high half);
+      ``__ip4e_<j>`` (the v4 word, mapped and compat text folded),
+      ``__ip6h_<j>`` (the native-v6 high half) and, for a join whose
+      range table has split buckets, its probe key ``__r<n>___pk``;
     - per enricher, a :class:`Join` per lookup key against its database's
       range table, then its output projection: the input columns, each
       template field (replacing a same-named input column in place, like
@@ -169,8 +170,8 @@ def _compile_group(group: list[GeoipEnricher], columns: list[str], norm,
                  for e in group for k in e._attrs_by_key}
     v6_keys = {k for e in group if e.db.has_ipv6 for k in e._attrs_by_key}
     # parse layers: 0 the v4 parse of each lookup key, 1 the v6 parse,
-    # 2 the probe words
-    layers: list[list] = [[], [], []]
+    # 2 the probe words, 3 the probe keys that hold a lambda
+    layers: list[list] = [[], [], [], []]
     parsed: list[Column] = []
 
     def parse(layer: int, name: str, col: Column) -> Column:
@@ -207,16 +208,21 @@ def _compile_group(group: list[GeoipEnricher], columns: list[str], norm,
         # two split levels that took the fused probe stage's largest
         # method from 6.8 KB to 8.0 KB, at HotSpot's 8,000-byte JIT limit
         parse(2, f"__ip6h_{j}", F.when(~mapped, hi6))
-    steps += [Projection(spark, [F.col("*"), *layer])
-              for layer in layers if layer]
-
     n_joins = sum(isinstance(s, Join) for s in steps)
-    for n, e in enumerate(group):
-        prefixes = {}
+    probes = []
+    for e in group:
+        prefixes, joins = {}, []
         for key, attrs in e._attrs_by_key.items():
             prefixes[key] = prefix = f"__r{n_joins}_"
             n_joins += 1
-            steps.append(e._join(key_index[key], attrs, prefix))
+            joins.append(e._join(key_index[key], attrs, prefix,
+                                 lambda name, c: parse(3, name, c)))
+        probes.append((e, prefixes, joins))
+    steps += [Projection(spark, [F.col("*"), *layer])
+              for layer in layers if layer]
+
+    for n, (e, prefixes, joins) in enumerate(probes):
+        steps += joins
         output, columns = e._output(columns, prefixes, norm)
         # the parse columns stay for the group's later enrichers
         steps.append(Projection(
@@ -377,7 +383,7 @@ class GeoipEnricher:
                 self.spark, self.db, attrs, prefix,
                 *self._expanded_tables(attrs))))
 
-    def _join(self, j: int, attrs: list[str], prefix: str) -> Join:
+    def _join(self, j: int, attrs: list[str], prefix: str, bind) -> Join:
         """Geolocate the plan's j-th lookup key: one broadcast-hash join
         against this database's range table, on the bucket key, with the
         v4 BETWEEN OR the 128-bit range test as its join filter. No
@@ -390,7 +396,12 @@ class GeoipEnricher:
         semantics, matching ``GeoDatabase.lookup_batch``) and, where there
         is none, the native-v6 high half against the bias-flipped 128-bit
         bounds. A row probes one family at most, and ``V4_KEY_BIT`` keeps
-        the two families' bucket keys apart."""
+        the two families' bucket keys apart.
+
+        A key with split levels holds a lambda, which Spark evaluates
+        outside generated code and which would keep the join out of
+        whole-stage codegen. ``bind(name, col)`` projects such a key below
+        the joins and returns the column the join then reads."""
         def col(name: str) -> Column:
             return F.col(prefix + name)
 
@@ -399,7 +410,7 @@ class GeoipEnricher:
         ip4 = F.col(word4)
         lay4 = v4_bucket_layout(self.db)
         self.table_stats["v4"] = lay4.stats()
-        key = lay4.probe_key(ip4, f"`{word4}`").bitwiseOR(F.lit(V4_KEY_BIT))
+        key = lay4.probe_key(f"`{word4}`").bitwiseOR(F.lit(V4_KEY_BIT))
         match = ip4.between(col("__gs"), col("__ge"))
         if has6:
             lay6 = v6_bucket_layout(self.db)
@@ -410,9 +421,11 @@ class GeoipEnricher:
             flo = F.col(f"__ip6_{j}").getField("lo").bitwiseXOR(min_long)
             sh, sl, eh, el = (col(b) for b in ("__g6sh", "__g6sl",
                                                "__g6eh", "__g6el"))
-            key = F.coalesce(key, lay6.probe_key(F.col(word6), f"`{word6}`"))
+            key = F.coalesce(key, lay6.probe_key(f"`{word6}`"))
             match = match | (((fhi > sh) | ((fhi == sh) & (flo >= sl)))
                              & ((fhi < eh) | ((fhi == eh) & (flo <= el))))
+        if lay4.dense or (has6 and lay6.dense):
+            key = bind(prefix + "__pk", key)
         return Join(self._range_table(attrs, prefix),
                     (key == col("__gb")) & match)
 

@@ -491,30 +491,36 @@ class BucketLayout:
                 "coarse_bits": self.coarse_bits,
                 "split_levels": [bits for bits, _ in self.dense]}
 
-    def probe_key(self, word: Column, word_sql: str) -> Column:
-        """The probe side's bucket key for ``word`` (``word_sql``: the same
-        value as SQL text): its coarse prefix, or, inside a split bucket,
-        the tagged prefix of the level the table resolved it to. Nested
-        ``CASE WHEN prefix IN (<dense set>)``, one codegen'd InSet per
-        split level, evaluated only along the probe's own path; a layout
-        with no dense bucket gets the plain coarse prefix."""
-        shr, shr_sql = ((F.shiftrightunsigned, "shiftrightunsigned")
-                        if self.width == 64 else (F.shiftright, "shiftright"))
+    def probe_key(self, word_sql: str) -> Column:
+        """The probe side's bucket key for the word ``word_sql`` (SQL
+        text): its coarse prefix, or, inside a split bucket, the tagged
+        prefix of the level the table resolved it to.
 
-        def key(bits: int) -> Column:
-            raw = shr(word, self.width - bits)
+        A layout with no dense bucket gets the plain coarse shift. Otherwise
+        the word is bound once, as :func:`..functions.binding.let_` does,
+        and one nested ``CASE WHEN prefix IN (<dense set>)`` per split level
+        runs in the lambda, evaluated only along the probe's own path. The
+        lambda is interpreted (CodegenFallback), so no generated method
+        grows with split depth (HotSpot compiles no method over 8,000
+        bytes); Spark also keeps an operator that holds it out of
+        whole-stage codegen, so the enrich plan projects such a key below
+        its joins. The key is one SQL text, so one py4j call:
+        ``Column.isin`` makes one per value."""
+        shr = "shiftrightunsigned" if self.width == 64 else "shiftright"
+        if not self.dense:
+            return F.expr(f"{shr}({word_sql}, {self.width - self.coarse_bits})")
+
+        def key(bits: int) -> str:
+            raw = f"{shr}(w, {self.width - bits})"
             return raw if bits == self.coarse_bits \
-                else raw.bitwiseOR(F.lit(_level_tag(bits)))
+                else f"({raw} | {_level_tag(bits)}L)"
 
-        out = key(self.dense[-1][0] + _SPLIT_BITS if self.dense
-                  else self.coarse_bits)
+        out = key(self.dense[-1][0] + _SPLIT_BITS)
         for bits, prefixes in reversed(self.dense):
-            # SQL text: Column.isin makes one py4j call per value
             values = ",".join(f"{p}L" for p in prefixes.tolist())
-            is_dense = F.expr(f"{shr_sql}({word_sql}, {self.width - bits}) "
-                              f"IN ({values})")
-            out = F.when(is_dense, out).otherwise(key(bits))
-        return out
+            out = (f"CASE WHEN {shr}(w, {self.width - bits}) IN ({values}) "
+                   f"THEN {out} ELSE {key(bits)} END")
+        return F.expr(f"element_at(transform(array({word_sql}), w -> {out}), 1)")
 
 
 def _bucket_layout(lo: np.ndarray, hi: np.ndarray, width: int,

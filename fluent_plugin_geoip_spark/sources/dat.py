@@ -15,7 +15,9 @@ libGeoIP or any gem; the layout facts below are the published format:
   database edition; city editions then carry the node count ("database
   segments") as 3 little-endian bytes;
 - the tree is ``segments`` nodes of two 3-byte little-endian records
-  (left = bit 0, right = bit 1), walked MSB-first over the 32-bit address;
+  (left = bit 0, right = bit 1), walked MSB-first over the 32-bit address
+  by the trie walk the ``.mmdb`` reader shares (``sources/trie.py``, which
+  also builds the writer's tree);
 - a record value ``< segments`` is a child node index; ``== segments`` is a
   miss; ``> segments`` addresses a data record at absolute file offset
   ``value + (2*3 - 1) * segments``;
@@ -41,6 +43,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+
+from . import trie
 
 STRUCTURE_INFO_MAX_SIZE = 20
 MARKER = b"\xff\xff\xff"
@@ -369,46 +373,12 @@ class DATReader:
         """The walk behind :meth:`iter_ipv4_ranges`: ``(range_start,
         range_end, record)``, with the tree's terminal value (one per data
         record) in place of the decoded attrs."""
-        stack: list[tuple[int, int, int]] = [(0, 0, 0)]  # node, prefix, depth
-        while stack:
-            n, prefix, depth = stack.pop()
-            if depth >= 32:
-                raise DATError("tree deeper than 32 bits")
-            left, right = self.node(n)
-            for bit, rec in ((0, left), (1, right)):
-                child_prefix = prefix | (bit << (31 - depth))
-                if rec < self.segments:
-                    stack.append((rec, child_prefix, depth + 1))
-                elif rec > self.segments:
-                    span = 1 << (32 - (depth + 1))
-                    yield child_prefix, child_prefix + span - 1, rec
-                # rec == segments → miss, nothing to emit
-
-    def lookup(self, ip_int: int) -> dict | None:
-        """Single-address probe (the dump CLI path): walk the tree, decode."""
-        n = 0
-        for depth in range(32):
-            bit = (ip_int >> (31 - depth)) & 1
-            rec = self.node(n)[bit]
-            if rec == self.segments:
-                return None
-            if rec > self.segments:
-                return self.record_attrs(rec)  # {} = hit with all-nil attrs
-            n = rec
-        raise DATError("tree deeper than 32 bits")
+        return trie.walk(self.node, 0, 32, self.segments, DATError)
 
 
 # ---------------------------------------------------------------------------
 # writer — builds spec-layout .dat fixtures from (cidr, attrs) pairs
 # ---------------------------------------------------------------------------
-
-class _Node:
-    __slots__ = ("left", "right")
-
-    def __init__(self):
-        self.left = None     # None | _Node | ("data", key)
-        self.right = None
-
 
 def _encode_record(attrs: dict, edition: int) -> bytes:
     code = attrs.get("country_code", "--")
@@ -448,7 +418,7 @@ def build_dat(networks: list[tuple[str, dict]],
     import ipaddress
     if edition not in _CITY_EDITIONS:
         raise DATError("writer supports the city editions only")
-    root = _Node()
+    paths = []
     datas: list[dict] = []
     data_index: dict[str, int] = {}
     for cidr, attrs in networks:
@@ -458,65 +428,27 @@ def build_dat(networks: list[tuple[str, dict]],
             raise DATError(f"bad CIDR: {cidr}") from e
         if net.version != 4:
             raise DATError("legacy .dat trees are IPv4-only")
-        if net.prefixlen == 0:
-            # the bit loop below never runs for /0, which would silently
-            # drop the entry; the legacy format has no root record either
-            raise DATError("0.0.0.0/0 is not representable in a .dat tree")
         key = repr(sorted(attrs.items()))
         if key not in data_index:
             data_index[key] = len(datas)
             datas.append(attrs)
-        idx = data_index[key]
-        val, plen = int(net.network_address), net.prefixlen
-        node = root
-        for depth in range(plen):
-            bit = (val >> (31 - depth)) & 1
-            slot = "left" if bit == 0 else "right"
-            child = getattr(node, slot)
-            if depth == plen - 1:
-                if child is not None:
-                    raise DATError(f"{cidr} overlaps an existing network")
-                setattr(node, slot, ("data", idx))
-            else:
-                if isinstance(child, tuple):
-                    raise DATError(f"{cidr} is inside an existing network")
-                if child is None:
-                    child = _Node()
-                    setattr(node, slot, child)
-                node = child
-
-    nodes: list[_Node] = []
-
-    def number(n: _Node):
-        nodes.append(n)
-        for c in (n.left, n.right):
-            if isinstance(c, _Node):
-                number(c)
-
-    number(root)
-    segments = len(nodes)
-    node_no = {id(n): i for i, n in enumerate(nodes)}
+        paths.append((cidr, int(net.network_address), net.prefixlen,
+                      data_index[key]))
 
     # data section: a 1-byte pad keeps every record value strictly greater
     # than the miss sentinel (value == segments ⇔ absolute offset 6*segments,
-    # which is the pad byte)
+    # which is the pad byte); absolute offset = value + 5*segments, and the
+    # tree is 6*segments bytes
     data = bytearray(b"\x00")
     offsets: list[int] = []
     for attrs in datas:
         offsets.append(len(data))
         data += _encode_record(attrs, edition)
-
-    def record(child) -> int:
-        if child is None:
-            return segments
-        if isinstance(child, _Node):
-            return node_no[id(child)]
-        # absolute offset = value + 5*segments; tree is 6*segments bytes
-        return segments + offsets[child[1]]
+    nodes = trie.build(paths, 32, offsets, DATError)
 
     tree = bytearray()
-    for n in nodes:
-        tree += _le3_bytes(record(n.left)) + _le3_bytes(record(n.right))
+    for left, right in nodes:
+        tree += _le3_bytes(left) + _le3_bytes(right)
 
     return (bytes(tree) + bytes(data)
-            + MARKER + bytes([edition]) + _le3_bytes(segments))
+            + MARKER + bytes([edition]) + _le3_bytes(len(nodes)))

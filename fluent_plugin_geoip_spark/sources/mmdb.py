@@ -10,23 +10,28 @@ of fixed-width records over the address space, a data section of
 tagged/pointered values, and a trailing metadata map marked by
 ``\\xab\\xcd\\xefMaxMind.com``. No code is shared with any MaxMind library.
 
-Reader: decodes the metadata, walks the IPv4 subtree (for ip_version=6
-trees, IPv4 lives under the 96-zero-bit prefix — the same convention every
-published reader uses), and yields disjoint ``(range_start, range_end,
-nested_doc)`` IPv4 ranges. ``GeoDatabase.from_mmdb`` turns those into the
-broadcast sorted-range arrays the enrich kernel probes.
+Reader: decodes the metadata and the data records; the search tree is
+walked by the one trie walk both formats share (``sources/trie.py``).
+This module keeps the ip_version=6 rules: IPv4 starts 96 zero bits down
+(the convention every published reader follows; a data record higher on
+that spine covers all of IPv4), the native-IPv6 walk leaves ``::/96`` out
+and skips the aliases of the IPv4 subtree. ``GeoDatabase.from_mmdb`` turns
+the two walks into the sorted range arrays the enrich kernel probes.
 
-Writer: builds a spec-conformant .mmdb from ``(cidr, doc)`` pairs — used to
-generate the committed test fixture (scripts/build_test_mmdb.py) and by
-tests to construct arbitrary databases. Deliberately simple (no pointer
-dedup of equal values beyond whole-record reuse); readers — ours and
-``maxminddb`` alike — accept the output.
+Writer: builds a spec-conformant .mmdb from ``(cidr, doc)`` pairs, with
+the trie builder both formats share — used to generate the committed test
+fixtures (scripts/build_test_mmdb.py) and by tests to construct arbitrary
+databases. Deliberately simple (no pointer dedup of equal values beyond
+whole-record reuse); readers — ours and ``maxminddb`` alike — accept the
+output.
 """
 
 from __future__ import annotations
 
 import struct
 from dataclasses import dataclass
+
+from . import trie
 
 METADATA_MARKER = b"\xab\xcd\xefMaxMind.com"
 DATA_SECTION_SEPARATOR = 16  # null bytes between the tree and the data section
@@ -234,21 +239,19 @@ class MMDBReader:
         val, _ = decode_value(self.buf, off, self.data_start, cache={})
         return val
 
-    def _ipv4_root(self) -> int | None:
-        """Node where the IPv4 space starts: the root for v4 trees, the node
-        96 zero-bits deep for v6 trees (the convention every published
-        reader follows). None when the tree has no IPv4 content."""
-        node = 0
-        if self.ip_version == 4:
-            return node
-        for _ in range(96):
-            left, _right = self.node(node)
-            if left == self.node_count:
-                return None
-            if left > self.node_count:
-                raise MMDBError("data record above the IPv4 subtree")
-            node = left
-        return node
+    def _ipv4_start(self) -> int:
+        """The record IPv4 starts at: the root node of an ip_version=4
+        tree; in an ip_version=6 tree the record 96 zero bits down (the
+        convention every published reader follows). Like libmaxminddb's
+        IPv4 start node, it stops early at an empty or data record on
+        the spine, which then covers all of IPv4."""
+        rec = 0
+        if self.ip_version == 6:
+            for _ in range(96):
+                if rec >= self.node_count:
+                    break
+                rec = self.node(rec)[0]
+        return rec
 
     def iter_ipv4_ranges(self):
         """Yield ``(range_start, range_end, nested_doc)`` for every IPv4
@@ -258,10 +261,10 @@ class MMDBReader:
 
     def iter_ipv6_ranges(self):
         """Yield ``(start_bytes16, end_bytes16, nested_doc)`` for every
-        native-IPv6 network, EXCLUDING the ::/96 IPv4 subtree (covered by
-        ``iter_ipv4_ranges``) and skipping aliased subtrees (GeoLite2 points
-        2002::/16 / ::ffff:0:0/96 etc. back at the IPv4 subtree — node reuse
-        is detected with a visited set so each network is yielded once)."""
+        native-IPv6 network, EXCLUDING ::/96 (covered by
+        ``iter_ipv4_ranges``) and the aliases of the IPv4 subtree
+        (GeoLite2 points 2002::/16, ::ffff:0:0/96 etc. back at it), so each
+        network is yielded once."""
         return self._decoded(self._ipv6_records())
 
     def _decoded(self, walk):
@@ -275,68 +278,24 @@ class MMDBReader:
         """The walk behind :meth:`iter_ipv4_ranges`: ``(range_start,
         range_end, record)``, with the tree's record value (one per data
         record) in place of the decoded doc."""
-        root = self._ipv4_root()
-        if root is None:
-            return
-        stack: list[tuple[int, int, int]] = [(root, 0, 0)]  # node, prefix, depth
-        while stack:
-            node, prefix, depth = stack.pop()
-            left, right = self.node(node)
-            for bit, rec in ((0, left), (1, right)):
-                if depth >= 32:
-                    raise MMDBError("IPv4 tree deeper than 32 bits")
-                child_prefix = prefix | (bit << (31 - depth))
-                if rec == self.node_count:
-                    continue  # empty: no data for this subtree
-                if rec < self.node_count:
-                    stack.append((rec, child_prefix, depth + 1))
-                else:
-                    span = 1 << (32 - (depth + 1))
-                    yield child_prefix, child_prefix + span - 1, rec
+        return trie.walk(self.node, self._ipv4_start(), 32,
+                         self.node_count, MMDBError)
 
     def _ipv6_records(self):
         """The walk behind :meth:`iter_ipv6_ranges`: ``(start_bytes16,
-        end_bytes16, record)``."""
+        end_bytes16, record)``. The whole tree is walked from its root
+        without entering the IPv4 start node, which also skips every
+        alias of it (MaxMind's writers point ::ffff:0:0/96, 2001::/32 and
+        2002::/16 at that node), and each network is cut to its part
+        outside ::/96, which :meth:`iter_ipv4_ranges` covers."""
         if self.ip_version != 6:
             return
-        # the IPv4 subtree (under the 96-zero spine) is enumerated by
-        # iter_ipv4_ranges; collect its node set so aliases pointing back at
-        # it (GeoLite2 aliases 2002::/16, ::ffff:0:0/96, … to the v4 space)
-        # are skipped instead of re-emitted
-        v4_nodes: set[int] = set()
-        v4_root = self._ipv4_root()
-        if v4_root is not None:
-            stack = [v4_root]
-            while stack:
-                nd = stack.pop()
-                if nd in v4_nodes:
-                    continue
-                v4_nodes.add(nd)
-                for rec in self.node(nd):
-                    if rec < self.node_count:
-                        stack.append(rec)
-        walk: list[tuple[int, int, int]] = [(0, 0, 0)]  # node, prefix(int), depth
-        while walk:
-            node, prefix, depth = walk.pop()
-            left, right = self.node(node)
-            for bit, rec in ((0, left), (1, right)):
-                if depth >= 128:
-                    raise MMDBError("tree deeper than 128 bits")
-                child_prefix = (prefix << 1) | bit
-                if rec == self.node_count:
-                    continue
-                if rec < self.node_count:
-                    if rec in v4_nodes:
-                        continue  # the v4 subtree itself, or an alias to it
-                    walk.append((rec, child_prefix, depth + 1))
-                else:
-                    plen = depth + 1
-                    start = child_prefix << (128 - plen)
-                    end = start + (1 << (128 - plen)) - 1
-                    if end < (1 << 32):
-                        continue  # inside ::/96 → IPv4-embedded, not native v6
-                    yield (start.to_bytes(16, "big"), end.to_bytes(16, "big"),
-                           rec)
+        for start, end, rec in trie.walk(self.node, 0, 128,
+                                         self.node_count, MMDBError,
+                                         skip={self._ipv4_start()}):
+            if end >> 32:
+                yield (max(start, 1 << 32).to_bytes(16, "big"),
+                       end.to_bytes(16, "big"), rec)
 
 
 def flatten_doc(doc, prefix: str = "") -> dict:
@@ -433,29 +392,19 @@ def encode_value(v) -> bytes:
     raise MMDBError(f"cannot encode {type(v).__name__}")
 
 
-class _TrieNode:
-    __slots__ = ("left", "right")
-
-    def __init__(self):
-        self.left = None   # None | _TrieNode | ("data", idx)
-        self.right = None
-
-
-def _parse_cidr(cidr: str, tree_ip_version: int) -> list[int]:
-    """CIDR (v4 or v6) → the bit path from the tree root. IPv4 networks in
-    a v6 tree live under the 96-zero prefix (the GeoLite2 convention)."""
+def _path(cidr: str, ip_version: int) -> tuple[int, int]:
+    """CIDR (v4 or v6) → ``(value, prefix length)`` of its bit path in a
+    tree of ``ip_version``. IPv4 networks in a v6 tree live under the
+    96-zero prefix (the GeoLite2 convention)."""
     import ipaddress
     try:
         net = ipaddress.ip_network(cidr)
     except ValueError as e:
         raise MMDBError(f"bad CIDR: {cidr}") from e
-    val, plen, width = int(net.network_address), net.prefixlen, 32 if net.version == 4 else 128
-    if net.version == 6 and tree_ip_version == 4:
+    if net.version == 6 and ip_version == 4:
         raise MMDBError(f"IPv6 network {cidr} in an ip_version=4 tree")
-    bits = [(val >> (width - 1 - i)) & 1 for i in range(plen)]
-    if net.version == 4 and tree_ip_version == 6:
-        bits = [0] * 96 + bits
-    return bits
+    spine = 96 if net.version == 4 and ip_version == 6 else 0
+    return int(net.network_address), net.prefixlen + spine
 
 
 def build_mmdb(networks: list[tuple[str, dict]],
@@ -470,63 +419,25 @@ def build_mmdb(networks: list[tuple[str, dict]],
     32-bit tree (IPv4 only). Identical docs (by equality) share one data
     record.
     """
-    root = _TrieNode()
     datas: list[dict] = []
     data_index: dict[str, int] = {}
+    paths = []
     for cidr, doc in networks:
         key = repr(sorted(flatten_doc(doc).items()))
         if key not in data_index:
             data_index[key] = len(datas)
             datas.append(doc)
-        idx = data_index[key]
-        bits = _parse_cidr(cidr, ip_version)
-        node = root
-        for depth, bit in enumerate(bits):
-            slot = "left" if bit == 0 else "right"
-            child = getattr(node, slot)
-            if depth == len(bits) - 1:
-                if isinstance(child, _TrieNode):
-                    raise MMDBError(f"{cidr} contains an existing network")
-                if child is not None:
-                    raise MMDBError(f"duplicate network {cidr}")
-                setattr(node, slot, ("data", idx))
-            else:
-                if isinstance(child, tuple):
-                    raise MMDBError(f"{cidr} is inside an existing network")
-                if child is None:
-                    child = _TrieNode()
-                    setattr(node, slot, child)
-                node = child
-
-    # number nodes (preorder) and serialize the data section
-    nodes: list[_TrieNode] = []
-
-    def number(n: _TrieNode):
-        nodes.append(n)
-        for c in (n.left, n.right):
-            if isinstance(c, _TrieNode):
-                number(c)
-
-    number(root)
-    node_count = len(nodes)
-    node_no = {id(n): i for i, n in enumerate(nodes)}
-
+        paths.append((cidr, *_path(cidr, ip_version), data_index[key]))
     data_blob = bytearray()
     data_offsets: list[int] = []
     for doc in datas:
-        data_offsets.append(len(data_blob))
+        data_offsets.append(DATA_SECTION_SEPARATOR + len(data_blob))
         data_blob += encode_value(doc)
-
-    def record(child) -> int:
-        if child is None:
-            return node_count
-        if isinstance(child, _TrieNode):
-            return node_no[id(child)]
-        return node_count + DATA_SECTION_SEPARATOR + data_offsets[child[1]]
+    nodes = trie.build(paths, 32 if ip_version == 4 else 128, data_offsets,
+                       MMDBError)
 
     tree = bytearray()
-    for n in nodes:
-        left, right = record(n.left), record(n.right)
+    for left, right in nodes:
         if record_size == 24:
             tree += left.to_bytes(3, "big") + right.to_bytes(3, "big")
         elif record_size == 28:
@@ -546,7 +457,7 @@ def build_mmdb(networks: list[tuple[str, dict]],
         "description": {"en": f"{database_type} fixture"},
         "ip_version": ip_version,
         "languages": list(languages),
-        "node_count": node_count,
+        "node_count": len(nodes),
         "record_size": record_size,
     }
     return (bytes(tree) + b"\x00" * DATA_SECTION_SEPARATOR + bytes(data_blob)

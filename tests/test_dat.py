@@ -11,8 +11,6 @@ scripts/build_test_dat.py regenerates it deterministically.
 """
 
 import os
-import subprocess
-import sys
 
 import pandas as pd
 import pytest
@@ -71,7 +69,7 @@ def test_writer_reader_roundtrip(edition):
     assert got[3][2]["city"] == "K\xf6ln"  # ISO-8859-1 record charset
 
 
-def test_country_edition_reader():
+def test_country_edition_reader(tmp_path):
     """Hand-built country-edition blob: implicit COUNTRY_BEGIN segments,
     record value = COUNTRY_BEGIN + country index, no data section."""
     us = COUNTRY_BEGIN + COUNTRY_CODES.index("US")
@@ -85,7 +83,11 @@ def test_country_edition_reader():
     assert got == [(0, (1 << 31) - 1,
                     {"country_code": "US", "country_code3": "USA",
                      "country_name": "United States"})]
-    assert r.lookup(1 << 31) is None
+    path = tmp_path / "country.dat"
+    path.write_bytes(blob)
+    db = GeoDatabase.from_dat(str(path))
+    assert db.lookup_doc("128.0.0.0") is None
+    assert db.lookup_doc("127.255.255.255")["country_code"] == "US"
 
 
 def test_build_dat_rejects_default_route():
@@ -174,13 +176,9 @@ def test_dat_config_requires_path():
         cfg.load_database()
 
 
-def test_build_script_is_deterministic(tmp_path):
-    env = dict(os.environ)
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    out = subprocess.run(
-        [sys.executable, os.path.join(repo, "scripts", "build_test_dat.py")],
-        capture_output=True, text=True, env=env, cwd=tmp_path)
-    assert out.returncode == 0, out.stderr
+def test_build_script_is_deterministic():
+    """The committed fixture is what the writer makes of the golden rows
+    today, so writer drift fails here (and no test rewrites the file)."""
     with open(FIXTURE, "rb") as f:
         blob = f.read()
     assert blob == build_dat(
@@ -255,7 +253,7 @@ def test_malformed_unterminated_string():
         r.record_attrs(2)
 
 
-def test_malformed_node_loop_bounded():
+def test_malformed_node_loop_bounded(tmp_path):
     """A node whose record points back at node 0 would loop forever in a
     naive walker; depth is bounded at 32 bits."""
     # node 0: both records point at node 0 → self-loop
@@ -264,8 +262,10 @@ def test_malformed_node_loop_bounded():
     r = DATReader.from_bytes(blob)
     with pytest.raises(DATError, match="deeper"):
         list(r.iter_ipv4_ranges())
+    path = tmp_path / "loop.dat"
+    path.write_bytes(blob)
     with pytest.raises(DATError, match="deeper"):
-        r.lookup(0)
+        GeoDatabase.from_dat(str(path)).lookup_doc("0.0.0.0")
 
 
 def test_writer_rejects_overlaps_and_v6():

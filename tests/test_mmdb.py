@@ -317,6 +317,32 @@ def test_fuzz_random_mutations_never_hang():
             pass  # the only acceptable failure mode
 
 
+@pytest.mark.parametrize("ip_version,cidr,slot", [
+    (4, "10.0.0.0/8", 0),        # node 0's left record points at node 0
+    (6, "2001:db8::/32", 3),     # node 0's right record, off the v4 spine
+])
+def test_node_loop_bounded(ip_version, cidr, slot):
+    """A node whose record points back at itself would loop forever in a
+    naive walker; the walk's depth is bounded by the address width."""
+    from fluent_plugin_geoip_spark.sources.mmdb import MMDBError
+    blob = bytearray(build_mmdb([(cidr, {"n": 1})], ip_version=ip_version,
+                                record_size=24))
+    blob[slot:slot + 3] = bytes(3)
+    r = MMDBReader.from_bytes(bytes(blob))
+    with pytest.raises(MMDBError, match="deeper"):
+        list(r.iter_ipv4_ranges())
+        list(r.iter_ipv6_ranges())
+
+
+@pytest.mark.parametrize("cidr,ip_version", [("::/0", 6), ("0.0.0.0/0", 4)])
+def test_build_mmdb_rejects_default_route(cidr, ip_version):
+    """A /0 has an empty bit path, and the format has no record above the
+    root node: the writer raises instead of writing an empty tree."""
+    from fluent_plugin_geoip_spark.sources.mmdb import MMDBError
+    with pytest.raises(MMDBError, match="not representable"):
+        build_mmdb([(cidr, {"n": 1})], ip_version=ip_version)
+
+
 def test_differential_against_official_reader(tmp_path):
     """Our reader vs the maxminddb package on our writer's output (skipped
     when the package isn't installed — it isn't in this sandbox)."""
@@ -449,6 +475,24 @@ def test_ipv6_aliases_not_reemitted():
     assert len(v6) == 2                      # only the two native-v6 nets
     assert len(v4) == 2                      # 66.102/20 + ::1 → v4 key 1
     assert {s for s, _, _ in v4} == {1, (66 << 24) | (102 << 16)}
+
+
+@pytest.mark.parametrize("spine", ["0.0.0.0/0", "::/64"])
+def test_data_record_on_the_v4_spine(tmp_path, spine):
+    """A data record on the 96-zero-bit spine of an ip_version=6 tree
+    covers all of IPv4 (libmaxminddb's IPv4 start node stops at it); the
+    part of its network outside ::/96 is native IPv6."""
+    path = tmp_path / "spine.mmdb"
+    path.write_bytes(build_mmdb([
+        (spine, {"country": {"iso_code": "SP"}}),
+        ("2001:db8::/32", {"country": {"iso_code": "V6"}})]))
+    db = GeoDatabase.from_mmdb(str(path))
+    assert (db.starts.tolist(), db.ends.tolist()) == ([0], [(1 << 32) - 1])
+    out = db.lookup_batch(pd.Series(["1.2.3.4", "::ffff:1.2.3.4",
+                                     "::1:0:0:1", "2001:db8::1", "2001:db9::1"]),
+                          ["country.iso_code"])
+    assert out["country_iso_code"].tolist() == [
+        "SP", "SP", "SP" if spine == "::/64" else None, "V6", None]
 
 
 def test_ipv6_enrich_end_to_end(spark, v6_mmdb_path):

@@ -491,10 +491,7 @@ _NETS = {"rollup_bigdb": _rollup_bigdb_nets, "deep": _deep_nets,
          "half_cluster": _half_cluster_nets}
 
 
-@pytest.mark.parametrize("kind", ["rollup_bigdb", "deep", pytest.param(
-    "half_cluster", marks=pytest.mark.xfail(strict=True, reason=(
-        "largest method 8,389 bytes: each split level nests one more CASE "
-        "WHEN in the probe key (ROADMAP item 2)")))])
+@pytest.mark.parametrize("kind", ["rollup_bigdb", "deep", "half_cluster"])
 def test_fused_enrich_stage_method_under_jit_limit(spark, tmp_path, kind):
     """The fused city + ASN enrich stage's largest generated method stays
     under HotSpot's 8,000-byte limit (a larger method is never
