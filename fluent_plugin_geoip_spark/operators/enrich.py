@@ -18,12 +18,15 @@ then only applies it per record (rb:60, 86), the enrich stage is compiled
 once per input schema into an :class:`EnrichPlan` — the Columns, the
 prefixed broadcast range tables and the join conditions — and applied as
 a short fixed sequence: one projection per parse layer, one join per
-lookup key and database, one output projection per enricher. Several
-enrichers compile into one plan (:func:`compile_plan`; the pipeline's
-city + ASN) that parses each lookup key once for all of them, as the
-reference geolocates each key once per record (rb:86, 167-185). The stage
-is narrow: the broadcast hash joins fuse into the scan's codegen stage
-with no Python worker, and no shuffle is introduced.
+lookup key, one output projection per enricher. Several enrichers compile
+into one plan (:func:`compile_plan`; the pipeline's city + ASN) that
+parses and probes each lookup key once for all of them, as the reference
+geolocates each key once per record (rb:86, 167-185): the key's one join
+is against the overlay of the databases probed with it
+(:func:`..operators.geolookup.overlay`), whose pieces carry each
+database's attributes and hit under names of its own. The stage is
+narrow: the broadcast hash joins fuse into the scan's codegen stage with
+no Python worker, and no shuffle is introduced.
 """
 
 from __future__ import annotations
@@ -42,8 +45,8 @@ from ..functions.templates import (
 )
 from . import geolookup
 from .geolookup import (
-    V4_KEY_BIT, GeoDatabase, memo_on_db, sanitize_attr, v4_bucket_layout,
-    v6_bucket_layout,
+    V4_KEY_BIT, GeoDatabase, memo_on_db, overlay_attr, sanitize_attr,
+    v4_bucket_layout, v6_bucket_layout,
 )
 
 SKIP_FLAG = "geoip_skipped"
@@ -88,12 +91,16 @@ class EnrichPlan:
       ``__ip4e_<j>`` (the v4 word, mapped and compat text folded),
       ``__ip6h_<j>`` (the native-v6 high half) and, for a join whose
       range table has split buckets, its probe key ``__r<n>___pk``;
-    - per enricher, a :class:`Join` per lookup key against its database's
-      range table, then its output projection: the input columns, each
+    - one :class:`Join` per lookup key: against the range table of the
+      one database probed with it, or of the overlay of several
+      (``geolookup.overlay``), whose columns hold each probing
+      enricher's database's attrs and hit under names of their own
+      (``geolookup.overlay_attr``);
+    - per enricher, its output projection: the input columns, each
       template field (replacing a same-named input column in place, like
-      ``withColumns``) and the skip flag. The parse columns stay until
-      the last enricher's output projection; the join columns go with
-      their enricher's.
+      ``withColumns``) and the skip flag, reading its own database's
+      columns and hit (:class:`Lookup`). The parse and join columns stay
+      until the last enricher's output projection.
 
     Every entry is a Column built from column names, literals and
     functions called by name (the Ruby float formatter too), so it
@@ -163,7 +170,7 @@ def compile_plan(enrichers: list[GeoipEnricher], columns: tuple[str, ...],
 def _compile_group(group: list[GeoipEnricher], columns: list[str], norm,
                    steps: list) -> list[str]:
     """Append to ``steps`` the enrichers of ``group`` over one shared
-    parse of their lookup keys; return the output column names."""
+    parse and one join per lookup key; return the output column names."""
     from ..functions.ipv6 import ipv6_str_to_longs
     spark = group[0].spark
     accessors = {k: e.compiled.accessors[k]
@@ -209,32 +216,155 @@ def _compile_group(group: list[GeoipEnricher], columns: list[str], norm,
         # method from 6.8 KB to 8.0 KB, at HotSpot's 8,000-byte JIT limit
         parse(2, f"__ip6h_{j}", F.when(~mapped, hi6))
     n_joins = sum(isinstance(s, Join) for s in steps)
-    probes = []
-    for e in group:
-        prefixes, joins = {}, []
-        for key, attrs in e._attrs_by_key.items():
-            prefixes[key] = prefix = f"__r{n_joins}_"
-            n_joins += 1
-            joins.append(e._join(key_index[key], attrs, prefix,
-                                 lambda name, c: parse(3, name, c)))
-        probes.append((e, prefixes, joins))
+    # one join per lookup key: against the probing enricher's own
+    # database, or against the overlay of all the probing enrichers'
+    reads: list[dict[str, Lookup]] = [{} for _ in group]
+    joins = []
+    for key, j in key_index.items():
+        users = [n for n, e in enumerate(group) if key in e._attrs_by_key]
+        prefix = f"__r{n_joins}_"
+        n_joins += 1
+
+        def column(path: str) -> str:
+            return prefix + sanitize_attr(path)
+        if len(users) == 1:
+            e = group[users[0]]
+            db, attrs = e.db, e._attrs_by_key[key]
+            reads[users[0]][key] = Lookup(
+                {p: column(p) for p in attrs}, F.col(prefix + "__gb").isNotNull())
+        else:
+            parts = [(group[n].db, group[n]._attrs_by_key[key]) for n in users]
+            db = _overlay(parts)
+            attrs = [overlay_attr(i, p) for i, (_, paths) in enumerate(parts)
+                     for p in (None, *paths)]
+            for i, (n, (own, paths)) in enumerate(zip(users, parts)):
+                hit = F.col(column(overlay_attr(i))).isNotNull()
+                if db.has_ipv6 and not own.has_ipv6:
+                    # the join probes the v4 word with mapped and compat
+                    # text folded in; a v4-only database answers plain v4
+                    # text only
+                    hit = hit & F.col(f"__ip_{j}").isNotNull()
+                reads[n][key] = Lookup(
+                    {p: column(overlay_attr(i, p)) for p in paths}, hit)
+        join, stats = _join(spark, db, j, attrs, prefix,
+                            lambda name, c: parse(3, name, c))
+        joins.append(join)
+        for n in users:
+            group[n].table_stats.update(stats)
     steps += [Projection(spark, [F.col("*"), *layer])
               for layer in layers if layer]
-
-    for n, (e, prefixes, joins) in enumerate(probes):
-        steps += joins
-        output, columns = e._output(columns, prefixes, norm)
-        # the parse columns stay for the group's later enrichers
+    steps += joins
+    # the parse and join columns stay for the group's later enrichers
+    carried = parsed + [_quoted(c) for join in joins
+                        for c in join.table.columns] if len(group) > 1 else []
+    for n, e in enumerate(group):
+        output, columns = e._output(columns, reads[n], norm)
         steps.append(Projection(
-            spark, output + (parsed if n < len(group) - 1 else [])))
+            spark, output + (carried if n < len(group) - 1 else [])))
     return columns
+
+
+@dataclass
+class Lookup:
+    """What an enricher reads of the join of one lookup key: the column
+    holding each of its attr paths, and whether its database holds the
+    address."""
+
+    columns: dict[str, str]
+    hit: Column
+
+
+def _overlay(parts: list[tuple[GeoDatabase, list[str]]]) -> GeoDatabase:
+    """``geolookup.overlay(parts)``, memoized on the first database; the
+    entry keeps the other databases, so the ids in its key stay theirs."""
+    key = ("overlay", *((id(db), *paths) for db, paths in parts))
+    return memo_on_db(parts[0][0], key, lambda: (
+        geolookup.overlay(parts), [db for db, _ in parts]))[0]
+
+
+def _expanded_tables(spark, db: GeoDatabase, attrs: list[str]) -> tuple:
+    """The expanded bucket tables of ``attrs``: the v4 one and, for a
+    v6-capable database, the v6 one (else None), built once per attr
+    set (common-subexpression reuse of the reference's uniq placeholder
+    dedup, rb:86)."""
+    return memo_on_db(
+        db, (id(spark), "expanded", *attrs),
+        lambda: (
+            geolookup.expanded_bucket_table(spark, db, attrs),
+            geolookup.expanded_bucket_table_v6(spark, db, attrs)[0]
+            if db.has_ipv6 else None))
+
+
+def _range_table(spark, db: GeoDatabase, attrs: list[str],
+                 prefix: str) -> DataFrame:
+    """The broadcast-hinted range table of ``attrs``, its columns named
+    ``prefix`` + name. A join position's prefix is part of the table, so
+    each prefix gets its own copy, made JVM-side from the expanded
+    tables, which are built once per attr set. The bucket layout is a
+    function of the database alone, so the memo key is the session, the
+    prefix and the attrs."""
+    return memo_on_db(
+        db, (id(spark), prefix, *attrs),
+        lambda: F.broadcast(geolookup.range_table(
+            spark, db, attrs, prefix, *_expanded_tables(spark, db, attrs))))
+
+
+def _join(spark, db: GeoDatabase, j: int, attrs: list[str], prefix: str,
+          bind) -> tuple[Join, dict]:
+    """Geolocate the plan's j-th lookup key in ``db``: one broadcast-hash
+    join against its range table, on the bucket key, with the v4 BETWEEN
+    OR the 128-bit range test as its join filter; and the shape of the
+    table, ``{"v4"|"v6": BucketLayout.stats()}``. No Python crossing;
+    ranges are disjoint, so at most one piece matches and the left join
+    preserves row count.
+
+    A v4-only database probes the plain v4 parse. A v6-capable one
+    probes the v4 word with v4-mapped ``::ffff:a.b.c.d`` and v4-compat
+    ``::a.b.c.d`` text folded in (libmaxminddb tree-walk semantics,
+    matching ``GeoDatabase.lookup_batch``) and, where there is none, the
+    native-v6 high half against the bias-flipped 128-bit bounds. A row
+    probes one family at most, and ``V4_KEY_BIT`` keeps the two
+    families' bucket keys apart.
+
+    A key with split levels holds a lambda, which Spark evaluates outside
+    generated code and which would keep the join out of whole-stage
+    codegen. ``bind(name, col)`` projects such a key below the joins and
+    returns the column the join then reads."""
+    def col(name: str) -> Column:
+        return F.col(prefix + name)
+
+    has6 = db.has_ipv6
+    word4 = f"__ip4e_{j}" if has6 else f"__ip_{j}"
+    ip4 = F.col(word4)
+    lay4 = v4_bucket_layout(db)
+    stats = {"v4": lay4.stats()}
+    key = lay4.probe_key(f"`{word4}`").bitwiseOR(F.lit(V4_KEY_BIT))
+    match = ip4.between(col("__gs"), col("__ge"))
+    if has6:
+        lay6 = v6_bucket_layout(db)
+        stats["v6"] = lay6.stats()
+        word6 = f"__ip6h_{j}"
+        min_long = F.lit(-0x8000000000000000)
+        fhi = F.col(word6).bitwiseXOR(min_long)
+        flo = F.col(f"__ip6_{j}").getField("lo").bitwiseXOR(min_long)
+        sh, sl, eh, el = (col(b) for b in ("__g6sh", "__g6sl",
+                                           "__g6eh", "__g6el"))
+        key = F.coalesce(key, lay6.probe_key(f"`{word6}`"))
+        match = match | (((fhi > sh) | ((fhi == sh) & (flo >= sl)))
+                         & ((fhi < eh) | ((fhi == eh) & (flo <= el))))
+    if lay4.dense or (has6 and lay6.dense):
+        key = bind(prefix + "__pk", key)
+    return (Join(_range_table(spark, db, attrs, prefix),
+                 (key == col("__gb")) & match), stats)
 
 
 class GeoipEnricher:
     """Compile once, apply to any DataFrame (batch or streaming).
 
     Each lookup key is geolocated by a broadcast-hash join against its
-    database's prefix-bucket range table
+    database's prefix-bucket range table, or, in a plan that fuses
+    several enrichers probing the same key, against the one table of the
+    overlay of their databases
     (:func:`..operators.geolookup.range_table`: the v4 pieces of
     :func:`..operators.geolookup.expanded_bucket_table` and, for a
     v6-capable database, the v6 pieces of
@@ -251,7 +381,10 @@ class GeoipEnricher:
     ``spark.sql.caseSensitive``) and reuses it for every later input with
     the same columns, batch or streaming. It is the one-enricher case of
     :func:`compile_plan`, which also fuses several enrichers into one
-    plan (``GeoipPipeline``'s city + ASN).
+    plan (``GeoipPipeline``'s city + ASN) with one join per lookup key.
+    Fused or alone, an enricher's placeholders, hit and skip flag read
+    its own database only: a v4-only database in an overlay with a
+    dual-stack one still answers only plain v4 text.
     """
 
     def __init__(self, spark: SparkSession, config: GeoipConfig,
@@ -278,7 +411,7 @@ class GeoipEnricher:
         # shape of each expanded range table the enrich joins probe,
         # ``{"v4"|"v6": BucketLayout.stats()}`` (rows, largest bucket,
         # coarse level, split levels), filled from the NumPy layout when a
-        # plan is compiled
+        # plan is compiled; enrichers sharing a join report its table
         self.table_stats: dict[str, dict] = {}
         # (input column names, spark.sql.caseSensitive) → compiled plan
         self._plans: dict[tuple[tuple[str, ...], bool], EnrichPlan] = {}
@@ -296,15 +429,15 @@ class GeoipEnricher:
         return [*self.compiled.templates,
                 *([SKIP_FLAG] if self.config.skip_adding_null_record else [])]
 
-    def _output(self, columns: list[str], prefixes: dict[str, str],
+    def _output(self, columns: list[str], reads: dict[str, Lookup],
                 norm) -> tuple[list[Column], list[str]]:
-        """The output projection over inputs named ``columns``, with each
-        lookup key's join columns under ``prefixes[key]``: its entries and
-        its column names."""
+        """The output projection over inputs named ``columns``, reading
+        each lookup key's join by ``reads[key]``: its entries and its
+        column names."""
         comp = self.compiled
-        ph_cols = {ph.text: self._placeholder_column(ph, prefixes)
+        ph_cols = {ph.text: self._placeholder_column(ph, reads)
                    for ph in comp.placeholders}
-        skip_cond = self._skip_condition(prefixes, ph_cols)
+        skip_cond = self._skip_condition(reads, ph_cols)
         present = {norm(c) for c in columns}
         fields = {f: self._output_column(f, t, ph_cols, skip_cond,
                                          norm(f) in present)
@@ -319,7 +452,7 @@ class GeoipEnricher:
         names += [f for f in fields if f not in replaced]
         return [fields[c] if c in fields else _quoted(c) for c in names], names
 
-    def _skip_condition(self, prefixes, ph_cols) -> Column | None:
+    def _skip_condition(self, reads, ph_cols) -> Column | None:
         """skip_adding_null_record (rb:122-123): the reference checks
         `placeholder.values.first.nil?` where create_placeholder only
         INSERTS entries whose lookup key geodata hit (rb:191) — i.e. the
@@ -334,9 +467,9 @@ class GeoipEnricher:
         prev_no_hit = F.lit(True)   # no surviving placeholder seen yet
         terms = []                  # "i is the first survivor and nil"
         for ph in comp.placeholders:
-            if ph.record_key not in prefixes:
+            if ph.record_key not in reads:
                 continue  # never inserted (geodata lacks the key, rb:191)
-            hit = _hit(prefixes[ph.record_key])
+            hit = reads[ph.record_key].hit
             val, _ = ph_cols[ph.text]
             terms.append(prev_no_hit & hit & val.isNull())
             prev_no_hit = prev_no_hit & ~hit
@@ -357,93 +490,17 @@ class GeoipEnricher:
             col = F.when(skip_cond, existing).otherwise(col)
         return col.alias(out_field)
 
-    def _expanded_tables(self, attrs: list[str]) -> tuple:
-        """The expanded bucket tables of ``attrs``: the v4 one and, for a
-        v6-capable database, the v6 one (else None), built once per attr
-        set (common-subexpression reuse of the reference's uniq
-        placeholder dedup, rb:86)."""
-        return memo_on_db(
-            self.db, (id(self.spark), "expanded", *attrs),
-            lambda: (
-                geolookup.expanded_bucket_table(self.spark, self.db, attrs),
-                geolookup.expanded_bucket_table_v6(self.spark, self.db,
-                                                   attrs)[0]
-                if self.db.has_ipv6 else None))
-
-    def _range_table(self, attrs: list[str], prefix: str) -> DataFrame:
-        """The broadcast-hinted range table of ``attrs``, its columns
-        named ``prefix`` + name. A join position's prefix is part of the
-        table, so each prefix gets its own copy, made JVM-side from the
-        expanded tables, which are built once per attr set. The bucket
-        layout is a function of the database alone, so the memo key is
-        the session, the prefix and the attrs."""
-        return memo_on_db(
-            self.db, (id(self.spark), prefix, *attrs),
-            lambda: F.broadcast(geolookup.range_table(
-                self.spark, self.db, attrs, prefix,
-                *self._expanded_tables(attrs))))
-
-    def _join(self, j: int, attrs: list[str], prefix: str, bind) -> Join:
-        """Geolocate the plan's j-th lookup key: one broadcast-hash join
-        against this database's range table, on the bucket key, with the
-        v4 BETWEEN OR the 128-bit range test as its join filter. No
-        Python crossing; ranges are disjoint, so at most one piece
-        matches and the left join preserves row count.
-
-        A v4-only database probes the plain v4 parse. A v6-capable one
-        probes the v4 word with v4-mapped ``::ffff:a.b.c.d`` and
-        v4-compat ``::a.b.c.d`` text folded in (libmaxminddb tree-walk
-        semantics, matching ``GeoDatabase.lookup_batch``) and, where there
-        is none, the native-v6 high half against the bias-flipped 128-bit
-        bounds. A row probes one family at most, and ``V4_KEY_BIT`` keeps
-        the two families' bucket keys apart.
-
-        A key with split levels holds a lambda, which Spark evaluates
-        outside generated code and which would keep the join out of
-        whole-stage codegen. ``bind(name, col)`` projects such a key below
-        the joins and returns the column the join then reads."""
-        def col(name: str) -> Column:
-            return F.col(prefix + name)
-
-        has6 = self.db.has_ipv6
-        word4 = f"__ip4e_{j}" if has6 else f"__ip_{j}"
-        ip4 = F.col(word4)
-        lay4 = v4_bucket_layout(self.db)
-        self.table_stats["v4"] = lay4.stats()
-        key = lay4.probe_key(f"`{word4}`").bitwiseOR(F.lit(V4_KEY_BIT))
-        match = ip4.between(col("__gs"), col("__ge"))
-        if has6:
-            lay6 = v6_bucket_layout(self.db)
-            self.table_stats["v6"] = lay6.stats()
-            word6 = f"__ip6h_{j}"
-            min_long = F.lit(-0x8000000000000000)
-            fhi = F.col(word6).bitwiseXOR(min_long)
-            flo = F.col(f"__ip6_{j}").getField("lo").bitwiseXOR(min_long)
-            sh, sl, eh, el = (col(b) for b in ("__g6sh", "__g6sl",
-                                               "__g6eh", "__g6el"))
-            key = F.coalesce(key, lay6.probe_key(f"`{word6}`"))
-            match = match | (((fhi > sh) | ((fhi == sh) & (flo >= sl)))
-                             & ((fhi < eh) | ((fhi == eh) & (flo <= el))))
-        if lay4.dense or (has6 and lay6.dense):
-            key = bind(prefix + "__pk", key)
-        return Join(self._range_table(attrs, prefix),
-                    (key == col("__gb")) & match)
-
-    def _placeholder_column(self, ph, prefixes) -> tuple[Column, str]:
+    def _placeholder_column(self, ph, reads) -> tuple[Column, str]:
         dtype = self.db.attr_type(ph.geoip_key)
-        if ph.record_key not in prefixes:
+        if ph.record_key not in reads:
             # unknown record key → placeholder never set → nil (rb:191)
             return typed_null(dtype), dtype
-        prefix = prefixes[ph.record_key]
-        raw = F.col(prefix + sanitize_attr(ph.geoip_key))
+        read = reads[ph.record_key]
+        raw = F.col(read.columns[ph.geoip_key])
         leaf = ph.geoip_key.rsplit(".", 1)[-1]
         if leaf in ("latitude", "longitude"):
             # hit with nil lat/lon → 0.0 default (rb:192-198, test:456-480)
             raw = F.coalesce(raw, F.lit(0.0))
-        col = F.when(_hit(prefix), raw).otherwise(typed_null(dtype))
+        col = F.when(read.hit, raw).otherwise(typed_null(dtype))
         return col, dtype
 
-
-def _hit(prefix: str) -> Column:
-    """The lookup hit: the key's join matched a range piece."""
-    return F.col(prefix + "__gb").isNotNull()

@@ -610,18 +610,126 @@ def v4_bucket_layout(db: GeoDatabase) -> BucketLayout:
         db.starts.astype(np.uint64), db.ends.astype(np.uint64), 32, 32))
 
 
-def _v6_words(db: GeoDatabase) -> tuple[np.ndarray, ...]:
-    """(start hi, start lo, end hi, end lo) uint64 halves of the v6 bounds.
+def _halves(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(hi, lo) uint64 halves of 'S16' v6 addresses.
 
     numpy 'S16' element access strips trailing NUL bytes (2001:db8::
     comes back 4 bytes long, which a bytewise int read would misread by a
     factor of 2^96); ``tobytes()`` keeps the full 16-byte right padding,
     and big-endian u64 views give the halves fully vectorized."""
-    def halves(a: np.ndarray):
-        raw = np.frombuffer(a.tobytes(), dtype=">u8").reshape(-1, 2) \
-            if len(a) else np.zeros((0, 2), dtype=">u8")
-        return raw[:, 0].astype(np.uint64), raw[:, 1].astype(np.uint64)
-    return (*halves(db.starts6), *halves(db.ends6))
+    raw = np.frombuffer(a.tobytes(), dtype=">u8").reshape(-1, 2) \
+        if len(a) else np.zeros((0, 2), dtype=">u8")
+    return raw[:, 0].astype(np.uint64), raw[:, 1].astype(np.uint64)
+
+
+def _v6_words(db: GeoDatabase) -> tuple[np.ndarray, ...]:
+    """(start hi, start lo, end hi, end lo) uint64 halves of the v6 bounds."""
+    return (*_halves(db.starts6), *_halves(db.ends6))
+
+
+_TOP = np.uint64((1 << 64) - 1)
+
+
+def _edges(bounds: list[tuple[np.ndarray, ...]]) -> tuple[np.ndarray, ...]:
+    """The pieces between consecutive range edges of several families of
+    sorted, disjoint ranges, each given as (start hi, start lo, end hi,
+    end lo) uint64 words. An edge is a range's start or the address after
+    its end (the last address of the space opens nothing); a piece runs
+    from one edge to the address before the next, the last one to the top
+    of the space. Returns the pieces' (start hi, start lo, end hi, end
+    lo), covered or not: at most 2·Σn of them."""
+    one = np.uint64(1)
+    hi, lo = [np.zeros(0, np.uint64)], [np.zeros(0, np.uint64)]
+    for s_hi, s_lo, e_hi, e_lo in bounds:
+        after_lo = e_lo + one
+        after_hi = e_hi + (after_lo == 0)
+        opens = (e_hi != _TOP) | (e_lo != _TOP)
+        hi += [s_hi, after_hi[opens]]
+        lo += [s_lo, after_lo[opens]]
+    hi, lo = np.concatenate(hi), np.concatenate(lo)
+    order = np.lexsort((lo, hi))
+    hi, lo = hi[order], lo[order]
+    first = np.ones(len(hi), bool)
+    first[1:] = (hi[1:] != hi[:-1]) | (lo[1:] != lo[:-1])
+    hi, lo = hi[first], lo[first]
+    end_hi, end_lo = np.full(len(hi), _TOP), np.full(len(lo), _TOP)
+    end_hi[:-1] = hi[1:] - (lo[1:] == 0)
+    end_lo[:-1] = lo[1:] - one
+    return hi, lo, end_hi, end_lo
+
+
+def _s16(hi: np.ndarray, lo: np.ndarray) -> np.ndarray:
+    """'S16' v6 addresses of (hi, lo) uint64 halves (:func:`_halves`'
+    inverse)."""
+    return np.frombuffer(np.stack([hi, lo], axis=1).astype(">u8").tobytes(),
+                         dtype="S16")
+
+
+def _take(values: np.ndarray | None, dt: str, hit: np.ndarray,
+          pos: np.ndarray) -> np.ndarray:
+    """``values[pos]`` where ``hit``, null elsewhere (NaN for a double)."""
+    out = (np.full(len(pos), np.nan) if dt == "double"
+           else np.full(len(pos), None, dtype=object))
+    if values is not None:
+        out[hit] = values[pos[hit]]
+    return out
+
+
+def overlay_attr(i: int, path: str | None = None) -> str:
+    """The :func:`overlay`'s attr holding attr ``path`` of its i-th
+    database, or, with no ``path``, that database's hit flag."""
+    return f"d{i}" if path is None else f"d{i}.{path}"
+
+
+def overlay(parts: list[tuple[GeoDatabase, list[str]]]) -> GeoDatabase:
+    """One database standing for several probed with the same address:
+    ``parts`` pairs each database with the attr paths read from it.
+
+    In each family its ranges are the common refinement of theirs — the
+    pieces between consecutive edges of all their ranges that at least
+    one of them covers, at most 2·Σn pieces for n ranges each — and
+    every piece lies inside one range or none of each database. Database
+    i's attr ``p`` is the overlay's attr ``overlay_attr(i, p)``, and its
+    boolean attr ``overlay_attr(i)`` is true on the pieces database i
+    covers and null elsewhere, so one probe of the overlay answers every
+    database: the bucket
+    layouts, expanded tables and range table take it like any other
+    database. Nothing depends on which databases are the same object."""
+    dtypes: dict[str, str] = {}
+    for i, (db, paths) in enumerate(parts):
+        dtypes[overlay_attr(i)] = "boolean"
+        dtypes.update({overlay_attr(i, p): db.attr_type(p) for p in paths})
+
+    def family(v6: bool):
+        edges = _edges([
+            _v6_words(db) if v6 else
+            (np.zeros(len(db.starts), np.uint64), db.starts.astype(np.uint64),
+             np.zeros(len(db.ends), np.uint64), db.ends.astype(np.uint64))
+            for db, _ in parts])
+        starts, ends = ((_s16(*edges[:2]), _s16(*edges[2:])) if v6 else
+                        (edges[1].astype(np.int64), edges[3].astype(np.int64)))
+        probes = [_probe(*((db.starts6, db.ends6) if v6
+                           else (db.starts, db.ends)),
+                         starts, np.ones(len(starts), bool))
+                  for db, _ in parts]
+        keep = np.zeros(len(starts), bool)
+        for hit, _ in probes:
+            keep |= hit
+        attrs = {}
+        for i, ((db, paths), (hit, pos)) in enumerate(zip(parts, probes)):
+            hit, pos = hit[keep], pos[keep]
+            attrs[overlay_attr(i)] = np.where(hit, True, None)
+            for p in paths:
+                attrs[overlay_attr(i, p)] = _take(
+                    (db.attrs6 if v6 else db.attrs).get(p),
+                    dtypes[overlay_attr(i, p)], hit, pos)
+        return starts[keep], ends[keep], attrs
+
+    starts, ends, attrs = family(False)
+    starts6, ends6, attrs6 = family(True)
+    return GeoDatabase(profile=parts[0][0].profile, starts=starts, ends=ends,
+                       attrs=attrs, dtypes=dtypes, starts6=starts6,
+                       ends6=ends6, attrs6=attrs6 if len(starts6) else {})
 
 
 def v6_bucket_layout(db: GeoDatabase) -> BucketLayout:

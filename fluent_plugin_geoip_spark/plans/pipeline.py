@@ -71,7 +71,9 @@ class PipelineResult:
     layout rule chose, ``geolookup.BucketLayout.stats``), plus an
     ``"asn"`` entry when ASN enrichment is on (``GeoipEnricher.
     table_stats``, taken from the NumPy layout when the plan is compiled,
-    so reporting it runs no job). ``manifest``: the routed run's per-sink
+    so reporting it runs no job). City and ASN probe ``client_ip`` with
+    one join, so both entries describe the one table they share, that of
+    the overlay of the two databases (``geolookup.overlay``). ``manifest``: the routed run's per-sink
     lineage.
 
     On a routed run, ``counts`` comes from the post-write audit aggregate,
@@ -95,8 +97,9 @@ class GeoipPipeline:
 
     Two lookup stages (city DB + ASN DB, per the north_star's "city/ASN"
     enrichment) compile into one enrich plan: ``client_ip`` is parsed
-    once, then each database is probed by one broadcast hash join against
-    its range table, all fused into the scan's codegen stage. The plan is
+    once and probed by one broadcast hash join, against the range table
+    of the overlay of both databases (each piece carries the city and the
+    ASN attributes), fused into the scan's codegen stage. The plan is
     compiled per input column list and ``spark.sql.caseSensitive``
     (``_plans``) and reused for every later input, batch or streaming.
     """

@@ -8,6 +8,7 @@ reference, ``GeoDatabase.lookup_batch``, at every range edge.
 
 import ipaddress
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -15,7 +16,10 @@ from fluent_plugin_geoip_spark.config import GeoipConfig
 from fluent_plugin_geoip_spark.operators.enrich import (
     SKIP_FLAG, GeoipEnricher, apply_plan,
 )
-from fluent_plugin_geoip_spark.operators.geolookup import GeoDatabase
+from fluent_plugin_geoip_spark.operators.geolookup import (
+    BUCKET_CAP, GeoDatabase, _v6_words, overlay, v4_bucket_layout,
+    v6_bucket_layout,
+)
 from fluent_plugin_geoip_spark.sources.mmdb import build_mmdb
 
 CITY_V4 = [("1.2.0.0/16", "US"), ("8.8.8.0/24", "JP"),
@@ -141,16 +145,10 @@ def test_fused_matches_sequential(spark, dbs, pair, overlap, skip):
         assert SKIP_FLAG in fused.columns
 
 
-@pytest.mark.parametrize("pair", PAIRS, ids=["-".join(p) for p in PAIRS])
-def test_fused_values_match_lookup_batch(spark, dbs, pair):
-    """Every probe's values through the fused plan are those of
-    ``GeoDatabase.lookup_batch`` on each enricher's own database: a
-    v6-capable one folds mapped and compat text to v4, a v4-only one
-    does not."""
-    city_db, asn_db = dbs[pair[0]], dbs[pair[1]]
-    probes = _probes(city_db, asn_db)
-    got = _rows(apply_plan(_enrichers(spark, dbs, pair), {},
-                           _frame(spark, probes)))
+def _assert_lookup_batch_values(got, probes, city_db, asn_db):
+    """Each row of ``got`` (the enrichers of :func:`_enrichers`, no field
+    written twice) holds what ``lookup_batch`` finds for its probe in each
+    enricher's own database."""
     series = pd.Series(probes, dtype=object)
     city = city_db.lookup_batch(series, ["country.iso_code", "city.names.en",
                                          "location.latitude"])
@@ -165,6 +163,19 @@ def test_fused_values_match_lookup_batch(spark, dbs, pair):
                 "asn": int(a["asn"]) if a["__hit__"] else None,
                 "as_org": a["as_org"] if a["__hit__"] else None}
         assert {f: row[f] for f in want} == want, (probes[k], row, want)
+
+
+@pytest.mark.parametrize("pair", PAIRS, ids=["-".join(p) for p in PAIRS])
+def test_fused_values_match_lookup_batch(spark, dbs, pair):
+    """Every probe's values through the fused plan are those of
+    ``GeoDatabase.lookup_batch`` on each enricher's own database: a
+    v6-capable one folds mapped and compat text to v4, a v4-only one
+    does not."""
+    city_db, asn_db = dbs[pair[0]], dbs[pair[1]]
+    probes = _probes(city_db, asn_db)
+    got = _rows(apply_plan(_enrichers(spark, dbs, pair), {},
+                           _frame(spark, probes)))
+    _assert_lookup_batch_values(got, probes, city_db, asn_db)
     for db, field in ((city_db, "city"), (asn_db, "asn")):
         hit = {p for p, r in zip(probes, got) if r[field] is not None}
         assert any(":" not in p for p in hit)
@@ -205,3 +216,137 @@ def test_fused_reparses_a_rewritten_lookup_key(spark, dbs):
     assert rows == _rows(seq)
     assert all(r["asn"] is None for r in rows)
     assert any(r["country"] is not None for r in rows)
+
+
+# ---------------------------------------------------------------------------
+# the overlay: one join per lookup key against the common refinement of
+# the databases probed with it
+
+
+_DENSE6 = 0x2400CB00 << 96  # one /32 holding most v6 ranges
+
+
+def _ranges(rnd, pool: list[int], k: int) -> list[tuple[int, int]]:
+    """k sorted, disjoint ranges with bounds drawn from ``pool``, about a
+    third of them starting right after the previous one."""
+    q = sorted(rnd.sample(pool, 2 * k))
+    out = []
+    for i in range(k):
+        start, end = q[2 * i], q[2 * i + 1]
+        if out and rnd.random() < 0.3:
+            start = out[-1][1] + 1
+        out.append((start, end))
+    return out
+
+
+def _random_db(rnd, pools, tag: str, k4: int, k6: int,
+               asn: bool) -> GeoDatabase:
+    """A database of ``k4`` v4 and ``k6`` v6 ranges drawn from ``pools``
+    (shared with the database it is paired with, so their ranges
+    interleave, share edges and end inside each other), one record each:
+    a city record, every third without a location, or an ASN record that
+    also answers ``country``."""
+    fams = [_ranges(rnd, pools[0], k4), _ranges(rnd, pools[1], k6)]
+    docs = []
+    for i in range(k4 + k6):
+        if asn:
+            docs.append({"asn": 64500 + i, "as_org": f"{tag}AS{i}",
+                         "country.iso_code": f"{tag}A{i}"})
+        else:
+            docs.append({"country.iso_code": f"{tag}{i}",
+                         "city.names.en": f"{tag}-c{i}",
+                         **({"location.latitude": float(i)} if i % 3 else {})})
+    v4 = (np.array([s for s, _ in fams[0]], dtype=np.int64),
+          np.array([e for _, e in fams[0]], dtype=np.int64), np.arange(k4))
+    v6 = None
+    if k6:
+        def s16(xs):
+            return np.array([x.to_bytes(16, "big") for x in xs], dtype="S16")
+        v6 = (s16([s for s, _ in fams[1]]), s16([e for _, e in fams[1]]),
+              k4 + np.arange(k6))
+    db = GeoDatabase._build("geoip2_c", docs, {}, v4, v6)
+    assert db.has_ipv6 == bool(k6)
+    return db
+
+
+def _pools(rnd) -> tuple[list[int], list[int]]:
+    """Range bounds for both families: dense ones in one v4 /16 and in
+    the v6 /32 at /48 steps, plus a few far apart (very wide ranges) and
+    the last address of each space."""
+    v4 = [(1 << 24 | 2 << 16) + x for x in rnd.sample(range(1 << 16), 60)]
+    v4 += [10 << 24, 60 << 24, 240 << 24, (1 << 32) - 1]
+    v6 = [_DENSE6 | (x << 80) | rnd.choice((0, (1 << 80) - 1))
+          for x in rnd.sample(range(1 << 16), 100)]
+    v6 += [0x20010DB8 << 96, 0x2A00 << 112, 0xFFFF << 112, (1 << 128) - 1]
+    return sorted(set(v4)), sorted(set(v6))
+
+
+def _edge_probes(*databases: GeoDatabase) -> list:
+    """Every range edge ±1 of each database: v4 ones as dotted, mapped and
+    compat text, v6 ones as text; and unparsable input."""
+    out = []
+    for db in databases:
+        for a in {a + d for e in (db.starts, db.ends) for a in e.tolist()
+                  for d in (-1, 0, 1)}:
+            if 0 <= a < 1 << 32:
+                dotted = str(ipaddress.IPv4Address(a))
+                out += [dotted, f"::ffff:{dotted}", f"::{dotted}"]
+        for a in {int.from_bytes(a.ljust(16, b"\x00"), "big") + d
+                  for e in (db.starts6, db.ends6) for a in e.tolist()
+                  for d in (-1, 0, 1)}:
+            if 0 <= a < 1 << 128:
+                out.append(str(ipaddress.IPv6Address(a)))
+    return sorted(set(out)) + ["garbage", "", None]
+
+
+OVERLAY_CASES = [(seed, kinds) for seed in (11, 12)
+                 for kinds in (("dual", "dual"), ("v4", "dual"),
+                               ("dual", "v4"))]
+
+
+@pytest.mark.parametrize(
+    "seed,kinds", OVERLAY_CASES,
+    ids=[f"{s}-{'-'.join(k)}" for s, k in OVERLAY_CASES])
+def test_overlay_differential(spark, seed, kinds):
+    """Seeded-random city and ASN databases, v4-only or dual-stack, whose
+    ranges interleave, share edges and end inside each other's, with a
+    dense v6 /32 that splits: at every range edge ±1, the fused plan (one
+    join against their overlay) gives the rows of the enrichers applied
+    one after another and each database's ``lookup_batch`` values. The
+    overlay has at most 2·Σn pieces per family, and no bucket of its
+    tables holds more than ``BUCKET_CAP`` pieces unless more than
+    ``BUCKET_CAP`` pieces share one /60."""
+    import random
+    rnd = random.Random(seed)
+    pools = _pools(rnd)
+    city_db, asn_db = (
+        _random_db(rnd, pools, tag, 14 + rnd.randrange(4),
+                   36 if kind == "dual" else 0, asn)
+        for tag, kind, asn in (("C", kinds[0], False),
+                               ("A", kinds[1], True)))
+    dbs = {"city": city_db, "asn": asn_db}
+    probes = _edge_probes(city_db, asn_db)
+
+    got = _rows(apply_plan(_enrichers(spark, dbs, ("city", "asn")), {},
+                           _frame(spark, probes)))
+    _assert_lookup_batch_values(got, probes, city_db, asn_db)
+    enrichers = _enrichers(spark, dbs, ("city", "asn"), ("city",),
+                           overlap=True)
+    fused, seq = _fused_and_sequential(enrichers,
+                                       _frame(spark, probes, "country"))
+    assert fused.schema == seq.schema
+    assert _rows(fused) == _rows(seq)
+
+    ov = overlay([(e.db, e._attrs_by_key["ip"]) for e in enrichers])
+    assert len(ov.starts) <= 2 * (len(city_db.starts) + len(asn_db.starts))
+    assert len(ov.starts6) <= 2 * (len(city_db.starts6)
+                                   + len(asn_db.starts6))
+    assert v4_bucket_layout(ov).max_bucket_rows <= BUCKET_CAP
+    lay6 = v6_bucket_layout(ov)
+    assert lay6.dense  # the dense /32 splits
+    s_hi, _, e_hi, _ = _v6_words(ov)
+    first, last = s_hi >> np.uint64(4), e_hi >> np.uint64(4)  # /60s
+    crowd = (np.searchsorted(first, first, "right")
+             - np.searchsorted(last, first, "left")).max(initial=0)
+    if crowd <= BUCKET_CAP:
+        assert lay6.max_bucket_rows <= BUCKET_CAP

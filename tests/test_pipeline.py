@@ -512,7 +512,7 @@ def test_compact_sinks_merges_fragmented_partitions(spark, tmp_path):
     (enriched.select(*keep).repartition(8)
      .write.mode("append").partitionBy("route_country").parquet(out))
     vals = sorted(res.manifest)
-    before = sink_file_stats(spark, out, "route_country", vals)
+    before = sink_file_stats(spark.read.parquet(out), "route_country", vals)
     assert any(f > 1 for f, _ in before.values())
     total_before = spark.read.parquet(out).count()
 
@@ -520,7 +520,7 @@ def test_compact_sinks_merges_fragmented_partitions(spark, tmp_path):
     # compact without manifest verification first
     done = compact_sinks(spark, out, resume_manifest=False)
     assert done  # something was fragmented and got compacted
-    after = sink_file_stats(spark, out, "route_country", vals)
+    after = sink_file_stats(spark.read.parquet(out), "route_country", vals)
     assert all(f == 1 for f, _ in after.values())
     assert spark.read.parquet(out).count() == total_before
     # second compaction is a no-op
@@ -775,13 +775,21 @@ def test_run_reports_table_stats(spark, dual_db):
     """``run()`` reports the shape of every range table the enrich joins
     probe, per lookup database, and it matches the tables Spark holds:
     their rows and their largest bucket; and the coarse level and split
-    levels the layout rule chose."""
+    levels the layout rule chose. City and ASN probe ``client_ip`` with one
+    join, so both report the table they share: the overlay of their two
+    databases, here one database twice, so its ranges are that
+    database's."""
     from fluent_plugin_geoip_spark.operators.geolookup import (
-        expanded_bucket_table, expanded_bucket_table_v6,
+        expanded_bucket_table, expanded_bucket_table_v6, overlay,
     )
-    res = _dual_pipeline(spark, dual_db).run(dual_pages(spark))
-    tables = {"v4": (expanded_bucket_table(spark, dual_db, ["asn"]), "__gb"),
-              "v6": (expanded_bucket_table_v6(spark, dual_db, ["asn"])[0],
+    pipe = _dual_pipeline(spark, dual_db)
+    res = pipe.run(dual_pages(spark))
+    shared = overlay([(e.db, e._attrs_by_key["client_ip"])
+                      for e in (pipe.enricher, pipe.asn_enricher)])
+    assert (len(shared.starts), len(shared.starts6)) == \
+        (len(dual_db.starts), len(dual_db.starts6))
+    tables = {"v4": (expanded_bucket_table(spark, shared, ["d0"]), "__gb"),
+              "v6": (expanded_bucket_table_v6(spark, shared, ["d0"])[0],
                      "__g6b")}
     # v4: a /16 and a /24 fit 2n rows at /16; v6: the /32 holding the
     # 40 /48s (2400:cb00:0-27::) is split down to /44
@@ -801,12 +809,13 @@ def test_run_reports_table_stats(spark, dual_db):
 
 def test_expanded_tables_built_once_per_attr_set(spark, tmp_path,
                                                  monkeypatch):
-    """Each join position gets its own range table (its columns carry the
-    position's prefix), but the expanded tables it is copied from are
-    built once per database and attr set: the ASN enricher, joined second
-    in the pipeline and first through its own ``transform``, builds them
-    once, with the same values both ways."""
+    """City + ASN probe ``client_ip`` with one join, so the pipeline builds
+    one v4 and one v6 expanded table, of the overlay of their databases;
+    a second pipeline over the same databases builds none. The ASN
+    enricher alone joins its own database, whose tables it builds once,
+    with the values the pipeline gives."""
     from fluent_plugin_geoip_spark.operators import geolookup
+    from fluent_plugin_geoip_spark.operators.enrich import GeoipEnricher
     from fluent_plugin_geoip_spark.sources.mmdb import build_mmdb
     path = tmp_path / "fresh.mmdb"  # a new database: nothing cached on it
     path.write_bytes(build_mmdb([("8.8.8.0/24", _net_doc("JP", 2)),
@@ -817,16 +826,24 @@ def test_expanded_tables_built_once_per_attr_set(spark, tmp_path,
         orig = getattr(geolookup, name)
 
         def counted(spark_, db_, attrs, *a, _orig=orig, _name=name, **kw):
-            built.append((_name, tuple(attrs)))
+            built.append((_name, db_ is db, tuple(attrs)))
             return _orig(spark_, db_, attrs, *a, **kw)
         monkeypatch.setattr(geolookup, name, counted)
     pipe = _dual_pipeline(spark, db)
     pages = dual_pages(spark)
     fused = {r["url"]: r["asn"] for r in pipe.enrich(pages).collect()}
-    alone = {r["url"]: r["asn"] for r in pipe.asn_enricher.transform(
-        parse_pages(pages)).collect()}
+    assert [(n, own) for n, own, _ in built] == [
+        ("expanded_bucket_table", False), ("expanded_bucket_table_v6", False)]
+    _dual_pipeline(spark, db).enrich(pages).collect()
+    assert len(built) == 2
+    for _ in range(2):
+        alone = {r["url"]: r["asn"] for r in GeoipEnricher(
+            spark, pipe.asn_enricher.config, db).transform(
+                parse_pages(pages)).collect()}
     assert fused == alone and fused["http://www.site1.com/p"] == 64502
-    assert len(built) == len(set(built)) == 4  # {v4, v6} × {city, ASN}
+    assert [(n, own) for n, own, _ in built[2:]] == [
+        ("expanded_bucket_table", True), ("expanded_bucket_table_v6", True)]
+    assert len(set(built)) == 4
 
 
 def test_warm_enrich_py4j_round_trips(spark, dual_db, monkeypatch):

@@ -3,8 +3,9 @@
 - column pruning reaches the parquet scan (a rollup must not read html)
 - predicate pushdown reaches the scan (PushedFilters)
 - the enrich stage is broadcast hash joins with no Python worker and no
-  shuffle (narrow map): one per lookup key and database, each key parsed
-  once, and its largest generated method under HotSpot's JIT limit
+  shuffle (narrow map): one per lookup key, however many databases probe
+  it, each key parsed once, and its largest generated method under
+  HotSpot's JIT limit
 - the routed fan-out introduces exactly one Exchange (the REBALANCE on the
   route key)
 - aggregates run as partial+final hash aggregation (map-side combine)
@@ -90,15 +91,17 @@ def test_aggregate_partial_final(spark, pages_parquet):
     assert tree.count("HashAggregate") == 2, tree
 
 
-def test_asn_enrich_jvm_join_two_broadcasts_no_python(spark, pages_parquet):
-    """City + ASN on v4-only databases: one broadcast join per database,
-    two in all, still zero Python workers and zero shuffles."""
+def test_asn_enrich_jvm_join_one_broadcast_per_key_no_python(spark,
+                                                             pages_parquet):
+    """City + ASN on two v4-only databases: one broadcast join for the one
+    lookup key, against the overlay of both databases; still zero Python
+    workers and zero shuffles."""
     pages = spark.read.parquet(pages_parquet)
     enriched = GeoipPipeline(spark, enable_asn=True).enrich(pages)
     plan = explain(enriched)
     tree = plan.split("\n\n")[0]
     assert "ArrowEvalPython" not in tree, tree
-    assert tree.count("BroadcastHashJoin") == 2, tree
+    assert tree.count("BroadcastHashJoin") == 1, tree
     assert _shuffles(tree) == 0, tree
 
 
@@ -416,10 +419,11 @@ def _dual_pages(spark):
          for i, ip in enumerate(ips)], "url string, text string, lang string")
 
 
-def test_city_asn_dual_stack_one_parse_two_broadcasts(spark, tmp_path):
+def test_city_asn_dual_stack_one_parse_one_broadcast(spark, tmp_path):
     """City + ASN on a dual-stack database: ``client_ip`` is parsed once
-    (the v6 parse appears once in the optimized plan) and each database
-    is one BroadcastHashJoin, two in all; no Python, no shuffle."""
+    (the v6 parse appears once in the optimized plan) and probed by one
+    BroadcastHashJoin, against the overlay the two enrichers share; no
+    Python, no shuffle."""
     nets = [("1.2.0.0/16", _net_doc("US", 1)), ("2001:db8::/32",
                                                _net_doc("DE", 2))]
     nets += [(f"2400:cb00:{k:x}::/48", _net_doc("FR", 10 + k))
@@ -428,7 +432,7 @@ def test_city_asn_dual_stack_one_parse_two_broadcasts(spark, tmp_path):
         _dual_pages(spark))
     tree = explain(enriched).split("\n\n")[0]
     assert "ArrowEvalPython" not in tree, tree
-    assert tree.count("BroadcastHashJoin") == 2, tree
+    assert tree.count("BroadcastHashJoin") == 1, tree
     assert _shuffles(tree) == 0, tree
     # substring_index isolates the dotted-quad tail, once per v6 parse
     optimized = enriched._jdf.queryExecution().optimizedPlan().toString()

@@ -8,6 +8,7 @@ second optimization."""
 import ast
 import glob
 import json
+import os
 
 import pyarrow.parquet as pq
 import pytest
@@ -16,6 +17,7 @@ from pyspark.sql import functions as F
 from fluent_plugin_geoip_spark.operators import route
 from fluent_plugin_geoip_spark.operators.route import (
     UNROUTED, compact_sinks, input_files, read_input_lineage, route_and_write,
+    write_manifest,
 )
 from fluent_plugin_geoip_spark.plans.pipeline import GeoipPipeline
 from fluent_plugin_geoip_spark.sources.pages import generate_pages
@@ -123,14 +125,13 @@ def _leaf_classes(df) -> list[str]:
 
 def test_input_lineage_equals_input_files(spark, pages_dir, tmp_path):
     """A 4-file parquet input through a city + ASN run: the plan's leaves
-    are the scan and one range table per database, and the recorded
-    lineage is the scan's files."""
+    are the scan and the one range table both databases share, and the
+    recorded lineage is the scan's files."""
     pages = spark.read.parquet(pages_dir)
     assert len(pages.inputFiles()) == 4
     out = str(tmp_path / "routed")
     res = GeoipPipeline(spark, enable_asn=True).run(pages, out_dir=out)
-    assert _leaf_classes(res.enriched) == [
-        "LocalRelation", "LocalRelation", "LogicalRelation"]
+    assert _leaf_classes(res.enriched) == ["LocalRelation", "LogicalRelation"]
     assert read_input_lineage(out) == sorted(pages.inputFiles())
 
 
@@ -193,3 +194,34 @@ def test_sink_writes_go_through_one_writer():
     # the overwrite mode is _write_sinks' argument, not a caller's block
     assert not _top_level_calls(route, "dynamic_overwrite")
     assert _top_level_calls(stream, "dynamic_overwrite") <= STATE_WRITERS
+
+
+def test_escaped_route_values(spark, tmp_path):
+    """Spark escapes a route value's special characters in its partition
+    directory name (``A/B`` is written to ``route_country=A%2FB``). The
+    manifest and the audit stats still hold every value with its rows and
+    files, on a fresh run, a re-run and a ``resume=True`` run, which
+    rewrites only the partition missing from the manifest."""
+    values = ["A/B", "A/B", "US", "x:y", "a=b", "50%"]
+    df = spark.createDataFrame([(f"u{i}", v) for i, v in enumerate(values)],
+                               "url string, route_country string")
+    want = {"A/B": 2, "US": 1, "x:y": 1, "a=b": 1, "50%": 1}
+    out = str(tmp_path / "routed")
+    fresh, stats = route_and_write(df, out)
+    assert sorted(os.path.basename(d)
+                  for d in glob.glob(f"{out}/route_country=*")) == [
+        "route_country=50%25", "route_country=A%2FB", "route_country=US",
+        "route_country=a%3Db", "route_country=x%3Ay"]
+    assert {k: v["rows"] for k, v in fresh.items()} == want
+    assert {r["route_country"]: r["rows"] for r in stats} == want
+    assert all(v["files"] == 1 and v["bytes"] > 0 for v in fresh.values())
+    rerun, _ = route_and_write(df, out)
+    assert {k: v["rows"] for k, v in rerun.items()} == want
+    partial = {k: v for k, v in rerun.items() if k != "x:y"}
+    write_manifest(out, partial)
+    resumed, stats = route_and_write(df, out, resume=True)
+    assert [r["route_country"] for r in stats] == ["x:y"]
+    assert {k: v["rows"] for k, v in resumed.items()} == want
+    assert all(resumed[k] == v for k, v in partial.items())
+    again, stats = route_and_write(df, out, resume=True)
+    assert stats == [] and again == resumed
